@@ -7,6 +7,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in the ``hadoop_word_score_spark`` package; this module
 is a thin adapter over ``hadoop_word_score_spark.plans.queries.REGISTRY``.
+``queries()`` and ``oracle_sql()`` list the queries in registration order.
 """
 
 from __future__ import annotations

@@ -31,11 +31,15 @@ rerun levels, not at BENCH_r09's session-aged levels.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import subprocess
 import sys
 import time
+
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -320,18 +324,135 @@ def _adjudicate_regressions(
     return isolated
 
 
+# The import-names group has two alternatives: a parenthesized list (which
+# may SPAN LINES — "[^)]*" matches newlines, so "from ..pkg import (\n a,\n
+# b)" captures every name; a to-end-of-line match captured just "(" and
+# silently dropped all submodules from the fingerprint, r7 ADVICE), or the
+# plain to-end-of-line form.
+_REL_IMPORT_RE = re.compile(
+    r"^\s*from\s+(\.+)([\w.]*)\s+import\s+(\([^)]*\)|[^\n]+)", re.M
+)
+_PKG_ROOT = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "hadoop_word_score_spark"
+)
+
+
+def _resolve_rel_imports(src: str, pkg_parts: tuple[str, ...]) -> set[str]:
+    """Engine modules named by the relative imports in ``src``, as dotted
+    paths relative to the package root (e.g. ``operators.similarity``).
+    ``pkg_parts`` is the package the source lives in (``("plans",)`` for a
+    query function's body).
+
+    A target that resolves to a package DIRECTORY (``from ..functions import
+    codecs``) contributes its ``__init__`` plus every imported name that is a
+    submodule — previously such imports were silently dropped because only
+    ``<target>.py`` was probed, so e.g. ``functions/codecs.py`` stayed out of
+    every multimodal query's implementation fingerprint (r6 ADVICE, medium).
+    An unresolvable relative import now fails loudly instead of narrowing
+    the fingerprint.
+    """
+    mods: set[str] = set()
+    for dots, rest, names in _REL_IMPORT_RE.findall(src):
+        up = len(dots) - 1
+        base = pkg_parts[: len(pkg_parts) - up] if up else pkg_parts
+        target = ".".join((*base, *rest.split("."))) if rest else ".".join(base)
+        if not target:
+            continue
+        mod_path = os.path.join(_PKG_ROOT, *target.split(".")) + ".py"
+        pkg_dir = os.path.join(_PKG_ROOT, *target.split("."))
+        if os.path.exists(mod_path):
+            mods.add(target)
+        elif os.path.isdir(pkg_dir):
+            mods.add(target + ".__init__")
+            # `from ..pkg import a, b as c` — each name that is a submodule
+            # file joins the fingerprint; pure-attribute names resolve via
+            # the package __init__ hashed above.
+            # strip comments PER LINE: a trailing '# ...' inside a
+            # multiline parenthesized list must not swallow the names on
+            # the following lines (review r8 — the silent-narrowing bug
+            # again, one layer down)
+            cleaned = re.sub(r"#[^\n]*", "", names)
+            name_list = [
+                n.strip().split(" as ")[0].strip()
+                for n in cleaned.strip().strip("()").split(",")
+            ]
+            if not any(name_list):
+                # a package-directory import whose names failed to parse
+                # would silently narrow the fingerprint — the exact failure
+                # mode this closure exists to prevent
+                raise ImportError(
+                    f"fingerprint closure parsed no import names from "
+                    f"'from {dots}{rest} import {names.strip()[:60]}'"
+                )
+            for sub in name_list:
+                if sub and os.path.exists(os.path.join(pkg_dir, sub + ".py")):
+                    mods.add(target + "." + sub)
+        else:
+            raise ImportError(
+                f"fingerprint closure cannot resolve relative import "
+                f"'from {dots}{rest} import {names.strip()}' (pkg {pkg_parts})"
+            )
+    return mods
+
+
+def _engine_module_closure(mods: tuple[str, ...]) -> list[str]:
+    """Transitive closure of engine modules over their own relative imports,
+    so a rewrite two hops away (queries → operators.dedup →
+    functions.hashing) still lands in the fingerprint."""
+    seen: set[str] = set()
+    stack = list(mods)
+    while stack:
+        m = stack.pop()
+        if m in seen:
+            continue
+        path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
+        if not os.path.exists(path):
+            continue
+        seen.add(m)
+        with open(path, encoding="utf-8") as f:
+            stack.extend(_resolve_rel_imports(f.read(), tuple(m.split(".")[:-1])))
+    return sorted(seen)
+
+
+def _modules_digest(mods: tuple[str, ...]) -> str:
+    cache = _modules_digest_cache
+    if mods not in cache:
+        parts = []
+        for m in _engine_module_closure(mods):
+            path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
+            with open(path, "rb") as f:
+                parts.append(m + ":" + hashlib.md5(f.read()).hexdigest())
+        cache[mods] = hashlib.md5("\n".join(parts).encode()).hexdigest()
+    return cache[mods]
+
+
+_modules_digest_cache: dict[tuple[str, ...], str] = {}
+
+
+def _impl_fp(fn: Callable) -> str:
+    """Fingerprint of a query's IMPLEMENTATION: its function source plus the
+    content of every engine module its body imports (transitively), so a
+    rewrite of the query fn OR of any operator module it reaches marks the
+    bench row as changed. Granularity is module-level and conservative: an
+    unrelated edit in a shared module flags every row that imports it;
+    edits to queries.py OUTSIDE the fn (helpers, other queries) do not.
+    """
+    import inspect
+
+    try:
+        src = inspect.getsource(fn)
+    except (OSError, TypeError):
+        return "nosource"
+    mods = tuple(sorted(_resolve_rel_imports(src, ("plans",))))
+    return hashlib.md5((src + "|" + _modules_digest(mods)).encode()).hexdigest()[:12]
+
+
 def _impl_fp_state(names: list[str]) -> tuple[dict[str, str], dict[str, bool]]:
     """(current per-row implementation fingerprints, per-row changed flags
     vs the PREVIOUS bench run). The fps persist in BENCH_LOCAL.json so the
-    next round compares directly; the first round after this field ships
-    (no fps in the committed artifact) falls back to the evidence ledger's
-    last driver-verified fingerprint — absent there too means unknowable,
+    next run compares directly; a row with no recorded fp is unknowable,
     recorded as unchanged rather than guessed."""
-    from hadoop_word_score_spark.plans.queries import (
-        REGISTRY,
-        _VERIFIED_IMPL_FP,
-        _impl_fp,
-    )
+    from hadoop_word_score_spark.plans.queries import REGISTRY
 
     cur = {n: _impl_fp(REGISTRY[n].fn) for n in names if n in REGISTRY}
     prev_fps: dict[str, str] = {}
@@ -342,10 +463,7 @@ def _impl_fp_state(names: list[str]) -> tuple[dict[str, str], dict[str, bool]]:
             prev_fps = json.load(f).get("impl_fps", {})
     except (OSError, ValueError):
         pass
-    changed = {}
-    for n, fp in cur.items():
-        base = prev_fps.get(n) or _VERIFIED_IMPL_FP.get(n)
-        changed[n] = base is not None and base != fp
+    changed = {n: prev_fps.get(n) not in (None, fp) for n, fp in cur.items()}
     return cur, changed
 
 
@@ -448,8 +566,6 @@ def main() -> None:
     # the sorted membership + a short hash lets any cross-round comparison
     # detect that the denominator moved instead of misreading a grown set
     # as a regression (r5's total grew 5.2s purely from 3 added rows).
-    import hashlib
-
     member_hash = hashlib.md5("|".join(sorted(names)).encode()).hexdigest()[:12]
 
     out = {

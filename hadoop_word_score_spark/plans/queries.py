@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -59,1019 +58,12 @@ def register(
     return deco
 
 
-# Queries the round-1 driver already proved green (rows+schema+hash) at
-# sf0.01 — CORRECTNESS_r01.json. The driver checks registry entries in
-# iteration order with a budget (~50 in r01), so queries() yields the
-# still-unproven entries FIRST (oracle-backed before rows-only: a hash check
-# is stronger evidence than a row count) and the proven ones last. Purely an
-# evidence-scheduling order — the set of queries is identical either way.
-_DRIVER_GREEN_R01 = frozenset({
-    "wordscore", "wordscore_top10", "q1_pricing_summary", "filter_project",
-    "agg_stats", "q3_shipping_priority", "q5_local_supplier_volume",
-    "join_left_outer", "join_semi", "join_anti", "join_range_theta",
-    "join_cross", "set_ops", "window_ranking", "window_analytic",
-    "window_running", "topk_per_group", "rollup_status_priority",
-    "cube_segment_status", "string_funcs", "date_funcs", "json_funcs",
-    "array_funcs", "tumbling_window", "sliding_window", "session_window",
-    "asof_join_events", "asof_join_events_forward", "percentile_exact",
-    "dedup_exact", "dedup_near_jaccard", "similarity_topk",
-    "events_rollup_multi_grain", "string_agg_nations", "null_semantics",
-    "bm25_ranking", "histogram_totalprice", "stats_corr_covar",
-    "pivot_status_priority", "unpivot_lineitem_metrics", "udf_grouped_zscore",
-    "udf_grouped_agg_wavg", "window_range_frame", "join_salted_skew",
-})
-
-
-# Queries the round-2 driver proved green (rows+schema+hash, sf0.01) —
-# CORRECTNESS_r02.json, 50/50 green. Same evidence-scheduling role as the
-# r01 set: once proven, a query yields after the still-unproven tier so the
-# driver's per-round budget lands on queries with no driver evidence yet.
-_DRIVER_GREEN_R02 = frozenset({
-    "approx_aggs", "cohort_retention_weekly", "decontaminate_bloom",
-    "decontaminate_ngrams", "dedup_apply_survivors", "dedup_clusters",
-    "dedup_incremental", "dedup_near_embedding", "dedup_near_minhash",
-    "dedup_near_simhash", "doc_chunks", "doc_fingerprint",
-    "embedding_centroids", "events_gapfill_hourly",
-    "funnel_signup_click_purchase", "hll_distinct_sketch", "lang_id_heuristic",
-    "math_funcs", "merge_upsert_customers", "mixture_sample_weighted",
-    "multimodal_meta", "pack_sequences", "pii_redact", "q10_returned_items",
-    "q11_important_parts", "q12_priority_shipping", "q13_customer_distribution",
-    "q14_promo_effect", "q15_top_supplier", "q16_supplier_counts",
-    "q17_small_quantity_revenue", "q18_large_volume", "q19_disjunctive_revenue",
-    "q22_inactive_customers", "q4_order_priority", "q6_forecast_revenue",
-    "q7_nation_volume", "quality_repetition_filter", "sample_hash_mod",
-    "sample_stratified_lang", "shuffle_shards", "similarity_topk_ivf",
-    "similarity_topk_lsh", "subquery_correlated_scalar", "subquery_exists",
-    "subquery_in", "subquery_not_exists", "text_quality", "tfidf_top_terms",
-    "token_counts",
-})
-
-# Queries the round-3 driver touched (hash-green or rows-only, sf0.01) —
-# CORRECTNESS_r03.json. With r1∪r2∪r3 covering all registered queries, the
-# scheduling goal flips from "prove the unproven" to "refresh the stalest":
-# code churns every round, so the driver's ~50-query budget should re-verify
-# the queries whose latest driver evidence is oldest.
-_DRIVER_GREEN_R03 = frozenset({
-    "agg_salted_two_phase", "agg_stats", "approx_aggs", "array_funcs",
-    "asof_join_events", "asof_join_events_forward", "conditional_funcs",
-    "cube_segment_status", "date_funcs", "dedup_clusters", "dedup_exact",
-    "dedup_near_jaccard", "dedup_near_minhash", "dedup_pipeline_end_to_end",
-    "embedding_quantize_int8", "filter_project", "grouping_sets",
-    "having_filter", "join_anti", "join_cross", "join_left_outer",
-    "join_range_theta", "join_semi", "json_funcs", "map_funcs", "math_funcs",
-    "multimodal_decode", "multimodal_frames", "multimodal_resize",
-    "percentile_exact", "q1_pricing_summary", "q21_waiting_supplier",
-    "q3_shipping_priority", "q5_local_supplier_volume", "q8_market_share",
-    "rollup_status_priority", "session_window", "set_ops", "sliding_window",
-    "string_funcs", "subquery_scalar", "topk_per_group", "tumbling_window",
-    "variant_funcs", "window_analytic", "window_dist", "window_ranking",
-    "window_running", "wordscore", "wordscore_top10",
-})
-
-
-
-# Queries the round-4 driver proved green (rows+schema+hash, sf0.01) —
-# CORRECTNESS_r04.json, 50/50 green. The staleness rotation worked as
-# designed: these 50 were exactly the oldest-evidence names going in.
-_DRIVER_GREEN_R04 = frozenset({
-    "bigram_counts", "bitwise_funcs", "bm25_ranking",
-    "cohort_retention_weekly", "decontaminate_ngrams",
-    "dedup_apply_survivors", "dedup_near_embedding", "dedup_near_simhash",
-    "doc_chunks", "doc_fingerprint", "doc_length_buckets",
-    "embedding_centroids", "events_rollup_multi_grain",
-    "funnel_signup_click_purchase", "histogram_totalprice",
-    "hll_distinct_sketch", "join_salted_skew", "lang_id_heuristic",
-    "merge_upsert_customers", "mixture_sample_weighted",
-    "multimodal_decode_real", "multimodal_meta", "null_semantics",
-    "pack_sequences", "pivot_status_priority", "q10_returned_items",
-    "q13_customer_distribution", "q14_promo_effect", "q18_large_volume",
-    "q6_forecast_revenue", "sample_hash_mod", "sample_stratified_lang",
-    "shuffle_shards", "similarity_topk", "similarity_topk_ivf",
-    "similarity_topk_lsh", "stats_corr_covar", "string_agg_nations",
-    "subquery_correlated_scalar", "subquery_exists", "subquery_in",
-    "subquery_not_exists", "text_quality", "tfidf_top_terms",
-    "token_counts", "udf_grouped_agg_wavg", "udf_grouped_zscore",
-    "unpivot_lineitem_metrics", "vocab_stats", "window_range_frame"
-})
-
-
-
-# Queries the round-5 driver proved green (rows+schema+hash, sf0.01) --
-# CORRECTNESS_r05.json, 50/50 green. The rotation landed exactly where the
-# ledger pointed it: the three re-oracled multimodal queries got their first
-# real hash evidence, plus the r3-stale tier and every r5 addition.
-_DRIVER_GREEN_R05 = frozenset({
-    "agg_stats", "corpus_report_by_source", "cube_segment_status",
-    "date_funcs", "decontaminate_bloom", "dedup_incremental",
-    "dedup_spans_exact", "dedup_winnowing_pairs", "events_anomaly_zscore",
-    "events_gapfill_hourly", "filter_project", "funnel_time_to_convert",
-    "join_anti", "join_cross", "join_left_outer", "join_range_theta",
-    "join_semi", "json_funcs", "math_funcs", "multimodal_decode",
-    "multimodal_frames", "multimodal_resize", "pii_redact",
-    "q11_important_parts", "q12_priority_shipping", "q15_top_supplier",
-    "q16_supplier_counts", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue", "q1_pricing_summary", "q20_excess_stock",
-    "q22_inactive_customers", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority", "q5_local_supplier_volume",
-    "q7_nation_volume", "q9_product_profit", "quality_repetition_filter",
-    "quality_unigram_logprob", "rollup_status_priority",
-    "scd2_customer_history", "set_ops", "string_funcs", "topk_per_group",
-    "window_analytic", "window_ranking", "window_running", "wordscore",
-    "wordscore_top10"
-})
-
-
-# CORRECTNESS_r06.json, 49/50 green; embedding_covariance (hash-only
-# rounding-boundary red, VERDICT r6 item 1) is EXCLUDED — a failed check
-# is not evidence.
-_DRIVER_GREEN_R06 = frozenset({
-    "agg_salted_two_phase", "approx_aggs", "array_funcs",
-    "asof_join_events", "asof_join_events_forward", "bm25_ranking",
-    "bpe_merge_rules", "conditional_funcs", "corpus_drift_kl",
-    "data_quality_report", "dedup_clusters", "dedup_exact",
-    "dedup_near_jaccard", "dedup_near_minhash", "dedup_near_simhash",
-    "dedup_pipeline_end_to_end", "dedup_spans_hashed",
-    "embedding_pca_project", "embedding_quantize_int8", "events_ewma_value",
-    "events_rollup_multi_grain", "grouping_sets", "having_filter",
-    "heavy_hitters_terms", "histogram_totalprice", "k_anonymity_check",
-    "map_funcs", "null_semantics", "percentile_exact",
-    "q21_waiting_supplier", "q8_market_share", "session_window",
-    "sessionize_events", "similarity_ivf_build", "similarity_ivf_recall",
-    "similarity_lsh_recall_midsim", "similarity_topk",
-    "similarity_topk_ivf", "similarity_topk_lsh", "sliding_window",
-    "split_leakage_safe", "string_agg_nations", "subquery_scalar",
-    "tumbling_window", "udf_grouped_agg_wavg", "udf_grouped_zscore",
-    "variant_funcs", "window_dist", "zorder_keys"
-})
-
-# Round-7 driver greens (CORRECTNESS_r07.json). embedding_covariance
-# (signed-zero hash mismatch, VERDICT r7 item 1) is EXCLUDED — a failed
-# check is not evidence.
-_DRIVER_GREEN_R07 = frozenset({
-    "bigram_counts", "bitwise_funcs", "bpe_encode_lengths",
-    "bpe_merge_rules", "bpe_subword_rules", "cms_frequency_estimates",
-    "corpus_prep_funnel", "dedup_near_embedding", "dedup_near_simhash",
-    "doc_fingerprint", "doc_length_buckets", "embedding_pca_project",
-    "events_ewma_value", "heavy_hitters_terms", "join_salted_skew",
-    "lang_id_heuristic", "multimodal_audio_real", "multimodal_decode",
-    "multimodal_decode_real", "multimodal_frames", "multimodal_meta",
-    "multimodal_resize", "multimodal_video_real", "pagerank_supply_graph",
-    "pivot_status_priority", "q10_returned_items",
-    "q13_customer_distribution", "q6_forecast_revenue", "sample_hash_mod",
-    "sample_stratified_lang", "sessionize_events", "split_leakage_safe",
-    "sql_adhoc_cte", "sql_adhoc_hof", "sql_adhoc_join", "sql_adhoc_window",
-    "stats_corr_covar", "subquery_correlated_scalar", "subquery_exists",
-    "subquery_in", "subquery_not_exists", "text_quality", "tfidf_top_terms",
-    "token_counts", "udtf_chunk_text", "unpivot_lineitem_metrics",
-    "vocab_stats", "window_range_frame", "zorder_keys"
-})
-
-_DRIVER_GREEN_R08 = frozenset({
-    "array_funcs", "bpe_encode_lengths", "bpe_merge_rules",
-    "bpe_subword_rules", "cohort_retention_weekly", "corpus_drift_kl",
-    "decontaminate_ngrams", "dedup_apply_survivors", "dedup_containment",
-    "dedup_near_embedding", "dedup_semantic", "doc_chunks",
-    "embedding_centroids", "embedding_covariance", "embedding_pca_project",
-    "events_anomaly_zscore", "events_ewma_value",
-    "funnel_signup_click_purchase", "hll_distinct_sketch",
-    "kmeans_embeddings", "merge_upsert_customers",
-    "mixture_sample_weighted", "multimodal_audio_real", "multimodal_decode",
-    "multimodal_decode_real", "multimodal_frames", "multimodal_meta",
-    "multimodal_resize", "multimodal_video_real", "pack_sequences",
-    "percentile_exact", "pmi_collocations", "q14_promo_effect",
-    "q18_large_volume", "q9_product_profit", "quality_unigram_logprob",
-    "shuffle_shards", "similarity_ivf_build", "similarity_ivf_recall",
-    "similarity_lsh_recall_midsim", "similarity_topk",
-    "similarity_topk_ivf", "similarity_topk_lsh", "stats_corr_covar",
-    "stats_join_key_skew", "stats_table_profile", "udf_grouped_agg_wavg",
-    "udf_grouped_zscore", "udtf_chunk_text"
-})
-
-_DRIVER_GREEN_R09 = frozenset({
-    "basket_association_rules", "bigram_counts", "bm25_ranking",
-    "corpus_dedup_rate_by_source", "corpus_ngram_novelty",
-    "corpus_prep_funnel", "corpus_report_by_source", "decontaminate_bloom",
-    "decontaminate_ngrams", "dedup_apply_survivors",
-    "dedup_cluster_canonical", "dedup_clusters", "dedup_exact",
-    "dedup_incremental", "dedup_near_embedding", "dedup_near_jaccard",
-    "dedup_near_minhash", "dedup_near_simhash", "dedup_pipeline_end_to_end",
-    "dedup_spans_exact", "dedup_spans_hashed", "dedup_winnowing_pairs",
-    "embedding_quantize_int8", "events_concurrency_hourly",
-    "events_mad_outliers", "events_ohlc_hourly", "events_psi_drift",
-    "graph_triangle_counts", "heavy_hitters_terms", "inverted_index_terms",
-    "lang_id_heuristic", "linkage_fuzzy_customers",
-    "linkage_sorted_neighbourhood", "merge_upsert_customers",
-    "pit_join_events_customer_history", "quality_bigram_logprob",
-    "quality_unigram_logprob", "similarity_hard_negatives",
-    "similarity_ivf_build", "similarity_ivf_recall",
-    "similarity_lsh_recall_midsim", "similarity_topk",
-    "similarity_topk_ivf", "similarity_topk_lsh", "snapshot_diff_orders",
-    "stats_column_entropy", "stats_histogram_equi_depth", "text_quality",
-    "tfidf_top_terms", "try_error_safe_funcs"
-})
-
-_DRIVER_GREEN_R10 = frozenset({
-    "agg_stats", "corpus_importance_dsir", "corpus_mixture_rebalance",
-    "cube_segment_status", "date_funcs", "dedup_jaccard_prefix",
-    "embedding_random_projection", "events_forecast_seasonal_naive",
-    "events_gapfill_hourly", "events_mad_outliers_approx",
-    "events_markov_transitions", "filter_project", "funnel_time_to_convert",
-    "graph_kcore_members", "join_anti", "join_cross",
-    "join_interval_left_outer", "join_left_outer", "join_range_theta",
-    "join_semi", "json_funcs", "math_funcs", "pii_redact",
-    "q11_important_parts", "q12_priority_shipping", "q15_top_supplier",
-    "q16_supplier_counts", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue", "q1_pricing_summary", "q20_excess_stock",
-    "q22_inactive_customers", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority", "q5_local_supplier_volume",
-    "q7_nation_volume", "quality_repetition_filter",
-    "rollup_status_priority", "sample_weighted_priority",
-    "scd2_customer_history", "set_ops", "string_funcs", "topk_per_group",
-    "tumbling_window", "window_analytic", "window_ranking",
-    "window_running", "wordscore", "wordscore_top10"
-})
-
-_DRIVER_GREEN_R11 = frozenset({
-    "agg_salted_two_phase", "approx_aggs", "asof_join_events",
-    "asof_join_events_forward", "bitwise_funcs", "cms_frequency_estimates",
-    "conditional_funcs", "corpus_sample_plan_execution",
-    "corpus_zipf_slope", "data_quality_report",
-    "embedding_centroid_separation", "events_cusum_changepoint",
-    "events_hourly_acf", "events_rollup_multi_grain",
-    "events_value_winsorized", "grouping_sets", "having_filter",
-    "histogram_totalprice", "join_salted_skew", "k_anonymity_check",
-    "map_funcs", "null_semantics", "pagerank_supply_graph",
-    "pivot_status_priority", "q10_returned_items",
-    "q13_customer_distribution", "q21_waiting_supplier",
-    "q6_forecast_revenue", "q8_market_share", "quality_top_ngram_mass",
-    "sample_weighted_per_stratum", "session_window", "sliding_window",
-    "split_leakage_safe", "sql_adhoc_cte", "sql_adhoc_hof",
-    "sql_adhoc_join", "sql_adhoc_window", "string_agg_nations",
-    "subquery_correlated_scalar", "subquery_exists", "subquery_in",
-    "subquery_not_exists", "subquery_scalar", "token_counts",
-    "unpivot_lineitem_metrics", "variant_funcs", "vocab_stats",
-    "window_dist", "window_range_frame"
-})
-
-_DRIVER_GREEN_R13 = frozenset({
-    "basket_association_rules", "bigram_counts", "bm25_ranking",
-    "bpe_decode_corpus", "bpe_encode_ids", "bpe_tokenizer_roundtrip",
-    "corpus_dedup_rate_by_source", "corpus_ngram_novelty",
-    "corpus_prep_funnel", "corpus_report_by_source", "decontaminate_bloom",
-    "decontaminate_ngrams", "dedup_apply_survivors",
-    "dedup_cluster_canonical", "dedup_clusters", "dedup_exact",
-    "dedup_incremental", "dedup_near_embedding", "dedup_near_jaccard",
-    "dedup_near_minhash", "dedup_near_simhash", "dedup_pipeline_end_to_end",
-    "dedup_spans_exact", "dedup_spans_hashed", "dedup_winnowing_pairs",
-    "embedding_pca_project", "embedding_quantize_int8", "events_ewma_value",
-    "graph_triangle_counts", "heavy_hitters_terms", "inverted_index_terms",
-    "lang_id_heuristic", "merge_upsert_customers", "pack_segments",
-    "quality_unigram_logprob", "similarity_ivf_build",
-    "similarity_ivf_filtered_recall", "similarity_ivf_recall",
-    "similarity_ivfpq_filtered_recall", "similarity_lsh_recall_midsim",
-    "similarity_topk", "similarity_topk_ivf",
-    "similarity_topk_ivf_filtered", "similarity_topk_ivfpq_filtered",
-    "similarity_topk_lsh", "stats_column_entropy", "stats_join_key_skew",
-    "stats_table_profile", "text_quality", "tfidf_top_terms"
-})
-
-_DRIVER_GREEN_R12 = frozenset({
-    "array_funcs", "bpe_encode_corpus", "bpe_encode_lengths",
-    "bpe_encode_sequences", "bpe_merge_rules", "bpe_subword_rules",
-    "cohort_retention_weekly", "corpus_drift_kl", "dedup_containment",
-    "dedup_lines_c4", "dedup_semantic", "doc_chunks", "doc_fingerprint",
-    "doc_length_buckets", "embedding_centroids", "embedding_covariance",
-    "events_anomaly_zscore", "funnel_signup_click_purchase",
-    "heavy_hitters_streamed", "hll_distinct_sketch", "kmeans_embeddings",
-    "mixture_sample_weighted", "multimodal_audio_real", "multimodal_decode",
-    "multimodal_decode_real", "multimodal_frames", "multimodal_meta",
-    "multimodal_resize", "multimodal_video_real", "pack_sequences",
-    "percentile_exact", "pmi_collocations", "q14_promo_effect",
-    "q18_large_volume", "q9_product_profit", "quality_classifier_score",
-    "sample_hash_mod", "sample_stratified_lang", "sessionize_events",
-    "shuffle_shards", "similarity_ivfpq_append", "similarity_ivfpq_build",
-    "similarity_ivfpq_recall", "similarity_topk_ivfpq", "stats_corr_covar",
-    "udf_grouped_agg_wavg", "udf_grouped_zscore", "udtf_chunk_text",
-    "vocab_coverage_topk", "zorder_keys"
-})
-
-_DRIVER_GREEN_R14 = frozenset({
-    "agg_stats", "bpe_decode_heldout", "bpe_encode_ids_heldout",
-    "corpus_importance_dsir", "cube_segment_status", "date_funcs",
-    "decontaminate_fuzzy", "dedup_jaccard_prefix",
-    "embedding_random_projection", "events_concurrency_hourly",
-    "events_mad_outliers", "events_ohlc_hourly", "events_psi_drift",
-    "filter_project", "html_extract_funnel", "html_extract_links",
-    "html_extract_text", "html_links_pagerank", "join_anti", "join_cross",
-    "join_interval_left_outer", "join_left_outer", "join_range_theta",
-    "join_semi", "json_funcs", "linkage_fuzzy_customers",
-    "linkage_sorted_neighbourhood", "math_funcs", "normalize_text_nfc",
-    "pit_join_events_customer_history", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "quality_bigram_logprob", "rollup_status_priority",
-    "sample_weighted_priority", "set_ops", "similarity_hard_negatives",
-    "similarity_topk_ivfpq_deleted", "snapshot_diff_orders",
-    "stats_histogram_equi_depth", "string_funcs", "topk_per_group",
-    "try_error_safe_funcs", "tumbling_window", "window_analytic",
-    "window_ranking", "window_running", "wordscore", "wordscore_top10"
-})
-
-
-def _oracle_fp(oracle: str | None) -> str:
-    """Whitespace-insensitive fingerprint of an oracle's SQL text.
-
-    Driver evidence is only as good as the oracle it was checked against: a
-    query whose oracle has been rewritten since its last driver touch has, in
-    effect, never been verified (r4 postmortem: multimodal_decode/resize/
-    frames gained real hash oracles but kept ranking as freshly-verified, so
-    the budgeted driver pass skipped them indefinitely). Fingerprints are
-    whitespace-normalized so reformatting alone does not reset evidence.
-    """
-    if oracle is None:
-        return "rows_only"
-    return hashlib.md5(" ".join(oracle.split()).encode()).hexdigest()[:12]
-
-
-# The import-names group has two alternatives: a parenthesized list (which
-# may SPAN LINES — "[^)]*" matches newlines, so "from ..pkg import (\n a,\n
-# b)" captures every name; a to-end-of-line match captured just "(" and
-# silently dropped all submodules from the fingerprint, r7 ADVICE), or the
-# plain to-end-of-line form.
-_REL_IMPORT_RE = re.compile(
-    r"^\s*from\s+(\.+)([\w.]*)\s+import\s+(\([^)]*\)|[^\n]+)", re.M
-)
-_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _resolve_rel_imports(src: str, pkg_parts: tuple[str, ...]) -> set[str]:
-    """Engine modules named by the relative imports in ``src``, as dotted
-    paths relative to the package root (e.g. ``operators.similarity``).
-    ``pkg_parts`` is the package the source lives in (``("plans",)`` for a
-    query function's body).
-
-    A target that resolves to a package DIRECTORY (``from ..functions import
-    codecs``) contributes its ``__init__`` plus every imported name that is a
-    submodule — previously such imports were silently dropped because only
-    ``<target>.py`` was probed, so e.g. ``functions/codecs.py`` stayed out of
-    every multimodal query's implementation fingerprint (r6 ADVICE, medium).
-    An unresolvable relative import now fails loudly instead of narrowing
-    the fingerprint.
-    """
-    mods: set[str] = set()
-    for dots, rest, names in _REL_IMPORT_RE.findall(src):
-        up = len(dots) - 1
-        base = pkg_parts[: len(pkg_parts) - up] if up else pkg_parts
-        target = ".".join((*base, *rest.split("."))) if rest else ".".join(base)
-        if not target:
-            continue
-        mod_path = os.path.join(_PKG_ROOT, *target.split(".")) + ".py"
-        pkg_dir = os.path.join(_PKG_ROOT, *target.split("."))
-        if os.path.exists(mod_path):
-            mods.add(target)
-        elif os.path.isdir(pkg_dir):
-            mods.add(target + ".__init__")
-            # `from ..pkg import a, b as c` — each name that is a submodule
-            # file joins the fingerprint; pure-attribute names resolve via
-            # the package __init__ hashed above.
-            # strip comments PER LINE: a trailing '# ...' inside a
-            # multiline parenthesized list must not swallow the names on
-            # the following lines (review r8 — the silent-narrowing bug
-            # again, one layer down)
-            cleaned = re.sub(r"#[^\n]*", "", names)
-            name_list = [
-                n.strip().split(" as ")[0].strip()
-                for n in cleaned.strip().strip("()").split(",")
-            ]
-            if not any(name_list):
-                # a package-directory import whose names failed to parse
-                # would silently narrow the fingerprint — the exact failure
-                # mode this closure exists to prevent
-                raise ImportError(
-                    f"fingerprint closure parsed no import names from "
-                    f"'from {dots}{rest} import {names.strip()[:60]}'"
-                )
-            for sub in name_list:
-                if sub and os.path.exists(os.path.join(pkg_dir, sub + ".py")):
-                    mods.add(target + "." + sub)
-        else:
-            raise ImportError(
-                f"fingerprint closure cannot resolve relative import "
-                f"'from {dots}{rest} import {names.strip()}' (pkg {pkg_parts})"
-            )
-    return mods
-
-
-def _engine_module_closure(mods: tuple[str, ...]) -> list[str]:
-    """Transitive closure of engine modules over their own relative imports,
-    so a rewrite two hops away (queries → operators.dedup →
-    functions.hashing) still lands in the fingerprint."""
-    seen: set[str] = set()
-    stack = list(mods)
-    while stack:
-        m = stack.pop()
-        if m in seen:
-            continue
-        path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
-        if not os.path.exists(path):
-            continue
-        seen.add(m)
-        with open(path, encoding="utf-8") as f:
-            stack.extend(_resolve_rel_imports(f.read(), tuple(m.split(".")[:-1])))
-    return sorted(seen)
-
-
-def _modules_digest(mods: tuple[str, ...]) -> str:
-    cache = _modules_digest_cache
-    if mods not in cache:
-        parts = []
-        for m in _engine_module_closure(mods):
-            path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
-            with open(path, "rb") as f:
-                parts.append(m + ":" + hashlib.md5(f.read()).hexdigest())
-        cache[mods] = hashlib.md5("\n".join(parts).encode()).hexdigest()
-    return cache[mods]
-
-
-_modules_digest_cache: dict[tuple[str, ...], str] = {}
-
-
-def _impl_fp(fn: QueryFn) -> str:
-    """Fingerprint of a query's IMPLEMENTATION: its function source plus the
-    content of every engine module its body imports (transitively). Driver
-    evidence attests the code that ran, not just the oracle it was compared
-    against (r5 advice: the IVF/LSH execution rewrite kept its oracle text
-    and rode round-4 'verified' standing) — so a rewrite of the query fn OR
-    of any operator module it reaches demotes the query to the
-    never-verified tier. Granularity is module-level and conservative: an
-    unrelated edit in a shared module costs at most one driver re-check;
-    edits to queries.py OUTSIDE the fn (ledgers, helpers) do not demote.
-    """
-    import inspect
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return "nosource"
-    mods = tuple(sorted(_resolve_rel_imports(src, ("plans",))))
-    return hashlib.md5((src + "|" + _modules_digest(mods)).encode()).hexdigest()[:12]
-
-
-# name -> fingerprint of the oracle the driver LAST verified this query
-# against ("rows_only" = the driver only did a rows-only check, i.e. the
-# oracle was None at the time). Maintained by tools/gen_evidence.py: each
-# round, entries for names in the new CORRECTNESS_r{N}.json are refreshed to
-# the then-current oracle text. A registry oracle that no longer matches its
-# recorded fingerprint demotes the query to the never-verified tier.
-_VERIFIED_ORACLE_FP: dict[str, str] = {
-    "agg_salted_two_phase": "d7953ce1674b",
-    "agg_stats": "bee545d79fae",
-    "approx_aggs": "6eedf763cf35",
-    "array_funcs": "a59eb283fa53",
-    "asof_join_events": "e968e8a9b2fd",
-    "asof_join_events_forward": "36d0838b0e93",
-    "basket_association_rules": "77de9a41be40",
-    "bigram_counts": "c9d0c7cc6237",
-    "bitwise_funcs": "14020aef671c",
-    "bm25_ranking": "6bff8ce61029",
-    "bpe_decode_corpus": "f2cb83b484a8",
-    "bpe_decode_heldout": "6164b1ad28cf",
-    "bpe_encode_corpus": "c8c97e58a931",
-    "bpe_encode_ids": "5852c3d5e645",
-    "bpe_encode_ids_heldout": "74e1cfbce0fc",
-    "bpe_encode_lengths": "b8dc811b87a9",
-    "bpe_encode_sequences": "137ab376b92f",
-    "bpe_merge_rules": "337d9cdb287d",
-    "bpe_subword_rules": "01ab4987d307",
-    "bpe_tokenizer_roundtrip": "5852c3d5e645",
-    "cms_frequency_estimates": "2369d6ea31ee",
-    "cohort_retention_weekly": "bedf40b9dd3b",
-    "conditional_funcs": "61feebf4741f",
-    "corpus_dedup_rate_by_source": "cb693f273c58",
-    "corpus_drift_kl": "cf6014cf1380",
-    "corpus_importance_dsir": "4adb5eb54c43",
-    "corpus_mixture_rebalance": "d14c9f9e9bb7",
-    "corpus_ngram_novelty": "8a169d7b7027",
-    "corpus_prep_funnel": "0fd699ea12e6",
-    "corpus_report_by_source": "aa23b8986484",
-    "corpus_sample_plan_execution": "960c59e2b44c",
-    "corpus_zipf_slope": "a9d5e35097c4",
-    "cube_segment_status": "00da5551f9ed",
-    "data_quality_report": "5c7bc04a92f9",
-    "date_funcs": "e57b8125fb64",
-    "decontaminate_bloom": "4158443f5f4d",
-    "decontaminate_fuzzy": "d5e929b2e65c",
-    "decontaminate_ngrams": "f4c3b9888715",
-    "dedup_apply_survivors": "007b73d0476e",
-    "dedup_cluster_canonical": "f74f31934af5",
-    "dedup_clusters": "82ca48d37481",
-    "dedup_containment": "50e75544f264",
-    "dedup_exact": "b5919931923e",
-    "dedup_incremental": "8b8c3458e304",
-    "dedup_jaccard_prefix": "45fed2cab3f0",
-    "dedup_lines_c4": "e72476105d67",
-    "dedup_near_embedding": "385ed2cfbff8",
-    "dedup_near_jaccard": "45fed2cab3f0",
-    "dedup_near_minhash": "45fed2cab3f0",
-    "dedup_near_simhash": "2affa7b75f66",
-    "dedup_pipeline_end_to_end": "77fa7e6d3881",
-    "dedup_semantic": "a8273a9026f9",
-    "dedup_spans_exact": "d61fcc2d29f0",
-    "dedup_spans_hashed": "526c5056ea98",
-    "dedup_winnowing_pairs": "c6feba0a04ac",
-    "doc_chunks": "ffd74a0e21d5",
-    "doc_fingerprint": "677d0308cba2",
-    "doc_length_buckets": "e333f9bf8417",
-    "embedding_centroid_separation": "69bf48f70fde",
-    "embedding_centroids": "7b840d20f2a5",
-    "embedding_covariance": "cd82459eeef8",
-    "embedding_pca_project": "c60679601e6e",
-    "embedding_quantize_int8": "aaa8faade4fe",
-    "embedding_random_projection": "3c00c9816c26",
-    "events_anomaly_zscore": "2e7e9aea7cc3",
-    "events_concurrency_hourly": "c345d4e21799",
-    "events_cusum_changepoint": "e36df7a79eb1",
-    "events_ewma_value": "230c343224d7",
-    "events_forecast_seasonal_naive": "4260cafa16fd",
-    "events_gapfill_hourly": "e8f7525be53f",
-    "events_hourly_acf": "ebabfb0daaab",
-    "events_mad_outliers": "b08bbcdc85ae",
-    "events_mad_outliers_approx": "085c3447f296",
-    "events_markov_transitions": "91ee4d3d3dea",
-    "events_ohlc_hourly": "4a7bff466852",
-    "events_psi_drift": "086f28aa9b02",
-    "events_rollup_multi_grain": "33ff39ed700d",
-    "events_value_winsorized": "5475c0e0654f",
-    "filter_project": "a9a8bfadf49d",
-    "funnel_signup_click_purchase": "92866f84bd49",
-    "funnel_time_to_convert": "d647673746a7",
-    "graph_kcore_members": "998a325178ca",
-    "graph_triangle_counts": "9dcb3bdf5fe8",
-    "grouping_sets": "f5bacfcdb761",
-    "having_filter": "77fb0b6c240c",
-    "heavy_hitters_streamed": "bf837c9e9482",
-    "heavy_hitters_terms": "eebdd3039a46",
-    "histogram_totalprice": "8038b735944f",
-    "hll_distinct_sketch": "822ed83be27d",
-    "html_extract_funnel": "9b9ad89a2549",
-    "html_extract_links": "a84704d25b09",
-    "html_extract_text": "a5af36f8d79e",
-    "html_links_pagerank": "9811ffb47c42",
-    "inverted_index_terms": "978e182ca92d",
-    "join_anti": "a42439ea4756",
-    "join_cross": "9eefc1dae676",
-    "join_interval_left_outer": "cbeb4cc8a1e6",
-    "join_left_outer": "ac2386af11a5",
-    "join_range_theta": "68a33d9d01c9",
-    "join_salted_skew": "484b58033f85",
-    "join_semi": "1919b78cb1de",
-    "json_funcs": "cf0dc27421a4",
-    "k_anonymity_check": "7eb2f2e5a5df",
-    "kmeans_embeddings": "1a95cf162e51",
-    "lang_id_heuristic": "797a781a0e60",
-    "linkage_fuzzy_customers": "264b2ec06e34",
-    "linkage_sorted_neighbourhood": "1711da594ec8",
-    "map_funcs": "a88e8ae7eb7b",
-    "math_funcs": "232331fb6315",
-    "merge_upsert_customers": "fbc09c1f1812",
-    "mixture_sample_weighted": "189cecf6d5bd",
-    "multimodal_audio_real": "dcbc1c4e5ef3",
-    "multimodal_decode": "7ede53011cbb",
-    "multimodal_decode_real": "574e7a4c7f72",
-    "multimodal_frames": "8533e90e9148",
-    "multimodal_meta": "0f99c74fe197",
-    "multimodal_resize": "da5dd6feffc2",
-    "multimodal_video_real": "a6ddc85b6827",
-    "normalize_text_nfc": "78eae27c221c",
-    "null_semantics": "14f06cc19e8d",
-    "pack_segments": "baef0aec88d9",
-    "pack_sequences": "efcce867afee",
-    "pagerank_supply_graph": "0338ee585300",
-    "percentile_exact": "60fe0eda4e92",
-    "pii_redact": "cfb6df9885a2",
-    "pit_join_events_customer_history": "c08e25c6ad33",
-    "pivot_status_priority": "388c5a142a77",
-    "pmi_collocations": "2dad5584c4a4",
-    "q10_returned_items": "c42fd16d245e",
-    "q11_important_parts": "4b65a2f61ef9",
-    "q12_priority_shipping": "0069aee7a7d8",
-    "q13_customer_distribution": "83fa5b0f5321",
-    "q14_promo_effect": "5234ad3ac699",
-    "q15_top_supplier": "b9cf710d6bd7",
-    "q16_supplier_counts": "9c32a312242e",
-    "q17_small_quantity_revenue": "07a57ae5e522",
-    "q18_large_volume": "b69beef07caa",
-    "q19_disjunctive_revenue": "54d13d665430",
-    "q1_pricing_summary": "e4a8b58127b6",
-    "q20_excess_stock": "c8feea51bde1",
-    "q21_waiting_supplier": "19ec193338a5",
-    "q22_inactive_customers": "03e311c221bf",
-    "q2_min_cost_supplier": "cff5cb401082",
-    "q3_shipping_priority": "67441f8f5e73",
-    "q4_order_priority": "af54c0df6321",
-    "q5_local_supplier_volume": "fc68e6ae7659",
-    "q6_forecast_revenue": "2964f042473e",
-    "q7_nation_volume": "9c6e6d9c487b",
-    "q8_market_share": "dcac2cc8b7e0",
-    "q9_product_profit": "71e0a8f5f468",
-    "quality_bigram_logprob": "e4f1a4016e28",
-    "quality_classifier_score": "f8365e550817",
-    "quality_repetition_filter": "55636dd83470",
-    "quality_top_ngram_mass": "1b649ba867f6",
-    "quality_unigram_logprob": "edad530fe1e7",
-    "rollup_status_priority": "fd02b19f270d",
-    "sample_hash_mod": "4e92ad8c6a40",
-    "sample_stratified_lang": "1cd168b40df0",
-    "sample_weighted_per_stratum": "eb12f5201476",
-    "sample_weighted_priority": "b352e3f9d859",
-    "scd2_customer_history": "1f02960c1eb3",
-    "session_window": "3e2119405138",
-    "sessionize_events": "b581a70b0c49",
-    "set_ops": "eb45e5f01a18",
-    "shuffle_shards": "2460ab3b27d7",
-    "similarity_hard_negatives": "7f5dd80f6b73",
-    "similarity_ivf_build": "08f73a863baf",
-    "similarity_ivf_filtered_recall": "24b0622f71ac",
-    "similarity_ivf_recall": "d7d0848ae2b2",
-    "similarity_ivfpq_append": "ad4d57f639af",
-    "similarity_ivfpq_build": "3c6a9b92867d",
-    "similarity_ivfpq_filtered_recall": "8f86ff0f993a",
-    "similarity_ivfpq_recall": "60b0e9d0e7a5",
-    "similarity_lsh_recall_midsim": "d7d0848ae2b2",
-    "similarity_topk": "22b1057025c9",
-    "similarity_topk_ivf": "7e42064e22c8",
-    "similarity_topk_ivf_filtered": "c3a2afec22d4",
-    "similarity_topk_ivfpq": "fbcae8bf8a13",
-    "similarity_topk_ivfpq_deleted": "79fd069a9d95",
-    "similarity_topk_ivfpq_filtered": "7ae1768aeb9c",
-    "similarity_topk_lsh": "8e7188ee3dd0",
-    "sliding_window": "818260545727",
-    "snapshot_diff_orders": "99d2c33eb09d",
-    "split_leakage_safe": "8322be35816f",
-    "sql_adhoc_cte": "13df54b30bf4",
-    "sql_adhoc_hof": "f0dab7357d42",
-    "sql_adhoc_join": "15853af5434c",
-    "sql_adhoc_window": "071eb1c18078",
-    "stats_column_entropy": "28913b41b368",
-    "stats_corr_covar": "12685873c1b8",
-    "stats_histogram_equi_depth": "608a527adb2c",
-    "stats_join_key_skew": "73f8853b834b",
-    "stats_table_profile": "a57e95218548",
-    "string_agg_nations": "76762812c549",
-    "string_funcs": "c1625848b848",
-    "subquery_correlated_scalar": "53ceaaae9a11",
-    "subquery_exists": "484c23d7ddf9",
-    "subquery_in": "3dc6b21c5c48",
-    "subquery_not_exists": "42b5ede8f3ac",
-    "subquery_scalar": "4dde634ba620",
-    "text_quality": "e28fc1910949",
-    "tfidf_top_terms": "39a3de4fffd4",
-    "token_counts": "9f48181d97ff",
-    "topk_per_group": "b36244fa0146",
-    "try_error_safe_funcs": "4def0ccfc5ec",
-    "tumbling_window": "816cdfbf8e11",
-    "udf_grouped_agg_wavg": "c0fe11dc17aa",
-    "udf_grouped_zscore": "f389874aeab4",
-    "udtf_chunk_text": "ffd74a0e21d5",
-    "unpivot_lineitem_metrics": "ceac6a0e32cf",
-    "variant_funcs": "1dfefd695b3d",
-    "vocab_coverage_topk": "ce4f99eaab72",
-    "vocab_stats": "db379a6f6fbe",
-    "window_analytic": "15541ecc7341",
-    "window_dist": "0a36a1030c7c",
-    "window_range_frame": "c153dbee1c0b",
-    "window_ranking": "b565eda11419",
-    "window_running": "803fcd3c4d77",
-    "wordscore": "1d4f77f79e31",
-    "wordscore_top10": "255b5f8f7d35",
-    "zorder_keys": "f3fed44f7913",
-}
-
-
-# name -> fingerprint of the IMPLEMENTATION (fn source + transitive engine
-# modules) the driver LAST verified this query with. Maintained by
-# tools/gen_evidence.py alongside _VERIFIED_ORACLE_FP; a mismatch with the
-# current _impl_fp demotes the query to the never-verified tier, so an
-# execution-path rewrite can never ride stale driver evidence (r5 advice).
-# Bootstrapped r6 from the then-current tree minus the _IMPL_DEMOTED names.
-_VERIFIED_IMPL_FP: dict[str, str] = {
-    "agg_salted_two_phase": "09780e710bf7",
-    "agg_stats": "064b5a09c05c",
-    "approx_aggs": "df8430b30d90",
-    "array_funcs": "db23bbf43341",
-    "asof_join_events": "5f8b528493ce",
-    "asof_join_events_forward": "68aeb5b92d28",
-    "basket_association_rules": "b8269616dae0",
-    "bigram_counts": "d9353c0c0105",
-    "bitwise_funcs": "be9d7277aa30",
-    "bm25_ranking": "02cca47d0e50",
-    "bpe_decode_corpus": "afb654559532",
-    "bpe_decode_heldout": "cbc8523416af",
-    "bpe_encode_corpus": "02deefe4ecf0",
-    "bpe_encode_ids": "2f3227a5a276",
-    "bpe_encode_ids_heldout": "edeff3199d57",
-    "bpe_encode_lengths": "c02659f685f9",
-    "bpe_encode_sequences": "c34a1af8bd29",
-    "bpe_merge_rules": "57c4557a1f12",
-    "bpe_subword_rules": "5e0c3d511ef1",
-    "bpe_tokenizer_roundtrip": "cf92d4485ac7",
-    "cms_frequency_estimates": "b2fdc211d1e5",
-    "cohort_retention_weekly": "70b5233f1f0d",
-    "conditional_funcs": "f3ec91d7cec2",
-    "corpus_dedup_rate_by_source": "17a1f5f386c0",
-    "corpus_drift_kl": "e2cae88a5132",
-    "corpus_importance_dsir": "17035698a07c",
-    "corpus_mixture_rebalance": "1cbfecd25466",
-    "corpus_ngram_novelty": "2f01a5a9cd3e",
-    "corpus_prep_funnel": "5cbb15f326b8",
-    "corpus_report_by_source": "fadffd6eb92f",
-    "corpus_sample_plan_execution": "3bdb14bb40c5",
-    "corpus_zipf_slope": "9096496a03df",
-    "cube_segment_status": "c98c0943f295",
-    "data_quality_report": "f32c321e4f3e",
-    "date_funcs": "939160ec60c3",
-    "decontaminate_bloom": "361611a6a1d8",
-    "decontaminate_fuzzy": "ec12ef3525c3",
-    "decontaminate_ngrams": "d750fba75078",
-    "dedup_apply_survivors": "e02a4d033963",
-    "dedup_cluster_canonical": "cad373bb8cae",
-    "dedup_clusters": "54565db8ba04",
-    "dedup_containment": "113d26da6862",
-    "dedup_exact": "f19df1ca703e",
-    "dedup_incremental": "afbbb4a80c35",
-    "dedup_jaccard_prefix": "78a897fcf935",
-    "dedup_lines_c4": "feb827ec163f",
-    "dedup_near_embedding": "82095e0f062f",
-    "dedup_near_jaccard": "f859874bf5f2",
-    "dedup_near_minhash": "b48ad9316677",
-    "dedup_near_simhash": "9e5007410b20",
-    "dedup_pipeline_end_to_end": "6e1dde3342cc",
-    "dedup_semantic": "84fc9579d4ed",
-    "dedup_spans_exact": "33fa8116c9b7",
-    "dedup_spans_hashed": "3a2311ca6565",
-    "dedup_winnowing_pairs": "0777866b4676",
-    "doc_chunks": "9f2ce895fa25",
-    "doc_fingerprint": "6b0614ec0ba5",
-    "doc_length_buckets": "163bfe9dbc31",
-    "embedding_centroid_separation": "31981357b2f8",
-    "embedding_centroids": "f1ad07f169fc",
-    "embedding_covariance": "b31cb0babae8",
-    "embedding_pca_project": "626f32a74ac4",
-    "embedding_quantize_int8": "d4097563fa04",
-    "embedding_random_projection": "e5c94f19d79b",
-    "events_anomaly_zscore": "e0cb144b4a8e",
-    "events_concurrency_hourly": "a227fdbf5c30",
-    "events_cusum_changepoint": "bb566d3fe973",
-    "events_ewma_value": "729934d8f13a",
-    "events_forecast_seasonal_naive": "ba1da70b4c10",
-    "events_gapfill_hourly": "12aebbd9de60",
-    "events_hourly_acf": "a373e7061469",
-    "events_mad_outliers": "11991cfec38b",
-    "events_mad_outliers_approx": "3d3a4b95f9b4",
-    "events_markov_transitions": "5c763fb266a8",
-    "events_ohlc_hourly": "32660fe61620",
-    "events_psi_drift": "f97949342c07",
-    "events_rollup_multi_grain": "797d2f5d803a",
-    "events_value_winsorized": "d1d87ead6c7c",
-    "filter_project": "863807c295ee",
-    "funnel_signup_click_purchase": "ece35022f9da",
-    "funnel_time_to_convert": "2e74ff2fb77e",
-    "graph_kcore_members": "f339d00b4401",
-    "graph_triangle_counts": "fac172c995e4",
-    "grouping_sets": "70db8a2d6dd3",
-    "having_filter": "e24d5d3db02b",
-    "heavy_hitters_streamed": "abd6638c4b87",
-    "heavy_hitters_terms": "a755b1f0b139",
-    "histogram_totalprice": "1d5e505fd699",
-    "hll_distinct_sketch": "7bb7864b9b59",
-    "html_extract_funnel": "6fc851d46f8d",
-    "html_extract_links": "3b97daf0ba2e",
-    "html_extract_text": "3bfd24ffeca9",
-    "html_links_pagerank": "558151acd3f3",
-    "inverted_index_terms": "99540c07af09",
-    "join_anti": "a4a842e6de82",
-    "join_cross": "701e41731c20",
-    "join_interval_left_outer": "e7ddafe2f8d2",
-    "join_left_outer": "26cbda41692d",
-    "join_range_theta": "95456ba8b1a9",
-    "join_salted_skew": "e1c7773854e5",
-    "join_semi": "5721ec4bead0",
-    "json_funcs": "6b6927a1de6a",
-    "k_anonymity_check": "299373231695",
-    "kmeans_embeddings": "c8bcbf950d3e",
-    "lang_id_heuristic": "0aaf89597566",
-    "linkage_fuzzy_customers": "77292618b52e",
-    "linkage_sorted_neighbourhood": "d2dd2a3b2c3b",
-    "map_funcs": "6d74dd304ba6",
-    "math_funcs": "da0c50726e64",
-    "merge_upsert_customers": "50f16eee1d14",
-    "mixture_sample_weighted": "b3a95dcb125c",
-    "multimodal_audio_real": "5809ff135438",
-    "multimodal_decode": "e71195bc7bb2",
-    "multimodal_decode_real": "91031f811eb2",
-    "multimodal_frames": "f6d3ab8e052d",
-    "multimodal_meta": "3644cb670847",
-    "multimodal_resize": "4401710509c2",
-    "multimodal_video_real": "d2343a7928ec",
-    "normalize_text_nfc": "71b8455e7aad",
-    "null_semantics": "c3e3e3c08e79",
-    "pack_segments": "dc56cf5e9b3d",
-    "pack_sequences": "ba1ba7d9a7b6",
-    "pagerank_supply_graph": "926439ce5d4b",
-    "percentile_exact": "8541fa4a8708",
-    "pii_redact": "e02e943d9e58",
-    "pit_join_events_customer_history": "04793a6d52ac",
-    "pivot_status_priority": "a5b05ef8c5e4",
-    "pmi_collocations": "a72666ce773d",
-    "q10_returned_items": "2061a3ee2a84",
-    "q11_important_parts": "c38e860a0fd4",
-    "q12_priority_shipping": "dd2ef8a2e7ad",
-    "q13_customer_distribution": "595e51eb90c5",
-    "q14_promo_effect": "39197008e82f",
-    "q15_top_supplier": "0fcf9aad16bf",
-    "q16_supplier_counts": "ef283ea4a979",
-    "q17_small_quantity_revenue": "4832b2de8d15",
-    "q18_large_volume": "b33295341174",
-    "q19_disjunctive_revenue": "b90cc365b9e7",
-    "q1_pricing_summary": "568268f2cc9e",
-    "q20_excess_stock": "b135aa8a326a",
-    "q21_waiting_supplier": "0c54fe72d73b",
-    "q22_inactive_customers": "596f44525cf0",
-    "q2_min_cost_supplier": "18510bfec4ac",
-    "q3_shipping_priority": "610a34da71ac",
-    "q4_order_priority": "70d95217be2e",
-    "q5_local_supplier_volume": "dc1a8541ec4e",
-    "q6_forecast_revenue": "fc90b4907499",
-    "q7_nation_volume": "710fef669354",
-    "q8_market_share": "a66119b8957e",
-    "q9_product_profit": "b61e25e38c65",
-    "quality_bigram_logprob": "aaffced9d481",
-    "quality_classifier_score": "303d244044fe",
-    "quality_repetition_filter": "ecad3ad1293d",
-    "quality_top_ngram_mass": "837a2702e027",
-    "quality_unigram_logprob": "e72f1e06f07f",
-    "rollup_status_priority": "84dfd40dc2c7",
-    "sample_hash_mod": "35413b90f466",
-    "sample_stratified_lang": "a6671969bba0",
-    "sample_weighted_per_stratum": "23b4b40149d7",
-    "sample_weighted_priority": "f44f78ff4a07",
-    "scd2_customer_history": "557784705d46",
-    "session_window": "4fa8d68ec706",
-    "sessionize_events": "d895836f678e",
-    "set_ops": "dbf8e5e70a0f",
-    "shuffle_shards": "90c2dded7bd7",
-    "similarity_hard_negatives": "57006e8793d5",
-    "similarity_ivf_build": "d826b96afbd9",
-    "similarity_ivf_filtered_recall": "b68ad661f05e",
-    "similarity_ivf_recall": "54bcf1332d97",
-    "similarity_ivfpq_append": "9b78f1bbddc1",
-    "similarity_ivfpq_build": "e10f4e81a34d",
-    "similarity_ivfpq_filtered_recall": "5be00350d6a8",
-    "similarity_ivfpq_recall": "1be72dd39f55",
-    "similarity_lsh_recall_midsim": "923db5e351de",
-    "similarity_topk": "68c64868ab44",
-    "similarity_topk_ivf": "1870215cb97c",
-    "similarity_topk_ivf_filtered": "3324a01a9e4f",
-    "similarity_topk_ivfpq": "ae5687538833",
-    "similarity_topk_ivfpq_deleted": "327f2b06236f",
-    "similarity_topk_ivfpq_filtered": "6a74c78fbe78",
-    "similarity_topk_lsh": "8f9d8f99e621",
-    "sliding_window": "09b227c628d7",
-    "snapshot_diff_orders": "8d639bc38fd9",
-    "split_leakage_safe": "0def0c4b154c",
-    "sql_adhoc_cte": "e5c3bf9aa034",
-    "sql_adhoc_hof": "1d9a7ca4a5e8",
-    "sql_adhoc_join": "8bda5e4879a5",
-    "sql_adhoc_window": "ea1c3c6dfd17",
-    "stats_column_entropy": "cf7add85e727",
-    "stats_corr_covar": "c431b6922b48",
-    "stats_histogram_equi_depth": "473e4a146bc3",
-    "stats_join_key_skew": "75d0ba129c50",
-    "stats_table_profile": "7837c4121d56",
-    "string_agg_nations": "9bb22fb9bbb9",
-    "string_funcs": "129540067d07",
-    "subquery_correlated_scalar": "e6cedd2d2b14",
-    "subquery_exists": "6df4817bcc28",
-    "subquery_in": "5eda1d957c14",
-    "subquery_not_exists": "5638ee823140",
-    "subquery_scalar": "93803eedd5e7",
-    "text_quality": "caa67a01581e",
-    "tfidf_top_terms": "dd416d334c92",
-    "token_counts": "6ec886bf31d3",
-    "topk_per_group": "8f100becd6e6",
-    "try_error_safe_funcs": "f348aee9e021",
-    "tumbling_window": "a610bcb1011e",
-    "udf_grouped_agg_wavg": "55c68cb43f6b",
-    "udf_grouped_zscore": "07166706632d",
-    "udtf_chunk_text": "314fc991755e",
-    "unpivot_lineitem_metrics": "d036f183362f",
-    "variant_funcs": "93b90aaa3dd4",
-    "vocab_coverage_topk": "53943b985787",
-    "vocab_stats": "83600c393f57",
-    "window_analytic": "03d8f86777ec",
-    "window_dist": "0c94ec602910",
-    "window_range_frame": "930de4758975",
-    "window_ranking": "6eaddbb044dd",
-    "window_running": "9535d0e0767b",
-    "wordscore": "6c7f240a32da",
-    "wordscore_top10": "fd3e92b420ec",
-    "zorder_keys": "9fb63837cb46",
-}
-
-
-# Manual implementation-revision demotions (ADVICE r5): the oracle
-# fingerprint cannot see an execution-path rewrite that keeps the oracle
-# text unchanged, so list here any query whose implementation was rewritten
-# since its last driver touch. Listed names rank as never-verified until a
-# driver round re-proves them; tools/gen_evidence.py drops names that appear
-# green in the new CORRECTNESS file.
-_IMPL_DEMOTED: frozenset[str] = frozenset({})
-
-
-def _history_round(name: str) -> int:
-    """Most recent round whose driver run touched this query green,
-    IGNORING fingerprint demotion (0 = never in any ledger)."""
-    for rnd, ledger in (
-        (14, _DRIVER_GREEN_R14),
-        (13, _DRIVER_GREEN_R13),
-        (12, _DRIVER_GREEN_R12),
-        (11, _DRIVER_GREEN_R11),
-        (10, _DRIVER_GREEN_R10),
-        (9, _DRIVER_GREEN_R09),
-        (8, _DRIVER_GREEN_R08),
-        (7, _DRIVER_GREEN_R07),
-        (6, _DRIVER_GREEN_R06),
-        (5, _DRIVER_GREEN_R05),
-        (4, _DRIVER_GREEN_R04),
-        (3, _DRIVER_GREEN_R03),
-        (2, _DRIVER_GREEN_R02),
-        (1, _DRIVER_GREEN_R01),
-    ):
-        if name in ledger:
-            return rnd
-    return 0
-
-
-def _latest_evidence_round(name: str) -> int:
-    """Most recent round whose driver run verified this query AS CURRENTLY
-    ORACLED AND IMPLEMENTED (0 = never). An oracle rewrite since the last
-    driver touch resets the query to round 0 (the old evidence attests a
-    different check); so does an implementation-fingerprint mismatch (the
-    old evidence attests different code — fn source or any transitively
-    imported engine module) or an explicit _IMPL_DEMOTED listing."""
-    if name in _IMPL_DEMOTED:
-        return 0
-    spec = REGISTRY.get(name)
-    if spec is not None and _VERIFIED_ORACLE_FP.get(name) != _oracle_fp(spec.oracle):
-        return 0
-    if spec is not None and _VERIFIED_IMPL_FP.get(name) != _impl_fp(spec.fn):
-        return 0
-    return _history_round(name)
-
-
-def _evidence_order() -> list[QuerySpec]:
-    # Round-robin by evidence AGE: brand-new names (no ledger history at
-    # all) lead, then everything else ascending by the round of its last
-    # driver touch — the steady state is that every query is re-verified
-    # every ~(registry / budget) rounds, oldest first. IMPLEMENTATION-
-    # fingerprint demotion does NOT jump a query ahead of genuinely staler
-    # names: a demoted name still has a recent green row on near-identical
-    # code PLUS a green local oracle gate on the exact current code, while
-    # a 4-round-stale clean name has only old evidence — scheduling ALL
-    # demotions first let one shared-module edit starve the stale cohort
-    # out of the budget for four consecutive rounds (r9 verdict #1: 39
-    # names stuck at r5). An ORACLE-TEXT demotion is different (r15): the
-    # CHECK itself changed, so the old green attests a different contract
-    # and the name schedules as brand-new — oracle rewrites are deliberate
-    # per-query events (and the fingerprint is whitespace-insensitive), so
-    # they cannot storm the queue the way a shared-module edit can.
-    # Demotion still zeroes the EVIDENCE CLAIM (_latest_evidence_round);
-    # within an equal history round it wins the tie, so edited code is
-    # re-proven ahead of untouched code of the same age. Oracle-backed
-    # before rows-only as the last tie-break (a hash check is stronger
-    # evidence than a row count).
-    specs = list(REGISTRY.values())
-
-    def _sched_round(s: QuerySpec) -> int:
-        if _VERIFIED_ORACLE_FP.get(s.name) not in (None, _oracle_fp(s.oracle)):
-            return 0  # the oracle was rewritten: re-prove like a new name
-        return _history_round(s.name)
-
-    return sorted(
-        specs,
-        key=lambda s: (
-            _sched_round(s),
-            _latest_evidence_round(s.name) != 0,
-            s.oracle is None,
-        ),
-    )  # sorted() is stable: registration order preserved within each group
-
-
 def queries() -> dict[str, QueryFn]:
-    return {s.name: s.fn for s in _evidence_order()}
+    return {n: s.fn for n, s in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {s.name: s.oracle for s in _evidence_order() if s.oracle is not None}
+    return {n: s.oracle for n, s in REGISTRY.items() if s.oracle is not None}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

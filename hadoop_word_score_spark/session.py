@@ -96,8 +96,10 @@ def overlap_jobs(spark: SparkSession, background, foreground):
       unchanged, and calling that raises ``TypeError``. Fall back to the
       bare callable there: only UI labels/tags are lost, never the job.
     - If the FOREGROUND chain fails, the background one's exception must
-      not be silently dropped by executor shutdown — it is attached as the
-      foreground error's ``__context__`` so both surface in the traceback.
+      not be silently dropped by executor shutdown — it is attached at the
+      tail of the foreground error's ``__context__`` chain (a foreground
+      error raised inside an ``except`` block already has a context) so
+      both surface in the traceback.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -111,8 +113,12 @@ def overlap_jobs(spark: SparkSession, background, foreground):
             fg = foreground()
         except BaseException as e:
             bg_err = fut.exception()  # waits; never masks the real cause
-            if bg_err is not None and bg_err is not e and e.__context__ is None:
-                e.__context__ = bg_err
+            tail, seen = e, {id(e)}
+            while tail.__context__ is not None and id(tail.__context__) not in seen:
+                tail = tail.__context__
+                seen.add(id(tail))
+            if bg_err is not None and id(bg_err) not in seen:
+                tail.__context__ = bg_err
             raise
         return fg, fut.result()
 

@@ -2,8 +2,8 @@
 
 The harness itself is exercised end-to-end by the driver per round; these pin
 the pure-Python seams a refactor could silently break: previous-round
-artifact parsing (both driver formats), the group partition, and the
-membership hash input.
+artifact parsing (both driver formats), the group partition, the
+membership hash input, and the implementation fingerprint's import closure.
 """
 
 from __future__ import annotations
@@ -159,3 +159,84 @@ def test_adjudication_survives_failed_rerun():
     assert out["a"]["verdict"] == "rerun-failed"
     assert "no result JSON" in out["a"]["error"]
     assert out["b"]["verdict"] == "recovered-isolated"
+
+
+def test_impl_fp_sees_transitive_module_content(tmp_path, monkeypatch):
+    # The fingerprint must change when a transitively-imported engine module
+    # changes content — that is the exact gap the r5 advice flagged (the
+    # similarity.py rewrite was invisible to oracle-keyed evidence).
+    from hadoop_word_score_spark.plans.queries import REGISTRY
+
+    spec = REGISTRY["similarity_topk"]
+    before = bench._impl_fp(spec.fn)
+    import inspect
+
+    src = inspect.getsource(spec.fn)
+    mods = bench._resolve_rel_imports(src, ("plans",))
+    assert "operators.similarity" in bench._engine_module_closure(tuple(sorted(mods)))
+    # simulate a module edit by clearing the digest cache and patching the
+    # file content hash path through a copied package root
+    import shutil
+
+    fake_root = tmp_path / "pkg"
+    shutil.copytree(bench._PKG_ROOT, fake_root)
+    target = fake_root / "operators" / "similarity.py"
+    target.write_text(target.read_text() + "\n# rewritten\n")
+    monkeypatch.setattr(bench, "_PKG_ROOT", str(fake_root))
+    monkeypatch.setattr(bench, "_modules_digest_cache", {})
+    after = bench._impl_fp(spec.fn)
+    assert after != before
+
+
+def test_closure_resolves_package_level_relative_imports():
+    # r6 ADVICE (medium): `from ..functions import codecs` used to resolve
+    # to a nonexistent functions.py and drop silently, leaving codecs.py
+    # out of every multimodal fingerprint. The closure must now contain
+    # the package __init__ AND the imported submodule.
+    from bench import _engine_module_closure
+
+    closure = _engine_module_closure(("operators.multimodal",))
+    assert "functions.codecs" in closure
+    assert "functions.__init__" in closure
+
+
+def test_unresolvable_relative_import_fails_loudly():
+    import pytest
+
+    from bench import _resolve_rel_imports
+
+    with pytest.raises(ImportError, match="cannot resolve"):
+        _resolve_rel_imports("from ..nosuchpkg import thing\n", ("plans",))
+
+
+def test_package_import_aliases_and_lists_resolve_submodules():
+    from bench import _resolve_rel_imports
+
+    mods = _resolve_rel_imports(
+        "from ..functions import codecs as _c, text\n", ("operators",)
+    )
+    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
+
+
+def test_multiline_parenthesized_relative_import_resolves_submodules():
+    # "from ..pkg import (\n a,\n b)" previously captured names="(" and
+    # silently dropped every submodule from the fingerprint (r7 ADVICE).
+    from bench import _resolve_rel_imports
+
+    mods = _resolve_rel_imports(
+        "from ..functions import (\n    codecs,\n    text as _t,\n)\n",
+        ("operators",),
+    )
+    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
+
+
+def test_inline_comment_in_multiline_import_keeps_following_names():
+    # review r8: a trailing '# ...' on one line of a parenthesized import
+    # must not swallow the names on the following lines
+    from bench import _resolve_rel_imports
+
+    mods = _resolve_rel_imports(
+        "from ..functions import (\n    codecs,  # helper\n    text,\n)\n",
+        ("operators",),
+    )
+    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods

@@ -1004,28 +1004,29 @@ def test_round17_link_queries_render_pages_once(spark):
     # edge list all extract in one pinned projection. Counted over the
     # EXECUTED SQL plans (the pin materializations run as tracked SQL
     # executions), not explain: the pins hide the render from the final
-    # query's own plan. The render marker is the extract regexp plus the
-    # sources-block literal only the rendered page contains.
+    # query's own plan. The marker is the internal-link extract pattern
+    # (operators/markup.py::extract_link_ids), a literal of our own that
+    # Spark's plan rendering passes through unchanged.
     store = spark._jsparkSession.sharedState().statusStore()
+    retained = int(spark.conf.get("spark.sql.ui.retainedExecutions"))
 
-    def exec_ids():
+    def executions():
         lst = store.executionsList()
-        return {lst.apply(i).executionId() for i in range(lst.size())}
+        return [lst.apply(i) for i in range(lst.size())]
 
     def render_executions(name):
-        before = exec_ids()
+        start = max((e.executionId() for e in executions()), default=-1) + 1
         df = REGISTRY[name].fn(spark, SF_ORACLE)
         df.write.format("noop").mode("overwrite").save()
-        lst = store.executionsList()
-        hits = 0
-        for i in range(lst.size()):
-            e = lst.apply(i)
-            if e.executionId() in before:
-                continue
-            plan = e.physicalPlanDescription()
-            if "regexp_extract_all" in plan and "sources" in plan:
-                hits += 1
-        return hits
+        new = [e for e in executions() if e.executionId() >= start]
+        created = max(e.executionId() for e in new) + 1 - start
+        # the store evicts its oldest executions past the retention limit,
+        # which could hide a second render: fail instead of undercounting
+        assert created < retained and len(new) == created, (
+            f"{name}: {created} executions created, {len(new)} retained, "
+            f"spark.sql.ui.retainedExecutions={retained}"
+        )
+        return sum("/doc/([0-9]+)" in e.physicalPlanDescription() for e in new)
 
     assert render_executions("html_links_by_host") == 1
     assert render_executions("crawl_frontier_topk") == 1

@@ -1817,6 +1817,33 @@ def test_overlap_jobs_surfaces_background_failure_behind_foreground(spark):
     assert "background root cause" in str(exc.value.__context__)
 
 
+def test_overlap_jobs_keeps_background_failure_behind_existing_context(spark):
+    # A foreground error raised inside an except block already carries a
+    # __context__; the background failure goes at the END of that chain
+    # instead of being dropped
+    import pytest
+
+    from hadoop_word_score_spark.session import overlap_jobs
+
+    def bg():
+        raise RuntimeError("background root cause")
+
+    def fg():
+        try:
+            raise KeyError("lookup")
+        except KeyError:
+            raise ValueError("foreground symptom")
+
+    with pytest.raises(ValueError, match="foreground symptom") as exc:
+        overlap_jobs(spark, bg, fg)
+    chain, err = [], exc.value
+    while err is not None:
+        chain.append(err)
+        err = err.__context__
+    assert isinstance(chain[1], KeyError)
+    assert any("background root cause" in str(x) for x in chain)
+
+
 def test_overlap_jobs_background_failure_alone_propagates(spark):
     import pytest
 

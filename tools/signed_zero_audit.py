@@ -23,7 +23,7 @@ verified in tests/test_properties.py); numpy/pandas rounding DOES preserve
 ``brute_force_topk``/IVF scoring) normalize with ``+ 0.0`` after rounding.
 
 Run: ``python tools/signed_zero_audit.py`` (exit 1 on violations); also run
-as a pytest via tests/test_evidence.py.
+as a pytest via tests/test_oracles.py.
 """
 
 from __future__ import annotations
