@@ -60,12 +60,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .similarity import _load_centroids, build_ivf_index
+from ..functions.vectors import cosine_similarity
+from .similarity import (
+    _as_matrix, _collect_queries, _emit_pairs, _load_centroids, _load_index,
+    _lloyd_partials, _nearest_cell, _plan_probes, _pq_codes, _probe_scan,
+    _ranked_topk, _rounded_cosine, _row_norms, _unit_centroids, _unit_rows,
+    build_ivf_index, load_cached_rows, resolve_index_root,
+)
 
 _CODEBOOK_CACHE: dict[tuple[str, float], list] = {}
-_PQ_INDEX_CACHE: dict[tuple[str, str, float], DataFrame] = {}
 
 
 def _subspace_shape(dim: int, m: int) -> int:
@@ -132,22 +136,13 @@ def pq_train(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                vm = np.array(list(pdf["v"]), dtype=np.float64)
+                vm = _as_matrix(pdf["v"])
+                codes = _pq_codes(vm, _books)
                 sub = vm.reshape(len(vm), m, dsub)
-                rows_m, rows_c, rows_p, rows_s, rows_n = [], [], [], [], []
-                for mm in range(m):
-                    d2 = ((sub[:, mm, None, :] - _books[mm][None]) ** 2).sum(-1)
-                    a = d2.argmin(1)  # ties -> lowest code (first argmin)
-                    for code in np.unique(a):
-                        sel = sub[a == code, mm, :]
-                        rows_m.extend([mm] * dsub)
-                        rows_c.extend([int(code)] * dsub)
-                        rows_p.extend(range(dsub))
-                        rows_s.extend(sel.sum(0))
-                        rows_n.extend([len(sel)] * dsub)
-                yield pd.DataFrame(
-                    {"m": rows_m, "code": rows_c, "pos": rows_p,
-                     "s": rows_s, "cnt": rows_n}
+                yield pd.concat(
+                    [_lloyd_partials(sub[:, mm, :], codes[:, mm], "code")
+                     .assign(m=mm) for mm in range(m)],
+                    ignore_index=True,
                 )
 
         upd = (
@@ -183,7 +178,6 @@ def pq_encode(
     same centroids, this equals the max-sim the training envelope needs,
     so the index build gets worst_coarse_sim without a second corpus scan
     (review r12)."""
-    m, _, dsub = books.shape
     id_schema = df.schema[id_col].dataType.simpleString()
     keep_schema = "".join(
         f", {c} {df.schema[c].dataType.simpleString()}" for c in keep
@@ -209,25 +203,17 @@ def pq_encode(
                     out["_coarse_sim"] = pd.Series(dtype="float64")
                 yield pd.DataFrame(out)
                 continue
-            vm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            sub = vm.reshape(len(vm), m, dsub)
-            codes = np.stack(
-                [((sub[:, mm, None, :] - books[mm][None]) ** 2)
-                 .sum(-1).argmin(1) for mm in range(m)],
-                axis=1,
-            ).astype(np.int32)
+            vm = _as_matrix(pdf[vec_col])
             out = {id_col: pdf[id_col],
                    **{c: pdf[c] for c in keep},
-                   "pq_code": list(codes)}
+                   "pq_code": list(_pq_codes(vm, books))}
             if coarse is not None:
-                vnorm = np.sqrt((vm * vm).sum(axis=1))
-                vnorm[vnorm == 0] = 1.0
                 rows = np.fromiter(
                     (cell_row[int(c)] for c in pdf[cell_col]),
                     dtype=np.int64,
                     count=len(pdf),
                 )
-                sims = ((vm / vnorm[:, None]) * coarse_unit[rows]).sum(axis=1)
+                sims = (_unit_rows(vm) * coarse_unit[rows]).sum(axis=1)
                 out["_coarse_sim"] = np.round(sims, 6)
             yield pd.DataFrame(out)
 
@@ -289,15 +275,7 @@ def persist_ivfpq_index(
         ),
     )
     cent_rows = centroids.collect()  # bounded: n_cells rows
-    coarse = None
-    if cent_rows:
-        cmat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-        cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-        cnorm[cnorm == 0] = 1.0
-        coarse = (
-            np.array([r["cell"] for r in cent_rows], dtype=np.int64),
-            cmat / cnorm[:, None],
-        )
+    coarse = _unit_centroids(cent_rows) if cent_rows else None
     # ONE encode pass feeds both the index write and the training-time
     # coarse envelope (review r12: the previous dedicated worst-sim pass
     # re-scanned the whole corpus for one scalar). Two consumers of a
@@ -402,8 +380,6 @@ def ivfpq_index_append(
     (what the registry query does).
     """
     spark = new_vectors.sparkSession
-    from .similarity import resolve_index_root
-
     root = resolve_index_root(path)
     with open(os.path.join(root, "_pq_meta.json"), encoding="utf-8") as f:
         meta = json.load(f)
@@ -417,12 +393,7 @@ def ivfpq_index_append(
             f"ivfpq index at {path!r} was built for dim {meta['dim']}; "
             f"new vectors have dim {len(first[0][0])}"
         )
-    cell_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    cnorm[cnorm == 0] = 1.0
-    cunit = cmat / cnorm[:, None]
-    m, _, dsub = books.shape
+    cell_ids, cunit = _unit_centroids(cent_rows)
     id_schema = new_vectors.schema[id_col].dataType.simpleString()
     # an index built with metadata columns requires every append to supply
     # them — appended rows missing an attribute would silently vanish from
@@ -456,23 +427,14 @@ def ivfpq_index_append(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            vnorm = np.sqrt((vm * vm).sum(axis=1))
-            vnorm[vnorm == 0] = 1.0
-            sims = (vm / vnorm[:, None]) @ cunit.T
-            best = np.argmax(sims, axis=1)
-            sub = vm.reshape(len(vm), m, dsub)
-            codes = np.stack(
-                [((sub[:, mm, None, :] - books[mm][None]) ** 2)
-                 .sum(-1).argmin(1) for mm in range(m)],
-                axis=1,
-            ).astype(np.int32)
+            vm = _as_matrix(pdf[vec_col])
+            best, best_sim = _nearest_cell(vm, cunit)
             yield pd.DataFrame(
                 {id_col: pdf[id_col],
                  **{c: pdf[c] for c in meta_cols},
                  "cell": cell_ids[best].astype("int32"),
-                 "pq_code": list(codes),
-                 "_coarse_sim": np.round(sims[np.arange(len(vm)), best], 6)}
+                 "pq_code": list(_pq_codes(vm, books)),
+                 "_coarse_sim": np.round(best_sim, 6)}
             )
 
     encoded = new_vectors.select(id_col, *meta_cols, vec_col).mapInPandas(
@@ -516,8 +478,6 @@ def ivfpq_index_append(
 
 
 def _load_codebooks(spark: SparkSession, path: str) -> np.ndarray:
-    from .similarity import load_cached_rows, resolve_index_root
-
     rows = load_cached_rows(  # bounded: m*k rows
         spark, os.path.join(resolve_index_root(path), "codebooks"),
         _CODEBOOK_CACHE
@@ -562,8 +522,6 @@ def ivfpq_probe_topk(
     over-fetch-and-hope; a post-shortlist filter can silently under-fill
     k). Referencing a column the index does not carry fails analysis with
     the missing-column error, plus the guard below names the fix."""
-    from .similarity import resolve_index_root
-
     root = resolve_index_root(path)
     meta_path = os.path.join(root, "_pq_meta.json")
     with open(meta_path, encoding="utf-8") as f:
@@ -576,144 +534,57 @@ def ivfpq_probe_topk(
             f"says {meta['m']}x{meta['k']} — rebuild the index"
         )
     cent_rows = _load_centroids(spark, path)
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivfpq_probe_topk collects the query side to the driver; got "
-            f">{max_queries} query vectors. Pass a smaller query set or "
-            f"raise max_queries explicitly."
-        )
-    from .similarity import load_cached_df
-
-    index = load_cached_df(
-        spark, os.path.join(root, "index"), _PQ_INDEX_CACHE
+    qids, qmat = _collect_queries(
+        queries, id_col, vec_col, max_queries, "ivfpq_probe_topk"
     )
+    index = _load_index(spark, path)
     id_schema = index.schema[id_col].dataType.simpleString()
     out_schema = (
         f"query_id {id_schema}, cand_id {id_schema}, cosine_sim double"
     )
-    if not cent_rows or not qrows:
+    if not cent_rows or not qids.size:
         return spark.createDataFrame([], out_schema + ", rank int")
 
-    if len(qrows[0][1]) != meta["dim"]:
-        raise ValueError(
-            f"ivfpq index at {path!r} was built for dim {meta['dim']}; "
-            f"queries have dim {len(qrows[0][1])}"
-        )
-    cell_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    cnorm[cnorm == 0] = 1.0
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    qn = np.where(qnorm == 0, 1.0, qnorm)
-
-    sims = (qmat / qn[:, None]) @ (cmat / cnorm[:, None]).T
-    order = np.lexsort(
-        (np.broadcast_to(cell_ids, sims.shape), -sims), axis=1
-    )[:, : min(n_probe, len(cell_ids))]
-    probed = cell_ids[order]
-    all_cells = sorted({int(c) for row in probed for c in row})
-    cell_mask = {
-        c: np.array([(c in set(row)) for row in probed]) for c in all_cells
-    }
+    cells, cell_mask = _plan_probes(
+        cent_rows, qmat, n_probe, f"ivfpq index at {path!r}"
+    )
     # the per-query ADC tables, computed ONCE: dot LUT (nq, m, kcodes) and
     # the per-codeword squared-norm table for |reconstruction|
     qsub = qmat.reshape(len(qmat), m, dsub)
     lut = np.einsum("qmd,mkd->qmk", qsub, books)
     n2 = (books * books).sum(-1)  # (m, kcodes)
+    qnorm = _row_norms(qmat)
 
-    empty = pd.DataFrame(
-        {"query_id": pd.Series(dtype=qids.dtype),
-         "cand_id": pd.Series(dtype=qids.dtype),
-         "cosine_sim": pd.Series(dtype="float64")}
-    )
+    def adc(pdf):
+        codes = np.array(list(pdf["pq_code"]), dtype=np.int64)  # (nc, m)
+        dots = np.zeros((len(qids), len(codes)))
+        rn2 = np.zeros(len(codes))
+        for mm in range(m):
+            dots += lut[:, mm, :][:, codes[:, mm]]
+            rn2 += n2[mm, codes[:, mm]]
+        # the shared kernel with the raw query norm: a zero-norm query
+        # scores NaN and gets no rows, as on the exact path
+        return _rounded_cosine(dots.T, np.sqrt(rn2), qnorm)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield empty
-                continue
-            cid = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            codes = np.array(list(pdf["pq_code"]), dtype=np.int64)  # (nc, m)
-            dots = np.zeros((len(qids), len(cid)))
-            rn2 = np.zeros(len(cid))
-            for mm in range(m):
-                dots += lut[:, mm, :][:, codes[:, mm]]
-                rn2 += n2[mm, codes[:, mm]]
-            rnorm = np.sqrt(rn2)
-            rnorm[rnorm == 0] = 1.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.round(dots / (qn[:, None] * rnorm[None, :]), 6) + 0.0
-            allowed = np.vstack([cell_mask[int(c)] for c in cells])  # (nc,nq)
-            nq, nc = s.shape
-            flat_q = np.repeat(qids, nc)
-            flat_c = np.tile(cid, nq)
-            flat_s = s.ravel()
-            keep = (flat_q != flat_c) & np.isfinite(flat_s) & allowed.T.ravel()
-            yield pd.DataFrame(
-                {"query_id": flat_q[keep], "cand_id": flat_c[keep],
-                 "cosine_sim": flat_s[keep]}
-            )
+        yield from _emit_pairs(batches, qids, id_col, adc, cell_mask)
 
-    pruned = index.filter(F.col("cell").isin(all_cells))
-    from .similarity import apply_ann_tombstones
-
-    pruned = apply_ann_tombstones(pruned, spark, path, id_col)
-    if where is not None:
-        allowed_cols = {id_col, "cell", *meta.get("meta_cols", ())}
-        try:
-            pruned = pruned.filter(F.expr(where))
-            pruned.schema  # force analysis now for the clear error below
-        except Exception as e:
-            raise ValueError(
-                f"ivfpq_probe_topk: predicate {where!r} failed to resolve "
-                f"against the index's filterable columns "
-                f"{sorted(allowed_cols)} — rebuild with "
-                f"persist_ivfpq_index(meta_cols=...) to carry "
-                f"the attributes the filter needs"
-            ) from e
-    # Arrow batch sizing, same rationale as ivf_probe_topk: the pruned
-    # code scan is TINY (16 bytes/vec), so Spark's default split hands
-    # mapInPandas many near-empty batches whose worker roundtrip dwarfs
-    # the LUT gathers. On a local filesystem coalesce to ~32 MB of probed
-    # bytes per task (coalesce never raises parallelism); cluster stores
-    # skip the listing and keep the scan's natural parallelism.
-    idx_dir = os.path.join(root, "index")
-    if os.path.isdir(idx_dir):
-        probed_bytes = 0
-        for c in all_cells:
-            cdir = os.path.join(idx_dir, f"cell={c}")
-            if os.path.isdir(cdir):
-                with os.scandir(cdir) as it:
-                    probed_bytes += sum(
-                        e.stat().st_size for e in it if e.is_file()
-                    )
-        pruned = pruned.coalesce(max(1, -(-probed_bytes // (32 << 20))))
+    pruned = _probe_scan(
+        spark, path, index, cells, id_col, where, "ivfpq", "pq_code"
+    )
     scored = pruned.select(
         F.col(id_col), F.col("cell"), F.col("pq_code")
     ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("cand_id")
-    )
     if rerank_against is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "cand_id", "cosine_sim", "rank")
-        )
-    r = shortlist if shortlist is not None else 10 * k
-    short = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= r)
-        .select("query_id", "cand_id")
+        return _ranked_topk(scored, k)
+    short = _ranked_topk(
+        scored, shortlist if shortlist is not None else 10 * k,
+        cols=("query_id", "cand_id"),
     )
     # exact rerank: tiny shortlist joins the raw corpus by id (bucket the
     # raw table by id at serving scale), query vectors ride a broadcast
     qvecs = spark.createDataFrame(
-        [(r_[0], [float(x) for x in r_[1]]) for r_ in qrows],
+        [(qid, [float(x) for x in qv]) for qid, qv in zip(qids.tolist(), qmat)],
         f"query_id {id_schema}, _qv array<double>",
     )
     cand = short.join(
@@ -722,29 +593,11 @@ def ivfpq_probe_topk(
         ),
         "cand_id",
     ).join(F.broadcast(qvecs), "query_id")
-    dot = F.aggregate(
-        F.zip_with(
-            "_qv", F.expr("transform(_cv, x -> cast(x AS double))"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0), lambda acc, e: acc + e,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x), F.lit(0.0),
-            lambda acc, e: acc + e,
-        )
-    )
+    # null for a zero-norm side (nullif), dropped before the rank
     exact = cand.select(
         "query_id", "cand_id",
-        (F.round(
-            dot / (nrm(F.col("_qv"))
-                   * nrm(F.expr("transform(_cv, x -> cast(x AS double))"))),
-            6,
-        ) + F.lit(0.0)).alias("cosine_sim"),
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine_sim", "rank")
-    )
+        (F.round(cosine_similarity("_qv", "_cv"), 6) + F.lit(0.0)).alias(
+            "cosine_sim"
+        ),
+    ).filter(F.col("cosine_sim").isNotNull())
+    return _ranked_topk(exact, k)

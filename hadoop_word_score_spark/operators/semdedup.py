@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .clustering import kmeans_assign, kmeans_fit
+from .similarity import _as_matrix, _rounded_cosine, _row_norms
 
 
 def _assigned_and_pairs(
@@ -117,20 +118,13 @@ def _within_cluster_pairs(asg: DataFrame, threshold: float) -> DataFrame:
             n = len(ids)
             if n < 2:
                 continue
-            mat = np.array(list(grp["v"]), dtype=np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # + 0.0 normalizes IEEE -0.0 (np.round preserves the sign
-                # where JVM F.round does not; sign-strict oracle hashes
-                # care). np.round is half-to-even where F.round/DuckDB are
-                # half-away — a flip needs the unrounded cosine to be an
-                # exact decimal half at 6 dp (constructible from power-of-2
-                # coordinates, never observed in a driver corpus; the
-                # driver-green brute_force_topk path makes the same bet —
-                # if a red ever points here, change BOTH sites together).
-                sims = np.round(
-                    (mat @ mat.T) / (norms[:, None] * norms[None, :]), 6
-                ) + 0.0
+            mat = _as_matrix(grp["v"])
+            norms = _row_norms(mat)
+            # the shared kernel (similarity._rounded_cosine): this path
+            # rounds and treats zero norms exactly as brute_force_topk
+            # does; its half-to-even caveat lives there — if a red ever
+            # points here, change that one site
+            sims = _rounded_cosine(mat @ mat.T, norms, norms)
             ia, ib = np.triu_indices(n, k=1)
             s = sims[ia, ib]
             keep = np.isfinite(s) & (s >= threshold)

@@ -13,17 +13,176 @@ approximate paths score surviving pairs. The JVM-side HOF cosine
 value-hash-checked exact pair query (operators/dedup.embedding_cosine_pairs);
 here every consumer rounds to 6 dp and is recall-bound-checked, where the
 two arithmetics are interchangeable.
+
+Shared ANN kernels, the one implementation of each step for this module,
+operators/pq.py and operators/semdedup.py: ``_unit_rows`` (zero-norm-guarded
+unit rows), ``_rounded_cosine`` (the served 6-dp cosine, and the one place
+that decides a zero-norm vector scores NaN, i.e. has no neighbours),
+``_nearest_cell`` (centroid argmax), ``_pq_codes``, ``_lloyd_partials``,
+``_collect_queries``, ``_plan_probes``, ``_probe_scan``, ``_emit_pairs`` and
+``_ranked_topk``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _as_matrix(vectors) -> np.ndarray:
+    """An Arrow batch's array column as a float64 (rows, dim) matrix."""
+    return np.array(list(vectors), dtype=np.float64)
+
+
+def _row_norms(mat: np.ndarray) -> np.ndarray:
+    return np.sqrt((mat * mat).sum(axis=1))
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm. A zero row stays zero (its norm is
+    taken as 1): it scores 0 against every centroid, so assignment falls
+    to the tie-break instead of NaN."""
+    norm = _row_norms(mat)
+    norm[norm == 0] = 1.0
+    return mat / norm[:, None]
+
+
+def _unit_centroids(cent_rows: list) -> tuple[np.ndarray, np.ndarray]:
+    """(cell ids, unit centroid matrix) from (cell, centroid) rows. Argmax
+    positions map back through the ids, so a cell emptied by refinement
+    can't skew the positional index (cell ids need not be dense)."""
+    cell_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
+    cmat = np.array([r[1] for r in cent_rows], dtype=np.float64)
+    return cell_ids, _unit_rows(cmat)
+
+
+def _rounded_cosine(dots: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """round(dots / (na ⊗ nb), 6) — the served cosine of every Arrow
+    scoring path. A zero norm gives NaN (0/0), which every caller drops:
+    a zero-norm vector has no neighbours, on every top-k path.
+
+    + 0.0 normalizes IEEE -0.0 (np.round preserves the sign where JVM
+    F.round does not; sign-strict oracle hashes care). np.round is
+    half-to-even where F.round/DuckDB are half-away — a flip needs the
+    unrounded cosine to be an exact decimal half at 6 dp (constructible
+    from power-of-2 coordinates, never observed in a driver corpus); if a
+    red ever points here, this is the one site to change."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round(dots / (na[:, None] * nb[None, :]), 6) + 0.0
+
+
+def _nearest_cell(vm: np.ndarray, cunit: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(position in ``cunit`` of each row's max-cosine centroid, that
+    cosine). Ties break to the lowest position (np.argmax takes the first
+    maximum)."""
+    sims = _unit_rows(vm) @ cunit.T
+    best = np.argmax(sims, axis=1)
+    return best, sims[np.arange(len(vm)), best]
+
+
+def _pq_codes(vm: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(rows, m) int32 PQ codes: per subspace, the nearest codeword of the
+    (m, k, d/m) codebook tensor by squared L2 (ties -> lowest code)."""
+    m, _, dsub = books.shape
+    sub = vm.reshape(len(vm), m, dsub)
+    return np.stack(
+        [((sub[:, mm, None, :] - books[mm][None]) ** 2)
+         .sum(-1).argmin(1) for mm in range(m)],
+        axis=1,
+    ).astype(np.int32)
+
+
+def _lloyd_partials(x: np.ndarray, labels: np.ndarray, key: str) -> pd.DataFrame:
+    """One batch's Lloyd partial sums: for each distinct label (ascending)
+    and coordinate, a (``key``, pos, s, cnt) row — the label, the
+    coordinate, the group's sum there and the group size. Labels × dim
+    rows per batch, so the mean Σs/Σcnt shuffles centroid-sized data,
+    never the corpus."""
+    groups = np.unique(labels)
+    sels = [x[labels == g] for g in groups]
+    dim = x.shape[1]
+    return pd.DataFrame({
+        key: np.repeat(groups, dim),
+        "pos": np.tile(np.arange(dim), len(groups)),
+        "s": np.array([sel.sum(0) for sel in sels]).ravel(),
+        "cnt": np.repeat([len(sel) for sel in sels], dim),
+    })
+
+
+def _collect_queries(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    max_queries: int,
+    caller: str,
+    hint: str = "",
+) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids, float64 query matrix) collected to the driver, failing
+    fast past ``max_queries`` (the query matrix rides every task closure)."""
+    # guard fused into the collect (limit max_queries+1, then len check):
+    # one Spark job instead of a count job followed by a collect job
+    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"{caller} collects the query side to the driver; got "
+            f">{max_queries} query vectors. Pass a smaller query set or "
+            f"raise max_queries explicitly{hint}."
+        )
+    qids = np.array([r[0] for r in qrows])
+    if qrows:
+        qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    else:
+        qmat = np.zeros((0, 1), dtype=np.float64)
+    return qids, qmat
+
+
+def _exact_sims(qmat: np.ndarray, vec_col: str):
+    """Per-batch scorer: (candidates × queries) rounded cosines of the
+    batch's ``vec_col`` against the closed-over query matrix."""
+    qnorm = _row_norms(qmat)
+
+    def sims(pdf: pd.DataFrame) -> np.ndarray:
+        vm = _as_matrix(pdf[vec_col])
+        return _rounded_cosine(vm @ qmat.T, _row_norms(vm), qnorm)
+
+    return sims
+
+
+def _emit_pairs(batches, qids: np.ndarray, id_col: str, sims_of, cell_mask=None):
+    """The (query_id, cand_id, cosine_sim) frames of a scoring mapInPandas.
+    ``sims_of(pdf)`` gives a batch's (candidates × queries) rounded
+    cosines; self pairs and non-finite sims (zero norms) are dropped and,
+    with ``cell_mask`` ({cell: which queries probed it}), so is every pair
+    whose query did not probe the candidate's cell."""
+    empty = pd.DataFrame(
+        {"query_id": pd.Series(dtype=qids.dtype), "cand_id": pd.Series(dtype=qids.dtype),
+         "cosine_sim": pd.Series(dtype="float64")}
+    )
+    for pdf in batches:
+        if len(pdf) == 0 or qids.size == 0:
+            yield empty
+            continue
+        cid = pdf[id_col].to_numpy()
+        sims = sims_of(pdf)
+        nc, nq = sims.shape
+        flat_q = np.tile(qids, nc)
+        flat_c = np.repeat(cid, nq)
+        flat_s = sims.ravel()
+        keep = (flat_q != flat_c) & np.isfinite(flat_s)
+        if cell_mask is not None:
+            cells = pdf["cell"].to_numpy(dtype=np.int64)
+            keep &= np.vstack([cell_mask[int(c)] for c in cells]).ravel()  # (nc, nq)
+        yield pd.DataFrame(
+            {"query_id": flat_q[keep], "cand_id": flat_c[keep],
+             "cosine_sim": flat_s[keep]}
+        )
+
 
 def _scored_pairs(
     queries: DataFrame,
@@ -38,71 +197,40 @@ def _scored_pairs(
     and :func:`hard_negative_topk` (see brute_force_topk's docstring for
     the determinism and max_queries contracts).
     """
-    # guard fused into the collect (limit max_queries+1, then len check):
-    # one Spark job instead of a count job followed by a collect job
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"{caller} collects the query side to the driver; got "
-            f">{max_queries} query vectors. Pass a smaller query set, raise "
-            f"max_queries explicitly, or use lsh_bucketed_topk/ivf_topk for "
-            f"distributed bulk search."
-        )
+    qids, qmat = _collect_queries(
+        queries, id_col, vec_col, max_queries, caller,
+        ", or use lsh_bucketed_topk/ivf_topk for distributed bulk search",
+    )
     # derive the id dtype/schema from the input (ivf_probe_topk parity):
     # a string or int32 id column must survive unchanged — hardcoded int64
     # made the exact oracle path unusable on id schemas the approximate
     # paths support (r8 review)
-    qids = np.array([r[0] for r in qrows])
-    if qrows:
-        qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    else:
-        qmat = np.zeros((0, 1), dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-
     id_schema = queries.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_schema}, cand_id {id_schema}, cosine_sim double"
-
-    empty = pd.DataFrame(
-        {"query_id": pd.Series(dtype=qids.dtype), "cand_id": pd.Series(dtype=qids.dtype),
-         "cosine_sim": pd.Series(dtype="float64")}
-    )
+    sims = _exact_sims(qmat, vec_col)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or qids.size == 0:
-                yield empty
-                continue
-            cid = pdf[id_col].to_numpy()
-            cmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # + 0.0 normalizes IEEE -0.0 (np.round preserves the sign where
-                # JVM F.round does not; sign-strict oracle hashes care)
-                sims = np.round(cmat @ qmat.T / (cnorm[:, None] * qnorm[None, :]), 6) + 0.0
-            nc, nq = sims.shape
-            flat_q = np.tile(qids, nc)
-            flat_c = np.repeat(cid, nq)
-            flat_s = sims.ravel()
-            keep = (flat_q != flat_c) & np.isfinite(flat_s)
-            yield pd.DataFrame(
-                {
-                    "query_id": flat_q[keep],
-                    "cand_id": flat_c[keep],
-                    "cosine_sim": flat_s[keep],
-                }
-            )
+        yield from _emit_pairs(batches, qids, id_col, sims)
 
     return candidates.select(
         F.col(id_col), F.col(vec_col)
     ).mapInPandas(score, out_schema)
 
 
-def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("cand_id"))
+def _ranked_topk(
+    scored: DataFrame,
+    k: int,
+    order: tuple[str, str] = ("cosine_sim", "cand_id"),
+    cols: tuple[str, ...] = ("query_id", "cand_id", "cosine_sim", "rank"),
+) -> DataFrame:
+    """The ``k`` best rows per query_id, ranked by ``order`` = (score
+    DESC, tie-break ASC) into a ``rank`` column; returns ``cols``."""
+    sim, tie = order
+    w = Window.partitionBy("query_id").orderBy(F.desc(sim), F.asc(tie))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine_sim", "rank")
+        .select(*cols)
     )
 
 
@@ -167,15 +295,11 @@ def hard_negative_topk(
     scored = _scored_pairs(
         queries, candidates, id_col, vec_col, max_queries, "hard_negative_topk"
     )
-    banded = scored.filter(
-        (F.col("cosine_sim") >= lo)
-        & (F.col("cosine_sim") < hi)
-        # a query is never its own hard negative: self-cosine 1.0 happens
-        # to fall outside the default band, but the operator contract must
-        # hold for ANY band a caller passes (advice r9: hi > 1.0 returned
-        # the query as its own negative)
-        & (F.col("query_id") != F.col("cand_id"))
-    )
+    # a query is never its own hard negative: self-cosine 1.0 happens to
+    # fall outside the default band, but the operator contract must hold
+    # for ANY band a caller passes (advice r9: hi > 1.0 returned the query
+    # as its own negative) — _scored_pairs drops self pairs for every band
+    banded = scored.filter((F.col("cosine_sim") >= lo) & (F.col("cosine_sim") < hi))
     return _ranked_topk(banded, k)
 
 
@@ -200,7 +324,7 @@ def _cosine_pairs_udf():
         if am.size == 0:
             return pd.Series(np.zeros(0, dtype=np.float64))
         num = np.einsum("ij,ij->i", am, bm)
-        den = np.sqrt((am * am).sum(axis=1)) * np.sqrt((bm * bm).sum(axis=1))
+        den = _row_norms(am) * _row_norms(bm)
         with np.errstate(divide="ignore", invalid="ignore"):
             return pd.Series(num / den)
 
@@ -253,13 +377,12 @@ def build_ivf_index(
     # derive the id type from the input instead of assuming long: a string or
     # int id column must survive the mapInPandas round-trip unchanged
     id_schema = candidates.schema[id_col].dataType.simpleString()
+    keep_schema = "".join(
+        f", {c} {candidates.schema[c].dataType.simpleString()}" for c in keep
+    )
     if not seed_rows:  # empty candidate set → empty centroids + index
         empty_cents = candidates.sparkSession.createDataFrame(
             [], f"cell int, centroid {vec_schema}"
-        )
-        keep_schema = "".join(
-            f", {c} {candidates.schema[c].dataType.simpleString()}"
-            for c in keep
         )
         empty_index = candidates.sparkSession.createDataFrame(
             [],
@@ -267,47 +390,6 @@ def build_ivf_index(
             f"cell int{keep_schema}",
         )
         return empty_cents, empty_index
-
-    def assign_with(cent_rows: list, keep_cols: tuple[str, ...] = ()) -> DataFrame:
-        # cent_rows: [(cell_id, centroid)] — argmax positions map back
-        # through cell_ids so a cell emptied by refinement can't skew the
-        # positional index (cell ids need not be dense).
-        cell_ids = np.array([c for c, _ in cent_rows], dtype=np.int32)
-        cmat = np.array([v for _, v in cent_rows], dtype=np.float64)
-        cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-        cnorm[cnorm == 0] = 1.0
-        vec_type = candidates.schema[vec_col].dataType.simpleString()
-        keep_schema = "".join(
-            f", {c} {candidates.schema[c].dataType.simpleString()}"
-            for c in keep_cols
-        )
-
-        def assign_batches(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pd.DataFrame(
-                        {"vid": pdf["vid"],
-                         "v": pd.Series(dtype="object"),
-                         **{c: pdf[c] for c in keep_cols},
-                         "cell": pd.Series(dtype="int32")}
-                    )
-                    continue
-                vm = np.array(list(pdf["v"]), dtype=np.float64)
-                vnorm = np.sqrt((vm * vm).sum(axis=1))
-                vnorm[vnorm == 0] = 1.0
-                sims = (vm / vnorm[:, None]) @ (cmat / cnorm[:, None]).T
-                yield pd.DataFrame(
-                    {"vid": pdf["vid"], "v": pdf["v"],
-                     **{c: pdf[c] for c in keep_cols},
-                     "cell": cell_ids[np.argmax(sims, axis=1)]}
-                )
-
-        return candidates.select(
-            ids.alias("vid"), F.col(vec_col).alias("v"), *keep_cols
-        ).mapInPandas(
-            assign_batches,
-            f"vid {id_schema}, v {vec_type}{keep_schema}, cell int",
-        )
 
     # Refinement pass: one mapInPandas scan emitting per-batch PARTIAL sums
     # keyed by (cell, pos) — the pq_train/clustering.py pattern (r17,
@@ -320,31 +402,15 @@ def build_ivf_index(
     # the same quantity avg computed (summation order differs only within
     # the float ulp; centroids are not a declared query output, and every
     # build/probe oracle re-verified PASS).
-    seed_cell_ids = np.array([c for c, _ in seed_rows], dtype=np.int32)
-    seed_cmat = np.array([v for _, v in seed_rows], dtype=np.float64)
-    seed_cnorm = np.sqrt((seed_cmat * seed_cmat).sum(axis=1))
-    seed_cnorm[seed_cnorm == 0] = 1.0
+    seed_cell_ids, seed_cunit = _unit_centroids(seed_rows)
 
     def refine_partials(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vm = np.array(list(pdf["v"]), dtype=np.float64)
-            vnorm = np.sqrt((vm * vm).sum(axis=1))
-            vnorm[vnorm == 0] = 1.0
-            sims = (vm / vnorm[:, None]) @ (seed_cmat / seed_cnorm[:, None]).T
-            a = np.argmax(sims, axis=1)  # ties -> first max, as assign_with
-            cells, cnts, sums, poss = [], [], [], []
-            dim = vm.shape[1]
-            for j in np.unique(a):
-                sel = vm[a == j]
-                cells.extend([int(seed_cell_ids[j])] * dim)
-                poss.extend(range(dim))
-                sums.extend(sel.sum(axis=0))
-                cnts.extend([len(sel)] * dim)
-            yield pd.DataFrame(
-                {"cell": cells, "pos": poss, "s": sums, "cnt": cnts}
-            )
+            vm = _as_matrix(pdf["v"])
+            best, _ = _nearest_cell(vm, seed_cunit)  # ties -> first max, as assign_batches
+            yield _lloyd_partials(vm, seed_cell_ids[best], "cell")
 
     refined = (
         candidates.select(F.col(vec_col).alias("v"))
@@ -361,7 +427,31 @@ def build_ivf_index(
     refined_rows = [
         (r[0], r[1]) for r in refined.orderBy("cell").select("cell", "centroid").collect()
     ]
-    index = assign_with(refined_rows, keep).select(
+    cell_ids, cunit = _unit_centroids(refined_rows)
+
+    def assign_batches(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                yield pd.DataFrame(
+                    {"vid": pdf["vid"],
+                     "v": pd.Series(dtype="object"),
+                     **{c: pdf[c] for c in keep},
+                     "cell": pd.Series(dtype="int32")}
+                )
+                continue
+            best, _ = _nearest_cell(_as_matrix(pdf["v"]), cunit)
+            yield pd.DataFrame(
+                {"vid": pdf["vid"], "v": pdf["v"],
+                 **{c: pdf[c] for c in keep},
+                 "cell": cell_ids[best].astype(np.int32)}
+            )
+
+    index = candidates.select(
+        ids.alias("vid"), F.col(vec_col).alias("v"), *keep
+    ).mapInPandas(
+        assign_batches,
+        f"vid {id_schema}, v {vec_schema}{keep_schema}, cell int",
+    ).select(
         F.col("vid").alias(id_col), F.col("v").alias(vec_col), "cell", *keep
     )
     # the centroid rows were JUST collected (bounded ~sqrt(N)): return a
@@ -413,16 +503,13 @@ def ivf_topk(
     centroids, index = build_ivf_index(candidates, n_cells, id_col, vec_col)
     cos_pair = _cosine_pairs_udf()
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("ccos"), F.asc("cell")
-    )
-    probes = (
+    probes = _ranked_topk(
         q.crossJoin(F.broadcast(centroids))
         .withColumn("ccos", cos_pair("qvec", "centroid"))
-        .filter(~F.isnan("ccos"))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= n_probe)
-        .select("query_id", "qvec", "cell")
+        .filter(~F.isnan("ccos")),
+        n_probe,
+        order=("ccos", "cell"),
+        cols=("query_id", "qvec", "cell"),
     )
     scored = (
         index.join(F.broadcast(probes), "cell")
@@ -431,12 +518,7 @@ def ivf_topk(
         .filter(~F.isnan("cosine_sim"))
         .select("query_id", F.col(id_col).alias("cand_id"), "cosine_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, k)
 
 
 def persist_ivf_index(
@@ -587,8 +669,6 @@ def ann_index_begin_rebuild(path: str) -> tuple[str, int]:
     touched, so probes keep reading the old index throughout the rebuild
     (and forever, if the rebuild dies before commit). Single-writer
     contract, as everywhere in this store."""
-    import shutil
-
     cur = ann_index_current_version(path)
     nxt = 1 if cur is None else cur + 1
     root = os.path.join(path, f"v={nxt}")
@@ -607,8 +687,6 @@ def ann_index_commit_version(path: str, version: int, keep: int = 1) -> str:
     window for in-flight readers of the just-replaced version); the
     flat-legacy artifacts, if any, are left untouched. Returns the new
     serving root."""
-    import shutil
-
     root = os.path.join(path, f"v={version}")
     if not os.path.exists(os.path.join(root, "index", "_SUCCESS")):
         raise ValueError(
@@ -714,8 +792,6 @@ def ann_index_recover(path: str) -> int:
     re-exposes rows the manifest still hides, and the retry re-drops
     them. Clearing tombstones first would let a restore resurrect
     deleted rows."""
-    import shutil
-
     root = resolve_index_root(path)
     idx_dir = os.path.join(root, "index")
     aside = os.path.join(root, "_vacuum_aside")
@@ -760,8 +836,6 @@ def ann_index_vacuum(
     serving cache (index handle, centroids, codebooks) re-reads after the
     compaction. Single-writer contract: a probe racing the swap window
     may transiently miss an aside cell's rows until recovery runs."""
-    import shutil
-
     root = resolve_index_root(path)
     idx_dir = os.path.join(root, "index")
     tomb_dir = os.path.join(root, "tombstones")
@@ -827,6 +901,86 @@ def _load_index(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _plan_probes(
+    cent_rows: list, qmat: np.ndarray, n_probe: int, index_desc: str
+) -> tuple[list[int], dict[int, np.ndarray]]:
+    """The driver half of an IVF probe: (sorted union of probed cells,
+    {cell: bool mask of the queries that probed it}). Each query probes
+    its ``n_probe`` max-cosine cells — a tiny (queries × cells) matmul."""
+    cell_ids, cunit = _unit_centroids(cent_rows)
+    if qmat.shape[1] != cunit.shape[1]:
+        raise ValueError(
+            f"{index_desc} was built for dim {cunit.shape[1]}; "
+            f"queries have dim {qmat.shape[1]}"
+        )
+    sims = _unit_rows(qmat) @ cunit.T  # (nq, n_cells)
+    # lexsort (last key primary): order by -sim, ties by LOWEST cell id —
+    # plain argsort resolved ties by the index parquet's arbitrary collect
+    # order, diverging from ivf_topk's F.asc("cell") tie-break (r8 review)
+    order = np.lexsort(
+        (np.broadcast_to(cell_ids, sims.shape), -sims), axis=1
+    )[:, : min(n_probe, len(cell_ids))]
+    probed = cell_ids[order]  # (nq, n_probe) cell ids per query
+    cells = sorted({int(c) for c in probed.ravel()})
+    # a dict, not a positional array: cell ids need not be dense
+    return cells, {c: (probed == c).any(axis=1) for c in cells}
+
+
+def _probe_scan(
+    spark: SparkSession,
+    path: str,
+    index: DataFrame,
+    cells: list[int],
+    id_col: str,
+    where: str | None,
+    kind: str,
+    payload: str,
+) -> DataFrame:
+    """The read half of an IVF probe over a persisted ``kind`` index
+    ("ivf" or "ivfpq"): only the probed cells, minus tombstones, filtered
+    by ``where``, coalesced to ~32 MB of probed bytes per task.
+    ``payload`` is the scored column (vectors or codes), which ``where``
+    may not reference."""
+    pruned = index.filter(F.col("cell").isin(cells))  # static partition pruning
+    pruned = apply_ann_tombstones(pruned, spark, path, id_col)
+    if where is not None:
+        try:
+            pruned = pruned.filter(F.expr(where))
+            pruned.schema  # force analysis now for the clear error below
+        except Exception as e:
+            # Filterable set per the documented contract: id_col, cell, and
+            # the recorded meta columns — NOT the payload column, even
+            # though it is physically present (ADVICE r13: the message must
+            # match the contract, not the storage layout).
+            filterable = sorted(set(index.columns) - {payload})
+            raise ValueError(
+                f"{kind}_probe_topk: predicate {where!r} failed to resolve "
+                f"against the index's filterable columns {filterable} — "
+                f"rebuild with persist_{kind}_index(meta_cols=...) to carry "
+                f"the attributes the filter needs"
+            ) from e
+    # Arrow batch sizing: Spark splits the pruned scan to reach default
+    # parallelism, which at test scale hands mapInPandas dozens of tiny
+    # batches whose per-batch worker roundtrip dwarfs the scoring (the
+    # code scan of an IVF-PQ index is tinier still, 16 bytes/vec). When the
+    # index is on a local filesystem, coalesce to ~32 MB of probed bytes per
+    # task (coalesce never raises parallelism, so a larger target is a
+    # no-op); on cluster stores the listing is skipped and the scan's
+    # natural parallelism stands — there each cell is many full-size files
+    # and batches are already wide. The listing goes through the version
+    # pointer, like the read itself.
+    idx_dir = os.path.join(resolve_index_root(path), "index")
+    if os.path.isdir(idx_dir):
+        probed_bytes = 0
+        for c in cells:
+            cdir = os.path.join(idx_dir, f"cell={c}")
+            if os.path.isdir(cdir):
+                with os.scandir(cdir) as it:
+                    probed_bytes += sum(e.stat().st_size for e in it if e.is_file())
+        pruned = pruned.coalesce(max(1, -(-probed_bytes // (32 << 20))))
+    return pruned
+
+
 def ivf_probe_topk(
     spark: SparkSession,
     path: str,
@@ -859,116 +1013,26 @@ def ivf_probe_topk(
     over surviving candidates).
     """
     cent_rows = _load_centroids(spark, path)
-    # guard fused into the collect — one Spark job, mirroring brute_force_topk
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_probe_topk collects the query side to the driver; got "
-            f">{max_queries} query vectors. Pass a smaller query set or raise "
-            f"max_queries explicitly."
-        )
+    qids, qmat = _collect_queries(
+        queries, id_col, vec_col, max_queries, "ivf_probe_topk"
+    )
     index = _load_index(spark, path)
     id_schema = index.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_schema}, cand_id {id_schema}, cosine_sim double"
-    if not cent_rows or not qrows:
+    if not cent_rows or not qids.size:
         return spark.createDataFrame([], out_schema + ", rank int")
 
-    cell_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    cnorm[cnorm == 0] = 1.0
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    qn = np.where(qnorm == 0, 1.0, qnorm)
-
-    sims = (qmat / qn[:, None]) @ (cmat / cnorm[:, None]).T  # (nq, n_cells)
-    # lexsort (last key primary): order by -sim, ties by LOWEST cell id —
-    # plain argsort resolved ties by the index parquet's arbitrary collect
-    # order, diverging from ivf_topk's F.asc("cell") tie-break (r8 review)
-    order = np.lexsort(
-        (np.broadcast_to(cell_ids, sims.shape), -sims), axis=1
-    )[:, : min(n_probe, len(cell_ids))]
-    probed = cell_ids[order]  # (nq, n_probe) cell ids per query
-    all_cells = sorted({int(c) for row in probed for c in row})
-    # (cell -> which queries probed it) closure mask; cells are dense small
-    # ints (0..n_cells-1) so a dict keeps it robust to non-dense ids too
-    cell_mask = {
-        c: np.array([(c in set(row)) for row in probed]) for c in all_cells
-    }
-
-    empty = pd.DataFrame(
-        {"query_id": pd.Series(dtype=qids.dtype), "cand_id": pd.Series(dtype=qids.dtype),
-         "cosine_sim": pd.Series(dtype="float64")}
-    )
+    cells, cell_mask = _plan_probes(cent_rows, qmat, n_probe, f"ivf index at {path!r}")
+    sims = _exact_sims(qmat, vec_col)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield empty
-                continue
-            cid = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            vm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            vnorm = np.sqrt((vm * vm).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # + 0.0: normalize IEEE -0.0 after np.round (sign-strict hashes)
-                s = np.round(vm @ qmat.T / (vnorm[:, None] * qnorm[None, :]), 6) + 0.0
-            allowed = np.vstack([cell_mask[int(c)] for c in cells])  # (nc, nq)
-            nc, nq = s.shape
-            flat_q = np.tile(qids, nc)
-            flat_c = np.repeat(cid, nq)
-            flat_s = s.ravel()
-            keep = (flat_q != flat_c) & np.isfinite(flat_s) & allowed.ravel()
-            yield pd.DataFrame(
-                {"query_id": flat_q[keep], "cand_id": flat_c[keep],
-                 "cosine_sim": flat_s[keep]}
-            )
+        yield from _emit_pairs(batches, qids, id_col, sims, cell_mask)
 
-    pruned = index.filter(F.col("cell").isin(all_cells))  # static partition pruning
-    pruned = apply_ann_tombstones(pruned, spark, path, id_col)
-    if where is not None:
-        try:
-            pruned = pruned.filter(F.expr(where))
-            pruned.schema  # force analysis now for the clear error below
-        except Exception as e:
-            # Filterable set per the documented contract: id_col, cell, and
-            # the recorded meta columns — NOT the raw vector column, even
-            # though it is physically present (ADVICE r13: the message must
-            # match the contract, not the storage layout).
-            filterable = sorted(set(index.columns) - {vec_col})
-            raise ValueError(
-                f"ivf_probe_topk: predicate {where!r} failed to resolve "
-                f"against the index's filterable columns {filterable} — "
-                f"rebuild with persist_ivf_index(meta_cols=...) to carry "
-                f"the attributes the filter needs"
-            ) from e
-    # Arrow batch sizing: Spark splits the pruned scan to reach default
-    # parallelism, which at test scale hands mapInPandas dozens of tiny
-    # batches whose per-batch worker roundtrip dwarfs the matmul. When the
-    # index is on a local filesystem, coalesce to ~32 MB of probed bytes per
-    # task (coalesce never raises parallelism, so a larger target is a
-    # no-op); on cluster stores the listing is skipped and the scan's
-    # natural parallelism stands — there each cell is many full-size files
-    # and batches are already wide.
-    idx_dir = os.path.join(path, "index")
-    if os.path.isdir(idx_dir):
-        probed_bytes = 0
-        for c in all_cells:
-            cdir = os.path.join(idx_dir, f"cell={c}")
-            if os.path.isdir(cdir):
-                with os.scandir(cdir) as it:
-                    probed_bytes += sum(e.stat().st_size for e in it if e.is_file())
-        pruned = pruned.coalesce(max(1, -(-probed_bytes // (32 << 20))))
+    pruned = _probe_scan(spark, path, index, cells, id_col, where, "ivf", vec_col)
     scored = pruned.select(
         F.col(id_col), F.col(vec_col), F.col("cell")
     ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, k)
 
 
 def _sign_sketch_udf(n_planes: int, n_tables: int, dim: int):
@@ -1070,12 +1134,7 @@ def lsh_bucketed_topk(
         .groupBy("query_id", "cand_id")
         .agg(F.first("cosine_sim").alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, k)
 
 
 def mmr_reference(
@@ -1092,9 +1151,7 @@ def mmr_reference(
     sequence is deterministic and engine-independent.
     """
     vecs = np.asarray(vectors, dtype=np.float64)
-    norms = np.linalg.norm(vecs, axis=1)
-    norms[norms == 0.0] = 1.0  # zero vectors: cos 0 to everything
-    unit = vecs / norms[:, None]
+    unit = _unit_rows(vecs)  # zero vectors: cos 0 to everything
     n = len(sims_to_query)
     picked: list[int] = []
     picked_set: set[int] = set()  # O(1) membership; the list keeps order
@@ -1162,15 +1219,10 @@ def mmr_rerank(
             "not both and not neither"
         )
     if pooled is None:
-        pooled = _ranked_topk(
-            _scored_pairs(queries, candidates, id_col, vec_col, max_queries,
-                          "mmr_rerank"),
-            pool,
+        pooled = _scored_pairs(
+            queries, candidates, id_col, vec_col, max_queries, "mmr_rerank"
         )
-    else:
-        pooled = _ranked_topk(
-            pooled.select("query_id", "cand_id", "cosine_sim"), pool
-        )
+    pooled = _ranked_topk(pooled.select("query_id", "cand_id", "cosine_sim"), pool)
     with_vecs = pooled.join(
         candidates.select(
             F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_vec")

@@ -100,19 +100,38 @@ def overlap_jobs(spark: SparkSession, background, foreground):
       tail of the foreground error's ``__context__`` chain (a foreground
       error raised inside an ``except`` block already has a context) so
       both surface in the traceback.
+    - The background chain's jobs carry a job tag, and a foreground
+      failure cancels them before waiting: without it the real error
+      surfaced only after the now-useless background work (a corpus-sized
+      index write) ran to completion. The cancel repeats until the chain
+      returns, so a job it starts after the failure is cancelled too.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
 
+    sc = spark.sparkContext
+    tag = f"overlap-jobs-{uuid.uuid4().hex}"
+
+    def tagged():
+        sc.addJobTag(tag)
+        try:
+            return background()
+        finally:
+            sc.removeJobTag(tag)
+
     deco = inheritable_thread_target(spark)
-    target = deco(background) if callable(deco) else background
+    target = deco(tagged) if callable(deco) else tagged
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = pool.submit(target)
         try:
             fg = foreground()
         except BaseException as e:
-            bg_err = fut.exception()  # waits; never masks the real cause
+            sc.cancelJobsWithTag(tag)
+            while not wait([fut], timeout=0.5).done:
+                sc.cancelJobsWithTag(tag)
+            bg_err = fut.exception()  # never masks the real cause
             tail, seen = e, {id(e)}
             while tail.__context__ is not None and id(tail.__context__) not in seen:
                 tail = tail.__context__

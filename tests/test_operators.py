@@ -285,6 +285,10 @@ def test_ivf_persist_probe_roundtrip(spark, tmp_path):
     # probing 4/8 cells: spherical cells concentrate neighbors, so recall
     # should comfortably beat the a priori 50% corpus fraction
     assert len(exact & approx) / len(exact) >= 0.5
+    # a wrong-dimension query names the fix instead of a numpy matmul error
+    short_q = q.select("vec_id", F.expr("slice(embedding, 1, 32)").alias("embedding"))
+    with pytest.raises(ValueError, match="was built for dim"):
+        ivf_probe_topk(spark, path, short_q, k=5, n_probe=4)
 
 
 def test_ivf_index_preserves_id_type(spark, tmp_path):
@@ -506,6 +510,18 @@ def test_ivfpq_persist_probe_planted_rerank_and_guards(spark, tmp_path):
     exact = {(r.query_id, r.cand_id) for r in brute_force_topk(q, corpus, k=5).collect()}
     approx = {(r.query_id, r.cand_id) for r in rr.collect()}
     assert len(exact & approx) / len(exact) >= 0.8
+
+    # one zero-norm policy: a zero query has no neighbours on the exact,
+    # the ADC and the reranked path alike
+    zero_q = spark.createDataFrame(
+        [(2000000, [0.0] * 64)], "vec_id long, embedding array<float>"
+    )
+    assert brute_force_topk(zero_q, corpus, k=5).collect() == []
+    assert ivfpq_probe_topk(spark, path, zero_q, k=5, n_probe=6).collect() == []
+    assert ivfpq_probe_topk(
+        spark, path, zero_q, k=5, n_probe=6, shortlist=50,
+        rerank_against=corpus,
+    ).collect() == []
 
     # shape-contract guards refuse loudly instead of mis-decoding codes
     meta = _json.load(open(f"{path}/_pq_meta.json"))
@@ -747,6 +763,36 @@ def test_ann_rebuild_and_swap_under_serving(spark, tmp_path):
     persist_ivf_index(base, root3, n_cells=8)
     ann_index_commit_version(path, v3)
     assert not _os.path.isdir(root1) and _os.path.isdir(root2)
+
+
+def test_ivf_probe_coalesces_versioned_index_like_flat(spark, tmp_path):
+    # The probed-bytes coalesce lists the index through the version
+    # pointer, so a versioned (v=N) index gets the same Coalesce as the
+    # flat layout — and serves the same rows.
+    import re as _re
+
+    from hadoop_word_score_spark.operators.similarity import (
+        ann_index_begin_rebuild,
+        ann_index_commit_version,
+        ivf_probe_topk,
+        persist_ivf_index,
+    )
+
+    q, base, _ = _planted_ivf_corpus(spark)
+    flat = str(tmp_path / "ivf_flat")
+    persist_ivf_index(base, flat, n_cells=8)
+    versioned = str(tmp_path / "ivf_versioned")
+    root, v = ann_index_begin_rebuild(versioned)
+    persist_ivf_index(base, root, n_cells=8)
+    ann_index_commit_version(versioned, v)
+
+    served = []
+    for path in (flat, versioned):
+        probe = ivf_probe_topk(spark, path, q, k=3, n_probe=4)
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert _re.search(r"Coalesce \d+", plan), f"{path}: no Coalesce\n{plan}"
+        served.append({(r.query_id, r.cand_id, r.rank) for r in probe.collect()})
+    assert served[0] == served[1]
 
 
 def test_ann_rebuild_crash_leaves_old_serving(spark, tmp_path):

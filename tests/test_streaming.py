@@ -1855,3 +1855,25 @@ def test_overlap_jobs_background_failure_alone_propagates(spark):
             lambda: (_ for _ in ()).throw(RuntimeError("bg boom")),
             lambda: 1,
         )
+
+
+def test_overlap_jobs_cancels_background_when_foreground_fails(spark):
+    # A foreground failure cancels the background chain's tagged job
+    # instead of waiting for it: the error surfaces in seconds, not after
+    # the ~30 s the background job would otherwise run
+    from hadoop_word_score_spark.session import overlap_jobs
+
+    @F.udf("long")
+    def slow(x):
+        import time as _t
+
+        _t.sleep(30)
+        return x
+
+    def fg():
+        raise ValueError("foreground symptom")
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="foreground symptom"):
+        overlap_jobs(spark, lambda: spark.range(1).select(slow("id")).collect(), fg)
+    assert time.monotonic() - t0 < 15
