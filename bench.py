@@ -1,32 +1,38 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver's per-round feedback loop.
+"""Benchmark harness: every ``bench=True`` registry row, end to end and per layer.
 
 Runs every ``bench=True`` query from the registry at
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]``, plus the two streaming drains, and prints ONE
+JSON line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+    {"metric": "bench_total_sec", "value": <total sec>, "unit": "sec",
+     "queries": {"q1": sec, ...}, "bench_set": [...], "bench_set_hash": "...",
+     "sf": 0.1}
 
-Each query is timed end-to-end: plan construction + execution to a
-driver-side count via ``df.write.format("noop")`` — a full materialization
-of every row (like the reference writing its output file, CWS:215-216)
-without paying local-disk write costs that wouldn't exist on a cluster.
+Each query is timed end to end: plan construction plus execution of every
+row into ``df.write.format("noop")``, a full materialisation without local
+disk write costs. The published value of a row is the min of 3 interleaved
+trials; the first (cold) trial is reported separately.
 
-Session isolation (r10): queries are timed in GROUPS of 6, each group in a
-FRESH subprocess with its own JVM/SparkSession. Two rounds of diagnosis
-(r8's receipted interference, r9's drift on untouched code) showed the
-former shared-session design let session age — accumulated codegen cache,
-GC pressure, Python-worker state from 38 rows x 3 passes — shift published
-minimums on bit-identical code: cross-round spread on untouched rows
-reached 1.2-1.6x, monotonic r7<r8<r9 as the set grew, while isolated
-fresh-session reruns recovered the old numbers (SCALE_PROBE.md isolation
-receipt). Bounding every row's session age at one small group removes the
-drift class for all rows, permanently, instead of maintaining a flagged
-list; the ~20s/group JVM+warmup overhead is excluded from timings. Note
-for cross-round comparison: BENCH_r10 is the first artifact measured this
-way — carry-over rows are expected to land at (or below) their isolated-
-rerun levels, not at BENCH_r09's session-aged levels.
+Rows run in groups of ``GROUP_SIZE``, in registration order, each group in
+a fresh subprocess with its own JVM and SparkSession, so no row runs in a
+session aged by more than a few others. The fixed warm-up is excluded from
+every timing.
+
+Layers: after the last trial of each row, perfbench's ``Collector`` reads
+what that trial ran from Spark's status store (SQL executions, jobs,
+stages, operator metrics, Arrow boundary, pins) and the row keeps it as its
+``layers`` record in ``BENCH_LOCAL.json``, under the metric names of
+``BENCHMARK.json``.
+
+Gate: wall time on a shared host moves by tens of percent on unchanged
+code, so the comparison with the previous run (same scale factor) is on
+deterministic counters, ``GATED``. A row whose gated counter changed is
+listed in ``vs_prev_regressions`` as ``{counter: [prev, now]}``, with
+``impl_changed`` telling whether its implementation fingerprint moved. A
+row more than 1.5x slower with unchanged counters is not flagged; it is
+listed in ``vs_prev_slower`` with the time layer that grew most.
 """
 
 from __future__ import annotations
@@ -40,21 +46,33 @@ import sys
 import time
 
 from collections.abc import Callable
+from types import SimpleNamespace
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+_LOCAL = os.path.join(_HERE, "BENCH_LOCAL.json")
+sys.path.insert(0, _HERE)
+
+from perfbench.collect import Collector, observability_confs  # noqa: E402
 
 GROUP_SIZE = 6
 
+# Counters that are identical across runs of the same code at the same
+# scale factor; a change in one is a change in the work a row does.
+# pins.count is recorded but not gated: pins a row creates and drops can be
+# released by JVM garbage collection before the collector reads storage,
+# so it varied between two sf0.1 runs of the same code on 4 cores
+# (html_links_by_host 6/5, streaming_ingest_drain 4/2).
+GATED = (
+    "driver.sql_executions",
+    "driver.jobs",
+    "exchange.shuffle_records",
+    "arrow.rows_sent",
+)
 
-def _order_for_grouping(names: list[str], prev_cost: dict[str, float]) -> list[str]:
-    """Group order: previous-round cost DESCENDING, name as the tie-break.
 
-    Heavy rows share fresh-session groups with each other, so a new heavy
-    query shifts composition for at most its own cost tier (alphabetical
-    chunking twice put new heavy rows next to unrelated cheap ones and aged
-    those groups' sessions — SCALE_PROBE.md r8-r10 and r12 receipts).
-    Unknown-cost (new) names rank 0 and land together at the tail."""
-    return sorted(names, key=lambda n: (-prev_cost.get(n, 0.0), n))
+def _groups(names: list[str]) -> list[list[str]]:
+    """Registration-order chunks of ``GROUP_SIZE``: one fresh session each."""
+    return [names[i : i + GROUP_SIZE] for i in range(0, len(names), GROUP_SIZE)]
 
 
 def sf_of(sf_dir: str) -> float:
@@ -168,24 +186,58 @@ def _warm(spark, sf_dir: str, group: list[str]) -> None:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
 
+def _collector(spark) -> Collector:
+    """perfbench's status-store collector over bench trials: each trial is
+    one ``iteration`` span, and no workload result feeds its funnels."""
+    return Collector(spark, SimpleNamespace(records=[]))
+
+
+def _trial(collector: Collector, body: Callable, read: bool) -> tuple[float, dict | None]:
+    """Wall seconds of one trial of ``body``, and with ``read`` the per-layer
+    record of everything it ran (DataFrame construction included), taken
+    from the status store after the clock stops. ``body`` may return the
+    streaming query it drained; its progress feeds the streaming layers."""
+    mark = collector.mark()
+    start, t0 = time.time(), time.perf_counter()
+    query = body()
+    dt = round(time.perf_counter() - t0, 3)
+    if not read:
+        return dt, None
+    collector.spans.records[:] = [
+        {"name": "iteration", "start": start, "end": start + dt}
+    ]
+    progress = [] if query is None else [
+        json.loads(p.json) for p in query.recentProgress
+    ]
+    res = SimpleNamespace(progress=progress, batch_s=[], probe_results=0)
+    layers = collector.layers(mark, 0, res, dt)
+    return dt, {k: round(v, 4) for k, v in layers.items()}
+
+
 def _group_main(names: list[str]) -> None:
     """Child mode: time the given queries in a fresh session, print one JSON
-    line {"trials": {...}, "cold": {...}, "reruns": {...}} and exit. The
-    min-of-3 + disagreement-rerun logic lives HERE because trials must share
-    one (young) session to measure warm steady-state."""
+    line {"trials": {...}, "cold": {...}, "layers": {...}} and exit. All
+    trials of a row share one young session, so the min is warm steady
+    state."""
     from hadoop_word_score_spark.plans.queries import REGISTRY
     from hadoop_word_score_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench-group")
+    spark = get_spark("bench-group", extra_confs=observability_confs(1))
     _warm(spark, sf_dir, names)
+    collector = _collector(spark)
+    layers: dict[str, dict] = {}
 
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t0, 3)
+    def run_once(name: str, last: bool) -> float:
+        def body() -> None:
+            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
+        dt, rec = _trial(collector, body, last)
+        if rec is not None:
+            layers[name] = rec
+        return dt
 
     # Three passes per query, interleaved (a transient stall hits one trial
     # of several queries, not all trials of one). The first execution of any
@@ -197,131 +249,45 @@ def _group_main(names: list[str]) -> None:
     trials: dict[str, list[float]] = {n: [] for n in names}
     for pass_no in range(3):
         for name in names:
-            dt = run_once(name)
+            dt = run_once(name, last=pass_no == 2)
             if pass_no == 0:
                 cold[name] = dt
             trials[name].append(dt)
-
-    # Noise robustness (round-3 lesson: min-of-2 on a busy box published a
-    # phantom 22% regression): targeted re-run for any query whose warm
-    # passes disagree by >1.5x — a contamination signal that fires equally
-    # for fast and slow queries. Deliberately NOT re-running on "slower
-    # than last round" (r4 advice): that trigger granted extra min draws
-    # only to regressed-looking queries, letting a real regression min-shop
-    # itself away.
-    reruns: dict[str, int] = {}
-    for name in names:
-        for _ in range(2):  # at most 2 extra trials per suspicious query
-            # Spread over the TWO FASTEST warm trials: one contaminated
-            # outlier doesn't poison the signal forever (max/min over all
-            # trials is monotonically non-decreasing, so re-runs could
-            # never clear it) — two independent fast runs agreeing is the
-            # "steady state reached" witness.
-            w1, w2 = sorted(trials[name][1:])[:2]
-            if not (w1 > 0 and w2 / w1 > 1.5):
-                break
-            trials[name].append(run_once(name))
-            reruns[name] = reruns.get(name, 0) + 1
-    print(json.dumps({"trials": trials, "cold": cold, "reruns": reruns}))
+    print(json.dumps({"trials": trials, "cold": cold, "layers": layers}))
     spark.stop()
 
 
-_STREAM_ROWS = ("streaming_tumbling_drain", "streaming_ingest_drain")
-
-
-def _stream_solo_main(name: str) -> None:
-    """Child mode for isolated adjudication of a STREAMING bench row (the
-    drains run in the parent session, not through --group, so their solo
-    rerun needs its own fresh-JVM entry point)."""
-    from hadoop_word_score_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench-solo-stream")
-    fn = _streaming_smoke if name == "streaming_tumbling_drain" else _ingest_smoke
-    dt = fn(spark, sf_dir)
-    print(json.dumps({"trials": {name: [dt]}, "cold": {name: dt}, "reruns": {}}))
-    spark.stop()
-
-
-def _run_isolated(name: str) -> dict:
-    """Fresh solo subprocess for one flagged row (regression adjudication)."""
-    if name in _STREAM_ROWS:
-        argv = [sys.executable, os.path.abspath(__file__), "--solo-stream", name]
-    else:
-        argv = [sys.executable, os.path.abspath(__file__), "--group", name]
-    # bounded: a wedged child JVM must not stall the whole bench at the
-    # adjudication step after all timing work is done (r14 advice) — the
-    # TimeoutExpired lands in _adjudicate_regressions' per-row try/except
-    # as a "rerun-failed" verdict
-    proc = subprocess.run(
-        argv, capture_output=True, text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-        timeout=900,
-    )
-    res = _parse_group_stdout(proc.stdout)
-    if res is not None:
-        return res
-    raise RuntimeError(
-        f"isolated rerun of {name} produced no result JSON "
-        f"(rc={proc.returncode}):\n{proc.stderr[-2000:]}"
-    )
-
-
-def _adjudicate_regressions(
-    regressions: dict[str, float],
+def _vs_prev(
+    prev: dict,
     timings: dict[str, float],
-    prev: dict[str, float],
-    run=None,
-    impl_changed: dict[str, bool] | None = None,
-) -> dict[str, dict]:
-    """Auto-adjudication (r13 verdict #2: three vs-prev flags shipped
-    unadjudicated and the judge had to rerun them by hand — all three were
-    session interference). Every flagged row gets one fresh SOLO subprocess
-    rerun; both numbers land in the artifact so a flag never leaves a round
-    without its isolated counterpart. The grouped number stays the
-    published timing (the isolated rerun is evidence, not a min-shopping
-    draw — r4 advice still applies). ``run`` is injectable for tests.
+    layers: dict[str, dict],
+    impl_changed: dict[str, bool],
+) -> tuple[dict[str, dict], dict[str, dict]]:
+    """(regressions, slower) against the previous run's record ``prev``.
 
-    ``impl_changed`` (r15): per-row flag that the query's IMPLEMENTATION
-    fingerprint differs from the one the previous round benched — a slow
-    row whose code changed is a different workload, not a regression of
-    the same one, so a confirmed slowdown there gets the distinct
-    "changed-workload" verdict (e.g. a funnel that gained a stage). The
-    isolated rerun still runs and both numbers still land."""
-    run = run or _run_isolated
-    isolated: dict[str, dict] = {}
-    for n in sorted(regressions):
-        changed = bool((impl_changed or {}).get(n))
-        # a failed solo rerun (transient OOM, killed child) must not
-        # abort the whole bench after all timing work is done (r14
-        # review) — record the failure as this row's verdict instead
-        try:
-            solo = run(n)
-            iso = min(solo["trials"][n])
-        except Exception as e:
-            isolated[n] = {
-                "grouped_sec": timings[n],
-                "prev_sec": round(prev[n], 3),
-                "verdict": "rerun-failed",
-                "impl_changed_since_prev": changed,
-                "error": str(e)[-500:],
-            }
+    A row regresses when a ``GATED`` counter differs: ``{counter: [prev,
+    now], ..., "impl_changed": bool}``. A row with unchanged counters but
+    more than 1.5x its previous wall time is only listed as slower:
+    ``{"ratio": r, "layer": <time layer that grew most>}``. Rows without a
+    previous layers record are not compared."""
+    regressions: dict[str, dict] = {}
+    slower: dict[str, dict] = {}
+    for n, now in layers.items():
+        before = prev.get("layers", {}).get(n)
+        if before is None:
             continue
-        if iso <= 1.5 * prev[n]:
-            verdict = "recovered-isolated"
-        elif changed:
-            verdict = "changed-workload"
-        else:
-            verdict = "confirmed-regression"
-        isolated[n] = {
-            "grouped_sec": timings[n],
-            "isolated_sec": round(iso, 3),
-            "prev_sec": round(prev[n], 3),
-            "isolated_ratio": round(iso / prev[n], 2),
-            "verdict": verdict,
-            "impl_changed_since_prev": changed,
-        }
-    return isolated
+        moved = {c: [before.get(c), now.get(c)] for c in GATED
+                 if before.get(c) != now.get(c)}
+        if moved:
+            regressions[n] = {**moved, "impl_changed": impl_changed.get(n, False)}
+            continue
+        was = prev.get("queries", {}).get(n, 0)
+        if was > 0 and timings[n] > 1.5 * was:
+            times = [k for k in now if k.endswith(("_s", ".s"))
+                     and k not in ("job_s", "trace.collect_s")]
+            grown = max(times, key=lambda k: now[k] - before.get(k, 0.0))
+            slower[n] = {"ratio": round(timings[n] / was, 2), "layer": grown}
+    return regressions, slower
 
 
 # The import-names group has two alternatives: a parenthesized list (which
@@ -332,9 +298,7 @@ def _adjudicate_regressions(
 _REL_IMPORT_RE = re.compile(
     r"^\s*from\s+(\.+)([\w.]*)\s+import\s+(\([^)]*\)|[^\n]+)", re.M
 )
-_PKG_ROOT = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "hadoop_word_score_spark"
-)
+_PKG_ROOT = os.path.join(_HERE, "hadoop_word_score_spark")
 
 
 def _resolve_rel_imports(src: str, pkg_parts: tuple[str, ...]) -> set[str]:
@@ -447,24 +411,29 @@ def _impl_fp(fn: Callable) -> str:
     return hashlib.md5((src + "|" + _modules_digest(mods)).encode()).hexdigest()[:12]
 
 
-def _impl_fp_state(names: list[str]) -> tuple[dict[str, str], dict[str, bool]]:
+def _impl_fp_state(
+    names: list[str], prev_fps: dict[str, str]
+) -> tuple[dict[str, str], dict[str, bool]]:
     """(current per-row implementation fingerprints, per-row changed flags
-    vs the PREVIOUS bench run). The fps persist in BENCH_LOCAL.json so the
-    next run compares directly; a row with no recorded fp is unknowable,
-    recorded as unchanged rather than guessed."""
+    vs ``prev_fps``, the previous run's). A row with no recorded fp is
+    unknowable, recorded as unchanged rather than guessed."""
     from hadoop_word_score_spark.plans.queries import REGISTRY
 
     cur = {n: _impl_fp(REGISTRY[n].fn) for n in names if n in REGISTRY}
-    prev_fps: dict[str, str] = {}
-    try:
-        with open(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
-        )) as f:
-            prev_fps = json.load(f).get("impl_fps", {})
-    except (OSError, ValueError):
-        pass
     changed = {n: prev_fps.get(n) not in (None, fp) for n, fp in cur.items()}
     return cur, changed
+
+
+def _previous_record(sf: float) -> dict:
+    """The previous run's full record from BENCH_LOCAL.json, or {} when
+    there is none or it was taken at another scale factor (its counters
+    would not be comparable)."""
+    try:
+        with open(_LOCAL) as f:
+            rec = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return rec if isinstance(rec, dict) and rec.get("sf") == sf else {}
 
 
 def _parse_group_stdout(stdout: str) -> dict | None:
@@ -489,7 +458,7 @@ def _run_group(names: list[str]) -> dict:
         [sys.executable, os.path.abspath(__file__), "--group", ",".join(names)],
         capture_output=True,
         text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
+        cwd=_HERE,
     )
     res = _parse_group_stdout(proc.stdout)
     if res is not None:
@@ -504,62 +473,43 @@ def main() -> None:
     if "--group" in sys.argv:
         _group_main(sys.argv[sys.argv.index("--group") + 1].split(","))
         return
-    if "--solo-stream" in sys.argv:
-        _stream_solo_main(sys.argv[sys.argv.index("--solo-stream") + 1])
-        return
 
     from hadoop_word_score_spark.plans.queries import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = [n for n, s in REGISTRY.items() if s.bench]
-
-    # Deterministic COST-AWARE grouping (r13, after the r12 regression
-    # cluster) — see _order_for_grouping. Still deterministic given the
-    # committed BENCH artifacts, and the membership hash below continues to
-    # flag any set change.
-    prev = _previous_round_timings(sf_of(sf_dir))
-    ordered = _order_for_grouping(names, prev)
-    groups = [ordered[i : i + GROUP_SIZE] for i in range(0, len(ordered), GROUP_SIZE)]
+    groups = _groups(names)
     trials: dict[str, list[float]] = {}
     cold: dict[str, float] = {}
-    reruns: dict[str, int] = {}
+    layers: dict[str, dict] = {}
     for g in groups:  # sequential — parallel groups would contend for CPUs
         res = _run_group(g)
         trials.update(res["trials"])
         cold.update(res["cold"])
-        reruns.update(res["reruns"])
-    timings = {n: min(ts) for n, ts in trials.items()}
+        layers.update(res["layers"])
 
     # Streaming rows run in the parent's own (otherwise idle) session — their
     # checkpoints are fresh per trial and the session has run nothing else.
     from hadoop_word_score_spark.session import get_spark
 
-    spark = get_spark("bench")
-    timings["streaming_tumbling_drain"] = _streaming_smoke(spark, sf_dir)
-    trials["streaming_tumbling_drain"] = [timings["streaming_tumbling_drain"]]
-    names.append("streaming_tumbling_drain")
-
-    timings["streaming_ingest_drain"] = _ingest_smoke(spark, sf_dir)
-    trials["streaming_ingest_drain"] = [timings["streaming_ingest_drain"]]
-    names.append("streaming_ingest_drain")
+    spark = get_spark("bench", extra_confs=observability_confs(1))
+    collector = _collector(spark)
+    for name, smoke in (("streaming_tumbling_drain", _streaming_smoke),
+                        ("streaming_ingest_drain", _ingest_smoke)):
+        best, layers[name] = smoke(spark, sf_dir, collector)
+        trials[name] = [best]
+        names.append(name)
+    timings = {n: min(ts) for n, ts in trials.items()}
 
     import statistics
 
     warm_median = {
         n: round(statistics.median(ts[1:] or ts), 3) for n, ts in trials.items()
     }
-    # `prev` from the grouping step above: the artifacts it reads are
-    # committed files, unchanged by this run
-    regressions = {
-        n: round(timings[n] / prev[n], 2)
-        for n in names
-        if prev.get(n, 0) > 0 and timings[n] > 1.5 * prev[n]
-    }
-
-    impl_fps, impl_changed = _impl_fp_state(names)
-    isolated = _adjudicate_regressions(
-        regressions, timings, prev, impl_changed=impl_changed
-    )
+    sf = sf_of(sf_dir)
+    prev = _previous_record(sf)
+    impl_fps, impl_changed = _impl_fp_state(names, prev.get("impl_fps", {}))
+    regressions, slower = _vs_prev(prev, timings, layers, impl_changed)
 
     # Membership fingerprint (r5 advice): the headline total is only
     # comparable across rounds when the bench SET is unchanged; recording
@@ -579,35 +529,34 @@ def main() -> None:
         "bench_set": sorted(names),
         "bench_set_hash": member_hash,
         "isolation": {"mode": "grouped-subprocess", "group_size": GROUP_SIZE,
-                      "groups": len(groups), "grouping": "cost-desc"},
-        "sf": sf_of(sf_dir),
+                      "groups": len(groups), "grouping": "registration-order"},
+        "sf": sf,
     }
-    if reruns:
-        out["noise_reruns"] = reruns
     if regressions:
         out["vs_prev_regressions"] = regressions
-        out["vs_prev_isolated"] = isolated
+    if slower:
+        out["vs_prev_slower"] = slower
 
     # Full per-row artifact committed in-repo (r10 verdict: the driver's
     # BENCH_r*.json keeps only a 2,000-char stdout tail, which truncated 8
     # of 38 per-row timings and blocked the cross-round audit). Every trial
     # is recorded, not just the published min/median, so a disputed row can
-    # be re-examined without a rerun.
+    # be re-examined without a rerun; so is each row's layers record, which
+    # the next run's counter gate compares against.
     local = dict(out)
     local["trials"] = trials
     local["impl_fps"] = impl_fps
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_LOCAL.json"), "w"
-    ) as f:
+    local["layers"] = layers
+    with open(_LOCAL, "w") as f:
         json.dump(local, f, indent=1, sort_keys=True)
 
     print(json.dumps(out))
     spark.stop()
 
 
-def _streaming_smoke(spark, sf_dir: str) -> float:
-    """Min-of-2 wall time to drain the sf events through the streaming path.
+def _streaming_smoke(spark, sf_dir: str, collector: Collector) -> tuple[float, dict]:
+    """Min-of-2 wall time to drain the sf events through the streaming path,
+    and the layers record of the last drain.
 
     Each drain uses a FRESH checkpoint dir — a reused one would make the
     second run an incremental no-op and time nothing. The events table is
@@ -622,9 +571,7 @@ def _streaming_smoke(spark, sf_dir: str) -> float:
         tumbling_counts_stream,
     )
 
-    scratch = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench_stream"
-    )
+    scratch = os.path.join(_HERE, ".scratch", "bench_stream")
     src = os.path.join(scratch, "events_us")
     shutil.rmtree(scratch, ignore_errors=True)
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(src)
@@ -637,30 +584,34 @@ def _streaming_smoke(spark, sf_dir: str) -> float:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
-        best = None
+        times = []
         for i in range(2):
             ckpt = os.path.join(scratch, f"ckpt{i}")
-            t0 = time.perf_counter()
-            q = (
-                tumbling_counts_stream(read_events_stream(spark, src))
-                .writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            dt = round(time.perf_counter() - t0, 3)
-            best = dt if best is None else min(best, dt)
+
+            def drain(ckpt=ckpt):
+                q = (
+                    tumbling_counts_stream(read_events_stream(spark, src))
+                    .writeStream.format("noop")
+                    .option("checkpointLocation", ckpt)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                return q
+
+            dt, layers = _trial(collector, drain, read=i == 1)
+            times.append(dt)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(scratch, ignore_errors=True)
-    return best
+    return min(times), layers
 
 
-def _ingest_smoke(spark, sf_dir: str) -> float:
+def _ingest_smoke(spark, sf_dir: str, collector: Collector) -> tuple[float, dict]:
     """Min-of-2 wall time to ingest the sf documents in two arrival batches
-    through the dedup-on-ingest sink. Fresh target per trial — a reused one
+    through the dedup-on-ingest sink, and the layers record of the last
+    trial. Fresh target per trial — a reused one
     would replay-skip both batches and time nothing. Timed per trial:
     2 × (sign batch + within-batch LSH pairs) + 1 × (persisted-index probe
     + verify join) + 2 snapshot commits."""
@@ -671,78 +622,26 @@ def _ingest_smoke(spark, sf_dir: str) -> float:
     from hadoop_word_score_spark.sources.registry import load_table
     from hadoop_word_score_spark.streaming.ingest import dedup_ingest_sink
 
-    scratch = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench_ingest"
-    )
+    scratch = os.path.join(_HERE, ".scratch", "bench_ingest")
     shutil.rmtree(scratch, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mid = docs.count() // 2  # testdata doc_ids are contiguous from 0
     b0 = docs.filter(F.col("doc_id") < mid)
     b1 = docs.filter(F.col("doc_id") >= mid)
     try:
-        best = None
+        times = []
         for i in range(2):
-            target = os.path.join(scratch, f"t{i}")
-            t0 = time.perf_counter()
-            sink = dedup_ingest_sink(target)
-            sink(b0, 0)
-            sink(b1, 1)
-            dt = round(time.perf_counter() - t0, 3)
-            best = dt if best is None else min(best, dt)
+
+            def ingest(target=os.path.join(scratch, f"t{i}")) -> None:
+                sink = dedup_ingest_sink(target)
+                sink(b0, 0)
+                sink(b1, 1)
+
+            dt, layers = _trial(collector, ingest, read=i == 1)
+            times.append(dt)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return best
-
-
-def _previous_round_timings(sf: float, here: str | None = None) -> dict[str, float]:
-    """Per-query timings from the latest BENCH_r*.json at the SAME scale
-    factor (else {} — comparing across SFs would mislabel every query as a
-    regression or mask real ones). The driver's artifact sometimes carries
-    bench's JSON line pre-parsed under "parsed" and sometimes only as the
-    raw "tail" text — try both. Rows the driver's 2,000-char tail
-    truncated away are backfilled from the committed BENCH_LOCAL.json
-    (written by the previous run, so at read time it still holds that
-    run's full per-row record); driver rows win where both exist. Caveat:
-    on a SECOND bench run within one round, the backfill serves the first
-    same-round run's numbers for the truncated rows — a vs-prev ratio of
-    ~1.0 there means "unchanged since the last run", not "unchanged since
-    last round" (the driver runs bench once per round, so its artifact is
-    unaffected)."""
-    import glob
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-
-    def rows_of(rec) -> dict[str, float]:
-        if not isinstance(rec, dict) or rec.get("sf") != sf:
-            return {}
-        return {k: float(v) for k, v in rec.get("queries", {}).items()}
-
-    local: dict[str, float] = {}
-    try:
-        with open(os.path.join(here, "BENCH_LOCAL.json")) as f:
-            local = rows_of(json.load(f))
-    except Exception:
-        pass
-
-    files = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    driver: dict[str, float] = {}
-    if files:
-        try:
-            with open(files[-1]) as f:
-                rec = json.load(f)
-            parsed = rec.get("parsed") if isinstance(rec, dict) else None
-            if parsed is None and isinstance(rec, dict) and "tail" in rec:
-                tail = rec["tail"]
-                i = tail.find('{"metric"')
-                if i >= 0:
-                    try:
-                        parsed = json.loads(tail[i:].splitlines()[0])
-                    except (json.JSONDecodeError, ValueError):
-                        parsed = None
-            driver = rows_of(parsed if parsed is not None else rec)
-        except Exception:
-            driver = {}
-    return {**local, **driver}
+    return min(times), layers
 
 
 if __name__ == "__main__":

@@ -83,27 +83,26 @@ def merge_pair_expr(w: Column, pa: str, pb: str, joiner: str = JOINER) -> Column
     return F.ltrim(F.aggregate(_tokens(w), F.lit(""), step))
 
 
-def learn_merge_rules(docs: DataFrame, text_col: str, n_rules: int) -> list[tuple]:
-    """Run ``n_rules`` BPE rounds; returns [(step, pair, n_occurrences)].
-
-    ``docs[text_col]`` must be canonical single-space-joined tokens. The
-    corpus column is re-derived per round from the immutable input plus the
-    rules learned so far (re-applying k cheap fold expressions per scan) —
-    no growing lineage, no cache pinning a 100 TB corpus in memory.
-    """
+def _learn_rules(
+    rel: DataFrame, sym: str, n_rules: int, joiner: str, weight: str | None = None
+) -> list[tuple]:
+    """The BPE argmax loop shared by both rule learners: ``n_rules`` rounds,
+    each re-applying the rules learned so far to ``rel[sym]`` and taking the
+    most frequent adjacent pair (ties to the smallest pair); returns
+    [(step, pair, n)]. A pair counts once per occurrence, or ``weight``
+    times when a weight column is given."""
+    carry = [weight] if weight else []
+    n = F.sum(weight) if weight else F.count(F.lit(1))
     rules: list[tuple] = []
     for step_no in range(1, n_rules + 1):
-        w = F.col(text_col)
-        for _, pair, _ in rules:
-            pa, _, pb = pair.rpartition(" ")
-            w = merge_pair_expr(w, pa, pb)
+        w = apply_merge_rules(F.col(sym), rules, joiner=joiner)
         pairs = F.expr(_ADJ_PAIRS_EXPR)
         top = (
-            docs.select(_tokens(w).alias("_toks"))
+            rel.select(_tokens(w).alias("_toks"), *carry)
             .filter(F.size("_toks") >= 2)
-            .select(F.explode(pairs).alias("pair"))
+            .select(F.explode(pairs).alias("pair"), *carry)
             .groupBy("pair")
-            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(n.alias("n"))
             .orderBy(F.desc("n"), F.asc("pair"))
             .limit(1)
             .collect()
@@ -112,6 +111,17 @@ def learn_merge_rules(docs: DataFrame, text_col: str, n_rules: int) -> list[tupl
             break
         rules.append((step_no, top[0].pair, top[0].n))
     return rules
+
+
+def learn_merge_rules(docs: DataFrame, text_col: str, n_rules: int) -> list[tuple]:
+    """Run ``n_rules`` BPE rounds; returns [(step, pair, n_occurrences)].
+
+    ``docs[text_col]`` must be canonical single-space-joined tokens. The
+    corpus column is re-derived per round from the immutable input plus the
+    rules learned so far (re-applying k cheap fold expressions per scan) —
+    no growing lineage, no cache pinning a 100 TB corpus in memory.
+    """
+    return _learn_rules(docs, text_col, n_rules, JOINER)
 
 
 END_OF_WORD = "</w>"
@@ -801,21 +811,4 @@ def learn_subword_rules(
     """
     if vocab is None:
         vocab = subword_vocab(docs, text_col)  # vocab-sized; rounds re-read
-    rules: list[tuple] = []
-    for step_no in range(1, n_rules + 1):
-        w = apply_merge_rules(F.col("sym"), rules)
-        pairs = F.expr(_ADJ_PAIRS_EXPR)
-        top = (
-            vocab.select(_tokens(w).alias("_toks"), "freq")
-            .filter(F.size("_toks") >= 2)
-            .select(F.explode(pairs).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        rules.append((step_no, top[0].pair, top[0].n))
-    return rules
+    return _learn_rules(vocab, "sym", n_rules, "", weight="freq")

@@ -554,7 +554,6 @@ def _prepare_edges(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    checkpoint_partitioned: bool = True,
 ) -> tuple[DataFrame, int]:
     """Symmetrize pairs into a sized, materialized (src, dst) edge set.
 
@@ -572,9 +571,8 @@ def _prepare_edges(
     repartition exchange from the raw checkpoint blocks — Spark SQL does
     NOT reuse exchanges across separate actions (each round's convergence
     count is its own action) — so the per-round cost grows with the edge
-    set: measured 20.0s → 14.5s (1.4×) at 2M edges, 7.7s → 5.9s at 200k
-    (protocol: tools/components_ab.py, which flips
-    ``checkpoint_partitioned`` on the REAL implementation). Note the
+    set: measured 20.0s → 14.5s (1.4×) at 2M edges, 7.7s → 5.9s at 200k,
+    against the same function without the second checkpoint. Note the
     checkpointed LogicalRDD does NOT carry hashpartitioning metadata into
     later plans (verified: the round join re-shuffles or broadcasts per AQE
     stats), so the repartition's value is bounding the checkpointed block
@@ -587,20 +585,18 @@ def _prepare_edges(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     n_parts = max(2, min(64, int(staged.count()) // 50_000 + 2))
-    edges = staged.repartition(n_parts, "dst")
-    if checkpoint_partitioned:
-        edges = edges.localCheckpoint()
-        # Release the unpartitioned staging checkpoint: the loop only reads
-        # the repartitioned copy, but the first checkpoint's blocks would
-        # otherwise stay pinned in executor block storage for the rest of
-        # the job — double storage at large edge sets for blocks never read
-        # again. The persisted RDD lives inside the LogicalRDD plan node;
-        # best-effort, harmless if the internals move (the ContextCleaner
-        # reclaims it at GC anyway — this just makes it prompt).
-        try:
-            staged._jdf.queryExecution().optimizedPlan().rdd().unpersist(False)
-        except Exception:
-            pass
+    edges = staged.repartition(n_parts, "dst").localCheckpoint()
+    # Release the unpartitioned staging checkpoint: the loop only reads
+    # the repartitioned copy, but the first checkpoint's blocks would
+    # otherwise stay pinned in executor block storage for the rest of
+    # the job — double storage at large edge sets for blocks never read
+    # again. The persisted RDD lives inside the LogicalRDD plan node;
+    # best-effort, harmless if the internals move (the ContextCleaner
+    # reclaims it at GC anyway — this just makes it prompt).
+    try:
+        staged._jdf.queryExecution().optimizedPlan().rdd().unpersist(False)
+    except Exception:
+        pass
     return edges, n_parts
 
 
@@ -609,7 +605,6 @@ def dedup_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
-    checkpoint_partitioned: bool = True,
 ) -> DataFrame:
     """Duplicate *clusters* from near-dup pairs: (id, cluster) with cluster =
     min id of the connected component — the survivor-selection stage every
@@ -617,15 +612,16 @@ def dedup_components(
 
     Min-label propagation to fixpoint: each round, every vertex takes the
     minimum label among itself and its neighbors — O(component diameter)
-    rounds (near-dup components are shallow; the cap is a safety net).
+    rounds (near-dup components are shallow; the cap is a safety net). If
+    labels still change in round ``max_iter``, a ``RuntimeWarning`` says so:
+    vertices farther than ``max_iter`` hops from their component's min id
+    then carry a wrong cluster id.
     Iteration is driver-controlled with ``localCheckpoint`` per round to
     truncate lineage — the standard Spark pattern for iterative algorithms
     (GraphX Pregel does the same); each round is one join + one aggregation
-    shuffling (id, label) pairs only. ``checkpoint_partitioned`` exists for
-    the A/B measurement harness (tools/components_ab.py) — production
-    callers keep the default True (see ``_prepare_edges``).
+    shuffling (id, label) pairs only.
     """
-    edges, n_parts = _prepare_edges(pairs, a_col, b_col, checkpoint_partitioned)
+    edges, n_parts = _prepare_edges(pairs, a_col, b_col)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -662,6 +658,17 @@ def dedup_components(
         labels = new_labels.select("id", "label")
         if changed == 0:
             break
+    else:
+        import warnings
+
+        warnings.warn(
+            f"dedup_components: labels still changing after max_iter={max_iter} "
+            "rounds — vertices farther than that from their component's min id "
+            "carry a wrong cluster id; raise max_iter (each round is one "
+            "bounded shuffle pass)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels.select(F.col("id"), F.col("label").alias("cluster"))
 
 

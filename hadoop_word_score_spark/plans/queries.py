@@ -7239,7 +7239,7 @@ def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = subword_vocab(docs, "txt")
     rules = learn_subword_rules(docs, "txt", n_rules=3, vocab=vocab)
     # driver output contract: flat scalars only (the driver canonicalizer
-    # cannot hash array cells — tests/test_evidence.py) — serve the id
+    # cannot hash array cells — tests/test_oracles.py) — serve the id
     # sequence space-joined; the operator itself keeps array<int>
     return (
         encode_corpus_ids(docs, "doc_id", "txt", rules, vocab=vocab)
@@ -8373,7 +8373,7 @@ def q_inverted_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final vocab-sized aggregation. No collect_list ever sees an
     # unbounded group. The posting head is emitted as a comma-delimited
     # string, not an array: the registry output contract is flat scalar
-    # columns only (tests/test_evidence.py), because the driver's pandas
+    # columns only (tests/test_oracles.py), because the driver's pandas
     # canonicalizer cannot hash array cells (r8 red).
     from ..functions.hashing import tokens_expr
 

@@ -1,9 +1,9 @@
-"""Protocol tests for bench.py's grouped-subprocess harness (no Spark).
+"""Tests for bench.py's harness.
 
-The harness itself is exercised end-to-end by the driver per round; these pin
-the pure-Python seams a refactor could silently break: previous-round
-artifact parsing (both driver formats), the group partition, the
-membership hash input, and the implementation fingerprint's import closure.
+The harness itself runs end to end in the bench; these pin the seams a
+refactor could silently break: the group stdout parse, the group partition,
+the counter gate (with and without Spark), and the implementation
+fingerprint's import closure.
 """
 
 from __future__ import annotations
@@ -13,54 +13,10 @@ import json
 import bench
 
 
-def test_prev_round_parses_driver_parsed_format(tmp_path):
-    rec = {"parsed": {"sf": 0.1, "queries": {"a": 1.5, "b": 0.5}}}
-    (tmp_path / "BENCH_r08.json").write_text(json.dumps(rec))
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {"a": 1.5, "b": 0.5}
-
-
-def test_prev_round_parses_driver_tail_only_format(tmp_path):
-    inner = {"metric": "bench_total_sec", "sf": 0.1, "queries": {"q": 2.25}}
-    rec = {"parsed": None, "tail": "noise line\n" + json.dumps(inner) + "\n"}
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(rec))
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {"q": 2.25}
-
-
-def test_prev_round_rejects_other_scale_factor(tmp_path):
-    rec = {"parsed": {"sf": 0.01, "queries": {"a": 1.0}}}
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(rec))
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {}
-
-
-def test_prev_round_latest_file_wins(tmp_path):
-    for r, v in [(8, 1.0), (9, 2.0)]:
-        (tmp_path / f"BENCH_r0{r}.json").write_text(
-            json.dumps({"parsed": {"sf": 0.1, "queries": {"a": v}}})
-        )
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {"a": 2.0}
-
-
-def test_prev_round_backfills_truncated_driver_rows_from_local(tmp_path):
-    # r11: the driver tail keeps ~30 rows of 38; BENCH_LOCAL (the previous
-    # run's full record) fills the gaps, driver rows winning where both
-    # exist, and a wrong-SF local record contributes nothing.
-    (tmp_path / "BENCH_r10.json").write_text(
-        json.dumps({"parsed": {"sf": 0.1, "queries": {"a": 2.0}}})
-    )
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"a": 9.9, "b": 1.5}})
-    )
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {"a": 2.0, "b": 1.5}
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        json.dumps({"sf": 0.01, "queries": {"c": 1.0}})
-    )
-    assert bench._previous_round_timings(0.1, str(tmp_path)) == {"a": 2.0}
-
-
 def test_group_stdout_parse_skips_stray_json_values():
     # r10 advice: a bare "null"/number/list from logging noise parsed after
     # the result line must not be returned as the group result.
-    good = json.dumps({"trials": {"q": [1.0]}, "cold": {"q": 1.0}, "reruns": {}})
+    good = json.dumps({"trials": {"q": [1.0]}, "cold": {"q": 1.0}, "layers": {}})
     out = "INFO noise\n" + good + "\nnull\n42\n[1, 2]\n{\"other\": 1}\n"
     res = bench._parse_group_stdout(out)
     assert res is not None and res["trials"] == {"q": [1.0]}
@@ -71,94 +27,85 @@ def test_group_stdout_parse_returns_none_without_result():
 
 
 def test_group_partition_covers_every_bench_query_exactly_once():
-    # exercises bench.py's REAL ordering helper (r13 review: a local
-    # re-implementation of the sort key would keep passing after a
-    # regression in the actual code)
+    # exercises bench.py's REAL chunking helper (a local re-implementation
+    # would keep passing after a regression in the actual code)
     from hadoop_word_score_spark.plans.queries import REGISTRY
 
     names = [n for n, s in REGISTRY.items() if s.bench]
-    ordered = bench._order_for_grouping(names, {})
-    groups = [
-        ordered[i : i + bench.GROUP_SIZE]
-        for i in range(0, len(ordered), bench.GROUP_SIZE)
-    ]
+    groups = bench._groups(names)
     flat = [n for g in groups for n in g]
-    assert flat == ordered and sorted(flat) == sorted(names)
+    # registration order, every name exactly once
+    assert flat == names
     assert all(0 < len(g) <= bench.GROUP_SIZE for g in groups)
-    # with no prior costs the order is deterministic (name ascending)
-    assert ordered == sorted(names)
 
 
-def test_cost_desc_grouping_clusters_heavy_rows_and_stays_total():
-    # r13: group composition follows previous-round cost descending so new
-    # heavy rows share sessions with other heavy rows instead of ageing a
-    # cheap group (SCALE_PROBE.md r12 receipt). Unknown-cost names rank 0
-    # and land together at the tail; the partition still covers every name
-    # exactly once.
-    names = ["a_cheap", "b_new", "c_heavy", "d_mid", "e_heavy2", "f_cheap"]
-    prev = {"c_heavy": 4.0, "e_heavy2": 3.5, "d_mid": 1.0,
-            "a_cheap": 0.2, "f_cheap": 0.3}
-    ordered = bench._order_for_grouping(names, prev)
-    assert ordered == ["c_heavy", "e_heavy2", "d_mid", "f_cheap",
-                       "a_cheap", "b_new"]
-    groups = [ordered[i : i + 3] for i in range(0, len(ordered), 3)]
-    assert groups[0] == ["c_heavy", "e_heavy2", "d_mid"]  # heavy cluster
-    assert sorted(n for g in groups for n in g) == sorted(names)
+def test_previous_record_rejects_other_scale_factor(tmp_path, monkeypatch):
+    # counters scale with the data: a record from another sf compares as none
+    local = tmp_path / "BENCH_LOCAL.json"
+    monkeypatch.setattr(bench, "_LOCAL", str(local))
+    assert bench._previous_record(0.1) == {}
+    local.write_text(json.dumps({"sf": 0.01, "queries": {"a": 1.0}}))
+    assert bench._previous_record(0.1) == {}
+    local.write_text(json.dumps({"sf": 0.1, "queries": {"a": 1.0}}))
+    assert bench._previous_record(0.1)["queries"] == {"a": 1.0}
 
 
-def test_adjudication_records_isolated_and_verdict():
-    # every flagged row gets exactly one solo rerun; the verdict flips on
-    # whether the isolated warm min clears the same 1.5x vs-prev bar
-    calls = []
+def _layers(**over):
+    rec = {c: 5.0 for c in bench.GATED}
+    rec.update({"job_s": 1.0, "tasks.run_s": 0.5, "sort.s": 0.1,
+                "driver.outside_sql_s": 0.2, "trace.collect_s": 0.01})
+    rec.update(over)
+    return rec
 
-    def fake_run(name):
-        calls.append(name)
-        return {"trials": {name: [2.0, 0.4, 0.45]}, "cold": {}, "reruns": {}}
 
-    out = bench._adjudicate_regressions(
-        {"a": 4.6, "b": 2.0},
-        {"a": 1.84, "b": 0.9},
-        {"a": 0.4, "b": 0.45},
-        run=fake_run,
+def test_gate_lists_wall_time_only_change_as_slower_with_its_layer():
+    prev = {"queries": {"q": 1.0}, "layers": {"q": _layers()}}
+    now = _layers(**{"job_s": 3.0, "driver.outside_sql_s": 1.9,
+                     "trace.collect_s": 5.0})
+    regressions, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now}, {})
+    assert regressions == {}
+    assert slower == {"q": {"ratio": 3.0, "layer": "driver.outside_sql_s"}}
+
+
+def test_gate_flags_changed_counters_only():
+    prev = {"queries": {"q": 1.0, "r": 1.0},
+            "layers": {"q": _layers(), "r": _layers()}}
+    now = {"q": _layers(**{"driver.jobs": 6.0}), "r": _layers()}
+    regressions, slower = bench._vs_prev(
+        prev, {"q": 1.0, "r": 1.0}, now, {"q": True})
+    assert regressions == {"q": {"driver.jobs": [5.0, 6.0], "impl_changed": True}}
+    assert slower == {}
+    # a row with no previous layers record is not compared
+    assert bench._vs_prev({}, {"q": 9.0}, now, {}) == ({}, {})
+
+
+def test_gate_catches_an_injected_shuffle(spark):
+    # the same tiny aggregate through the bench's own trial helper, the
+    # second time with one extra repartition: the counters must move
+    from pyspark.sql import functions as F
+
+    collector = bench._collector(spark)
+
+    def trial(extra_shuffle: bool) -> dict:
+        def body() -> None:
+            df = spark.range(1000)
+            if extra_shuffle:
+                df = df.repartition(3)
+            df.groupBy((F.col("id") % 10).alias("k")).count().write.format(
+                "noop").mode("overwrite").save()
+
+        dt, rec = bench._trial(collector, body, read=True)
+        assert dt >= 0 and rec["job_s"] == dt
+        return rec
+
+    before, after = trial(False), trial(True)
+    regressions, _ = bench._vs_prev(
+        {"queries": {"q": before["job_s"]}, "layers": {"q": before}},
+        {"q": after["job_s"]}, {"q": after}, {},
     )
-    assert calls == ["a", "b"]
-    assert out["a"]["isolated_sec"] == 0.4
-    assert out["a"]["grouped_sec"] == 1.84
-    assert out["a"]["verdict"] == "recovered-isolated"
-    assert out["b"]["verdict"] == "recovered-isolated"
-
-    out2 = bench._adjudicate_regressions(
-        {"a": 4.0}, {"a": 1.6},
-        {"a": 0.4},
-        run=lambda n: {"trials": {n: [1.7, 1.6, 1.65]}},
-    )
-    assert out2["a"]["verdict"] == "confirmed-regression"
-    assert bench._adjudicate_regressions({}, {}, {}, run=fake_run) == {}
-
-
-def test_isolated_runner_dispatches_stream_rows():
-    # streaming drains don't exist in the query REGISTRY, so their solo
-    # rerun must route through --solo-stream, not --group
-    import bench as b
-
-    assert "streaming_tumbling_drain" in b._STREAM_ROWS
-    assert "streaming_ingest_drain" in b._STREAM_ROWS
-
-
-def test_adjudication_survives_failed_rerun():
-    # one flaky solo subprocess must not discard the whole bench artifact
-    def bad_run(name):
-        if name == "a":
-            raise RuntimeError("child produced no result JSON")
-        return {"trials": {name: [0.5]}}
-
-    out = bench._adjudicate_regressions(
-        {"a": 2.0, "b": 2.0}, {"a": 1.0, "b": 1.0},
-        {"a": 0.5, "b": 0.5}, run=bad_run,
-    )
-    assert out["a"]["verdict"] == "rerun-failed"
-    assert "no result JSON" in out["a"]["error"]
-    assert out["b"]["verdict"] == "recovered-isolated"
+    assert {"exchange.shuffle_records", "driver.jobs"} <= set(regressions["q"])
+    old, new = regressions["q"]["exchange.shuffle_records"]
+    assert new > old
 
 
 def test_impl_fp_sees_transitive_module_content(tmp_path, monkeypatch):

@@ -1293,15 +1293,33 @@ def test_salted_agg_matches_unsalted(spark):
 
 
 def test_dedup_components_chain_and_islands(spark):
+    import warnings
+
     from hadoop_word_score_spark.operators.dedup import dedup_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "id_a long, id_b long",
     )
-    got = {r.id: r.cluster for r in dedup_components(pairs).collect()}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # converged: no warning
+        got = {r.id: r.cluster for r in dedup_components(pairs).collect()}
     # chain 1-2-3-4 collapses to 1 (diameter > 1 → needs propagation rounds)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+
+def test_dedup_components_warns_when_max_iter_cuts_propagation(spark):
+    # a 40-node path needs 39 rounds to carry label 1 to its far end; with
+    # max_iter=3 the far nodes keep wrong cluster ids, which must not pass
+    # silently
+    from hadoop_word_score_spark.operators.dedup import dedup_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
+    )
+    with pytest.warns(RuntimeWarning, match="still changing after max_iter=3"):
+        got = {r.id: r.cluster for r in dedup_components(pairs, max_iter=3).collect()}
+    assert got[40] != 1
 
 
 def test_dedup_components_edges_materialized_once(spark):
@@ -1309,10 +1327,9 @@ def test_dedup_components_edges_materialized_once(spark):
     # materialized scan: no union/repartition exchange in its own lineage
     # (those would otherwise re-run in EVERY label-propagation round — each
     # round's convergence count is a separate action and Spark SQL does not
-    # reuse exchanges across actions; measured 1.4x slower at 2M edges —
-    # protocol: tools/components_ab.py). Asserted against the SHIPPED
-    # _prepare_edges (the seam dedup_components actually runs), so removing
-    # its checkpoint fails here.
+    # reuse exchanges across actions; measured 1.4x slower at 2M edges).
+    # Asserted against the SHIPPED _prepare_edges (the seam
+    # dedup_components actually runs), so removing its checkpoint fails here.
     from hadoop_word_score_spark.operators.dedup import _prepare_edges
 
     pairs = spark.createDataFrame(
@@ -1323,9 +1340,6 @@ def test_dedup_components_edges_materialized_once(spark):
     assert "Exchange" not in plan, plan
     assert "ExistingRDD" in plan, plan
     assert edges.rdd.getNumPartitions() == n_parts
-    # and the measurement seam really does skip the materialization
-    edges_ab, _ = _prepare_edges(pairs, checkpoint_partitioned=False)
-    assert "Exchange" in edges_ab._jdf.queryExecution().executedPlan().toString()
 
 
 def test_prepare_edges_releases_staging_checkpoint(spark):
