@@ -8,7 +8,7 @@ JSON line:
 
     {"metric": "bench_total_sec", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "bench_set": [...], "bench_set_hash": "...",
-     "sf": 0.1}
+     "sf": 0.1, "cpus": 8}
 
 Each query is timed end to end: plan construction plus execution of every
 row into ``df.write.format("noop")``, a full materialisation without local
@@ -27,12 +27,15 @@ stages, operator metrics, Arrow boundary, pins) and the row keeps it as its
 ``BENCHMARK.json``.
 
 Gate: wall time on a shared host moves by tens of percent on unchanged
-code, so the comparison with the previous run (same scale factor) is on
-deterministic counters, ``GATED``. A row whose gated counter changed is
-listed in ``vs_prev_regressions`` as ``{counter: [prev, now]}``, with
-``impl_changed`` telling whether its implementation fingerprint moved. A
-row more than 1.5x slower with unchanged counters is not flagged; it is
-listed in ``vs_prev_slower`` with the time layer that grew most.
+code, so the comparison with the previous run is on deterministic
+counters, ``GATED``. Only a previous run at the same scale factor and the
+same ``local[N]`` parallelism (``cpus``) is compared: file splits, AQE
+partition coalescing and several operators size their work from N. A row
+whose gated counter changed is listed in ``vs_prev_regressions`` as
+``{counter: [prev, now]}``, with ``impl_changed`` telling whether its
+implementation fingerprint moved. A row more than 1.5x slower with
+unchanged counters is not flagged; it is listed in ``vs_prev_slower`` with
+the time layer that grew most.
 """
 
 from __future__ import annotations
@@ -57,7 +60,8 @@ from perfbench.collect import Collector, observability_confs  # noqa: E402
 GROUP_SIZE = 6
 
 # Counters that are identical across runs of the same code at the same
-# scale factor; a change in one is a change in the work a row does.
+# scale factor and local[N]; a change in one is a change in the work a row
+# does.
 # pins.count is recorded but not gated: pins a row creates and drops can be
 # released by JVM garbage collection before the collector reads storage,
 # so it varied between two sf0.1 runs of the same code on 4 cores
@@ -197,7 +201,7 @@ def _trial(collector: Collector, body: Callable, read: bool) -> tuple[float, dic
     record of everything it ran (DataFrame construction included), taken
     from the status store after the clock stops. ``body`` may return the
     streaming query it drained; its progress feeds the streaming layers."""
-    mark = collector.mark()
+    mark = collector.mark() if read else None
     start, t0 = time.time(), time.perf_counter()
     query = body()
     dt = round(time.perf_counter() - t0, 3)
@@ -424,16 +428,17 @@ def _impl_fp_state(
     return cur, changed
 
 
-def _previous_record(sf: float) -> dict:
+def _previous_record(sf: float, cpus: int) -> dict:
     """The previous run's full record from BENCH_LOCAL.json, or {} when
-    there is none or it was taken at another scale factor (its counters
-    would not be comparable)."""
+    there is none or it was taken at another scale factor or another
+    ``local[N]`` parallelism (its counters would not be comparable)."""
     try:
         with open(_LOCAL) as f:
             rec = json.load(f)
     except (OSError, ValueError):
         return {}
-    return rec if isinstance(rec, dict) and rec.get("sf") == sf else {}
+    same = isinstance(rec, dict) and rec.get("sf") == sf and rec.get("cpus") == cpus
+    return rec if same else {}
 
 
 def _parse_group_stdout(stdout: str) -> dict | None:
@@ -490,7 +495,7 @@ def main() -> None:
 
     # Streaming rows run in the parent's own (otherwise idle) session — their
     # checkpoints are fresh per trial and the session has run nothing else.
-    from hadoop_word_score_spark.session import get_spark
+    from hadoop_word_score_spark.session import default_parallelism, get_spark
 
     spark = get_spark("bench", extra_confs=observability_confs(1))
     collector = _collector(spark)
@@ -507,7 +512,8 @@ def main() -> None:
         n: round(statistics.median(ts[1:] or ts), 3) for n, ts in trials.items()
     }
     sf = sf_of(sf_dir)
-    prev = _previous_record(sf)
+    cpus = default_parallelism()  # the local[N] every session here ran on
+    prev = _previous_record(sf, cpus)
     impl_fps, impl_changed = _impl_fp_state(names, prev.get("impl_fps", {}))
     regressions, slower = _vs_prev(prev, timings, layers, impl_changed)
 
@@ -531,6 +537,7 @@ def main() -> None:
         "isolation": {"mode": "grouped-subprocess", "group_size": GROUP_SIZE,
                       "groups": len(groups), "grouping": "registration-order"},
         "sf": sf,
+        "cpus": cpus,
     }
     if regressions:
         out["vs_prev_regressions"] = regressions

@@ -22,8 +22,11 @@ SCRATCH = os.path.join(
 @pytest.fixture(scope="session")
 def spark():
     from hadoop_word_score_spark.session import get_spark
+    from perfbench.collect import observability_confs
 
-    s = get_spark("pytest", master="local[8]")
+    # the bench sessions' status-store retention: a collector read in any
+    # test cannot lose executions to eviction, whatever ran before it
+    s = get_spark("pytest", master="local[8]", extra_confs=observability_confs(1))
     s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
 

@@ -40,14 +40,19 @@ def test_group_partition_covers_every_bench_query_exactly_once():
 
 
 def test_previous_record_rejects_other_scale_factor(tmp_path, monkeypatch):
-    # counters scale with the data: a record from another sf compares as none
+    # counters scale with the data and with local[N] (file splits, AQE
+    # coalescing): a record from another sf or cpus compares as none
     local = tmp_path / "BENCH_LOCAL.json"
     monkeypatch.setattr(bench, "_LOCAL", str(local))
-    assert bench._previous_record(0.1) == {}
-    local.write_text(json.dumps({"sf": 0.01, "queries": {"a": 1.0}}))
-    assert bench._previous_record(0.1) == {}
+    assert bench._previous_record(0.1, 8) == {}
+    local.write_text(json.dumps({"sf": 0.01, "cpus": 8, "queries": {"a": 1.0}}))
+    assert bench._previous_record(0.1, 8) == {}
+    local.write_text(json.dumps({"sf": 0.1, "cpus": 32, "queries": {"a": 1.0}}))
+    assert bench._previous_record(0.1, 8) == {}
     local.write_text(json.dumps({"sf": 0.1, "queries": {"a": 1.0}}))
-    assert bench._previous_record(0.1)["queries"] == {"a": 1.0}
+    assert bench._previous_record(0.1, 8) == {}
+    local.write_text(json.dumps({"sf": 0.1, "cpus": 8, "queries": {"a": 1.0}}))
+    assert bench._previous_record(0.1, 8)["queries"] == {"a": 1.0}
 
 
 def _layers(**over):
