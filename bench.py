@@ -261,6 +261,13 @@ def _group_main(names: list[str]) -> None:
     spark.stop()
 
 
+def _time_layers(rec: dict) -> list[str]:
+    """The time layers of a ``layers`` record: its seconds-valued keys,
+    less the row's wall time (``job_s``) and the collector's own read."""
+    return [k for k in rec if k.endswith(("_s", ".s"))
+            and k not in ("job_s", "trace.collect_s")]
+
+
 def _vs_prev(
     prev: dict,
     timings: dict[str, float],
@@ -287,9 +294,8 @@ def _vs_prev(
             continue
         was = prev.get("queries", {}).get(n, 0)
         if was > 0 and timings[n] > 1.5 * was:
-            times = [k for k in now if k.endswith(("_s", ".s"))
-                     and k not in ("job_s", "trace.collect_s")]
-            grown = max(times, key=lambda k: now[k] - before.get(k, 0.0))
+            grown = max(_time_layers(now),
+                        key=lambda k: now[k] - before.get(k, 0.0))
             slower[n] = {"ratio": round(timings[n] / was, 2), "layer": grown}
     return regressions, slower
 

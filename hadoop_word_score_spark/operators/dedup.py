@@ -443,9 +443,9 @@ def minhash_lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])  # a pair may collide in many bands
     )
     # Verification: two joins against the shingle relation. This instantiates
-    # the scan→tokenize→shingle subtree twice, but measured A/B/C/D on the
-    # 10× duplicate-heavy probe (tools/verify_variants_probe.py) shows it
-    # 2-4× faster than the alternatives: (A) unpivot pairs + single join +
+    # the scan→tokenize→shingle subtree twice, but measured A/B/C/D on a
+    # 10× replicated duplicate-heavy corpus it is 2-4× faster than the
+    # alternatives: (A) unpivot pairs + single join +
     # groupBy reassembly pays a shuffle+agg of the shingle *arrays*; (C)
     # joining raw text and shingling after the join re-evaluates the chain
     # once per pair side; (D) persisting candidates and semi-filtering docs

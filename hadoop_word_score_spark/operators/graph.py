@@ -175,8 +175,6 @@ def kcore_nodes(
     src_col: str = "src",
     dst_col: str = "dst",
     max_rounds: int = 12,
-    strict: bool = False,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Bounded-round k-core peel over an undirected simple graph: returns
     (node, core_degree) for every node surviving ``max_rounds`` rounds of
@@ -186,14 +184,13 @@ def kcore_nodes(
     quality analysis). ``core_degree`` is the node's degree within the
     final induced subgraph, ordered by node.
 
-    Observability (review r10): a silently-unconverged peel returns a
-    plausible-looking SUPERSET of the true k-core — at 100 TB nobody
-    eyeballs that. Pass ``stats={}`` to receive ``rounds_used`` (peel
-    rounds executed) and ``converged`` (fixpoint reached inside the
-    bound); an unconverged bound raises ``RuntimeError`` under
-    ``strict=True`` and emits a ``warnings.warn`` otherwise. The counts
-    driving both are the survivor counts the loop materializes anyway —
-    zero extra jobs.
+    Observability: a silently-unconverged peel returns a plausible-looking
+    SUPERSET of the true k-core — at 100 TB nobody eyeballs that. A peel
+    that reaches ``max_rounds`` without a fixpoint emits a
+    ``RuntimeWarning``. The survivor counts that decide it are the ones
+    the loop materializes anyway — zero extra jobs. The rounds a peel ran
+    show up as its Spark jobs, which the bench's per-row ``layers`` record
+    counts (``driver.jobs``).
 
     BOUNDED rounds, not until-convergence, is the contract: the registry
     oracle unrolls the identical rounds as chained SQL CTEs, so the two
@@ -237,7 +234,7 @@ def kcore_nodes(
         .localCheckpoint()
     )
     n_prev = surv.count()
-    rounds_used, converged = 0, False
+    converged = False
     for _ in range(max_rounds):
         surv = (
             degrees(surv)
@@ -245,27 +242,22 @@ def kcore_nodes(
             .select("node")
             .localCheckpoint()
         )
-        rounds_used += 1
         n = surv.count()
         if n == n_prev or n == 0:  # fixpoint (an empty peel cannot shrink)
             converged = True
             break
         n_prev = n
-    if stats is not None:
-        stats["rounds_used"] = rounds_used
-        stats["converged"] = converged
     if not converged:
-        msg = (
+        import warnings
+
+        warnings.warn(
             f"kcore_nodes: peel did not reach a fixpoint within "
             f"max_rounds={max_rounds} ({n_prev} survivors still shrinking) "
             "— the result is a superset of the true k-core; raise "
-            "max_rounds (each round is one bounded shuffle pass)"
+            "max_rounds (each round is one bounded shuffle pass)",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return (
         degrees(surv)
         .select("node", F.col("deg").alias("core_degree"))

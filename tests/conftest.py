@@ -7,6 +7,7 @@ import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+SF_BENCH = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
 
 # Scratch space inside the repo (the container forbids writes elsewhere).
 # Pytest owns ONLY the .scratch/pytest subtree: wiping all of .scratch

@@ -1,16 +1,25 @@
-"""Tests for bench.py's harness.
+"""Tests for bench.py's harness and the tools built on it.
 
 The harness itself runs end to end in the bench; these pin the seams a
 refactor could silently break: the group stdout parse, the group partition,
-the counter gate (with and without Spark), and the implementation
-fingerprint's import closure.
+the counter gate (with and without Spark), the implementation
+fingerprint's import closure, and the scale-growth tool's flags. One Spark
+test pins the property that matters at 100 TB: no bench row's job count
+depends on the data size.
 """
 
 from __future__ import annotations
 
 import json
+import re
+
+from pathlib import Path
 
 import bench
+
+from tests.conftest import SF_BENCH, SF_ORACLE
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_group_stdout_parse_skips_stray_json_values():
@@ -192,3 +201,73 @@ def test_inline_comment_in_multiline_import_keeps_following_names():
         ("operators",),
     )
     assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
+
+
+def _load_scale_growth():
+    import importlib.util
+
+    path = ROOT / "tools" / "scale_growth.py"
+    spec = importlib.util.spec_from_file_location("scale_growth", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_scale_growth_flags_rounds_and_superlinear_shuffles():
+    sg = _load_scale_growth()
+
+    def rec(rows: int, jobs: int, shuffled: int) -> dict:
+        return {"sources.rows_read": rows, "driver.jobs": jobs,
+                "driver.sql_executions": 1, "exchange.shuffle_records": shuffled}
+
+    # input flat on the first step, 10x on the second; counters linear
+    g = sg.growth([rec(500, 4, 100), rec(500, 4, 120), rec(5000, 4, 1200)])
+    assert g["input"] == [1.0, 10.0]
+    assert g["exp"]["exchange.shuffle_records"] == ["—", "1.00"]
+    assert g["exp"]["driver.jobs"] == ["—", "0.00"]
+    assert g["flags"] == []
+    # a job count that moves with the data
+    g = sg.growth([rec(500, 4, 100), rec(5000, 5, 1000), rec(50000, 4, 10000)])
+    assert g["flags"] == ["rounds depend on data"]
+    # shuffle records growing 40x on a 10x input
+    g = sg.growth([rec(500, 4, 100), rec(5000, 4, 1000), rec(50000, 4, 40000)])
+    assert g["exp"]["exchange.shuffle_records"] == ["1.00", "1.60"]
+    assert g["flags"] == ["superlinear"]
+
+
+def test_tools_find_the_checkout_from_their_own_path():
+    # a tool run from a copy of the tree must import and write that copy,
+    # not the checkout it was copied from: none names a checkout by an
+    # absolute path on sys.path or in open()
+    files = [*sorted((ROOT / "tools").glob("*.py")),
+             ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    absolute = re.compile(r"""(sys\.path\.insert\(0,|open\()\s*["']/""")
+    texts = {f.name: f.read_text() for f in files}
+    offenders = [n for n, t in texts.items()
+                 if str(ROOT) in t or absolute.search(t)]
+    assert offenders == []
+
+
+def test_bench_rows_run_the_same_jobs_at_every_scale(spark):
+    # A row whose job count grows with the data is a driver loop whose
+    # rounds depend on the data: the hazard at 100 TB. Each bench row runs
+    # twice at sf0.01 and twice at sf0.1 through the bench's own trial, and
+    # the second run's jobs and SQL executions must match across the sfs
+    # (the first run may build a content-keyed index the second reuses).
+    from hadoop_word_score_spark.plans.queries import REGISTRY
+
+    collector = bench._collector(spark)
+    names = [n for n, s in REGISTRY.items() if s.bench]
+    rounds: dict[str, list[tuple]] = {n: [] for n in names}
+    for sf_dir in (SF_ORACLE, SF_BENCH):
+        for name in names:
+            def body(name=name, sf_dir=sf_dir) -> None:
+                REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
+                    "overwrite").save()
+
+            bench._trial(collector, body, read=False)
+            _, rec = bench._trial(collector, body, read=True)
+            rounds[name].append(
+                (rec["driver.jobs"], rec["driver.sql_executions"]))
+    moved = {n: r for n, r in rounds.items() if len(set(r)) > 1}
+    assert moved == {}, f"(jobs, SQL executions) at sf0.01 vs sf0.1: {moved}"

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import sys
 
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from hadoop_word_score_spark.plans.queries import REGISTRY  # noqa: E402
 from hadoop_word_score_spark.session import get_spark  # noqa: E402
@@ -50,7 +53,7 @@ def main() -> None:
         # file text-clean for reviewers/grep
         plan = plan.replace("\x00", "\\x00")
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({sum(1 for s in REGISTRY.values() if s.bench)} plans)")
     spark.stop()

@@ -17,9 +17,12 @@ import math
 import sys
 import time
 
+from pathlib import Path
+
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part", "orders",

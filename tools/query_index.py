@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import sys
 
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from hadoop_word_score_spark.plans.queries import REGISTRY  # noqa: E402
 
@@ -59,7 +62,7 @@ def main() -> None:
             f"{'yes' if s.bench else ''} | "
             f"{'hash' if s.oracle else 'rows-only'} | {desc} |"
         )
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(ROOT / "QUERIES.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(REGISTRY)} queries)")
 
