@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import band_hashes, minhash_signature
+from ..session import fixpoint, release
 
 
 def content_hash_col(content_cols: list[str]) -> Column:
@@ -554,50 +555,30 @@ def _prepare_edges(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-) -> tuple[DataFrame, int]:
-    """Symmetrize pairs into a sized, materialized (src, dst) edge set.
+) -> DataFrame:
+    """Symmetrize pairs into a materialized (src, dst) edge set.
 
-    Size the loop's parallelism to the EDGE set, not the session default:
-    every label-propagation round is a join + agg over (id, label) pairs,
-    and on a near-dup graph that's orders of magnitude smaller than the
-    corpus — at the default 64 shuffle partitions the per-round task
-    overhead dominates wall-clock (measured 3-4× the whole pipeline's time
-    at bench SF). ~50k edges/partition keeps partitions cache-resident;
-    scales back up automatically when the pair set is actually large.
-
-    The count() sizes n_parts from the first checkpoint's blocks; the
-    SECOND localCheckpoint then materializes the repartitioned edge set
-    once. Without it, every label-propagation round re-computes the union +
-    repartition exchange from the raw checkpoint blocks — Spark SQL does
-    NOT reuse exchanges across separate actions (each round's convergence
-    count is its own action) — so the per-round cost grows with the edge
-    set: measured 20.0s → 14.5s (1.4×) at 2M edges, 7.7s → 5.9s at 200k,
-    against the same function without the second checkpoint. Note the
-    checkpointed LogicalRDD does NOT carry hashpartitioning metadata into
-    later plans (verified: the round join re-shuffles or broadcasts per AQE
-    stats), so the repartition's value is bounding the checkpointed block
-    count/layout, not exchange elimination. Plan-asserted in
-    tests/test_operators.py against THIS function: the returned edges are a
-    materialized scan, no per-round exchange in their own lineage.
+    The localCheckpoint materializes the repartitioned edge set once.
+    Without it, every label-propagation round re-computes the union +
+    repartition exchange from the raw pairs — Spark SQL does NOT reuse
+    exchanges across separate actions (each round's convergence sum is its
+    own action) — so the per-round cost grows with the edge set: measured
+    20.0s → 14.5s (1.4×) at 2M edges, 7.7s → 5.9s at 200k, against the
+    same function without the checkpoint. AQE coalesces the repartition's
+    partitions to the edge set's size. Note the checkpointed LogicalRDD
+    does NOT carry hashpartitioning metadata into later plans (verified:
+    the round join re-shuffles or broadcasts per AQE stats), so the
+    repartition's value is bounding the checkpointed block count/layout,
+    not exchange elimination. Plan-asserted in tests/test_operators.py
+    against THIS function: the returned edges are a materialized scan, no
+    per-round exchange in their own lineage.
     """
     fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    staged = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    n_parts = max(2, min(64, int(staged.count()) // 50_000 + 2))
-    edges = staged.repartition(n_parts, "dst").localCheckpoint()
-    # Release the unpartitioned staging checkpoint: the loop only reads
-    # the repartitioned copy, but the first checkpoint's blocks would
-    # otherwise stay pinned in executor block storage for the rest of
-    # the job — double storage at large edge sets for blocks never read
-    # again. The persisted RDD lives inside the LogicalRDD plan node;
-    # best-effort, harmless if the internals move (the ContextCleaner
-    # reclaims it at GC anyway — this just makes it prompt).
-    try:
-        staged._jdf.queryExecution().optimizedPlan().rdd().unpersist(False)
-    except Exception:
-        pass
-    return edges, n_parts
+    return (
+        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition("dst")
+        .localCheckpoint()
+    )
 
 
 def dedup_components(
@@ -616,20 +597,21 @@ def dedup_components(
     labels still change in round ``max_iter``, a ``RuntimeWarning`` says so:
     vertices farther than ``max_iter`` hops from their component's min id
     then carry a wrong cluster id.
-    Iteration is driver-controlled with ``localCheckpoint`` per round to
-    truncate lineage — the standard Spark pattern for iterative algorithms
-    (GraphX Pregel does the same); each round is one join + one aggregation
-    shuffling (id, label) pairs only.
+    Iteration is driver-controlled through ``session.fixpoint``, which pins
+    each round with ``localCheckpoint`` to truncate lineage — the standard
+    Spark pattern for iterative algorithms (GraphX Pregel does the same) —
+    and releases the round before; each round is one join + one
+    aggregation shuffling (id, label) pairs only.
     """
-    edges, n_parts = _prepare_edges(pairs, a_col, b_col)
+    edges = _prepare_edges(pairs, a_col, b_col)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .repartition(n_parts, "id")
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
@@ -638,37 +620,23 @@ def dedup_components(
         # The convergence signal rides along as a 0/1 column computed in the
         # same pass that produces the new labels — `labels` is still in scope
         # on the join's left side, so no second old-vs-new join (a full extra
-        # shuffle per round) is needed; the checkpoint materializes once and
-        # the sum() over it is a cheap local scan.
-        new_labels = (
-            labels.join(nbr_min, labels["id"] == nbr_min["src"], "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias(
-                    "new_label"
-                ),
-                (F.coalesce("nbr_label", "label") < F.col("label"))
-                .cast("int")
-                .alias("chg"),
-            )
-            .withColumnRenamed("new_label", "label")
-            .localCheckpoint()
+        # shuffle per round) is needed; the sum() over the pin is the action
+        # that materializes it.
+        nbr = F.coalesce("nbr_label", "label")
+        return labels.join(nbr_min, labels["id"] == nbr_min["src"], "left").select(
+            "id",
+            F.least(F.col("label"), nbr).alias("label"),
+            (nbr < F.col("label")).cast("int").alias("chg"),
         )
-        changed = new_labels.agg(F.sum("chg")).first()[0] or 0
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    else:
-        import warnings
 
-        warnings.warn(
-            f"dedup_components: labels still changing after max_iter={max_iter} "
-            "rounds — vertices farther than that from their component's min id "
-            "carry a wrong cluster id; raise max_iter (each round is one "
-            "bounded shuffle pass)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    labels = fixpoint(
+        labels,
+        propagate,
+        lambda pin: not pin.agg(F.sum("chg")).first()[0],
+        max_iter,
+        "dedup_components label propagation",
+    )
+    release(edges)
     return labels.select(F.col("id"), F.col("label").alias("cluster"))
 
 

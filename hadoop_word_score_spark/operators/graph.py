@@ -8,12 +8,10 @@ left join back onto the node set. Nothing corpus-sized collects; per-round
 shuffles carry (node, rank) pairs and the edge relation's (src, dst) keys.
 
 Scale notes:
-  - Edges and the node set are materialized ONCE (localCheckpoint) and
-    sized to the edge relation, so every round replays materialized blocks
-    instead of re-deriving the graph (the components lesson: 1.4x at 2M
-    edges, see ``operators.dedup._prepare_edges``).
-  - Rank state is checkpointed per round: the plan stays one-round deep
-    instead of growing a 3-round lineage of joins.
+  - Edges and the node set are materialized ONCE (localCheckpoint), so
+    every round replays materialized blocks instead of re-deriving the
+    graph (the components lesson: 1.4x at 2M edges, see
+    ``operators.dedup._prepare_edges``).
   - Undirected use (edges emitted in both directions) guarantees every
     node in the edge list has outdegree >= 1, so no dangling-mass term is
     needed; rank mass is exactly conserved at every round.
@@ -23,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import fixpoint
 
 
 def pagerank(
@@ -65,16 +65,12 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        r = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()  # keep the plan one round deep
+        r = nodes.join(contribs, "node", "left").select(
+            "node",
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("rank"),
         )
     return r
 
@@ -203,9 +199,9 @@ def kcore_nodes(
 
     Per round at 100 TB: two node-keyed semi-joins restrict the
     checkpointed edge relation to surviving endpoints, one count-per-
-    endpoint aggregation recomputes degrees. Survivors are checkpointed
-    per round (the PageRank pattern) so lineage stays one round deep;
-    driver state is a single integer (survivor count) per round.
+    endpoint aggregation recomputes degrees. ``session.fixpoint`` pins the
+    survivors per round and releases the round before, so lineage stays one
+    round deep; driver state is a single integer (survivor count) per round.
     """
     canon = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -234,30 +230,20 @@ def kcore_nodes(
         .localCheckpoint()
     )
     n_prev = surv.count()
-    converged = False
-    for _ in range(max_rounds):
-        surv = (
-            degrees(surv)
-            .filter(F.col("deg") >= k)
-            .select("node")
-            .localCheckpoint()
-        )
-        n = surv.count()
-        if n == n_prev or n == 0:  # fixpoint (an empty peel cannot shrink)
-            converged = True
-            break
-        n_prev = n
-    if not converged:
-        import warnings
 
-        warnings.warn(
-            f"kcore_nodes: peel did not reach a fixpoint within "
-            f"max_rounds={max_rounds} ({n_prev} survivors still shrinking) "
-            "— the result is a superset of the true k-core; raise "
-            "max_rounds (each round is one bounded shuffle pass)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    def settled(pin: DataFrame) -> bool:
+        nonlocal n_prev
+        n, was = pin.count(), n_prev
+        n_prev = n
+        return n == was or n == 0  # fixpoint (an empty peel cannot shrink)
+
+    surv = fixpoint(
+        surv,
+        lambda s: degrees(s).filter(F.col("deg") >= k).select("node"),
+        settled,
+        max_rounds,
+        "kcore_nodes peel",
+    )
     return (
         degrees(surv)
         .select("node", F.col("deg").alias("core_degree"))

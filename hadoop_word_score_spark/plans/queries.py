@@ -10977,8 +10977,9 @@ def _lc_weights(cls: str, buckets: int = _QC_BUCKETS) -> list[int]:
     # mirrored by the oracle's >=-chained CASE; integer sums keep the
     # margin one bit-exact double division. The weight tables are
     # deterministic md5-derived stand-ins (no learned model ships in the
-    # container); operators/classifier.py::train_hashed_softmax_fast fits
-    # real ones in the same serving shape.
+    # container). operators/classifier.py::train_hashed_softmax_fast fits
+    # K-class tables of the same (K x buckets) shape, but in the fast
+    # family's hash, so its weights do not transfer to this md5/SQL family.
     oracle="""
     WITH feat AS (
         SELECT doc_id, lang, CAST(len(fs) AS BIGINT) AS n_features,

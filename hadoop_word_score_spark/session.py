@@ -12,8 +12,11 @@ cost locally.
 from __future__ import annotations
 
 import os
+import warnings
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults chosen for the local[cpus] test harness; on a real cluster the same
 # confs apply but shuffle partitions should scale with total cores (AQE
@@ -80,6 +83,45 @@ def get_spark(
             pass
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release(pin: DataFrame) -> None:
+    """Free a ``localCheckpoint`` pin's blocks now, not at JVM GC. PySpark
+    has no public call for this (the RDD lives in the pin's ``LogicalRDD``
+    plan node), so this is the package's one ``_jdf`` storage call. Spark
+    logs one WARN per release: the pin can no longer be recomputed."""
+    pin._jdf.queryExecution().optimizedPlan().rdd().unpersist(False)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    done: Callable[[DataFrame], bool],
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = pin(step(state))`` until ``done(state)``; return the
+    last pin. ``state`` must be a ``localCheckpoint`` pin, which this takes
+    over. Each round pins lazily, so lineage stays one round deep; ``done``,
+    a full aggregate over the new pin, materialises it, and only then is the
+    previous pin released. After ``max_rounds`` rounds without ``done``, a
+    ``RuntimeWarning`` says so and the last round's state is returned.
+    """
+    for _ in range(max_rounds):
+        pin = step(state).localCheckpoint(eager=False)
+        finished = done(pin)
+        release(state)
+        state = pin
+        if finished:
+            return state
+    warnings.warn(
+        f"{what} did not reach a fixpoint within max_rounds={max_rounds}: the "
+        "result is the last round's state; raise the bound (each round is one "
+        "bounded shuffle pass)",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+    return state
 
 
 def overlap_jobs(spark: SparkSession, background, foreground):

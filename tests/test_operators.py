@@ -1317,16 +1317,18 @@ def test_dedup_components_warns_when_max_iter_cuts_propagation(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
     )
-    with pytest.warns(RuntimeWarning, match="still changing after max_iter=3"):
+    with pytest.warns(
+        RuntimeWarning, match="did not reach a fixpoint within max_rounds=3"
+    ):
         got = {r.id: r.cluster for r in dedup_components(pairs, max_iter=3).collect()}
     assert got[40] != 1
 
 
 def test_dedup_components_edges_materialized_once(spark):
-    # The post-repartition localCheckpoint must leave the edge set as a
-    # materialized scan: no union/repartition exchange in its own lineage
-    # (those would otherwise re-run in EVERY label-propagation round — each
-    # round's convergence count is a separate action and Spark SQL does not
+    # The localCheckpoint must leave the edge set as a materialized scan:
+    # no union/repartition exchange in its own lineage (those would
+    # otherwise re-run in EVERY label-propagation round — each round's
+    # convergence sum is a separate action and Spark SQL does not
     # reuse exchanges across actions; measured 1.4x slower at 2M edges).
     # Asserted against the SHIPPED _prepare_edges (the seam
     # dedup_components actually runs), so removing its checkpoint fails here.
@@ -1335,19 +1337,20 @@ def test_dedup_components_edges_materialized_once(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 400, 2)], "id_a long, id_b long"
     )
-    edges, n_parts = _prepare_edges(pairs)
+    edges = _prepare_edges(pairs)
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "ExistingRDD" in plan, plan
-    assert edges.rdd.getNumPartitions() == n_parts
 
 
-def test_prepare_edges_releases_staging_checkpoint(spark):
-    # Two localCheckpoints run inside _prepare_edges (staging union, then the
-    # repartitioned copy the loop reads); the staging copy's blocks must NOT
-    # stay pinned for the rest of the job (r4 advice: doubles block storage
-    # at large edge sets). Net persisted-RDD growth across the call == 1.
-    from hadoop_word_score_spark.operators.dedup import _prepare_edges
+def test_round_loops_release_superseded_pins(spark):
+    # Each operator keeps only the pins its returned plan reads: the final
+    # label pin (dedup_components), the canonical edges and the final
+    # survivors (kcore_nodes), the edges and the node set (pagerank). Pins
+    # of earlier rounds and of the edge staging are released, not left for
+    # the JVM's garbage collector.
+    from hadoop_word_score_spark.operators.dedup import dedup_components
+    from hadoop_word_score_spark.operators.graph import kcore_nodes, pagerank
 
     def _persistent_ids():
         # set of ids, not a count: in a shared session Spark's async
@@ -1357,14 +1360,22 @@ def test_prepare_edges_releases_staging_checkpoint(spark):
         ks = spark.sparkContext._jsc.getPersistentRDDs().keySet()
         return {int(k) for k in ks.toArray()}
 
-    before = _persistent_ids()
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 100, 2)], "id_a long, id_b long"
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
-    edges, _ = _prepare_edges(pairs)
-    new_ids = _persistent_ids() - before
-    assert len(new_ids) == 1, f"staging checkpoint still pinned (new={new_ids})"
-    assert edges.count() == 100  # the surviving copy is the readable one
+    path = spark.createDataFrame([(i, i + 1) for i in range(11)], "src int, dst int")
+    und = path.union(path.select("dst", "src"))
+    held = {}
+    for name, build in (
+        ("dedup_components", lambda: dedup_components(chain)),
+        ("kcore_nodes", lambda: kcore_nodes(path, k=2)),
+        ("pagerank", lambda: pagerank(und, iterations=3)),
+    ):
+        before = _persistent_ids()
+        out = build()  # referenced while counting: GC cannot free its pins
+        out.collect()
+        held[name] = len(_persistent_ids() - before)
+    assert held == {"dedup_components": 1, "kcore_nodes": 2, "pagerank": 2}
 
 
 def test_dedup_components_end_to_end_minhash(spark):
@@ -2723,6 +2734,28 @@ def test_pagerank_conserves_mass_and_ranks_hubs(spark):
     assert all(abs(v - 0.25) < 1e-12 for v in rc)
 
 
+def test_pagerank_build_jobs_do_not_grow_with_iterations(spark):
+    # PageRank's fixed rounds are one lazy plan over the edge and node pins:
+    # building it runs the same Spark jobs at 3 and at 10 iterations,
+    # counted from the status store as the bench counts them
+    import bench
+
+    from hadoop_word_score_spark.operators.graph import pagerank
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(11)], "src int, dst int")
+    und = path.union(path.select("dst", "src"))
+    collector = bench._collector(spark)
+
+    def jobs(iterations: int) -> float:
+        def body() -> None:
+            pagerank(und, iterations=iterations)
+
+        _, rec = bench._trial(collector, body, read=True)
+        return rec["driver.jobs"]
+
+    assert jobs(3) == jobs(10) > 0
+
+
 def test_cms_overestimates_and_is_exact_for_isolated_terms(spark):
     # CMS invariants on the real corpus: every estimate >= the true count
     # (each occurrence increments every probed cell), and the estimate is
@@ -3744,7 +3777,9 @@ def test_kcore_bounded_rounds_contract_on_path_graph(spark):
 
     import pytest as _pytest
 
-    with _pytest.warns(RuntimeWarning, match="did not reach a fixpoint"):
+    with _pytest.warns(
+        RuntimeWarning, match="did not reach a fixpoint within max_rounds=2"
+    ):
         got = {
             r.node: r.core_degree
             for r in kcore_nodes(e, k=2, max_rounds=2).collect()
