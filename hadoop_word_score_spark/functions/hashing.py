@@ -7,8 +7,6 @@ the near-dup operators in operators/dedup.py (SURVEY §2.10 L2).
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -74,18 +72,6 @@ def shingles_expr(text_col: str, n: int = 3) -> str:
 
 def shingles(text_col: str, n: int = 3) -> Column:
     return F.expr(shingles_expr(text_col, n))
-
-
-def shingle_hashes_expr(text_col: str, n: int = 3) -> str:
-    """SQL expr: distinct word n-gram shingles as 64-bit xxhash64 values.
-
-    Set cardinalities — and therefore exact Jaccard — are preserved up to
-    xxhash64 collisions (P ≈ |shingles|²/2⁶⁵; ~1e-10 at millions of distinct
-    shingles). Downstream shuffles/joins/intersections then carry 8-byte
-    longs instead of n-word strings, which is what the postings shuffle and
-    the verify join actually pay for.
-    """
-    return let1(shingles_expr(text_col, n), "sv", "transform(sv, x -> xxhash64(x))")
 
 
 def winnow_fingerprints_expr(text_col: str, k: int = 5, w: int = 8) -> str:
@@ -239,10 +225,6 @@ def simhash64_expr(text_col: str) -> str:
         "THEN 1 ELSE -1 END) > 0 THEN shiftleft(1L, j) ELSE 0L END)"
     )
     return let1(hashes, "h", body)
-
-
-def simhash64(text_col: str) -> Column:
-    return F.expr(simhash64_expr(text_col))
 
 
 def text_shingle_hashes_udf(n: int = 3):

@@ -9,6 +9,17 @@ Scale notes (the whole point of these designs):
     shingle sets for exact Jaccard — only for candidate pairs.
   - The exact n-gram Jaccard operator (quadratic within shingle-buckets) is
     the oracle-of-record at test SF, not the scale path.
+
+Shared pair-generation steps, the one implementation of each for the five
+near-dup pair functions (``minhash_lsh_pairs``, ``incremental_lsh_pairs``,
+``simhash_near_pairs``, ``hamming_near_pairs``,
+``incremental_hamming_pairs``) and ``jaccard_prefix_filter_pairs``: a
+self-join is the R⋈S join with R = S, kept once as ``id_a < id_b``.
+``_shingle_sets`` (per-doc shingle-hash sets), ``_band_candidates`` (the
+(band_idx, band_hash) candidate join), ``_hamming_join`` (the
+(chunk_idx, chunk_val) banded Hamming join with its chunk explode,
+pigeonhole guard, first-agreeing-chunk rule and ``hamming <= max`` filter)
+and ``_jaccard_verify`` (the exact ``array_intersect`` Jaccard verify).
 """
 
 from __future__ import annotations
@@ -16,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import band_hashes, minhash_signature
+from ..functions.hashing import band_hashes
 from ..session import fixpoint, release
 
 
@@ -189,17 +200,12 @@ def jaccard_prefix_filter_pairs(
     verify join computing |A∩B| via array_intersect on the checkpointed
     sets. No Python after the scan.
     """
-    from ..functions.hashing import text_shingle_hashes_udf
-
     from pyspark.sql.window import Window
 
-    sh_fn = text_shingle_hashes_udf(n)
     # materialize BEFORE filtering: a filter on a UDF column makes Catalyst
     # evaluate the UDF under both Filter and Project (see
     # ngram_jaccard_pairs), and this relation feeds three consumers.
-    sh = docs.select(
-        F.col(id_col).alias("id"), sh_fn(F.col(text_col)).alias("shingles")
-    ).localCheckpoint()
+    sh = _shingle_sets(docs, id_col, text_col, n).localCheckpoint()
     sized = sh.select(
         "id", F.size("shingles").alias("sz"), "shingles"
     ).filter(F.col("sz") > 0)
@@ -278,25 +284,70 @@ def jaccard_prefix_filter_pairs(
         )
         .select("id_a", "id_b")
     )
-    v = cand.join(
-        sized.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
-        "id_a",
+    return _jaccard_verify(cand, "id_a", "id_b", sized, sized, threshold)
+
+
+def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, shingles): each doc's distinct word n-gram shingle hashes from
+    one Arrow-batched UDF (functions/hashing.py::text_shingle_hashes_udf)."""
+    from ..functions.hashing import text_shingle_hashes_udf
+
+    sh_fn = text_shingle_hashes_udf(n)
+    return docs.select(
+        F.col(id_col).alias("id"), sh_fn(F.col(text_col)).alias("shingles")
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """(a, b, n_common, jaccard) for the candidate pairs ``cand`` (a, b)
+    whose exact shingle-set Jaccard is >= ``threshold``: the sets join back
+    by id from the (id, shingles) relations ``sets_a``/``sets_b`` for
+    candidate pairs alone, and |A∩B| is ``array_intersect``'s size. The
+    threshold tests the TRUE Jaccard, not the ROUND'ed display value (see
+    ngram_jaccard_pairs: this is what makes the t-1e-9 prunes exact), so
+    precision is exact whatever generated the candidates."""
+    verified = cand.join(
+        sets_a.select(F.col("id").alias(a), F.col("shingles").alias("sh_a")), a
     ).join(
-        sized.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
-        "id_b",
+        sets_b.select(F.col("id").alias(b), F.col("shingles").alias("sh_b")), b
     )
-    n_common = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    sz_a, sz_b = F.size("sh_a"), F.size("sh_b")
-    # threshold on the TRUE Jaccard, not the ROUND'ed display value — see
-    # ngram_jaccard_pairs: this is what makes the t-1e-9 prunes exact
-    jac = n_common / (sz_a + sz_b - n_common)
-    return (
-        v.filter(jac >= threshold)
-        .select(
-            "id_a", "id_b", n_common.alias("n_common"),
-            F.round(jac, 6).alias("jaccard"),
-        )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = inter.cast("long") / (F.size("sh_a") + F.size("sh_b") - inter)
+    return verified.filter(jac >= threshold).select(
+        a, b, inter.cast("long").alias("n_common"), F.round(jac, 6).alias("jaccard")
     )
+
+
+def _band_candidates(
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    self_pairs: bool = False,
+    hint: str | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs (a, b) of two band indexes
+    (:func:`minhash_band_index` rows): ONE equi-join on (band_idx,
+    band_hash), so candidate generation shuffles only (id, band hash) rows,
+    never shingle arrays. A pair colliding in several bands is kept once.
+    ``self_pairs``: ``left`` and ``right`` are the same index, and each
+    pair is kept once as a < b. ``hint``: join hint on the right side."""
+    other = right.select(F.col("id").alias(b), "band_idx", "band_hash")
+    if hint:
+        other = other.hint(hint)
+    pairs = left.select(F.col("id").alias(a), "band_idx", "band_hash").join(
+        other, ["band_idx", "band_hash"]
+    )
+    if self_pairs:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.select(a, b).dropDuplicates([a, b])
 
 
 # Hash-family version tag: bump whenever functions/hashing.py changes the
@@ -404,44 +455,35 @@ def minhash_lsh_pairs(
     index write this way, instead of re-signing the batch per consumer.
     Must be built from the same docs with the same (n, num_hashes, bands).
     """
-    # Candidate generation shuffles ONLY (id, band hash) — never the shingle
-    # arrays. r16: buckets pair via a SELF-EQUI-JOIN on (band_idx,
-    # band_hash), not a collect_list explode — band hashes are md5-uniform
-    # over DISTINCT texts, but byte-identical / boilerplate documents
-    # collide in EVERY band, and a collect_list bucket would hold that
-    # whole duplicate mass as one in-task array before any pruning (the
-    # same degenerate-bucket exposure the perceptual family fixed, r15
-    # verdict #1). The join streams pairs with O(partition) memory, AQE
-    # skew-split applies, and the merge hint below keeps the two sides
-    # canonically equal so the signing pass + its shuffle run ONCE
-    # (ReusedExchange — runtime-pinned in tests/test_plans.py under the
-    # production AQE config). Document bodies re-enter only for the final
-    # exact-Jaccard verification join, keyed by id, on candidate pairs
-    # alone.
+    # Buckets pair via a SELF-EQUI-JOIN on (band_idx, band_hash), not a
+    # collect_list explode — band hashes are md5-uniform over DISTINCT
+    # texts, but byte-identical / boilerplate documents collide in EVERY
+    # band, and a collect_list bucket would hold that whole duplicate mass
+    # as one in-task array before any pruning (the same degenerate-bucket
+    # exposure as the perceptual family's, see hamming_near_pairs). The
+    # join streams pairs with O(partition) memory and AQE skew-split
+    # applies.
+    # Document bodies re-enter only for the final exact-Jaccard
+    # verification join, keyed by id, on candidate pairs alone.
     if index is not None:
         _check_mh_meta(index, n, num_hashes, bands, "index")
         banded = index
     else:
         banded = minhash_band_index(docs, id_col, text_col, n, num_hashes, bands)
-    right = banded.select(F.col("id").alias("id_b"), "band_idx", "band_hash")
-    if index is None:
-        # merge hint (r16, the hamming_near_pairs discipline): when the
-        # band index is derived in-flight, its subtree is the EXPENSIVE
-        # fused sign UDF — and under AQE's broadcast choice the two join
-        # sides are NOT canonically equal (one side is a BroadcastExchange),
-        # so the sign pass ran TWICE (verified in the executed final plan:
-        # two sig() ArrowEvalPython stages, zero reuse). Forcing the
-        # shuffle join makes both sides the same hash-partitioned exchange
-        # and AQE reuses it — one signing pass at every scale, still
-        # skew-split eligible. A caller-supplied (checkpointed/persisted)
-        # index is cheap to re-read, so there the optimizer's choice stands.
-        right = right.hint("merge")
-    candidates = (
-        banded.select(F.col("id").alias("id_a"), "band_idx", "band_hash")
-        .join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])  # a pair may collide in many bands
+    # merge hint (the hamming_near_pairs discipline): when the band
+    # index is derived in-flight, its subtree is the EXPENSIVE fused sign
+    # UDF — and under AQE's broadcast choice the two join sides are NOT
+    # canonically equal (one side is a BroadcastExchange), so the sign pass
+    # ran TWICE (verified in the executed final plan: two sig()
+    # ArrowEvalPython stages, zero reuse). Forcing the shuffle join makes
+    # both sides the same hash-partitioned exchange and AQE reuses it
+    # (ReusedExchange — runtime-pinned in tests/test_plans.py under the
+    # production AQE config) — one signing pass at every scale, still
+    # skew-split eligible. A caller-supplied (checkpointed/persisted) index
+    # is cheap to re-read, so there the optimizer's choice stands.
+    candidates = _band_candidates(
+        banded, banded, "id_a", "id_b", self_pairs=True,
+        hint=None if index is not None else "merge",
     )
     # Verification: two joins against the shingle relation. This instantiates
     # the scan→tokenize→shingle subtree twice, but measured A/B/C/D on a
@@ -457,27 +499,8 @@ def minhash_lsh_pairs(
     # fraction) and no better at 1×. Here each doc shingles exactly once
     # per scan, pairs broadcast under AQE, and nothing wider than the
     # matched rows moves.
-    from ..functions.hashing import text_shingle_hashes_udf
-
-    sh_fn = text_shingle_hashes_udf(n)
-    sh = docs.select(
-        F.col(id_col).alias("id"), sh_fn(F.col(text_col)).alias("shingles")
-    )
-    verified = candidates.join(
-        sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
-    ).join(
-        sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("long") / union  # true-J threshold; ROUND is display-only
-    return (
-        verified.filter(jac >= threshold)
-        .select(
-            "id_a", "id_b", inter.cast("long").alias("n_common"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-    )
+    sh = _shingle_sets(docs, id_col, text_col, n)
+    return _jaccard_verify(candidates, "id_a", "id_b", sh, sh, threshold)
 
 
 def incremental_lsh_pairs(
@@ -520,34 +543,12 @@ def incremental_lsh_pairs(
         new_index = minhash_band_index(new, id_col, text_col, n, num_hashes, bands)
     else:
         _check_mh_meta(new_index, n, num_hashes, bands, "new_index")
-    candidates = (
-        new_index.select(F.col("id").alias("new_id"), "band_idx", "band_hash")
-        .join(
-            base_index.select(F.col("id").alias("base_id"), "band_idx", "band_hash"),
-            ["band_idx", "band_hash"],
-        )
-        .select("new_id", "base_id")
-        .dropDuplicates(["new_id", "base_id"])
-    )
-    from ..functions.hashing import text_shingle_hashes_udf
-
-    sh_fn = text_shingle_hashes_udf(n)
-    sh_new = new.select(
-        F.col(id_col).alias("new_id"), sh_fn(F.col(text_col)).alias("sh_a")
-    )
-    sh_base = base.select(
-        F.col(id_col).alias("base_id"), sh_fn(F.col(text_col)).alias("sh_b")
-    )
-    verified = candidates.join(sh_new, "new_id").join(sh_base, "base_id")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("long") / union  # true-J threshold; ROUND is display-only
-    return (
-        verified.filter(jac >= threshold)
-        .select(
-            "new_id", "base_id", inter.cast("long").alias("n_common"),
-            F.round(jac, 6).alias("jaccard"),
-        )
+    candidates = _band_candidates(new_index, base_index, "new_id", "base_id")
+    return _jaccard_verify(
+        candidates, "new_id", "base_id",
+        _shingle_sets(new, id_col, text_col, n),
+        _shingle_sets(base, id_col, text_col, n),
+        threshold,
     )
 
 
@@ -691,54 +692,20 @@ def simhash_near_pairs(
     production AQE path — AQE's broadcast choice would otherwise replay
     the hash chain once per side).
     """
-    from ..functions.hashing import let1, simhash64_expr
+    from ..functions.hashing import simhash64_expr
 
-    if max_hamming > chunks - 1:
-        raise ValueError(
-            f"simhash_near_pairs: max_hamming={max_hamming} needs > "
-            f"{chunks} chunks for the pigeonhole guarantee (got {chunks})"
-        )
-    width = 64 // chunks
-    mask = (1 << width) - 1
-    # One Generate over a let-bound struct array: the simhash evaluates
-    # exactly once per document scan. (A separate simhash column would be
-    # inlined by CollapseProject into the chunk lambda AND into explode's
-    # inferred non-empty filter — 4-6 interpreted re-evaluations of the
-    # full hash; explode_outer emits no such filter and the sequence is
-    # never empty.)
-    chunked = let1(
-        simhash64_expr(text_col),
-        "sh",
-        f"transform(sequence(0, {chunks - 1}), c -> struct("
-        f"sh AS simhash, c AS chunk_idx, "
-        f"shiftright(sh, c * {width}) & {mask} AS chunk_val))",
+    # The simhash is the output of a one-element explode, so it evaluates
+    # exactly once per document scan. As a plain projected column it would
+    # be re-evaluated: the isnotnull the join's hamming predicate infers is
+    # pushed through the Project into a Filter at the scan, and an
+    # interpreted HOF chain has no common-subexpression elimination. A
+    # filter on a generator's output stays above the Generate.
+    hashed = docs.select(
+        id_col, F.explode(F.array(F.expr(simhash64_expr(text_col)))).alias("simhash")
     )
-    pieces = docs.select(
-        F.col(id_col).alias("id"), F.explode_outer(F.expr(chunked)).alias("p")
-    ).select("id", "p.simhash", "p.chunk_idx", "p.chunk_val")
-
-    def side(out_id: str, out_h: str) -> DataFrame:
-        return pieces.select(
-            F.col("id").alias(out_id),
-            F.col("simhash").alias(out_h),
-            "chunk_idx",
-            "chunk_val",
-        )
-
-    xor = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
-    ham = F.bit_count(xor)
-    return (
-        side("id_a", "sh_a")
-        # merge hint (r16): same one-signing-pass discipline as
-        # hamming_near_pairs / minhash_lsh_pairs — under AQE's broadcast
-        # choice the sides are not canonically equal and the tokenize+
-        # simhash expression chain evaluates once PER SIDE; the forced
-        # shuffle join makes the second side a ReusedExchange.
-        .join(side("id_b", "sh_b").hint("merge"), ["chunk_idx", "chunk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(_first_agreeing_chunk_pred(xor, chunks, width, mask))
-        .filter(ham <= max_hamming)
-        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
+    return _hamming_join(
+        hashed, hashed, "id_a", "id_b", id_col, "simhash", max_hamming, chunks,
+        "simhash_near_pairs", self_pairs=True, hint="merge",
     )
 
 
@@ -762,11 +729,6 @@ def hamming_near_pairs(
     is exactly the all-pairs filter, never a recall trade. ``max_hamming``
     must stay <= chunks-1 or the guarantee breaks — guarded loudly.
 
-    Unlike simhash_near_pairs (where the hash is an expression and a
-    let-binding stops re-evaluation), the hash here is a real attribute
-    (typically out of a mapInPandas decode stage), so referencing it in
-    the chunk transform costs nothing extra.
-
     Pairing is a SELF-EQUI-JOIN on (chunk_idx, chunk_val), not a
     collect_list bucket explode (r15 verdict #1). Perceptual chunk values
     are data-dependent — every flat/near-white raster lands the identical
@@ -783,10 +745,8 @@ def hamming_near_pairs(
     of concentrating in one task.
 
     A pair agreeing on k chunks meets in k buckets; the duplicates are
-    removed WITHOUT a shuffle by the first-agreeing-chunk rule — both
-    hashes travel with the match, so "no chunk below chunk_idx also
-    agrees" is a map-side codegen predicate and exactly one of the k
-    meetings survives. (``id_col`` is a key of the input, the dedup
+    removed WITHOUT a shuffle by the first-agreeing-chunk rule (see
+    :func:`_hamming_join`). (``id_col`` is a key of the input, the dedup
     family's standing contract — duplicate id rows would emit duplicate
     pairs here rather than being absorbed.)
 
@@ -799,66 +759,10 @@ def hamming_near_pairs(
     degenerate buckets. Pass ``join_hint=None`` when the input is already
     materialized cheaply (e.g. a checkpointed batch or a parquet-backed
     index column) and the optimizer's broadcast choice should stand."""
-    if max_hamming > chunks - 1:
-        raise ValueError(
-            f"hamming_near_pairs: max_hamming={max_hamming} needs > "
-            f"{chunks} chunks for the pigeonhole guarantee (got {chunks})"
-        )
-    width = 64 // chunks
-    mask = (1 << width) - 1
-
-    def pieces(out_id: str, out_h: str) -> DataFrame:
-        return hashed.select(
-            F.col(id_col).alias(out_id),
-            F.col(hash_col).alias(out_h),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("chunk_idx"),
-                            F.shiftright(F.col(hash_col), c * width)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("chunk_val"),
-                        )
-                        for c in range(chunks)
-                    ]
-                )
-            ).alias("p"),
-        ).select(out_id, out_h, "p.chunk_idx", "p.chunk_val")
-
-    xor = F.col("h_a").bitwiseXOR(F.col("h_b"))
-    ham = F.bit_count(xor)
-    first_chunk = _first_agreeing_chunk_pred(xor, chunks, width, mask)
-    right = pieces("id_b", "h_b")
-    if join_hint:
-        right = right.hint(join_hint)
-    return (
-        pieces("id_a", "h_a")
-        .join(right, ["chunk_idx", "chunk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_chunk)
-        .filter(ham <= max_hamming)
-        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
+    return _hamming_join(
+        hashed, hashed, "id_a", "id_b", id_col, hash_col, max_hamming, chunks,
+        "hamming_near_pairs", self_pairs=True, hint=join_hint,
     )
-
-
-def _first_agreeing_chunk_pred(xor, chunks: int, width: int, mask: int):
-    """True iff no chunk BELOW the row's ``chunk_idx`` also agrees (its
-    xor piece is 0) — the shuffle-free dedup of banded-join meetings:
-    a pair agreeing on k chunks meets k times, and exactly one meeting
-    (the lowest agreeing chunk) passes. Pure bit math on the already-held
-    hashes; whole-stage codegen, no exchange."""
-    agree = [
-        F.shiftright(xor, c * width).bitwiseAND(F.lit(mask)) == 0
-        for c in range(chunks)
-    ]
-    pred = F.lit(True)
-    for c in range(1, chunks):
-        below = agree[0]
-        for a in agree[1:c]:
-            below = below | a
-        pred = F.when(F.col("chunk_idx") == c, ~below).otherwise(pred)
-    return pred
 
 
 def incremental_hamming_pairs(
@@ -882,9 +786,35 @@ def incremental_hamming_pairs(
     projections (free codegen), so the persisted index stays a flat
     (id, hash) relation — 16 logical bytes per row — and explodes only
     at probe time."""
+    return _hamming_join(
+        base_hashed, new_hashed, "base_id", "new_id", id_col, hash_col,
+        max_hamming, chunks, "incremental_hamming_pairs",
+    )
+
+
+def _hamming_join(
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    chunks: int,
+    who: str,
+    self_pairs: bool = False,
+    hint: str | None = None,
+) -> DataFrame:
+    """(a, b, hamming) for every (left, right) row pair whose 64-bit
+    ``hash_col`` values differ in at most ``max_hamming`` bits: each side
+    explodes into ``chunks`` (chunk_idx, chunk_val) pieces and the pair
+    meets in ONE equi-join on them. ``self_pairs``: ``left`` and ``right``
+    are the same relation, and each pair is kept once as a < b. ``hint``:
+    join hint on the right side. ``who`` names the public caller in the
+    pigeonhole guard's error."""
     if max_hamming > chunks - 1:
         raise ValueError(
-            f"incremental_hamming_pairs: max_hamming={max_hamming} needs > "
+            f"{who}: max_hamming={max_hamming} needs > "
             f"{chunks} chunks for the pigeonhole guarantee (got {chunks})"
         )
     width = 64 // chunks
@@ -909,15 +839,33 @@ def incremental_hamming_pairs(
             ).alias("p"),
         ).select(out_id, out_h, "p.chunk_idx", "p.chunk_val")
 
-    base = pieces(base_hashed, "base_id", "base_h")
-    new = pieces(new_hashed, "new_id", "new_h")
-    xor = F.col("base_h").bitwiseXOR(F.col("new_h"))
+    xor = F.col("h_a").bitwiseXOR(F.col("h_b"))
     ham = F.bit_count(xor)
+    # First-agreeing-chunk rule, the shuffle-free dedup of banded-join
+    # meetings: a pair agreeing on k chunks meets k times, and only the
+    # meeting at the LOWEST agreeing chunk passes — true iff no chunk below
+    # the row's chunk_idx also agrees (its xor piece is 0). Pure bit math
+    # on the already-held hashes; whole-stage codegen, no exchange.
+    agree = [
+        F.shiftright(xor, c * width).bitwiseAND(F.lit(mask)) == 0
+        for c in range(chunks)
+    ]
+    first_chunk = F.lit(True)
+    for c in range(1, chunks):
+        below = agree[0]
+        for ag in agree[1:c]:
+            below = below | ag
+        first_chunk = F.when(F.col("chunk_idx") == c, ~below).otherwise(first_chunk)
+    other = pieces(right, b, "h_b")
+    if hint:
+        other = other.hint(hint)
+    pairs = pieces(left, a, "h_a").join(other, ["chunk_idx", "chunk_val"])
+    if self_pairs:
+        pairs = pairs.filter(F.col(a) < F.col(b))
     return (
-        base.join(new, ["chunk_idx", "chunk_val"])
-        .filter(_first_agreeing_chunk_pred(xor, chunks, width, mask))
+        pairs.filter(first_chunk)
         .filter(ham <= max_hamming)
-        .select("base_id", "new_id", ham.cast("int").alias("hamming"))
+        .select(a, b, ham.cast("int").alias("hamming"))
     )
 
 

@@ -431,30 +431,6 @@ def _iter_pgm_frames(payload: bytes):
         pos = end
 
 
-def split_video_frames(docs_with_payload: DataFrame) -> DataFrame:
-    """REAL frame demux: one concatenated-PGM "video" binary -> one row per
-    frame, each frame itself a decodable PGM. Narrow 1->N fan-out inside
-    the Arrow batch; the fake byte-offset sampler (sample_frames) remains
-    for payloads with no demuxable container."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "frame_offset": [], "frame_bytes": []
-            }
-            for did, p in zip(pdf["doc_id"], pdf["payload"].map(_nz)):
-                for i, (off, frame) in enumerate(_iter_pgm_frames(bytes(p))):
-                    rows["doc_id"].append(int(did))
-                    rows["frame_idx"].append(i)
-                    rows["frame_offset"].append(off)
-                    rows["frame_bytes"].append(frame)
-            yield pd.DataFrame(rows)
-
-    return docs_with_payload.select("doc_id", "payload").mapInPandas(
-        batches, schema=FRAME_SCHEMA
-    )
-
-
 def extract_video_frame_metadata(docs_with_payload: DataFrame) -> DataFrame:
     """Demux + per-frame REAL decode in one narrow stage: video binary ->
     (doc_id, frame_idx, frame_offset, width, height, mean_luma)."""

@@ -58,7 +58,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
@@ -278,31 +278,22 @@ def persist_ivfpq_index(
     coarse = _unit_centroids(cent_rows) if cent_rows else None
     # ONE encode pass feeds both the index write and the training-time
     # coarse envelope (review r12: the previous dedicated worst-sim pass
-    # re-scanned the whole corpus for one scalar). Two consumers of a
-    # corpus-sized relation -> persist(DISK_ONLY) + unpersist, the
-    # scale-safe pin (narrow ~90 B/row codes, never raw vectors).
-    from pyspark.storagelevel import StorageLevel
-
+    # re-scanned the whole corpus for one scalar): the envelope is an
+    # observe() metric of the index write itself, so the corpus-sized
+    # codes are neither pinned nor aggregated by a second job.
     codes = pq_encode(
         index, books, id_col, vec_col,
         keep=("cell", *meta_cols), coarse=coarse,
     )
 
     def _write_index():
-        if coarse is None:
-            codes.repartition("cell").write.partitionBy("cell").mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "index"))
-            return None
-        pinned = codes.persist(StorageLevel.DISK_ONLY)
-        try:
-            row = pinned.agg(F.min("_coarse_sim")).collect()[0][0]
-            pinned.drop("_coarse_sim").repartition("cell").write.partitionBy(
-                "cell"
-            ).mode("overwrite").parquet(os.path.join(path, "index"))
-            return None if row is None else float(row)
-        finally:
-            pinned.unpersist()
+        envelope = Observation()
+        codes.observe(envelope, F.min("_coarse_sim").alias("worst")).drop(
+            "_coarse_sim"
+        ).repartition("cell").write.partitionBy("cell").mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "index"))
+        return envelope.get["worst"]
 
     # centroids is a driver-local bounded relation, ready before the
     # encode pass — its write overlaps the corpus-sized index write so the

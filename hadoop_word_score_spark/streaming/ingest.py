@@ -29,7 +29,9 @@ nothing already written is read back for re-signing or rewritten.
 Exactly-once: same discipline as ``sinks.upsert_sink`` — a re-delivered
 ``batch_id <= last_batch_id`` is a no-op; batch directories are written
 (mode=overwrite, so a crashed half-write is self-healing on redelivery)
-BEFORE the ``_latest`` pointer swap publishes them.
+BEFORE the ``_latest`` pointer swap publishes them. The text sink and its
+media sibling ``perceptual_ingest_sink`` run on the one ``_ingest_sink``
+skeleton, and ``read_ingested`` reads either kind of target.
 
 Reference scope: hopper19/hadoop-word-score has no streaming or dedup
 operators (ComputeWordScore.java:1-224); this is part of the mandated
@@ -39,15 +41,19 @@ LLM-training-pipeline extension surface.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    hamming_near_pairs,
+    incremental_hamming_pairs,
     incremental_lsh_pairs,
     minhash_band_index,
     minhash_lsh_pairs,
 )
+from ..session import overlap_jobs
 from .sinks import _commit, _read_pointer, _validate_local_target
 
 _DOCS = "docs"
@@ -75,7 +81,9 @@ def _committed_dirs(target: str, sub: str, last_batch: int) -> list[str]:
 
 
 def read_ingested(spark: SparkSession, target: str) -> DataFrame | None:
-    """All committed arrivals: (doc_id, text, quarantined, matched_id).
+    """All committed arrivals of either sink's target: (doc_id, text,
+    quarantined, matched_id) for :func:`dedup_ingest_sink`, (doc_id,
+    payload, quarantined, matched_id) for :func:`perceptual_ingest_sink`.
 
     ``matched_id`` is the lowest-id earlier arrival the doc matched (NULL
     for kept docs). None before the first commit.
@@ -83,9 +91,72 @@ def read_ingested(spark: SparkSession, target: str) -> DataFrame | None:
     version, last_batch = _read_pointer(target)
     if version == 0:
         return None
-    return spark.read.parquet(*_committed_dirs(target, _DOCS, last_batch)).select(
-        "doc_id", "text", "quarantined", "matched_id"
-    )
+    return spark.read.parquet(*_committed_dirs(target, _DOCS, last_batch))
+
+
+def _ingest_sink(target, who, id_col, body_col, body, sign, find_matches):
+    """The exactly-once ``foreachBatch`` skeleton both sinks run on: the
+    replay guard, the batch pin, the quarantine tail, the overlapped index
+    and docs writes, and the pointer swap. A family supplies two steps:
+
+    ``sign(batch) -> (signed, index_rows)`` signs the pinned (doc_id,
+    ``body``) batch once; ``index_rows`` is what ``index/batch=<id>``
+    persists. ``find_matches(batch, signed, earlier) -> (doc_id,
+    match_id)`` pairs each doc with the earlier arrivals it near-dup
+    matches, within the batch and, when ``earlier`` is not None, in the
+    committed corpus: ``earlier(sub)`` reads the committed ``docs`` or
+    ``index`` batch dirs.
+    """
+    target = _validate_local_target(target, who)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        version, last_batch = _read_pointer(target)
+        if batch_id <= last_batch:
+            return  # replayed batch — already committed
+        # One stable materialization: the batch relation feeds signing, the
+        # within-batch pair pass, the corpus probe and the docs write —
+        # foreachBatch re-evaluating the source per consumer is both
+        # wasteful and (for non-replayable sources) unsafe.
+        batch = batch_df.select(
+            F.col(id_col).alias("doc_id"), F.col(body_col).alias(body)
+        ).localCheckpoint()
+        signed, index_rows = sign(batch)
+
+        def earlier(sub: str) -> DataFrame:
+            return spark.read.parquet(*_committed_dirs(target, sub, last_batch))
+
+        matches = find_matches(batch, signed, earlier if version > 0 else None)
+        quarantined = matches.groupBy("doc_id").agg(
+            F.min("match_id").alias("matched_id")
+        )
+        annotated = batch.join(quarantined, "doc_id", "left").select(
+            "doc_id",
+            body,
+            F.col("matched_id").isNotNull().alias("quarantined"),
+            "matched_id",
+        )
+        # The two batch-dir writes are INDEPENDENT jobs (the index write
+        # reads only the checkpointed signatures; the docs write only the
+        # match relation), so the index write runs from a driver thread
+        # while the docs write's pair-verify + join tail would otherwise
+        # leave executors idle (guide §2.6 back-fill; r16 optimization).
+        # Exactly-once is untouched: BOTH writes complete before the
+        # pointer swap below publishes them, and a crash mid-either-write
+        # leaves the same unpublished batch dirs a sequential crash did
+        # (vacuum_ingest's contract).
+        overlap_jobs(
+            spark,
+            lambda: index_rows.write.mode("overwrite").parquet(
+                _batch_dir(target, _INDEX, batch_id)
+            ),
+            lambda: annotated.write.mode("overwrite").parquet(
+                _batch_dir(target, _DOCS, batch_id)
+            ),
+        )
+        _commit(target, version + 1, batch_id)
+
+    return write_batch
 
 
 def dedup_ingest_sink(
@@ -104,149 +175,76 @@ def dedup_ingest_sink(
         stream.writeStream.foreachBatch(dedup_ingest_sink(path))
               .option("checkpointLocation", ckpt).trigger(availableNow=True)
     """
-    target = _validate_local_target(target, "dedup_ingest_sink")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        version, last_batch = _read_pointer(target)
-        if batch_id <= last_batch:
-            return  # replayed batch — already committed
-        # One stable materialization: the batch relation feeds the
-        # within-batch pair pass, the incremental probe, the docs write and
-        # the index write — foreachBatch re-evaluating the source per
-        # consumer is both wasteful and (for non-replayable sources) unsafe.
-        batch = (
-            batch_df.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            )
-            .localCheckpoint()
-        )
-
+    def sign(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         # Sign the batch EXACTLY ONCE (the module contract): one checkpointed
         # band index feeds all three consumers — the within-batch pair pass,
         # the incremental corpus probe, and the index/batch=<id> write.
-        # (review r9: the first cut re-signed the batch inside each consumer,
-        # 3x the dominant Arrow-UDF cost per commit.)
-        batch_index = minhash_band_index(
+        # (Re-signing inside each consumer would triple the dominant
+        # Arrow-UDF cost per commit.) Quarantined docs are
+        # indexed too (see module docstring); the index carries mh_meta so a
+        # later probe with different parameters fail-fasts instead of
+        # silently degrading recall.
+        index = minhash_band_index(
             batch, "doc_id", "text", n, num_hashes, bands
         ).localCheckpoint()
+        return index, index
 
+    def find_matches(batch: DataFrame, index: DataFrame, earlier) -> DataFrame:
         # Earlier arrivals within the batch: pairs come back id_a < id_b,
         # so id_b is the later arrival and id_a its match.
         matches = minhash_lsh_pairs(
             batch, "doc_id", "text", n, num_hashes, bands, threshold,
-            index=batch_index,
+            index=index,
         ).select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id"))
-
-        if version > 0:
-            base_docs = spark.read.parquet(
-                *_committed_dirs(target, _DOCS, last_batch)
-            )
-            base_index = spark.read.parquet(
-                *_committed_dirs(target, _INDEX, last_batch)
-            )
-            vs_corpus = incremental_lsh_pairs(
-                base_docs,
-                batch,
-                "doc_id",
-                "text",
-                n,
-                num_hashes,
-                bands,
-                threshold,
-                base_index=base_index,
-                new_index=batch_index,
+        if earlier is None:
+            return matches
+        return matches.unionByName(
+            incremental_lsh_pairs(
+                earlier(_DOCS), batch, "doc_id", "text", n, num_hashes, bands,
+                threshold, base_index=earlier(_INDEX), new_index=index,
             ).select(
-                F.col("new_id").alias("doc_id"),
-                F.col("base_id").alias("match_id"),
+                F.col("new_id").alias("doc_id"), F.col("base_id").alias("match_id")
             )
-            matches = matches.unionByName(vs_corpus)
-
-        quarantined = matches.groupBy("doc_id").agg(
-            F.min("match_id").alias("matched_id")
         )
-        annotated = batch.join(quarantined, "doc_id", "left").select(
-            "doc_id",
-            "text",
-            F.col("matched_id").isNotNull().alias("quarantined"),
-            "matched_id",
-        )
-        # The two batch-dir writes are INDEPENDENT jobs (the index write
-        # reads only the checkpointed batch_index; the docs write only the
-        # match relation), so the index write runs from a driver thread
-        # while the docs write's pair-verify + join tail would otherwise
-        # leave executors idle (guide §2.6 back-fill; r16 optimization).
-        # Exactly-once is untouched: BOTH writes complete before the
-        # pointer swap below publishes them, and a crash mid-either-write
-        # leaves the same unpublished batch dirs a sequential crash did
-        # (vacuum_ingest's contract).
-        from ..session import overlap_jobs
 
-        # Quarantined docs are indexed too (see module docstring); the index
-        # carries mh_meta so a later probe with different parameters
-        # fail-fasts instead of silently degrading recall.
-        overlap_jobs(
-            spark,
-            lambda: batch_index.write.mode("overwrite").parquet(
-                _batch_dir(target, _INDEX, batch_id)
-            ),
-            lambda: annotated.write.mode("overwrite").parquet(
-                _batch_dir(target, _DOCS, batch_id)
-            ),
-        )
-        _commit(target, version + 1, batch_id)
-
-    return write_batch
-
-
-def read_ingested_media(spark: SparkSession, target: str) -> DataFrame | None:
-    """All committed arrivals of a perceptual ingest target:
-    (doc_id, payload, quarantined, matched_id). None before the first
-    commit."""
-    version, last_batch = _read_pointer(target)
-    if version == 0:
-        return None
-    return spark.read.parquet(*_committed_dirs(target, _DOCS, last_batch)).select(
-        "doc_id", "payload", "quarantined", "matched_id"
+    return _ingest_sink(
+        target, "dedup_ingest_sink", id_col, text_col, "text", sign, find_matches
     )
 
 
 def perceptual_ingest_sink(
     target: str,
-    hasher=None,
-    algo: str | None = None,
+    hashers: dict[str, object],
     id_col: str = "doc_id",
     payload_col: str = "payload",
     max_hamming: int = 3,
     chunks: int = 4,
-    hashers: dict[str, object] | None = None,
 ):
     """``dedup_ingest_sink``'s MULTIMODAL sibling: a ``foreachBatch``
     function quarantining perceptual near-dup arrivals of binary media.
 
-    ``hasher``: (DataFrame with (doc_id, payload)) -> (doc_id, <hash>) —
-    any 64-bit perceptual hasher (operators/multimodal.py::image_ahash64 /
-    image_phash64_dct / audio_envelope_hash64 / video_framehash64); the
-    hash column name is discovered from the hasher's output schema.
-    ``algo`` names the hash recipe and is PERSISTED on every index row:
-    a later probe under a different recipe fail-fasts instead of silently
-    comparing incomparable hashes (the mh_meta discipline of the text
-    sink).
+    ``hashers``: ``{algo: hasher, ...}``. A hasher maps a DataFrame with
+    (doc_id, payload) to (doc_id, <hash>) — any 64-bit perceptual hasher
+    (operators/multimodal.py::image_ahash64 / image_phash64_dct /
+    audio_envelope_hash64 / video_framehash64); the hash column name is
+    discovered from the hasher's output schema. ``algo`` names the hash
+    recipe and is PERSISTED on every index row: a later probe under a
+    different recipe fail-fasts instead of silently comparing incomparable
+    hashes (the mh_meta discipline of the text sink).
 
-    ``hashers`` (r15 verdict missing #2): pass ``{algo: hasher, ...}``
-    instead of the single pair to run SEVERAL recipes side by side (e.g.
-    ahash + dhash — aHash's mean threshold and dHash's gradient sign fail
-    on different perturbations, so the union catches more true dups).
-    The index stays ONE flat relation with ``algo`` a per-row column;
-    every comparison — within-batch and against the corpus — is keyed by
-    algo, so hashes of different recipes never meet in a join. A doc is
-    quarantined if it matches an earlier arrival under ANY configured
-    algo. The guard generalizes: rows under an algo NOT configured on
-    this sink fail-fast (those signatures could silently stop matching);
-    a NEWLY configured algo is fine — older arrivals simply have no
-    signature under it, so its coverage starts at adoption time (the
-    documented contract; re-signing history would break the
-    never-re-read-committed-batches scale property).
+    Several recipes run side by side (e.g. ahash + dhash — aHash's mean
+    threshold and dHash's gradient sign fail on different perturbations,
+    so the union catches more true dups). The index stays ONE flat
+    relation with ``algo`` a per-row column; every comparison —
+    within-batch and against the corpus — is keyed by algo, so hashes of
+    different recipes never meet in a join. A doc is quarantined if it
+    matches an earlier arrival under ANY configured algo. Rows under an
+    algo NOT configured on this sink fail-fast (those signatures could
+    silently stop matching); a NEWLY configured algo is fine — older
+    arrivals simply have no signature under it, so its coverage starts at
+    adoption time (the documented contract; re-signing history would
+    break the never-re-read-committed-batches scale property).
 
     Same greedy first-arrival semantics, same exactly-once replay guard
     and pointer-before-publish commit, same 100 TB property — each batch
@@ -258,59 +256,36 @@ def perceptual_ingest_sink(
     kept-but-unindexed under that algo: no stable hash exists, so they
     can neither match nor be matched by it.
     """
-    from ..operators.dedup import hamming_near_pairs, incremental_hamming_pairs
-
-    target = _validate_local_target(target, "perceptual_ingest_sink")
-    if (hasher is None) == (hashers is None):
-        raise ValueError(
-            "perceptual_ingest_sink: pass exactly one of (hasher, algo) or "
-            "hashers={algo: hasher, ...}"
-        )
-    if hashers is None:
-        if algo is None:
-            raise ValueError("perceptual_ingest_sink: algo is required")
-        hashers = {algo: hasher}
     algos = sorted(hashers)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        version, last_batch = _read_pointer(target)
-        if batch_id <= last_batch:
-            return  # replayed batch — already committed
-        batch = (
-            batch_df.select(
-                F.col(id_col).alias("doc_id"),
-                F.col(payload_col).alias("payload"),
-            )
-            .localCheckpoint()
-        )
+    def sign(batch: DataFrame) -> tuple[dict, DataFrame]:
         # Hash the batch EXACTLY ONCE PER ALGO (the decode is the dominant
         # cost); each checkpointed hash relation feeds the within-batch
         # pass, the corpus probe, and the index write. #algos is a small
         # config constant, so the driver-side loop is bounded.
-        hashed_by_algo: dict[str, tuple[DataFrame, str]] = {}
+        hashed = {}
         for a in algos:
             h = hashers[a](batch).localCheckpoint()
-            hashed_by_algo[a] = (h, [c for c in h.columns if c != "doc_id"][-1])
+            hashed[a] = (h, [c for c in h.columns if c != "doc_id"][-1])
+        index_rows = reduce(DataFrame.unionByName, [
+            h.select("doc_id", F.col(c).alias("hash"), F.lit(a).alias("algo"))
+            for a, (h, c) in hashed.items()
+        ])
+        return hashed, index_rows
 
-        matches = None
-        for a in algos:
-            hashed, hash_col = hashed_by_algo[a]
-            m = hamming_near_pairs(
-                hashed, id_col="doc_id", hash_col=hash_col,
+    def find_matches(batch: DataFrame, hashed: dict, earlier) -> DataFrame:
+        pairs = [
+            hamming_near_pairs(
+                h, id_col="doc_id", hash_col=c,
                 max_hamming=max_hamming, chunks=chunks,
                 # the batch hash relation is localCheckpointed — re-reading
                 # it per join side is free, so let the optimizer broadcast
                 join_hint=None,
-            ).select(
-                F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id")
-            )
-            matches = m if matches is None else matches.unionByName(m)
-
-        if version > 0:
-            base_index = spark.read.parquet(
-                *_committed_dirs(target, _INDEX, last_batch)
-            )
+            ).select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id"))
+            for h, c in hashed.values()
+        ]
+        if earlier is not None:
+            base_index = earlier(_INDEX)
             # probe for ANY row under an unconfigured algo, the
             # _check_mh_meta discipline: algo is a per-file constant, so
             # parquet min==max stats answer the NOT-IN filter without
@@ -324,55 +299,26 @@ def perceptual_ingest_sink(
                     f"{algos!r} — hashes under a dropped recipe would "
                     f"silently stop matching; rebuild or match the hashers"
                 )
-            for a in algos:
-                hashed, hash_col = hashed_by_algo[a]
-                vs_corpus = incremental_hamming_pairs(
+            pairs += [
+                incremental_hamming_pairs(
                     base_index.filter(F.col("algo") == a).select(
                         "doc_id", F.col("hash")
                     ),
-                    hashed.select("doc_id", F.col(hash_col).alias("hash")),
+                    h.select("doc_id", F.col(c).alias("hash")),
                     id_col="doc_id", hash_col="hash",
                     max_hamming=max_hamming, chunks=chunks,
                 ).select(
                     F.col("new_id").alias("doc_id"),
                     F.col("base_id").alias("match_id"),
                 )
-                matches = matches.unionByName(vs_corpus)
+                for a, (h, c) in hashed.items()
+            ]
+        return reduce(DataFrame.unionByName, pairs)
 
-        quarantined = matches.groupBy("doc_id").agg(
-            F.min("match_id").alias("matched_id")
-        )
-        annotated = batch.join(quarantined, "doc_id", "left").select(
-            "doc_id",
-            "payload",
-            F.col("matched_id").isNotNull().alias("quarantined"),
-            "matched_id",
-        )
-        index_rows = None
-        for a in algos:
-            hashed, hash_col = hashed_by_algo[a]
-            rows = hashed.select(
-                "doc_id", F.col(hash_col).alias("hash"), F.lit(a).alias("algo")
-            )
-            index_rows = rows if index_rows is None else index_rows.unionByName(rows)
-        # Same independent-writes overlap as dedup_ingest_sink (guide §2.6):
-        # the index write reads only the checkpointed hash relations, the
-        # docs write only the match relation; both complete before _commit
-        # publishes them, so exactly-once and crash behaviour are unchanged.
-        from ..session import overlap_jobs
-
-        overlap_jobs(
-            spark,
-            lambda: index_rows.write.mode("overwrite").parquet(
-                _batch_dir(target, _INDEX, batch_id)
-            ),
-            lambda: annotated.write.mode("overwrite").parquet(
-                _batch_dir(target, _DOCS, batch_id)
-            ),
-        )
-        _commit(target, version + 1, batch_id)
-
-    return write_batch
+    return _ingest_sink(
+        target, "perceptual_ingest_sink", id_col, payload_col, "payload",
+        sign, find_matches,
+    )
 
 
 def vacuum_ingest(target: str) -> list[str]:

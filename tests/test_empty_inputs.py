@@ -563,7 +563,7 @@ def test_perceptual_ingest_empty_batch_and_empty_hamming(spark, tmp_path):
     from hadoop_word_score_spark.operators.multimodal import image_ahash64
     from hadoop_word_score_spark.streaming.ingest import (
         perceptual_ingest_sink,
-        read_ingested_media,
+        read_ingested,
     )
 
     hashes = spark.createDataFrame([], "doc_id long, hash long")
@@ -572,8 +572,8 @@ def test_perceptual_ingest_empty_batch_and_empty_hamming(spark, tmp_path):
     assert incremental_hamming_pairs(some, hashes).count() == 0
 
     target = str(tmp_path / "media")
-    sink = perceptual_ingest_sink(target, image_ahash64, algo="ahash8x8")
+    sink = perceptual_ingest_sink(target, hashers={"ahash8x8": image_ahash64})
     empty = spark.createDataFrame([], "doc_id long, payload binary")
     sink(empty, 0)
-    got = read_ingested_media(spark, target)
+    got = read_ingested(spark, target)
     assert got is not None and got.count() == 0

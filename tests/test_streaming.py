@@ -1587,11 +1587,11 @@ def test_perceptual_ingest_greedy_quarantine_and_index_immutability(
     from hadoop_word_score_spark.operators.multimodal import image_ahash64
     from hadoop_word_score_spark.streaming.ingest import (
         perceptual_ingest_sink,
-        read_ingested_media,
+        read_ingested,
     )
 
     target = str(tmp_path / "media")
-    sink = perceptual_ingest_sink(target, image_ahash64, algo="ahash8x8")
+    sink = perceptual_ingest_sink(target, hashers={"ahash8x8": image_ahash64})
     b0 = spark.createDataFrame(
         [(0, _pgm(1)), (1, _pgm(1)), (2, _pgm(2))], _MEDIA_SCHEMA
     )
@@ -1614,7 +1614,7 @@ def test_perceptual_ingest_greedy_quarantine_and_index_immutability(
         _MEDIA_SCHEMA,
     )
     sink(b1, 1)
-    got = {r.doc_id: r for r in read_ingested_media(spark, target).collect()}
+    got = {r.doc_id: r for r in read_ingested(spark, target).collect()}
     assert len(got) == 7
     assert not got[0].quarantined and got[0].matched_id is None
     assert got[1].quarantined and got[1].matched_id == 0
@@ -1647,29 +1647,29 @@ def test_perceptual_ingest_replay_noop_and_algo_guard(spark, tmp_path):
     )
     from hadoop_word_score_spark.streaming.ingest import (
         perceptual_ingest_sink,
-        read_ingested_media,
+        read_ingested,
     )
 
     target = str(tmp_path / "media")
-    sink = perceptual_ingest_sink(target, image_ahash64, algo="ahash8x8")
+    sink = perceptual_ingest_sink(target, hashers={"ahash8x8": image_ahash64})
     b0 = spark.createDataFrame([(0, _pgm(1)), (1, _pgm(2))], _MEDIA_SCHEMA)
     sink(b0, 0)
     snap = sorted(
         (r.doc_id, r.quarantined, r.matched_id)
-        for r in read_ingested_media(spark, target).collect()
+        for r in read_ingested(spark, target).collect()
     )
     sink(b0, 0)  # replay: no-op
     assert sorted(
         (r.doc_id, r.quarantined, r.matched_id)
-        for r in read_ingested_media(spark, target).collect()
+        for r in read_ingested(spark, target).collect()
     ) == snap
 
-    wrong = perceptual_ingest_sink(target, image_dhash64, algo="dhash9x8")
+    wrong = perceptual_ingest_sink(target, hashers={"dhash9x8": image_dhash64})
     b1 = spark.createDataFrame([(2, _pgm(3))], _MEDIA_SCHEMA)
     with pytest.raises(ValueError, match="algo"):
         wrong(b1, 1)
     # the refused batch must not have committed
-    assert {r.doc_id for r in read_ingested_media(spark, target).collect()} \
+    assert {r.doc_id for r in read_ingested(spark, target).collect()} \
         == {0, 1}
 
 
@@ -1683,11 +1683,11 @@ def test_perceptual_ingest_crash_self_heal(spark, tmp_path):
     from hadoop_word_score_spark.operators.multimodal import image_ahash64
     from hadoop_word_score_spark.streaming.ingest import (
         perceptual_ingest_sink,
-        read_ingested_media,
+        read_ingested,
     )
 
     target = str(tmp_path / "media")
-    sink = perceptual_ingest_sink(target, image_ahash64, algo="ahash8x8")
+    sink = perceptual_ingest_sink(target, hashers={"ahash8x8": image_ahash64})
     sink(spark.createDataFrame([(0, _pgm(1))], _MEDIA_SCHEMA), 0)
 
     # simulate the crash: batch 1's dirs exist on disk, pointer still at 0
@@ -1697,7 +1697,7 @@ def test_perceptual_ingest_crash_self_heal(spark, tmp_path):
         os.path.join(target, "index", "batch=1")
     )
     sink(b1, 1)  # redelivery after the crash
-    got = {r.doc_id: r for r in read_ingested_media(spark, target).collect()}
+    got = {r.doc_id: r for r in read_ingested(spark, target).collect()}
     assert len(got) == 3
     # unique payloads: neither self-matched against the orphaned dirs
     assert not got[1].quarantined and not got[2].quarantined
@@ -1722,7 +1722,7 @@ def test_perceptual_ingest_multi_algo_union_and_guard(spark, tmp_path):
     )
     from hadoop_word_score_spark.streaming.ingest import (
         perceptual_ingest_sink,
-        read_ingested_media,
+        read_ingested,
     )
 
     r = np.arange(20)[:, None]
@@ -1745,7 +1745,7 @@ def test_perceptual_ingest_multi_algo_union_and_guard(spark, tmp_path):
     )
     sink(spark.createDataFrame([(0, pa)], _MEDIA_SCHEMA), 0)
     sink(spark.createDataFrame([(1, pb), (2, _pgm(9))], _MEDIA_SCHEMA), 1)
-    got = {x.doc_id: x for x in read_ingested_media(spark, target).collect()}
+    got = {x.doc_id: x for x in read_ingested(spark, target).collect()}
     assert got[1].quarantined and got[1].matched_id == 0  # dhash-only match
     assert not got[0].quarantined and not got[2].quarantined
     import os
@@ -1759,10 +1759,10 @@ def test_perceptual_ingest_multi_algo_union_and_guard(spark, tmp_path):
     }
 
     # dropping a recipe whose signatures are in the index fail-fasts...
-    narrow = perceptual_ingest_sink(target, image_ahash64, algo="ahash8x8")
+    narrow = perceptual_ingest_sink(target, hashers={"ahash8x8": image_ahash64})
     with pytest.raises(ValueError, match="algo"):
         narrow(spark.createDataFrame([(3, _pgm(10))], _MEDIA_SCHEMA), 2)
-    assert {x.doc_id for x in read_ingested_media(spark, target).collect()} == \
+    assert {x.doc_id for x in read_ingested(spark, target).collect()} == \
         {0, 1, 2}  # the refused batch must not commit
     # ...but ADOPTING a new recipe is fine: coverage starts at adoption
     wider = perceptual_ingest_sink(
@@ -1774,13 +1774,73 @@ def test_perceptual_ingest_multi_algo_union_and_guard(spark, tmp_path):
         },
     )
     wider(spark.createDataFrame([(3, pa)], _MEDIA_SCHEMA), 2)
-    got = {x.doc_id: x for x in read_ingested_media(spark, target).collect()}
+    got = {x.doc_id: x for x in read_ingested(spark, target).collect()}
     assert got[3].quarantined and got[3].matched_id == 0
 
-    with pytest.raises(ValueError, match="exactly one"):
-        perceptual_ingest_sink(
-            target, image_ahash64, algo="x", hashers={"y": image_dhash64}
+
+def test_ingest_sinks_per_batch_work_is_pinned(spark, tmp_path):
+    # Each sink's per-batch Spark work — the batch pin, the one signing
+    # pass per recipe, the mh_meta / algo guards, the corpus reads and the
+    # two overlapped writes — counted from the status store as the bench
+    # counts it: a two-batch text ingest and a two-batch, two-recipe media
+    # ingest run exactly these jobs and SQL executions. Counted with AQE
+    # off: adaptive query stages run as jobs whose number depends on the
+    # order the stages finish in (39-42 jobs for the same text ingest
+    # across runs of one session), while the static plan's jobs do not.
+    import bench
+
+    from hadoop_word_score_spark.operators.multimodal import (
+        image_ahash64,
+        image_dhash64,
+    )
+    from hadoop_word_score_spark.streaming.ingest import (
+        dedup_ingest_sink,
+        perceptual_ingest_sink,
+    )
+
+    base, uniq = _tok_block("tok", 30), _tok_block("bbb", 25)
+    text = [
+        spark.createDataFrame(
+            [(0, base), (1, base + " tail1"), (2, _tok_block("aaa", 25))],
+            _ING_SCHEMA,
+        ),
+        spark.createDataFrame(
+            [(3, base + " tail2"), (4, uniq), (5, uniq + " tail3")],
+            _ING_SCHEMA,
+        ),
+    ]
+    media = [
+        spark.createDataFrame(
+            [(0, _pgm(1)), (1, _pgm(1)), (2, _pgm(2))], _MEDIA_SCHEMA
+        ),
+        spark.createDataFrame([(3, _pgm(1)), (4, _pgm(3))], _MEDIA_SCHEMA),
+    ]
+    collector = bench._collector(spark)
+
+    def work(sink, batches) -> tuple[float, float]:
+        def body() -> None:
+            for batch_id, batch in enumerate(batches):
+                sink(batch, batch_id)
+
+        _, rec = bench._trial(collector, body, read=True)
+        return rec["driver.jobs"], rec["driver.sql_executions"]
+
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got_text = work(dedup_ingest_sink(str(tmp_path / "text")), text)
+        got_media = work(
+            perceptual_ingest_sink(
+                str(tmp_path / "media"),
+                hashers={"ahash8x8": image_ahash64, "dhash9x8": image_dhash64},
+            ),
+            media,
         )
+    finally:
+        spark.conf.set(key, saved)
+    assert got_text == (23, 12)
+    assert got_media == (16, 11)
 
 
 # overlap_jobs (session.py) — the §2.6 back-fill helper behind the ingest
