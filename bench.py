@@ -263,9 +263,16 @@ def _group_main(names: list[str]) -> None:
 
 def _time_layers(rec: dict) -> list[str]:
     """The time layers of a ``layers`` record: its seconds-valued keys,
-    less the row's wall time (``job_s``) and the collector's own read."""
+    less the row's wall time (``job_s``), the collector's own read, and
+    ``arrow.worker_init_s``. Spark's "time to initialize Python workers"
+    is larger per task than the task's own run time (2.1 s against about
+    0.5 s for one task of ``dedup_near_phash`` at sf0.01), so it is a
+    diagnostic, not a share of task time. ``arrow.python_s`` stays: per
+    node and task it is below the task's run time, and it exceeds
+    ``tasks.run_s`` only where several Python nodes run pipelined, and so
+    concurrently, in one task."""
     return [k for k in rec if k.endswith(("_s", ".s"))
-            and k not in ("job_s", "trace.collect_s")]
+            and k not in ("job_s", "trace.collect_s", "arrow.worker_init_s")]
 
 
 def _vs_prev(

@@ -27,8 +27,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -347,395 +345,3 @@ def export_weights(
     decision boundary up to the 1/weight_scale quantization grid."""
     return [round((x + bias) * weight_scale) for x in weights]
 
-
-# ---------------------------------------------------------------------------
-# Fast family: the Arrow-vectorized serving/training pair. Same model shape,
-# different feature hash (pandas' C siphash instead of md5), so weights are
-# NOT interchangeable across families — train and serve with the same pair.
-# The md5/SQL family above stays the oracle-parity path; this one is the
-# throughput path (measured ~2x end-to-end at sf0.1 — 0.99s vs 0.53s on the
-# same 5000 docs, more at marginal per-doc cost once the fixed overhead
-# amortizes: the interpreted per-feature HOF tax vs whole-batch numpy gathers —
-# the text_minhash_udf precedent, where the hash family is engine-internal).
-# ---------------------------------------------------------------------------
-
-_FAST_BIGRAM_MIX = 0x9E3779B97F4A7C15  # odd golden-ratio multiplier
-
-
-def _fast_feature_arrays(texts, buckets: int):
-    """Vectorized batch featurizer for the fast family.
-
-    Returns (doc_of, bucket, n_feats): two aligned int64 arrays mapping each
-    feature occurrence (unigrams, then adjacent bigrams with doc-boundary
-    crossings masked) to its document index and hash bucket, plus per-doc
-    feature counts. Tokens hash once via pd.util.hash_array (C siphash,
-    process-independent across executors); a bigram's hash is a multiply-xor
-    combine of its two token hashes on the flat token array — no Python
-    per-feature loop anywhere.
-    """
-    import re
-
-    delims = re.compile("[ \t\n\r\f]+")
-    n_docs = len(texts)
-    toks = [[t for t in delims.split(x) if t] if x else [] for x in texts]
-    counts = np.fromiter((len(ts) for ts in toks), dtype=np.int64, count=n_docs)
-    n_feats = np.where(counts >= 2, 2 * counts - 1, counts)
-    flat = [t for ts in toks for t in ts]
-    if not flat:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, n_feats
-    h = pd.util.hash_array(np.asarray(flat, dtype=object))
-    doc_of = np.repeat(np.arange(n_docs), counts)
-    m = h.size - 1
-    bg = (h[:m] * np.uint64(_FAST_BIGRAM_MIX)) ^ h[1:]
-    bg_keep = doc_of[:m] == doc_of[1:] if m > 0 else np.zeros(0, dtype=bool)
-    b_uni = (h % np.uint64(buckets)).astype(np.int64)
-    b_bg = (bg[bg_keep] % np.uint64(buckets)).astype(np.int64)
-    return (
-        np.concatenate([doc_of, doc_of[:m][bg_keep]]),
-        np.concatenate([b_uni, b_bg]),
-        n_feats,
-    )
-
-
-def hashed_linear_score_fast(
-    df: DataFrame,
-    weights,
-    text_col: str = "text",
-    bias: float = 0.0,
-    weight_scale: float = 1.0,
-) -> DataFrame:
-    """Fast-family serving: append (n_features, margin) via one Arrow pass.
-
-    ``weights``: weight table (length = bucket count) TRAINED UNDER THE
-    SAME FAMILY (``train_hashed_logreg_fast``) — bucket assignments do not
-    transfer from the md5 family. Zero-token rows are dropped, matching
-    ``hashed_linear_score``.
-
-    ``bias``: the trainer's second return value; the served margin is
-    mean(w[b]) / weight_scale + bias, so the decision boundary matches the
-    trained sigmoid argument exactly (ADVICE r12: serving raw trained
-    weights without the bias silently shifted the margin).
-
-    ``weight_scale``: divide an integer ``export_weights`` table back to
-    float magnitude (pass the same scale used at export, and bias=0.0 —
-    export already folds the bias into every entry). Default 1.0 serves
-    float trainer output unchanged.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    w = np.asarray(weights, dtype=np.float64)
-    if w.size == 0:
-        raise ValueError("hashed_linear_score_fast: weights must be non-empty")
-    if weight_scale <= 0:
-        raise ValueError(
-            f"hashed_linear_score_fast: weight_scale must be > 0, got "
-            f"{weight_scale} (dividing by it would corrupt every margin)"
-        )
-    if weight_scale != 1.0:
-        w = w / float(weight_scale)
-    buckets = int(w.size)
-    b0 = float(bias)
-
-    @pandas_udf("struct<n_features: bigint, margin: double>")
-    def score(texts: pd.Series) -> pd.DataFrame:
-        doc_of, bk, n_feats = _fast_feature_arrays(texts, buckets)
-        wsum = np.zeros(len(texts))
-        np.add.at(wsum, doc_of, w[bk])
-        margin = wsum / np.where(n_feats > 0, n_feats, 1) + b0
-        return pd.DataFrame({"n_features": n_feats, "margin": margin})
-
-    return (
-        df.select("*", score(F.col(text_col)).alias("_s"))
-        .filter(F.col("_s.n_features") >= 1)
-        .select(
-            *df.columns,
-            F.col("_s.n_features").alias("n_features"),
-            F.col("_s.margin").alias("margin"),
-        )
-    )
-
-
-def train_hashed_logreg_fast(
-    df: DataFrame,
-    label_col: str,
-    text_col: str = "text",
-    buckets: int = 256,
-    iters: int = 20,
-    lr: float = 2.0,
-    l2: float = 0.0,
-) -> tuple[list[float], float, list[float]]:
-    """Fast-family trainer: same algorithm and returns as
-    ``train_hashed_logreg`` (full-batch logistic regression, mean gradient,
-    one action per iteration), with the per-iteration pass as mapInPandas
-    partial sums (the pq_train pattern) instead of an interpreted fold: each
-    Arrow batch featurizes once, scores against the closure's weight
-    snapshot, and scatter-adds its gradient into a buckets-sized vector —
-    the shuffle per iteration is (touched buckets + 1 sentinel) rows per
-    batch, never corpus-sized. Serve the result with
-    ``hashed_linear_score_fast(df, weights, bias=bias)`` (same hash
-    family); or export via ``export_weights`` and serve the integer table
-    with ``hashed_linear_score_fast(df, table, bias=0.0,
-    weight_scale=1000)`` — export folds the bias into every entry, so the
-    scale is the only correction left.
-    """
-    w = np.zeros(buckets, dtype=np.float64)
-    bias = 0.0
-    history: list[float] = []
-    src = df.select(
-        F.col(label_col).cast("double").alias("y"),
-        F.col(text_col).alias("t"),
-    )
-    out_schema = "b int, g double, ls double, n double"
-
-    for _ in range(iters):
-        w_snap = w.copy()
-        bias_snap = bias
-
-        def partials(batches, _w=w_snap, _b=bias_snap):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                doc_of, bk, n_feats = _fast_feature_arrays(pdf["t"], buckets)
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                if not np.all((y == 0.0) | (y == 1.0)):
-                    raise ValueError(
-                        "train_hashed_logreg_fast: labels must be 0/1"
-                    )
-                keep = n_feats >= 1
-                wsum = np.zeros(len(pdf))
-                np.add.at(wsum, doc_of, _w[bk])
-                nf = np.where(keep, n_feats, 1).astype(np.float64)
-                p = 1.0 / (1.0 + np.exp(-(wsum / nf + _b)))
-                resid = np.where(keep, p - y, 0.0)
-                loss = np.where(
-                    keep,
-                    -np.log(np.maximum(1.0 - np.abs(resid), 1e-12)),
-                    0.0,
-                )
-                gvec = np.zeros(buckets)
-                np.add.at(gvec, bk, (resid / nf)[doc_of])
-                nz = np.flatnonzero(gvec)
-                yield pd.DataFrame(
-                    {
-                        "b": np.concatenate([nz, [-1]]).astype(np.int32),
-                        "g": np.concatenate([gvec[nz], [0.0]]),
-                        "ls": np.concatenate(
-                            [np.zeros(nz.size), [float(loss.sum())]]
-                        ),
-                        "n": np.concatenate(
-                            [np.zeros(nz.size), [float(keep.sum())]]
-                        ),
-                    }
-                )
-
-        parts = (
-            src.mapInPandas(partials, out_schema)
-            .groupBy("b")
-            .agg(
-                F.sum("g").alias("g"),
-                F.sum("ls").alias("ls"),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )
-        n_docs = sum(r["n"] for r in parts)
-        if n_docs == 0:
-            break
-        grad_b = 0.0
-        loss = 0.0
-        grad = np.zeros(buckets)
-        for r in parts:
-            if r["b"] >= 0:
-                grad[r["b"]] = r["g"] / n_docs
-                grad_b += r["g"] / n_docs
-            loss += r["ls"] / n_docs
-        w = w - lr * (grad + l2 * w)
-        bias -= lr * grad_b
-        history.append(loss)
-    return list(w), bias, history
-
-
-def train_hashed_softmax_fast(
-    df: DataFrame,
-    label_col: str,
-    text_col: str = "text",
-    buckets: int = 256,
-    iters: int = 20,
-    lr: float = 2.0,
-    l2: float = 0.0,
-) -> tuple[list[str], np.ndarray, np.ndarray, list[float]]:
-    """K-class softmax trainer, fast family — the fit loop behind a
-    language/domain-ID stage. Same shape discipline as
-    ``train_hashed_logreg_fast``: per iteration ONE Spark action, each
-    Arrow batch featurizes once and scatter-adds a (K x buckets) gradient
-    block; the shuffle is (touched (class, bucket) pairs + 1 sentinel)
-    rows per batch, never corpus-sized, so corpus scale only changes the
-    scan, not the aggregation.
-
-    Labels are the distinct string values of ``label_col`` (collected
-    once, sorted — bounded by K). Returns (classes, W[K x buckets],
-    biases[K], loss history); serve with
-    ``hashed_multiclass_score_fast(df, classes, W, biases)`` (same hash
-    family — weights do NOT transfer to the md5/SQL family), or export
-    each row via ``export_weights(W[k], biases[k])`` for the md5-parity
-    :func:`hashed_multiclass_score` ONLY if they were trained in that
-    family. Gradient: resid[d, k] = softmax(margin)[k] - onehot(y)[k];
-    mean-pooled features sum to 1 per doc, so each class's bias gradient
-    is the row-sum of its weight-gradient partials, same trick as the
-    binary loop."""
-    classes = sorted(
-        r[0]
-        for r in df.select(F.col(label_col).cast("string")).distinct().collect()
-        if r[0] is not None
-    )
-    if len(classes) < 2:
-        raise ValueError(
-            f"train_hashed_softmax_fast: need >= 2 label values, got {classes}"
-        )
-    k = len(classes)
-    cls_idx = {c: i for i, c in enumerate(classes)}
-    w = np.zeros((k, buckets), dtype=np.float64)
-    biases = np.zeros(k, dtype=np.float64)
-    history: list[float] = []
-    src = df.select(
-        F.col(label_col).cast("string").alias("y"),
-        F.col(text_col).alias("t"),
-    )
-    out_schema = "k int, b int, g double, ls double, n double"
-
-    for _ in range(iters):
-        w_snap = w.copy()
-        b_snap = biases.copy()
-
-        def partials(batches, _w=w_snap, _b=b_snap):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                doc_of, bk, n_feats = _fast_feature_arrays(pdf["t"], buckets)
-                y = pdf["y"].map(cls_idx).to_numpy()
-                if pd.isna(y).any():
-                    bad = sorted(set(pdf["y"]) - set(cls_idx))
-                    raise ValueError(
-                        f"train_hashed_softmax_fast: unknown labels {bad}"
-                    )
-                y = y.astype(np.int64)
-                keep = n_feats >= 1
-                nf = np.where(keep, n_feats, 1).astype(np.float64)
-                wsum = np.zeros((len(pdf), k))
-                np.add.at(wsum, doc_of, _w[:, bk].T)
-                logits = wsum / nf[:, None] + _b[None, :]
-                logits -= logits.max(axis=1, keepdims=True)  # stable softmax
-                p = np.exp(logits)
-                p /= p.sum(axis=1, keepdims=True)
-                resid = p.copy()
-                resid[np.arange(len(pdf)), y] -= 1.0
-                resid[~keep, :] = 0.0
-                loss = np.where(
-                    keep,
-                    -np.log(np.maximum(p[np.arange(len(pdf)), y], 1e-12)),
-                    0.0,
-                )
-                gblock = np.zeros((k, buckets))
-                contrib = (resid / nf[:, None])[doc_of, :]  # (n_occ, K)
-                for ki in range(k):
-                    np.add.at(gblock[ki], bk, contrib[:, ki])
-                kk, bb = np.nonzero(gblock)
-                yield pd.DataFrame(
-                    {
-                        "k": np.concatenate([kk, [-1]]).astype(np.int32),
-                        "b": np.concatenate([bb, [-1]]).astype(np.int32),
-                        "g": np.concatenate([gblock[kk, bb], [0.0]]),
-                        "ls": np.concatenate(
-                            [np.zeros(kk.size), [float(loss.sum())]]
-                        ),
-                        "n": np.concatenate(
-                            [np.zeros(kk.size), [float(keep.sum())]]
-                        ),
-                    }
-                )
-
-        parts = (
-            src.mapInPandas(partials, out_schema)
-            .groupBy("k", "b")
-            .agg(
-                F.sum("g").alias("g"),
-                F.sum("ls").alias("ls"),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )
-        n_docs = sum(r["n"] for r in parts)
-        if n_docs == 0:
-            break
-        grad = np.zeros((k, buckets))
-        loss = 0.0
-        for r in parts:
-            if r["k"] >= 0:
-                grad[r["k"], r["b"]] = r["g"] / n_docs
-            loss += r["ls"] / n_docs
-        w = w - lr * (grad + l2 * w)
-        biases = biases - lr * grad.sum(axis=1)  # features sum to 1 per doc
-        history.append(loss)
-    return classes, w, biases, history
-
-
-def hashed_multiclass_score_fast(
-    df: DataFrame,
-    classes: list[str],
-    weights,
-    biases=None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Fast-family K-class serving: append (n_features, pred, margin) via
-    one Arrow pass — the serving half of ``train_hashed_softmax_fast``
-    (same hash family; md5-family tables do not transfer). ``margin`` is
-    the winning class's pre-softmax logit (mean feature weight + bias);
-    ties break to the first class, matching the md5-family scorer."""
-    from pyspark.sql.functions import pandas_udf
-
-    w = np.asarray(weights, dtype=np.float64)
-    if w.ndim != 2 or w.shape[0] != len(classes) or len(classes) < 2:
-        raise ValueError(
-            f"hashed_multiclass_score_fast: weights must be (K x buckets) "
-            f"with K = len(classes) >= 2, got {w.shape} for {len(classes)}"
-        )
-    b = (
-        np.zeros(len(classes))
-        if biases is None
-        else np.asarray(biases, dtype=np.float64)
-    )
-    if b.shape != (len(classes),):
-        raise ValueError(
-            f"hashed_multiclass_score_fast: biases must have one entry per "
-            f"class, got {b.shape}"
-        )
-    buckets = int(w.shape[1])
-    cls = list(classes)
-
-    @pandas_udf("struct<n_features: bigint, pred: string, margin: double>")
-    def score(texts: pd.Series) -> pd.DataFrame:
-        doc_of, bk, n_feats = _fast_feature_arrays(texts, buckets)
-        wsum = np.zeros((len(texts), len(cls)))
-        np.add.at(wsum, doc_of, w[:, bk].T)
-        nf = np.where(n_feats > 0, n_feats, 1)
-        logits = wsum / nf[:, None] + b[None, :]
-        best = logits.argmax(axis=1)  # first maximum on ties
-        return pd.DataFrame(
-            {
-                "n_features": n_feats,
-                "pred": [cls[i] for i in best],
-                "margin": logits[np.arange(len(texts)), best],
-            }
-        )
-
-    return (
-        df.select("*", score(F.col(text_col)).alias("_s"))
-        .filter(F.col("_s.n_features") >= 1)
-        .select(
-            *df.columns,
-            F.col("_s.n_features").alias("n_features"),
-            F.col("_s.pred").alias("pred"),
-            F.col("_s.margin").alias("margin"),
-        )
-    )

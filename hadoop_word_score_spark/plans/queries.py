@@ -2235,23 +2235,69 @@ _IVF_N_CELLS = 32
 _IVF_N_PROBE = 3
 
 
-def _ivf_index_path(sf_dir: str) -> str:
-    """Cache location for the persisted IVF index of one corpus.
+def _gc_scratch_siblings(
+    parent: str, keep: str, keep_newest: int = 16, max_age_hours: int = 24
+) -> None:
+    """Prune stale content-keyed sibling dirs under a .scratch cache parent
+    (r14 review: pytest stages a fresh temp corpus per run, so its key is
+    new every time and artifacts accumulated unboundedly). Only siblings
+    BOTH older than ``max_age_hours`` AND beyond the ``keep_newest`` most
+    recent are removed — the age floor protects any concurrently running
+    session (sessions live minutes-to-hours, not days). ``keep`` (the
+    current key's dir name) is never removed."""
+    import shutil
+    import time
 
-    Keyed by the embeddings file's identity (realpath, mtime, size) plus the
-    build parameters, so a regenerated corpus or a retuned index can never
-    serve stale cells. Lives under the repo's gitignored .scratch/.
-    """
-    import hashlib as _hashlib
+    if not os.path.isdir(parent):
+        return
+    entries = []
+    for e in os.scandir(parent):
+        if e.is_dir() and e.name != keep:
+            try:
+                entries.append((e.stat().st_mtime, e.path))
+            except OSError:
+                pass
+    entries.sort(reverse=True)
+    cutoff = time.time() - max_age_hours * 3600
+    for mtime, p in entries[keep_newest:]:
+        if mtime < cutoff:
+            shutil.rmtree(p, ignore_errors=True)
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
+
+def _scratch_path(
+    kind: str, src: str, tag: str, spark: SparkSession | None = None
+) -> str:
+    """Content-keyed cache dir ``.scratch/<kind>/<key>`` under the repo root.
+
+    The key is md5 of ``realpath|mtime_ns|size|tag`` of the input file
+    ``src`` (first 16 hex digits), so a regenerated input or a change in
+    the ``tag``'s build parameters never serves a stale artifact. Given
+    ``spark``, the session's applicationId is appended to the key: a site
+    that rewrites or mutates its dir gets one dir per session, so two
+    sessions on one checkout (driver, bench, pytest) never delete or
+    vacuum each other's files mid-run. Stale siblings are pruned."""
+    if spark is not None:
+        tag = f"{tag}|{spark.sparkContext.applicationId}"
     st = os.stat(src)
-    key = _hashlib.md5(
-        f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|planted-v3-label|{_IVF_N_CELLS}".encode()  # v3: +label meta col
+    key = hashlib.md5(
+        f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}|{tag}".encode()
     ).hexdigest()[:16]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, ".scratch", "ivf", key)
+    repo_root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    parent = os.path.join(repo_root, ".scratch", kind)
+    _gc_scratch_siblings(parent, keep=key)
+    return os.path.join(parent, key)
+
+
+def _ivf_index_path(sf_dir: str) -> str:
+    """Cache location for the persisted IVF index of one corpus, keyed by
+    the embeddings file and the build parameters (v3: +label meta col)."""
+    return _scratch_path(
+        "ivf",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        f"planted-v3-label|{_IVF_N_CELLS}",
+    )
 
 
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
@@ -2421,16 +2467,11 @@ def _ivfpq_index_path(sf_dir: str) -> str:
     """Cache location for the persisted IVF-PQ index (same identity-keyed
     scheme as _ivf_index_path — a regenerated corpus or retuned build can
     never serve stale codes)."""
-    import hashlib as _hashlib
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = _hashlib.md5(
-        f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|ivfpq-v2-label|{_IVF_N_CELLS}|{_PQ_M}|{_PQ_K}".encode()
-    ).hexdigest()[:16]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, ".scratch", "ivfpq", key)
+    return _scratch_path(
+        "ivfpq",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        f"ivfpq-v2-label|{_IVF_N_CELLS}|{_PQ_M}|{_PQ_K}",
+    )
 
 
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
@@ -7328,23 +7369,11 @@ def q_bpe_tokenizer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Content-keyed path (ADVICE r13): the fixed ".scratch/bpe_tokenizer"
     # path let two concurrent sessions (driver + pytest/bench) interleave
     # writer and reader and trip load_bpe_tokenizer's partial-artifact
-    # guard spuriously. Same keying discipline as _ivf_index_path: corpus
-    # file identity + the training params that shape the artifact.
-    import hashlib as _hashlib
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = _hashlib.md5(
-        f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}|bpe-v1|3".encode()
-    ).hexdigest()[:16]
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # guard spuriously. Keyed by the corpus file + the training params
+    # that shape the artifact.
+    path = _scratch_path(
+        "bpe_tokenizer", os.path.join(sf_dir, "documents.parquet"), "bpe-v1|3"
     )
-    parent = os.path.join(repo_root, ".scratch", "bpe_tokenizer")
-    # pytest stages a fresh temp corpus per run -> a new key per run; prune
-    # stale siblings so artifacts don't accumulate unboundedly (r14 review)
-    _gc_scratch_siblings(parent, keep=key)
-    path = os.path.join(parent, key)
     persist_bpe_tokenizer(path, rules, subword_id_vocab(vocab, rules))
     loaded_rules, loaded_idv, loaded_oov = load_bpe_tokenizer(spark, path)
     assert loaded_oov is None  # this artifact ships without a byte reserve
@@ -7404,10 +7433,14 @@ def q_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(F.expr(tokens_expr("text"))).alias("term")
     )
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # a per-session dir, so no other session on the checkout can rmtree
+    # this one's sink mid-run
+    target = _scratch_path(
+        "hh_streamed",
+        os.path.join(sf_dir, "documents.parquet"),
+        f"hh-v1|{_HH_STREAM_CAP}",
+        spark,
     )
-    target = os.path.join(repo_root, ".scratch", "hh_streamed")
     shutil.rmtree(target, ignore_errors=True)  # idempotent re-runs
     sink = heavy_hitters_monitor_sink(target, capacity=_HH_STREAM_CAP)
     # two arrival batches, split by a doc property (not row order) so the
@@ -7765,62 +7798,38 @@ ORDER BY user_id
     "events_ewma_value",
     oracle=_EWMA_SQL,
     tags=("events", "stateful"),
-    bench=True,  # guards the grouped-Python path's exchange-width pin (r6)
+    bench=True,  # grouped-Python exchange pin: guarded on dedup_semantic
 )
 def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sequential per-key fold (EWMA, alpha=0.2) — the recurrence y_t =
     # a·x_t + (1-a)·y_{{t-1}} depends on the previous OUTPUT, which no
     # window frame expresses; it is the batch shape of per-key stateful
     # processing (streaming/stateful.py holds the same fold as streaming
-    # state). applyInPandas folds each user's ordered values in float64 in
-    # ONE pass; the oracle's list_reduce performs the identical
-    # left-to-right fp operation order, so the match is bit-exact before
-    # the defensive ROUND. Groups are per-user (bounded); a giant key would
-    # salt first — operators/skew.py.
-    import pandas as pd
-
+    # state). Each user's (ts, event_id)-ordered values are collected in
+    # one user-keyed aggregation and folded left to right by the
+    # `aggregate` higher-order function, seeded with the first value — the
+    # oracle's list_reduce performs the identical fp operation order, so
+    # the match is bit-exact before the defensive ROUND, with no Python
+    # node. Groups are per-user (bounded); a giant key would salt first —
+    # operators/skew.py.
     e = _t(spark, sf_dir, "events")
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        # Vectorized recurrence: ewm(adjust=False) computes y_t =
-        # (1-a)·y_{t-1} + a·x_t in float64 with weights (1-a) + a == 1.0
-        # exactly, and IEEE addition is commutative — bit-identical to the
-        # explicit per-row fold (and to the oracle's list_reduce) with the
-        # C loop instead of a Python one. No NaN divergence possible:
-        # ignore_na only matters when values contain NaN, and a null value
-        # would already have poisoned the old fold's accumulator.
-        acc = (
-            pdf["value"]
-            .astype("float64")
-            .ewm(alpha=_EWMA_ALPHA, adjust=False)
-            .mean()
-            .iloc[-1]
-        )
-        return pd.DataFrame(
-            {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "n_events": [len(pdf)],
-                "ewma": [acc],
-            }
-        )
-
-    from ..session import default_parallelism
-
+    v = F.array_sort(F.collect_list(F.struct("ts", "event_id", "value")))
     return (
-        e.select("user_id", "ts", "event_id", "value")
-        # Pin the group-key exchange width: AQE's bytes-based coalescing
-        # sees a "small" shuffle and folds grouped-Python stages onto 1-2
-        # cores, but this stage's cost is per-GROUP Arrow/pandas overhead,
-        # not bytes (measured 3.2s -> 0.8s at sf0.1 with the pin). An
-        # explicit numPartitions repartition on the grouping key becomes
-        # the groupBy's exchange and is exempt from AQE coalescing.
-        .repartition(default_parallelism(), "user_id")
-        .groupBy("user_id")
-        .applyInPandas(fold, schema="user_id long, n_events long, ewma double")
-        # round OUTSIDE the fold: F.round is half-away-from-zero like
-        # DuckDB's ROUND; Python's round() is banker's and would diverge on
-        # exact .5 boundaries
+        e.groupBy("user_id")
+        .agg(v.alias("v"))
+        .select(
+            "user_id",
+            F.size("v").cast("long").alias("n_events"),
+            F.aggregate(
+                # the length must be size(v): slice(v, 2, 2147483647)
+                # comes back empty on Spark 4.1, folding to the first value
+                F.slice("v", 2, F.size("v")),
+                F.col("v")[0]["value"],
+                lambda acc, x: F.lit(_EWMA_ALPHA) * x["value"]
+                + F.lit(1 - _EWMA_ALPHA) * acc,
+            ).alias("ewma"),
+        )
+        # F.round is half-away-from-zero like DuckDB's ROUND
         .select("user_id", "n_events", F.round("ewma", 6).alias("ewma"))
         .orderBy("user_id")
     )
@@ -10976,10 +10985,9 @@ def _lc_weights(cls: str, buckets: int = _QC_BUCKETS) -> list[int]:
     # agreement auditing). Ties break to the first class in sorted order,
     # mirrored by the oracle's >=-chained CASE; integer sums keep the
     # margin one bit-exact double division. The weight tables are
-    # deterministic md5-derived stand-ins (no learned model ships in the
-    # container). operators/classifier.py::train_hashed_softmax_fast fits
-    # K-class tables of the same (K x buckets) shape, but in the fast
-    # family's hash, so its weights do not transfer to this md5/SQL family.
+    # deterministic md5-derived stand-ins: no learned model ships, and the
+    # package has no K-class trainer (operators/classifier.py fits only the
+    # binary table, through train_hashed_logreg).
     oracle="""
     WITH feat AS (
         SELECT doc_id, lang, CAST(len(fs) AS BIGINT) AS n_features,
@@ -11480,35 +11488,6 @@ def _bpe_heldout_tokenizer(spark: SparkSession, sf_dir: str):
     return held, rules, idv
 
 
-def _gc_scratch_siblings(
-    parent: str, keep: str, keep_newest: int = 16, max_age_hours: int = 24
-) -> None:
-    """Prune stale content-keyed sibling dirs under a .scratch cache parent
-    (r14 review: pytest stages a fresh temp corpus per run, so its key is
-    new every time and artifacts accumulated unboundedly). Only siblings
-    BOTH older than ``max_age_hours`` AND beyond the ``keep_newest`` most
-    recent are removed — the age floor protects any concurrently running
-    session (sessions live minutes-to-hours, not days). ``keep`` (the
-    current key's dir name) is never removed."""
-    import shutil
-    import time
-
-    if not os.path.isdir(parent):
-        return
-    entries = []
-    for e in os.scandir(parent):
-        if e.is_dir() and e.name != keep:
-            try:
-                entries.append((e.stat().st_mtime, e.path))
-            except OSError:
-                pass
-    entries.sort(reverse=True)
-    cutoff = time.time() - max_age_hours * 3600
-    for mtime, p in entries[keep_newest:]:
-        if mtime < cutoff:
-            shutil.rmtree(p, ignore_errors=True)
-
-
 def _ivfpq_del_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Cache location for the DELETE-path IVF-PQ index — its OWN variant
     (key + directory) because the delete query tombstones and vacuums it:
@@ -11519,21 +11498,12 @@ def _ivfpq_del_index_path(spark: SparkSession, sf_dir: str) -> str:
     against one shared dir would race a vacuum's cell-dir renames against
     the other session's probe scan — per-session keys remove the race for
     the cost of one per-session build."""
-    import hashlib as _hashlib
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = _hashlib.md5(
-        f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|ivfpq-del-v2|{_IVF_N_CELLS}|{_PQ_M}|{_PQ_K}"
-        f"|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:16]
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return _scratch_path(
+        "ivfpq_del",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        f"ivfpq-del-v2|{_IVF_N_CELLS}|{_PQ_M}|{_PQ_K}",
+        spark,
     )
-    parent = os.path.join(repo_root, ".scratch", "ivfpq_del")
-    _gc_scratch_siblings(parent, keep=key)
-    return os.path.join(parent, key)
 
 
 @register(

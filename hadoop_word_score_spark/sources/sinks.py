@@ -3,7 +3,8 @@
 The reference's only sink is a single tab-delimited text file produced by
 forcing one reducer (``ComputeWordScore.java:192-193, 208-216``). Here that
 shape is one *option* — the default at scale is partitioned parquet; the
-single-file TSV exists for byte-parity with the reference's output contract.
+single-file TSV (``operators/wordscore.py::write_word_scores``) exists for
+byte-parity with the reference's output contract.
 
 Bucketed writes are the co-located-join story: two fact tables bucketed by
 the same key join with ZERO exchanges — at 100 TB that's the difference
@@ -14,16 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def write_tsv_single(df: DataFrame, path: str) -> None:
-    """S5 parity: one tab-delimited text file, columns in given order.
-
-    ``coalesce(1)`` serializes only the final write stage (upstream stages
-    keep full parallelism — same trade the reference made with its single
-    reducer, CWS:208-213). Use only when a one-file contract demands it.
-    """
-    df.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(path)
 
 
 def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:

@@ -81,6 +81,20 @@ def test_gate_lists_wall_time_only_change_as_slower_with_its_layer():
     assert slower == {"q": {"ratio": 3.0, "layer": "driver.outside_sql_s"}}
 
 
+def test_worker_init_is_not_a_time_layer():
+    # Spark's per-task "time to initialize Python workers" can exceed the
+    # task itself, so it never names the layer that grew.
+    rec = {"job_s": 2.0, "trace.collect_s": 0.1, "tasks.run_s": 1.0,
+           "arrow.python_s": 0.4, "arrow.worker_init_s": 80.0,
+           "sort.s": 0.2, "driver.jobs": 5.0}
+    assert bench._time_layers(rec) == ["tasks.run_s", "arrow.python_s", "sort.s"]
+    prev = {"queries": {"q": 1.0}, "layers": {"q": _layers(**rec)}}
+    now = _layers(**{**rec, "job_s": 3.0, "arrow.python_s": 1.0,
+                     "arrow.worker_init_s": 160.0})
+    _, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now}, {})
+    assert slower == {"q": {"ratio": 3.0, "layer": "arrow.python_s"}}
+
+
 def test_gate_flags_changed_counters_only():
     prev = {"queries": {"q": 1.0, "r": 1.0},
             "layers": {"q": _layers(), "r": _layers()}}

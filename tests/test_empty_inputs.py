@@ -372,17 +372,6 @@ def test_round12_operators_empty(spark):
     out = hashed_linear_score(docs, weights=[1, -1])
     assert out.columns == ["doc_id", "text", "n_features", "margin"]
     assert out.count() == 0
-    from hadoop_word_score_spark.operators.classifier import (
-        hashed_linear_score_fast,
-        train_hashed_logreg_fast,
-    )
-
-    out = hashed_linear_score_fast(docs, weights=[0.5, -0.5])
-    assert out.columns == ["doc_id", "text", "n_features", "margin"]
-    assert out.count() == 0
-    empty_lab = spark.createDataFrame([], "doc_id long, text string, label int")
-    w0, b0, h0 = train_hashed_logreg_fast(empty_lab, "label", iters=2, buckets=8)
-    assert w0 == [0.0] * 8 and b0 == 0.0 and h0 == []
     with pytest.raises(ValueError, match="non-empty"):
         hashed_linear_score(docs, weights=[])
     with pytest.raises(ValueError, match="integers"):

@@ -4544,130 +4544,6 @@ def test_train_hashed_logreg_matches_pure_python_reference(spark):
     assert max(abs(a - b) for a, b in zip(w_s, w_r)) < 1e-9
 
 
-def test_fast_family_classifier_fit_serve_loop(spark):
-    # the Arrow throughput pair: fast trainer + fast scorer reproduce the
-    # md5 pair's behavior on separable data (loss halves, serving decisions
-    # match labels), and the fast scorer agrees bit-for-bit with a pure
-    # numpy rescore under the same hash family.
-    import numpy as np
-
-    from hadoop_word_score_spark.operators.classifier import (
-        _fast_feature_arrays,
-        hashed_linear_score_fast,
-        train_hashed_logreg_fast,
-    )
-
-    pos_words = ["spark", "scan", "fast", "query", "table"]
-    neg_words = ["slow", "batch", "row", "merge", "line"]
-    rows = []
-    for i in range(40):
-        rows.append(
-            (i, " ".join(pos_words[(i + j) % 5] for j in range(6)) + " spark", 1)
-        )
-        rows.append(
-            (100 + i, " ".join(neg_words[(i + j) % 5] for j in range(7)), 0)
-        )
-    docs = spark.createDataFrame(rows, "doc_id long, text string, label int")
-
-    w, bias, hist = train_hashed_logreg_fast(
-        docs, "label", iters=12, lr=8.0, buckets=64
-    )
-    assert len(hist) == 12 and hist[-1] < hist[0] * 0.5
-    served = hashed_linear_score_fast(docs, weights=w, bias=bias).collect()
-    got = {r.doc_id: r.margin >= 0.0 for r in served}
-    acc = sum(got[i] == (lab == 1) for i, _, lab in rows) / len(rows)
-    assert acc >= 0.95
-
-    # bit-parity with a local rescore through the same kernel
-    import pandas as pd
-
-    texts = pd.Series([t for _, t, _ in rows])
-    doc_of, bk, nf = _fast_feature_arrays(texts, 64)
-    wa = np.asarray(w)
-    wsum = np.zeros(len(texts))
-    np.add.at(wsum, doc_of, wa[bk])
-    expect = wsum / nf + bias
-    by_id = {r.doc_id: r.margin for r in served}
-    for idx, (did, _, _) in enumerate(rows):
-        assert by_id[did] == expect[idx]
-
-    # an export_weights integer table serves through the same scorer with
-    # weight_scale (bias pre-folded by export, so bias=0.0 here): decisions
-    # must match the float serving path (ADVICE r12)
-    from hadoop_word_score_spark.operators.classifier import export_weights
-
-    table = export_weights(w, bias, weight_scale=1000)
-    served_q = hashed_linear_score_fast(
-        docs, weights=table, bias=0.0, weight_scale=1000
-    ).collect()
-    got_q = {r.doc_id: r.margin >= 0.0 for r in served_q}
-    assert got_q == got
-
-    # bad labels fail fast inside the Arrow worker too
-    import pytest
-
-    bad = spark.createDataFrame(
-        [(0, "some text", 0.25)], "doc_id long, text string, label double"
-    )
-    with pytest.raises(Exception, match="labels must be 0/1"):
-        train_hashed_logreg_fast(bad, "label", iters=1, buckets=8)
-
-
-def test_multiclass_softmax_fit_serve_loop(spark):
-    # r14 verdict #3: K-class language/domain ID. On cleanly separable
-    # 3-class data the softmax trainer must reach 100% train accuracy
-    # through the fast serving path, with monotone-ish loss decay; serving
-    # agrees bit-for-bit with a local numpy rescore of the same model.
-    import numpy as np
-    import pandas as pd
-
-    from hadoop_word_score_spark.operators.classifier import (
-        _fast_feature_arrays,
-        hashed_multiclass_score_fast,
-        train_hashed_softmax_fast,
-    )
-
-    vocab = {
-        "cat": ["meow", "purr", "whiskers", "feline", "tail"],
-        "dog": ["woof", "bark", "fetch", "kennel", "bone"],
-        "fish": ["gills", "fins", "swim", "bubbles", "scales"],
-    }
-    rows = []
-    for i in range(60):
-        c = ["cat", "dog", "fish"][i % 3]
-        ws = vocab[c]
-        rows.append((i, c, " ".join(ws[(i + j) % 5] for j in range(6))))
-    docs = spark.createDataFrame(rows, "doc_id long, label string, text string")
-
-    classes, w, biases, hist = train_hashed_softmax_fast(
-        docs, "label", buckets=64, iters=12, lr=4.0
-    )
-    assert classes == ["cat", "dog", "fish"]  # sorted distinct labels
-    assert len(hist) == 12 and hist[-1] < hist[0] * 0.6
-    served = hashed_multiclass_score_fast(docs, classes, w, biases).collect()
-    assert all(r.pred == r.label for r in served)  # separable: exact fit
-    assert len(served) == 60
-
-    # bit-parity: the served margin is the winning pre-softmax logit
-    texts = pd.Series([t for _, _, t in rows])
-    doc_of, bk, nf = _fast_feature_arrays(texts, 64)
-    wsum = np.zeros((60, 3))
-    np.add.at(wsum, doc_of, np.asarray(w)[:, bk].T)
-    logits = wsum / nf[:, None] + np.asarray(biases)[None, :]
-    by_id = {r.doc_id: r.margin for r in served}
-    for idx in range(60):
-        assert by_id[idx] == logits[idx].max()
-
-    # guards: unknown serving shapes and degenerate label sets fail fast
-    import pytest
-
-    with pytest.raises(ValueError, match="K x buckets"):
-        hashed_multiclass_score_fast(docs, classes, np.zeros((2, 64)))
-    one = spark.createDataFrame([(0, "x", "t")], "doc_id long, label string, text string")
-    with pytest.raises(ValueError, match=">= 2 label values"):
-        train_hashed_softmax_fast(one, "label", iters=1, buckets=8)
-
-
 def test_hashed_multiclass_score_md5_family(spark):
     # The oracle-parity serving path: K constant-folded integer tables,
     # one fold pass, first-max tie rule. Cross-checked against a direct

@@ -153,3 +153,44 @@ def test_registry_outputs_are_flat_scalar_columns(spark):
         "non-flat output columns (driver canonicalizer cannot hash them):\n"
         + "\n".join(offenders)
     )
+
+
+def test_scratch_path_keeps_the_cache_keys_and_splits_sessions(tmp_path):
+    # The content-keyed .scratch dirs must keep the key strings the sites
+    # built by hand, so existing caches stay valid; a per-session site gets
+    # one dir per applicationId.
+    import hashlib
+    import os
+    from types import SimpleNamespace
+
+    for name in ("embeddings.parquet", "documents.parquet"):
+        (tmp_path / name).write_bytes(b"x" * 7)
+    sf = str(tmp_path)
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    def expected(kind, name, tag):
+        src = os.path.join(sf, name)
+        st = os.stat(src)
+        key = hashlib.md5(
+            f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}|{tag}".encode()
+        ).hexdigest()[:16]
+        return os.path.join(".scratch", kind, key)
+
+    docs = os.path.join(sf, "documents.parquet")
+    assert Q._ivf_index_path(sf).endswith(
+        expected("ivf", "embeddings.parquet", "planted-v3-label|32")
+    )
+    assert Q._ivfpq_index_path(sf).endswith(
+        expected("ivfpq", "embeddings.parquet", "ivfpq-v2-label|32|16|32")
+    )
+    assert Q._scratch_path("bpe_tokenizer", docs, "bpe-v1|3").endswith(
+        expected("bpe_tokenizer", "documents.parquet", "bpe-v1|3")
+    )
+    assert Q._ivfpq_del_index_path(session("app-1"), sf).endswith(
+        expected("ivfpq_del", "embeddings.parquet", "ivfpq-del-v2|32|16|32|app-1")
+    )
+    a = Q._scratch_path("hh_streamed", docs, "hh-v1|64", session("app-1"))
+    b = Q._scratch_path("hh_streamed", docs, "hh-v1|64", session("app-2"))
+    assert a != b and os.path.dirname(a) == os.path.dirname(b)

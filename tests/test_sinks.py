@@ -14,11 +14,12 @@ from tests.conftest import SF_SMOKE
 
 
 def test_tsv_single_file_score_word(spark, scratch_dir):
+    from hadoop_word_score_spark.operators.wordscore import write_word_scores
     from hadoop_word_score_spark.plans.queries import REGISTRY
 
     out = os.path.join(scratch_dir, "wordscore_tsv")
     df = REGISTRY["wordscore"].fn(spark, SF_SMOKE)
-    sinks.write_tsv_single(df.select("score", "word"), out)
+    write_word_scores(df.select("score", "word"), out)
     parts = glob.glob(os.path.join(out, "part-*"))
     assert len(parts) == 1  # the reference's one-reducer/one-file contract
     first = open(parts[0]).readline().rstrip("\n").split("\t")

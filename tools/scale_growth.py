@@ -64,7 +64,7 @@ MODELS = {
     "q6_forecast_revenue": "linear (scan-filter-agg; pushed filters)",
     "corpus_drift_kl": "linear in tokens (one (source,term) shuffle; rest on partials)",
     "sessionize_events": "linear in events (one user-keyed sort-shuffle feeds windows + agg)",
-    "events_ewma_value": "linear in events (per-key Arrow fold; output stays one row per user)",
+    "events_ewma_value": "linear in events (one user-keyed collect + native fold; output stays one row per user)",
     "embedding_covariance": "linear scan, fixed-size state (partials ≤ partitions x 33 KB)",
     "similarity_ivf_build": "linear x k-means iterations (partial-sum builds; k x d centroid state)",
     "similarity_topk_ivf": "linear build + probe of nprobe cells",
