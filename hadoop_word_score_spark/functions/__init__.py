@@ -1,7 +1,5 @@
 from .text import (
     DELIM_CLASS,
-    whitespace_tokenize,
-    score_modifier,
     token_count_ws,
     token_count_bpeish,
     rolling_fingerprint,
@@ -10,8 +8,6 @@ from .vectors import dot, l2_norm, cosine_similarity
 
 __all__ = [
     "DELIM_CLASS",
-    "whitespace_tokenize",
-    "score_modifier",
     "token_count_ws",
     "token_count_bpeish",
     "rolling_fingerprint",

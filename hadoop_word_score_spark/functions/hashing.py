@@ -99,26 +99,6 @@ def winnow_fingerprints_expr(text_col: str, k: int = 5, w: int = 8) -> str:
     return let1(let1(tokens_expr(text_col), "w", grams), "hs", sel)
 
 
-def minhash_signature(shingle_col: str, num_hashes: int = 32) -> Column:
-    """MinHash signature: array of ``num_hashes`` 64-bit minima.
-
-    Hash family h_s(x) = xxhash64(s, x) — one seed per signature slot, all
-    computed in a single pass over the shingle array (no per-hash shuffle).
-    Empty shingle set → null signature (caller filters).
-    """
-    body = (
-        f"CASE WHEN size(v) > 0 THEN "
-        f"transform(sequence(0, {num_hashes - 1}), "
-        f"s -> array_min(transform(v, sh -> xxhash64(s, sh)))) "
-        f"ELSE NULL END"
-    )
-    # let-bind: if CollapseProject inlines the shingle expression here, the
-    # naive form would recompute it once per signature slot (num_hashes ×).
-    # (A two-level int-rehash family measured *slower* — interpreted per-call
-    # overhead dominates, not string length.)
-    return F.expr(let1(shingle_col, "v", body))
-
-
 def _shingle_cmix(n: int) -> np.ndarray:
     """Per-offset odd multipliers for the rolling n-gram shingle combine.
 
@@ -141,8 +121,8 @@ def text_minhash_udf(num_hashes: int = 32, n: int = 3):
     one Arrow batch avoids both the interpreted-HOF tax (per-call
     expression-tree overhead, ~1600 calls/doc) and optimizer rules inlining
     a Python UDF's HOF argument where it can't evaluate. Signature values
-    are engine-internal (bucket keys only) — the family doesn't need to
-    match the SQL ``minhash_signature``, only to be uniform (recall tests).
+    are engine-internal (bucket keys only) — the family only needs to be
+    uniform (recall tests).
     Empty shingle sets (docs with < n tokens) → null.
     """
     import re

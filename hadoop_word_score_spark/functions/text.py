@@ -27,30 +27,6 @@ DELIM_CLASS_SQL = "[ \\\\t\\\\n\\\\r\\\\f]+"
 SCORE_MODIFIERS: dict[int, int] = {5: 2, 4: 1, 3: 0, 2: -1, 1: -2}
 
 
-def whitespace_tokenize(text: Column | str) -> Column:
-    """Array of tokens with StringTokenizer-parity semantics (SURVEY §2.2 P3).
-
-    Returns the raw split array — may contain one leading '' when the string
-    starts with a delimiter; consumers explode then filter ``word != ''``.
-    Case and punctuation are preserved (the reference does no normalization).
-    """
-    return F.split(F.col(text) if isinstance(text, str) else text, DELIM_CLASS)
-
-
-def score_modifier(stars: Column | str) -> Column:
-    """stars (double, JSON-style 5.0) → int modifier via literal map lookup.
-
-    The int-narrowing cast mirrors ``((Number) stars).intValue()``
-    (ComputeWordScore.java:113). The literal map is constant-folded by
-    Catalyst — the moral equivalent of the reference's static HashMap.
-    """
-    c = F.col(stars) if isinstance(stars, str) else stars
-    pairs: list[Column] = []
-    for k, v in SCORE_MODIFIERS.items():
-        pairs += [F.lit(k), F.lit(v)]
-    return F.element_at(F.create_map(*pairs), c.cast("int"))
-
-
 def token_count_ws(text: Column | str) -> Column:
     """Whitespace token count (empty string → 0), long."""
     c = F.col(text) if isinstance(text, str) else text

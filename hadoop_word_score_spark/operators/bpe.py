@@ -211,7 +211,7 @@ def encode_corpus(
 ) -> DataFrame:
     """Encode every DOCUMENT under learned subword merge rules; returns
     ``(id_col, n_words, n_bpe_tokens)`` — the per-document sequence lengths
-    a packing/mixture planner actually consumes (``pack_bins_bfd`` and the
+    a packing/mixture planner actually consumes (the packers and the
     water-fill planner take ``n_tokens`` as given; until this operator they
     only had whitespace counts to feed it).
 

@@ -394,10 +394,11 @@ def minhash_band_index(
     band per doc.
 
     This is the *persistable* artifact of near-dup ingestion — write it
-    bucketed by (band_idx, band_hash) (sources/sinks.write_bucketed) and
-    incremental batches probe it with a co-located join, never re-signing
-    the corpus. Deterministic seeds (functions/hashing.py) make an index
-    built today collide correctly with a signature computed next month.
+    once (``streaming/ingest.py`` writes one ``index/batch=<id>`` per batch)
+    and incremental batches probe it with an equi-join on the band key,
+    never re-signing the corpus. Deterministic seeds (functions/hashing.py)
+    make an index built today collide correctly with a signature computed
+    next month.
 
     Every row carries ``mh_meta``, a literal build-parameter tag
     (hash-family version + n/num_hashes/bands). A single dictionary-encoded
@@ -991,147 +992,4 @@ def dedup_lines_keep_first(
                 ),
             ).alias("clean_text"),
         )
-    )
-
-
-def source_overlap_minhash(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    num_hashes: int = 128,
-    n: int = 3,
-    with_containment: bool = False,
-) -> DataFrame:
-    """Pairwise content-overlap matrix across groups (source-level MinHash).
-
-    The governance question behind mixture planning — "how much of source A
-    already lives in source B?" — answered WITHOUT a shingle-level
-    cross-source join: a group's MinHash signature is the element-wise min
-    of its documents' signatures (min over a union = min over the parts),
-    so each group collapses to ``num_hashes`` longs no matter how many
-    documents or shingles it holds. The estimator is the standard one:
-    matching slots / slots ≈ Jaccard of the groups' distinct-shingle sets,
-    with std error ~ 1/sqrt(num_hashes).
-
-    Shuffle budget at 100 TB: one corpus scan computes per-doc signatures
-    scan-side; the only data-sized shuffle is the (group, slot) MIN
-    aggregation — map-side combine collapses it to groups x num_hashes x
-    partitions rows — and the pair matrix runs on groups² x num_hashes
-    rows (sources are dozens, slots are hundreds: trivially bounded).
-
-    Returns (group_a, group_b, n_slots_matched, jaccard_est) for EVERY
-    unordered pair of groups present in ``docs`` — a group whose documents
-    all fall below ``n`` tokens has an empty shingle set, and Jaccard of an
-    empty set against anything is 0, so its pairs report 0.0 rather than
-    silently vanishing from the matrix. Ordered for stable output.
-
-    ``with_containment=True`` adds the ASYMMETRIC direction Jaccard hides —
-    a small source fully embedded in a huge one has tiny J but containment
-    ≈ 1, the signal that actually decides "drop source A, B already covers
-    it". Zero extra passes: the per-group distinct-shingle cardinality
-    falls out of the SAME signature (the k-mins sketch estimator — each
-    slot's minimum of n uniform hashes has mean 1/(n+1), so
-    n̂ = k / Σ normalized-minima − 1), and |A∩B| = J·(|A|+|B|)/(1+J)
-    turns (J, n̂_a, n̂_b) into both containments (clamped to [0,1] —
-    estimators compose). Adds (n_distinct_a, n_distinct_b,
-    containment_a_in_b, containment_b_in_a); zero for empty-set groups.
-    """
-    from ..functions.hashing import minhash_signature, shingles_expr
-
-    sig = (
-        docs.select(
-            F.col(group_col).alias("g"),
-            minhash_signature(shingles_expr(text_col, n), num_hashes).alias(
-                "sig"
-            ),
-        )
-        .filter(F.col("sig").isNotNull())
-        .select("g", F.posexplode("sig").alias("slot", "h"))
-        .groupBy("g", "slot")
-        .agg(F.min("h").alias("h"))
-    )
-    matched = (
-        sig.select(F.col("g").alias("group_a"), "slot", F.col("h").alias("ha"))
-        .join(
-            sig.select(
-                F.col("g").alias("group_b"), "slot", F.col("h").alias("hb")
-            ),
-            "slot",
-        )
-        .filter(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
-        .agg(
-            F.sum((F.col("ha") == F.col("hb")).cast("long")).alias(
-                "n_matched"
-            ),
-        )
-    )
-    # the full pair frame comes from the bounded group list, so a
-    # signature-less group still appears (left join, zero-filled)
-    groups = docs.select(F.col(group_col).alias("g")).distinct()
-    pairs = (
-        groups.select(F.col("g").alias("group_a"))
-        .crossJoin(groups.select(F.col("g").alias("group_b")))
-        .filter(F.col("group_a") < F.col("group_b"))
-    )
-    out = pairs.join(matched, ["group_a", "group_b"], "left").select(
-        "group_a",
-        "group_b",
-        F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_slots_matched"),
-        (
-            F.coalesce(F.col("n_matched"), F.lit(0))
-            / F.lit(float(num_hashes))
-        ).alias("jaccard_est"),
-    )
-    if not with_containment:
-        return out.orderBy("group_a", "group_b")
-    # k-mins cardinality from the group signature: xxhash64 minima are
-    # uniform on the signed-int64 range, so u = h/2^64 + 0.5 in [0, 1)
-    # and n̂ = k/Σu - 1 (a present group holds exactly num_hashes slots)
-    ncnt = sig.groupBy("g").agg(
-        F.greatest(
-            F.lit(float(num_hashes))
-            / F.greatest(
-                F.sum(F.col("h") / F.lit(2.0**64) + 0.5), F.lit(1e-12)
-            )
-            - 1.0,
-            F.lit(0.0),
-        ).alias("n_est")
-    )
-    j = F.col("jaccard_est")
-    na, nb = F.col("n_distinct_a"), F.col("n_distinct_b")
-    inter = j * (na + nb) / (F.lit(1.0) + j)
-
-    def contain(denom):
-        return F.when(
-            denom > 0, F.least(inter / denom, F.lit(1.0))
-        ).otherwise(F.lit(0.0))
-
-    return (
-        out.join(
-            ncnt.select(F.col("g").alias("group_a"),
-                        F.col("n_est").alias("n_distinct_a")),
-            "group_a",
-            "left",
-        )
-        .join(
-            ncnt.select(F.col("g").alias("group_b"),
-                        F.col("n_est").alias("n_distinct_b")),
-            "group_b",
-            "left",
-        )
-        .select(
-            "group_a",
-            "group_b",
-            "n_slots_matched",
-            "jaccard_est",
-            F.coalesce(na, F.lit(0.0)).alias("n_distinct_a"),
-            F.coalesce(nb, F.lit(0.0)).alias("n_distinct_b"),
-        )
-        .select(
-            "*",
-            contain(na).alias("containment_a_in_b"),
-            contain(nb).alias("containment_b_in_a"),
-        )
-        .orderBy("group_a", "group_b")
     )

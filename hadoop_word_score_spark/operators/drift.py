@@ -1,14 +1,9 @@
-"""Population-stability-index (PSI) drift math, shared by the batch query
-and the streaming monitor.
+"""Population-stability-index (PSI) drift math.
 
-The split matters for the streaming story: `psi_binned_counts` is the only
-corpus-sized pass, and its output — (event_type, phase, bucket, c) counts —
-is ADDITIVE, so a stream can maintain it through the exactly-once
-`aggregating_sink` (per-batch counts merge by elementwise sum) and the
-standing table equals the batch-built counts bit for bit. `psi_report`
-then runs the densify + smoothed fold on the bounded (types × 2 × 10)
-relation wherever the counts came from; `streaming/monitor.py` composes
-the two and tests pin streamed == batch on the final PSI numbers.
+`psi_binned_counts` is the only corpus-sized pass, and its output —
+(event_type, phase, bucket, c) counts — is ADDITIVE: counts from disjoint
+slices of the events merge by elementwise sum. `psi_report` then runs the
+densify + smoothed fold on the bounded (types × 2 × 10) relation.
 
 Reference scope: hadoop-word-score has no monitoring surface; EXT coverage
 (the `events_psi_drift` registry row consumes this module).

@@ -9,18 +9,18 @@ participating column partially-tight stats, so a reader can skip row groups
 for predicates on ANY of them.
 
 All pure column expressions (whole-stage codegen, no UDF): rank each key to
-a uniform bucket, then interleave bucket bits. ``cluster_by_zorder`` is the
-writer half: range-partition + sort by the z-key so file boundaries follow
-the curve. The receipt (tests/test_operators.py) counts files whose min/max
-range intersects a selective predicate, per dimension: a single-column sort
-prunes one dimension perfectly and the other not at all, while z-order
-bounds the WORST dimension — the quantity that decides scan cost when
+a uniform bucket, then interleave bucket bits; a writer range-partitions
+and sorts by the z-key so file boundaries follow the curve. The receipt
+(tests/test_operators.py) counts files whose min/max range intersects a
+selective predicate, per dimension: a single-column sort prunes one
+dimension perfectly and the other not at all, while z-order bounds the
+WORST dimension — the quantity that decides scan cost when
 predicates arrive on any of the clustered columns at 100 TB.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -54,16 +54,3 @@ def zorder_key_n(buckets: list[Column], bits: int) -> Column:
             bit = F.shiftright(b, i).bitwiseAND(F.lit(1))
             z = z + F.shiftleft(bit, i * k + (k - 1 - j))
     return z
-
-
-def cluster_by_zorder(
-    df: DataFrame, zcol: Column, n_files: int
-) -> DataFrame:
-    """Order ``df`` along the z-curve into ``n_files`` range partitions.
-
-    repartitionByRange samples split points over the z-key (one extra pass),
-    then a within-partition sort — no global sort barrier. Writing the
-    result yields files whose z-ranges are disjoint, i.e. per-file min/max
-    stats tight in every interleaved dimension.
-    """
-    return df.withColumn("_z", zcol).repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z")

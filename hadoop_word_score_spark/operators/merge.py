@@ -14,8 +14,7 @@ relational core is exactly one full-outer join on the key:
 Scale: one shuffle of each side on the key — and the source side is the
 change set, typically orders of magnitude smaller, so AQE turns its side of
 the join into a broadcast. Rewriting only touched partitions (the other half
-of a real MERGE) is the table format's job; partitioned-parquet overwrite by
-partition column composes with sources/sinks.write_partitioned_parquet.
+of a real MERGE) is the table format's job.
 """
 
 from __future__ import annotations
@@ -79,9 +78,8 @@ def snapshot_diff(
     Scale: exactly one full-outer join shuffled on the key — the same
     single-shuffle shape as merge_upsert above; the per-column comparison
     is a codegen conjunction inside the join's projection. At 100 TB both
-    snapshots hash-shuffle once; with bucketed snapshot layouts
-    (sources/sinks.write_bucketed) the Exchange disappears entirely, the
-    receipt tests/test_sinks.py pins for bucketed joins.
+    snapshots hash-shuffle once; with snapshots bucketed on the key the
+    Exchange disappears entirely.
     """
     if compare_cols is None:
         compare_cols = [

@@ -24,8 +24,6 @@ from pyspark.sql import functions as F
 
 _I64_MAX = (1 << 63) - 1
 
-WeightLike = "int | Fraction | tuple[int, int]"
-
 
 def _as_fraction(w) -> Fraction:
     if isinstance(w, tuple):

@@ -1,19 +1,9 @@
 """Bin packing for training-sequence assembly (SURVEY §2 L-EXT).
 
 ``pack_sequences`` (plans/queries.py) is the concat-and-split packer: zero
-padding waste, but documents straddle bin boundaries. When truncation is
-unacceptable — instruction tuning, long-context curricula — the standard
-alternative packs each document WHOLE into fixed-capacity bins, minimizing
-padding via best-fit-decreasing (BFD; classic bin-packing heuristic,
-11/9·OPT + 6/9 guarantee, Johnson 1973 — public literature).
-
-The greedy is inherently sequential (every placement depends on all prior
-bins), so this is the canonical ``applyInPandas`` operator: one shuffle by
-the grouping column, then a per-group O(n log n) placement loop in Arrow
-batches. At 100 TB the group IS the parallelism unit — pre-shard the
-corpus (e.g. ``shuffle_shards``' deterministic hash shards) so groups stay
-worker-sized; packing quality is per-shard, which is how production
-packers bound memory anyway.
+padding waste, but documents straddle bin boundaries. ``pack_segments``
+reports, per bin, the document segments that straddling produces: the map
+an attention-masking dataloader consumes.
 
 Reference parity note: hopper19/hadoop-word-score has no packing surface
 (its engine is ComputeWordScore.java); this is part of the mandated
@@ -22,41 +12,8 @@ LLM-pipeline extension.
 
 from __future__ import annotations
 
-from bisect import bisect_left, insort
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _bfd_reference(sizes: list[tuple[int, int]], capacity: int) -> dict[int, int]:
-    """Pure-Python BFD over [(doc_id, n_tokens)]: the single definition of
-    the placement order and tie rules, used by the Spark path per group
-    AND by the property tests as the parity model.
-
-    Order: n_tokens DESC, doc_id ASC (total, so packing is deterministic).
-    Best fit: the bin with the SMALLEST remaining capacity that still
-    fits; ties on remaining capacity go to the OLDEST bin (lowest id) —
-    implemented by inserting (remaining, bin_id) pairs into a sorted list
-    and probing with bisect. A document larger than ``capacity`` gets a
-    bin of its own (callers decide whether that is an error; the operator
-    reports fill > capacity rather than silently truncating).
-    """
-    bins: list[tuple[int, int]] = []  # sorted (remaining, bin_id)
-    assign: dict[int, int] = {}
-    next_bin = 0
-    for doc_id, size in sorted(sizes, key=lambda t: (-t[1], t[0])):
-        i = bisect_left(bins, (size, -1))
-        if i < len(bins) and size <= capacity:
-            remaining, bin_id = bins.pop(i)
-            insort(bins, (remaining - size, bin_id))
-        else:
-            bin_id = next_bin
-            next_bin += 1
-            if size <= capacity:
-                insort(bins, (capacity - size, bin_id))
-            # oversized docs: own bin, never offered to other docs
-        assign[doc_id] = bin_id
-    return assign
 
 
 def pack_segments(
@@ -127,52 +84,4 @@ def pack_segments(
                    F.col("_off") - F.col("bin_id") * cap).alias("bin_offset"),
         doc_offset.alias("doc_offset"),
         (seg_end - doc_offset).alias("seg_len"),
-    )
-
-
-def pack_bins_bfd(
-    docs: DataFrame,
-    capacity: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-) -> DataFrame:
-    """Whole-document bin packing per group: returns
-    (group_col, id_col, tokens_col, bin_id, bin_fill) with ``bin_id``
-    dense from 0 within each group and ``bin_fill`` the bin's total
-    tokens (> capacity only for a single oversized document's own bin).
-    """
-    if capacity <= 0:
-        raise ValueError(f"pack_bins_bfd: capacity must be > 0, got {capacity}")
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    # derive the passthrough columns' TYPES from the input — hardcoding
-    # them broke non-default id/group schemas before (review r11; same
-    # class similarity.py fixed in r8 for its id column)
-    in_fields = {f.name: f for f in docs.select(group_col, id_col, tokens_col).schema}
-    schema = StructType(
-        [
-            in_fields[group_col],
-            in_fields[id_col],
-            in_fields[tokens_col],
-            StructField("bin_id", LongType()),
-            StructField("bin_fill", LongType()),
-        ]
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        sizes = list(zip(pdf[id_col].tolist(), pdf[tokens_col].tolist()))
-        assign = _bfd_reference(sizes, capacity)
-        out = pdf[[group_col, id_col, tokens_col]].copy()
-        out["bin_id"] = out[id_col].map(assign)
-        out["bin_fill"] = out.groupby("bin_id")[tokens_col].transform("sum")
-        return out
-
-    return (
-        docs.select(group_col, id_col, tokens_col)
-        .groupBy(group_col)
-        .applyInPandas(pack, schema)
-        .orderBy(group_col, "bin_id", id_col)
     )

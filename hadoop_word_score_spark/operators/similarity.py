@@ -632,7 +632,7 @@ def _load_centroids(spark: SparkSession, path: str) -> list:
 
 # ---------------------------------------------------------------------------
 # Versioned index roots + pointer commit (r14 verdict #5 / missing #3): the
-# rebuild-and-swap discipline of streaming/sinks.py applied to the ANN
+# write-then-swap pointer discipline of streaming/sinks.py applied to the ANN
 # store. Layout: ``{path}/v=N/{index,centroids,codebooks,_pq_meta.json,
 # tombstones}`` with an atomically-replaced ``{path}/_CURRENT`` pointer
 # file. Every probe/maintenance entry point resolves through
@@ -822,8 +822,7 @@ def ann_index_vacuum(
     after). Returns ``{"cells_rewritten", "cells_dropped",
     "rows_removed"}``; a fully-emptied cell's directory is dropped.
 
-    Crash-safe via rename-aside (the ``compact_small_files`` discipline,
-    sources/sinks.py): survivors are staged OUTSIDE the index, then per
+    Crash-safe via rename-aside: survivors are staged OUTSIDE the index, then per
     touched cell the live dir is renamed aside and the staged dir renamed
     in — two atomic renames, never an unlink of the only copy. A crash at
     ANY point loses nothing: entry runs :func:`ann_index_recover` (which
@@ -1135,116 +1134,3 @@ def lsh_bucketed_topk(
         .agg(F.first("cosine_sim").alias("cosine_sim"))
     )
     return _ranked_topk(scored, k)
-
-
-def mmr_reference(
-    sims_to_query: list, vectors: list, k: int, lam: float
-) -> list[int]:
-    """Pure-Python Maximal Marginal Relevance (Carbonell & Goldstein,
-    SIGIR 1998 — public literature): greedily pick the index maximizing
-    ``lam * sim(q, d) - (1 - lam) * max_{s in picked} cos(d, s)``.
-
-    ONE definition of the pick order and tie rules, shared by the Spark
-    path (executed per group inside applyInPandas) and the parity tests.
-    Scores round to 6 dp before comparison and ties break on list index
-    ascending (= candidate-id order, the callers sort by id), so the pick
-    sequence is deterministic and engine-independent.
-    """
-    vecs = np.asarray(vectors, dtype=np.float64)
-    unit = _unit_rows(vecs)  # zero vectors: cos 0 to everything
-    n = len(sims_to_query)
-    picked: list[int] = []
-    picked_set: set[int] = set()  # O(1) membership; the list keeps order
-    max_sim_to_picked = np.full(n, -np.inf)
-    for _ in range(min(k, n)):
-        best_i, best_score = -1, None
-        for i in range(n):
-            if i in picked_set:
-                continue
-            # raw max-sim penalty (classic MMR): anti-correlated candidates
-            # legitimately earn a diversity bonus
-            penalty = 0.0 if not picked else float(max_sim_to_picked[i])
-            score = round(lam * sims_to_query[i] - (1 - lam) * penalty, 6)
-            if best_score is None or score > best_score:
-                best_i, best_score = i, score
-        picked.append(best_i)
-        picked_set.add(best_i)
-        sims = unit @ unit[best_i]
-        np.maximum(max_sim_to_picked, sims, out=max_sim_to_picked)
-    return picked
-
-
-def mmr_rerank(
-    queries: DataFrame | None,
-    candidates: DataFrame,
-    k: int = 10,
-    lam: float = 0.7,
-    pool: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 4096,
-    pooled: DataFrame | None = None,
-) -> DataFrame:
-    """Diversified top-k: exact cosine retrieval into a per-query pool,
-    then Maximal Marginal Relevance reranking WITHIN each pool — the
-    standard RAG rerank stage (relevance alone returns near-duplicates;
-    MMR trades ``1 - lam`` of it for coverage).
-
-    Returns (query_id, cand_id, cosine_sim, mmr_rank) with mmr_rank the
-    1-based pick order. Plan shape: retrieval + pool selection is the
-    existing distributed scoring pass (:func:`brute_force_topk`'s
-    machinery — candidates stream, nothing corpus-sized collects); the
-    inherently-sequential greedy runs per query group inside ONE
-    ``applyInPandas`` over the pooled rows (≤ ``pool`` vectors per group
-    after one bounded shuffle), so reranking parallelizes across queries
-    and never touches the driver. At scale, swap the retrieval stage by
-    passing ``pooled`` — any (query_id, cand_id, cosine_sim) relation,
-    e.g. the IVF or LSH top-k output — and the built-in exact scoring
-    pass (and ``queries``) is skipped; ``candidates`` still supplies the
-    vectors by ``id_col``. ``pool`` re-caps the supplied relation per
-    query (rounded-sim desc, cand_id tiebreak), so an over-full input
-    cannot blow up the per-group loop.
-    """
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"mmr_rerank: lam must be in [0, 1], got {lam}")
-    if k > pool:
-        raise ValueError(f"mmr_rerank: k ({k}) cannot exceed pool ({pool})")
-    # exactly one retrieval source: queries=None with no pool would crash
-    # opaquely inside the scoring pass, and a supplied queries alongside
-    # pooled would be silently ignored — both get a clear error instead
-    if (queries is None) == (pooled is None):
-        raise ValueError(
-            "mmr_rerank: pass EITHER queries (built-in exact retrieval) OR "
-            "pooled (an external (query_id, cand_id, cosine_sim) pool), "
-            "not both and not neither"
-        )
-    if pooled is None:
-        pooled = _scored_pairs(
-            queries, candidates, id_col, vec_col, max_queries, "mmr_rerank"
-        )
-    pooled = _ranked_topk(pooled.select("query_id", "cand_id", "cosine_sim"), pool)
-    with_vecs = pooled.join(
-        candidates.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_vec")
-        ),
-        "cand_id",
-    )
-
-    schema = with_vecs.select("query_id", "cand_id", "cosine_sim").withColumn(
-        "mmr_rank", F.lit(1)
-    ).schema
-
-    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("cand_id").reset_index(drop=True)  # tie order
-        order = mmr_reference(
-            pdf["cosine_sim"].tolist(), pdf["_vec"].tolist(), k, lam
-        )
-        out = pdf.iloc[order][["query_id", "cand_id", "cosine_sim"]].copy()
-        out["mmr_rank"] = range(1, len(order) + 1)
-        return out
-
-    return (
-        with_vecs.groupBy("query_id")
-        .applyInPandas(rerank, schema)
-        .orderBy("query_id", "mmr_rank")
-    )

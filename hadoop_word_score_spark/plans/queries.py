@@ -2238,27 +2238,42 @@ _IVF_N_PROBE = 3
 def _gc_scratch_siblings(
     parent: str, keep: str, keep_newest: int = 16, max_age_hours: int = 24
 ) -> None:
-    """Prune stale content-keyed sibling dirs under a .scratch cache parent
-    (r14 review: pytest stages a fresh temp corpus per run, so its key is
-    new every time and artifacts accumulated unboundedly). Only siblings
-    BOTH older than ``max_age_hours`` AND beyond the ``keep_newest`` most
-    recent are removed — the age floor protects any concurrently running
-    session (sessions live minutes-to-hours, not days). ``keep`` (the
-    current key's dir name) is never removed."""
+    """Prune stale siblings under a .scratch cache parent (r14 review:
+    pytest stages a fresh temp corpus per run, so its key is new every time
+    and artifacts accumulated unboundedly). A content-keyed dir (a 16-hex
+    key) is removed only when BOTH older than ``max_age_hours`` AND beyond
+    the ``keep_newest`` most recent — the age floor protects any
+    concurrently running session (sessions live minutes-to-hours, not
+    days). Any other entry, file or dir, is left over from an older layout
+    (a fixed-dir sink's ``_latest`` and ``v=<n>``) and is removed once older
+    than ``max_age_hours``. ``keep`` (the current key's dir name) is never
+    removed."""
+    import re
     import shutil
     import time
 
     if not os.path.isdir(parent):
         return
+    cutoff = time.time() - max_age_hours * 3600
     entries = []
     for e in os.scandir(parent):
-        if e.is_dir() and e.name != keep:
-            try:
-                entries.append((e.stat().st_mtime, e.path))
-            except OSError:
-                pass
+        if e.name == keep:
+            continue
+        try:
+            mtime = e.stat(follow_symlinks=False).st_mtime
+        except OSError:
+            continue
+        if re.fullmatch(r"[0-9a-f]{16}", e.name) and e.is_dir():
+            entries.append((mtime, e.path))
+        elif mtime < cutoff:
+            if e.is_dir(follow_symlinks=False):
+                shutil.rmtree(e.path, ignore_errors=True)
+            else:
+                try:
+                    os.remove(e.path)
+                except FileNotFoundError:
+                    pass  # a concurrent prune got there first
     entries.sort(reverse=True)
-    cutoff = time.time() - max_age_hours * 3600
     for mtime, p in entries[keep_newest:]:
         if mtime < cutoff:
             shutil.rmtree(p, ignore_errors=True)
@@ -6818,9 +6833,9 @@ ORDER BY zbucket
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Data-layout clustering key: Morton-interleave 8-bit buckets of
     # (l_orderkey, l_partkey) — pure bit expressions, whole-stage codegen,
-    # bit-identical to the SQL oracle. The writer half (cluster_by_zorder)
-    # range-partitions on this key so per-file min/max stats stay tight in
-    # BOTH dimensions; the bounding-box receipt is in tests/test_operators.py.
+    # bit-identical to the SQL oracle. A writer that range-partitions on
+    # this key keeps per-file min/max stats tight in BOTH dimensions; the
+    # bounding-box receipt is in tests/test_operators.py.
     from ..operators.layout import zorder_bucket, zorder_key
 
     li = _t(spark, sf_dir, "lineitem")
@@ -7193,7 +7208,7 @@ def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Corpus-scale tokenization — the single most-executed step of a
     # training-data pipeline (r11 verdict #1): learn 3 subword rules, then
     # emit per-DOCUMENT BPE sequence lengths, the n_tokens the packing
-    # (pack_bins_bfd) and mixture planners consume. encode_corpus exploits
+    # and mixture planners consume. encode_corpus exploits
     # the </w> boundary invariant to encode at VOCAB size and join the
     # word -> n_subwords map back to the exploded corpus (repeated words
     # encoded once corpus-wide; no per-doc Python fold) — see
@@ -7804,8 +7819,7 @@ def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sequential per-key fold (EWMA, alpha=0.2) — the recurrence y_t =
     # a·x_t + (1-a)·y_{{t-1}} depends on the previous OUTPUT, which no
     # window frame expresses; it is the batch shape of per-key stateful
-    # processing (streaming/stateful.py holds the same fold as streaming
-    # state). Each user's (ts, event_id)-ordered values are collected in
+    # processing. Each user's (ts, event_id)-ordered values are collected in
     # one user-keyed aggregation and folded left to right by the
     # `aggregate` higher-order function, seeded with the first value — the
     # oracle's list_reduce performs the identical fp operation order, so
@@ -8055,9 +8069,7 @@ def q_stats_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-shuffle Generate). Exact NDV here is the oracle-comparable mode;
     # collect_table_stats(approx=True) is the 100 TB path (HLL sketches
     # keep the profile a single partial-agg pass — no count-distinct
-    # Expand). analyze_tables() persists these stats into the session
-    # catalog for CBO planning; the stats-driven broadcast receipt is in
-    # tests/test_plans.py.
+    # Expand).
     from ..sources.catalog import collect_table_stats
 
     return collect_table_stats(spark, sf_dir).orderBy("tbl", "col")
@@ -8347,9 +8359,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id tiebreak) — the retrieval-side artifact behind BM25 serving
     # and n-gram decontamination lookups. The bounded top-5 head keeps the
     # output oracle-hashable; the full posting list at 100 TB is the same
-    # relation written term-bucketed + sorted via write_bucketed
-    # (sources/sinks.py; serving receipt in tests/test_sinks.py) instead
-    # of aggregated to arrays.
+    # relation written bucketed by term and sorted instead of aggregated
+    # to arrays.
     oracle=r"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -9317,8 +9328,8 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Keyed snapshot diff (operators/merge.py::snapshot_diff): the
     # CDC/audit primitive next to merge_upsert — ONE full-outer join on
     # the key, per-column null-safe comparison as a codegen conjunction.
-    # At 100 TB: both snapshots shuffle once; bucketed snapshot layouts
-    # remove even that (tests/test_sinks.py's zero-Exchange receipt).
+    # At 100 TB: both snapshots shuffle once; snapshots bucketed on the
+    # key remove even that.
     from ..operators.merge import snapshot_diff
 
     o = _t(spark, sf_dir, "orders")
@@ -9537,9 +9548,7 @@ def q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # densify cross join, totals, and the PSI fold are all tiny. At 100 TB
     # only the first aggregation touches data volume. The count/report
     # split lives in operators/drift.py because the counts are ADDITIVE:
-    # streaming/monitor.py maintains the same relation through the
-    # exactly-once aggregating_sink and feeds the same report — streamed
-    # PSI equals this query bit for bit (pinned in tests/test_streaming.py).
+    # counts from disjoint slices of the events merge by elementwise sum.
     from ..operators.drift import psi_binned_counts, psi_report
 
     e = _t(spark, sf_dir, "events")

@@ -6,22 +6,13 @@ engine needs one: per-table row counts and per-column NDV/min/max/null
 counts feed cost-based decisions (join ordering, broadcast thresholds) and
 data-quality dashboards.
 
-Two pieces:
-
-- :func:`collect_table_stats` — an engine-side profile relation, one scan
-  per table. ``approx=True`` swaps exact ``count(distinct)`` for HLL
-  ``approx_count_distinct``: at 100 TB exact multi-column NDV forces an
-  Expand (k duplicate rows per input row, k = columns profiled); the HLL
-  sketch keeps the profile a single pass with partial aggregation and is
-  what a production ANALYZE runs. Exact is the oracle-comparable mode the
-  driver verifies at test SF.
-- :func:`analyze_tables` — persists tables into the session catalog and
-  runs real ``ANALYZE TABLE .. COMPUTE STATISTICS FOR ALL COLUMNS``, so
-  Catalyst's cost-based optimizer sees rowCount/sizeInBytes and per-column
-  histograms. The plan-level receipt (stats-driven broadcast without a
-  hint) is pinned in tests/test_plans.py. At runtime AQE covers the same
-  decision from observed shuffle sizes; catalog stats move it to PLANNING
-  time, before the first shuffle materializes — both paths are live here.
+:func:`collect_table_stats` is an engine-side profile relation, one scan
+per table. ``approx=True`` swaps exact ``count(distinct)`` for HLL
+``approx_count_distinct``: at 100 TB exact multi-column NDV forces an Expand
+(k duplicate rows per input row, k = columns profiled); the HLL sketch keeps
+the profile a single pass with partial aggregation and is what a production
+ANALYZE runs. Exact is the oracle-comparable mode the driver verifies at
+test SF.
 
 Column-type policy for min/max: Integer/Long/String/Timestamp-as-NDV-only.
 Doubles and timestamps profile NDV and null counts but emit NULL min/max —
@@ -31,8 +22,6 @@ formatting, not statistics.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,57 +98,6 @@ def collect_table_stats(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionAll(p)
-    return out
-
-
-def analyze_tables(
-    spark: SparkSession, sf_dir: str, tables: list[str], database: str = "default"
-) -> dict[str, dict]:
-    """Persist ``tables`` into the session catalog (saveAsTable) and run
-    ``ANALYZE TABLE .. COMPUTE STATISTICS FOR ALL COLUMNS``; returns the
-    catalog stats Catalyst will plan with ({table: {rowCount, sizeInBytes}}).
-
-    This is the planning-time complement to AQE: with
-    ``spark.sql.cbo.enabled`` these stats drive join reordering and
-    broadcast selection BEFORE execution; without them AQE re-derives the
-    broadcast decision at runtime from shuffle sizes (first shuffle still
-    paid). tests/test_plans.py pins the stats-driven broadcast receipt.
-    """
-    import shutil
-    from urllib.parse import urlparse
-
-    out: dict[str, dict] = {}
-    for t in tables:
-        name = f"{database}.{t}_analyzed"
-        # a crashed prior run can leave the managed location behind with no
-        # catalog entry (LOCATION_ALREADY_EXISTS on the next saveAsTable) —
-        # drop both the entry and any orphaned directory first
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # the managed location is database-relative: default lives at the
-        # warehouse root, every other database under <db>.db/ — cleaning
-        # the wrong one would rmtree an UNRELATED live table's directory
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        loc = (
-            f"{wh}/{t}_analyzed"
-            if database == "default"
-            else f"{wh}/{database}.db/{t}_analyzed"
-        )
-        shutil.rmtree(loc, ignore_errors=True)
-        load_table(spark, sf_dir, t).write.mode("overwrite").saveAsTable(name)
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-        # read back what the CATALOG recorded ("X bytes, Y rows") — the
-        # optimizedPlan().stats() route only surfaces rowCount when CBO is
-        # already enabled, which this helper must not toggle behind the
-        # caller's back
-        desc = {
-            r.col_name: r.data_type
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-        }
-        m = re.match(r"(\d+) bytes(?:, (\d+) rows)?", desc.get("Statistics", ""))
-        out[t] = {
-            "sizeInBytes": int(m.group(1)) if m else None,
-            "rowCount": int(m.group(2)) if m and m.group(2) else None,
-        }
     return out
 
 

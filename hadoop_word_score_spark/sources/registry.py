@@ -72,12 +72,6 @@ TABLES: dict[str, T.StructType] = {
     ),
 }
 
-# Dimensions small enough to broadcast at ANY scale factor (bounded cardinality:
-# 5 regions / 25 nations). Join helpers hint these explicitly; everything else
-# is left to AQE's runtime broadcast decision.
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
@@ -176,10 +170,6 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     if df.schema["ts"].dataType != declared:
         df = df.withColumn("ts", F.col("ts").cast(declared))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -26,7 +26,7 @@ re-enters only for the candidate ids in the verify join. A batch commit
 appends one ``docs/batch=<id>`` and one ``index/batch=<id>`` directory;
 nothing already written is read back for re-signing or rewritten.
 
-Exactly-once: same discipline as ``sinks.upsert_sink`` — a re-delivered
+Exactly-once: the pointer protocol of ``streaming/sinks.py`` — a re-delivered
 ``batch_id <= last_batch_id`` is a no-op; batch directories are written
 (mode=overwrite, so a crashed half-write is self-healing on redelivery)
 BEFORE the ``_latest`` pointer swap publishes them. The text sink and its
@@ -330,9 +330,8 @@ def vacuum_ingest(target: str) -> list[str]:
     a fully- or half-written batch directory that reads never see
     (``_committed_dirs`` filters on the pointer) but that occupies storage
     forever; redelivery overwrites it only if the SAME batch id is
-    retried. Same quiesced-writer contract as ``sinks.vacuum``: run with
-    no in-flight micro-batch, or an about-to-commit batch dir will be
-    swept out from under its commit.
+    retried. Run it with no in-flight micro-batch, or an about-to-commit
+    batch dir will be swept out from under its commit.
     """
     import shutil
 
@@ -342,7 +341,7 @@ def vacuum_ingest(target: str) -> list[str]:
     if version == 0:
         # never committed OR the pointer file is lost — indistinguishable
         # here, and sweeping on a lost pointer would rmtree every committed
-        # batch (sinks.vacuum refuses at version 0 for the same reason)
+        # batch, so it refuses at version 0
         return removed
     for sub in (_DOCS, _INDEX):
         root = os.path.join(target, sub)

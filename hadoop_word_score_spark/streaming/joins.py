@@ -1,40 +1,18 @@
-"""Streaming joins (SURVEY §2.9 EXT): stream-static enrichment and
-watermarked stream-stream interval joins.
+"""Streaming joins (SURVEY §2.9 EXT): watermarked stream-stream interval joins.
 
 The reference is batch-only (ComputeWordScore.java:218 blocks on completion);
-these are the streaming-side join forms its EXT surface needs. Semantics and
-scale story:
-
-  - Stream-static: the static side is read once per micro-batch and
-    broadcast — no state store involvement, the standard dimension-enrichment
-    path. At 100 TB the static side is a bounded dim table, never a fact.
-  - Stream-stream: BOTH sides buffer in the state store; the watermark plus
-    an explicit time-range predicate bound that state (without the range
-    condition, state grows forever — Spark requires it for append-mode
-    correctness). State per key ≈ rows within the interval, evicted as the
-    watermark advances.
+this is the streaming-side join form its EXT surface needs, run by the
+``join_interval_left_outer`` query. BOTH sides buffer in the state store; the
+watermark plus an explicit time-range predicate bound that state (without the
+range condition, state grows forever — Spark requires it for append-mode
+correctness). State per key ≈ rows within the interval, evicted as the
+watermark advances.
 """
 
 from __future__ import annotations
 
-import time
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def enrich_stream_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    stream_key: str = "user_id",
-    dim_key: str = "c_custkey",
-) -> DataFrame:
-    """Stream-static inner join: each micro-batch joins against the current
-    static snapshot (broadcast; stateless)."""
-    return events.join(
-        F.broadcast(dim), events[stream_key] == dim[dim_key], "inner"
-    )
 
 
 def interval_join_streams(
@@ -59,8 +37,7 @@ def interval_join_streams(
       2. rows near the END of a finite stream only flush if something
          advances the watermark past their window (a later batch, or
          Spark's trailing no-data micro-batch) — "drain and stop" does not
-         by itself guarantee the tail's null-padded rows;
-         :func:`flush_interval_join_tail` is the production recipe.
+         by itself guarantee the tail's null-padded rows.
     State cost is identical to the inner join: both sides buffer within
     the eviction bound, nothing more.
     """
@@ -93,135 +70,3 @@ def interval_join_streams(
         "l_ts",
         "r_ts",
     )
-
-
-def flush_interval_join_tail(
-    spark: SparkSession,
-    source_dir: str,
-    mk_rows: Callable,
-    schema,
-    max_delay: str = "30 minutes",
-    watermark: str = "1 hour",
-    margin: str = "1 minute",
-    ts_col: str = "ts",
-    n_batches: int = 2,
-    pause: float = 1.1,
-):
-    """Advance a finite stream's watermark past every real row's join
-    window so a left-outer :func:`interval_join_streams` drain emits its
-    null-padded TAIL — the production backfill recipe for the pinned
-    caveat that "drain and stop" alone never flushes rows near the end of
-    a finite stream (their windows need a LATER event to pass them).
-
-    Appends ``n_batches`` heartbeat files to the file-source directory at
-    ``flush_ts = max(ts) + max_delay + watermark + margin`` (each
-    ``margin`` later than the last), then the caller re-runs its
-    availableNow drain against the same checkpoint. Two rules this
-    encodes, both learned the hard way (tests pin them):
-
-      1. The heartbeat rows must survive BOTH join sides' pre-join
-         filters — the effective watermark is the MIN across the two
-         inputs' watermark nodes, so a heartbeat visible to only one side
-         advances nothing. ``mk_rows(flush_ts)`` is caller-supplied for
-         exactly this reason: it must return rows that reach both sides
-         (e.g. one click AND one purchase for a sentinel user id).
-      2. Watermarks take effect at the NEXT micro-batch, so one heartbeat
-         file advances the watermark but nothing ever acts on it:
-         ``n_batches=2`` (with ``pause`` between writes so the file
-         source's modification-time ordering splits them) makes the
-         second batch the one that evicts and null-pads. Pair with a
-         ``maxFilesPerTrigger=1`` reader — a reader that swallows both
-         files in one batch is back to one batch.
-
-    The heartbeat rows' OWN windows are never passed, so they do not
-    null-pad in this drain; use a sentinel key so any later pipeline run
-    can filter them. Returns the list of flush timestamps written.
-    """
-    bound = (
-        spark.read.parquet(source_dir)
-        .agg(F.max(ts_col).alias("m"))
-        .select(
-            (
-                F.col("m")
-                + F.expr(f"INTERVAL {max_delay}")
-                + F.expr(f"INTERVAL {watermark}")
-                + F.expr(f"INTERVAL {margin}")
-            ).alias("flush_ts"),
-            (F.expr(f"INTERVAL {margin}")).alias("step"),
-        )
-        .first()
-    )
-    if bound["flush_ts"] is None:
-        # max(ts) over an empty source is NULL — without this check the
-        # heartbeats are written with NULL timestamps (or createDataFrame
-        # fails opaquely) instead of saying what went wrong (ADVICE r11)
-        raise ValueError(
-            f"flush_interval_join_tail: {source_dir!r} has no rows with a "
-            f"non-null {ts_col!r} to flush — nothing to advance a "
-            f"watermark past"
-        )
-    flush_ts, written = bound["flush_ts"], []
-    for i in range(n_batches):
-        if i:
-            time.sleep(pause)  # file-source batch order follows mtime
-        spark.createDataFrame(mk_rows(flush_ts), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(source_dir)
-        written.append(flush_ts)
-        flush_ts = flush_ts + bound["step"]
-    return written
-
-
-def pit_enrich_stream_sink(
-    out_dir: str,
-    dim_target: str,
-    on: str,
-    fact_ts: str,
-    payload: list[str],
-    valid_from: str = "valid_from",
-):
-    """The feature-platform loop, closed: a ``foreachBatch`` function that
-    point-in-time-enriches each FACT micro-batch against the SCD2
-    dimension a :func:`~..streaming.sinks.scd2_sink` maintains, appending
-    the enriched rows to ``out_dir``.
-
-    Each batch reads the dimension's CURRENT committed snapshot
-    (sinks.read_table) and runs the SAME ``operators/scd2.pit_enrich``
-    as the batch query — one code path for online and offline enrichment,
-    so the leakage-safety property (a fact at t sees only versions
-    <= t) holds identically in both. Consistency contract, stated rather
-    than implied: a fact batch is enriched against the dimension AS OF
-    the batch's execution, so a dimension version that arrives LATER than
-    a fact it should have applied to is missed by the online path —
-    exactly the online/offline skew a feature platform measures — while
-    the offline backfill (batch pit_enrich over the final dimension) is
-    the truth. The parity test drives dim-then-facts, where online ==
-    offline bit for bit.
-
-    Facts with no dimension version at-or-before their timestamp are
-    DROPPED (inner as-of), matching pit_enrich's batch semantics.
-
-    Replay safety: each batch writes (mode=overwrite) its OWN
-    ``batch=<id>`` subdirectory, so a re-delivered batch replaces its
-    previous output instead of appending duplicates — idempotence without
-    a pointer file, at the cost of per-batch directories (compact with
-    sources/sinks.compact_small_files when they accumulate).
-    """
-    from ..operators.scd2 import pit_enrich
-    from .sinks import read_table
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        dim = read_table(batch_df.sparkSession, dim_target)
-        if dim is None:  # no committed dimension yet: nothing can enrich
-            return
-        enriched = pit_enrich(
-            batch_df, dim, on=on, fact_ts=fact_ts, payload=payload,
-            valid_from=valid_from,
-        )
-        enriched.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    return write_batch

@@ -1,129 +1,17 @@
-"""Streaming drift monitor: PSI over an events stream, exactly once.
+"""Streamed heavy hitters: a Misra-Gries summary over a token stream, exactly once.
 
-The batch `events_psi_drift` query splits into an additive counting pass
-and a bounded report (operators/drift.py). This module runs the counting
-pass per micro-batch and folds it into the standing counts table through
-`aggregating_sink` — the same batchId-replay-guarded, atomic-snapshot
-machinery as every other sink here — so the monitor's state after any
-drain equals the batch-built counts bit for bit, replays are no-ops, and
-the PSI report can be served at ANY time from the standing table without
-touching the event history. The per-batch work is one map-side-combined
-aggregation over the batch plus a (types × 2 × 10)-sized merge; state
-never grows with events, only with the bounded key space.
+``heavy_hitters_monitor_sink`` folds each micro-batch's bounded summary into
+the standing summary under the pointer protocol of ``streaming/sinks.py``,
+and ``heavy_hitters_report_from_store`` serves it at any time without
+touching the token history. The ``heavy_hitters_streamed`` query runs both.
 
-Reference scope: EXT (the reference is batch-only); parity with the batch
-query is pinned in tests/test_streaming.py.
+Reference scope: EXT (the reference is batch-only); the query's oracle
+checks the summary's certificate against exact batch counts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.drift import psi_binned_counts, psi_report
-from .sinks import aggregating_sink, read_table
-
-PSI_KEYS = ["event_type", "phase", "bucket"]
-
-
-def psi_monitor_sink(target: str):
-    """``foreachBatch`` body: bin + count the batch, merge additively into
-    the standing counts table at ``target``."""
-    merge = aggregating_sink(target, PSI_KEYS, ["c"])
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge(psi_binned_counts(batch_df), batch_id)
-
-    return write_batch
-
-
-def psi_report_from_store(spark: SparkSession, target: str) -> DataFrame | None:
-    """The PSI report served from the monitor's standing counts table —
-    or None before the first commit. Runs entirely on the bounded
-    (types × 2 × 10) relation; the event history is never re-read."""
-    counts = read_table(spark, target)
-    if counts is None:
-        return None
-    return psi_report(counts.select(*PSI_KEYS, "c"))
-
-
-# --- streamed OHLC bars ------------------------------------------------------
-
-OHLC_KEYS = ["event_type", "bucket_hour"]
-
-
-def _ohlc_order_key():
-    # the batch query's exact tie-safe composite (unix_micros * 1e10 +
-    # event_id as decimal(38,0)) — streamed argmin/argmax must break ties
-    # identically or the parity pin below would flap on tied timestamps
-    from pyspark.sql import functions as F
-
-    return (
-        F.unix_micros(F.col("ts")).cast("decimal(38,0)")
-        * F.lit(10_000_000_000).cast("decimal(38,0)")
-        + F.col("event_id")
-    )
-
-
-def ohlc_partials(events: DataFrame) -> DataFrame:
-    """Per-batch mergeable OHLC partials: open/close travel as
-    (order_key, value) structs whose lexicographic min/max IS
-    min_by/max_by, so per-batch partials fold exactly under
-    ``mergeable_sink`` regardless of how arrival slices the data."""
-    from pyspark.sql import functions as F
-
-    k = _ohlc_order_key()
-    return events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("bucket_hour")
-    ).agg(
-        F.min(F.struct(k.alias("k"), F.col("value").alias("v"))).alias("open_s"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max(F.struct(k.alias("k"), F.col("value").alias("v"))).alias("close_s"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def ohlc_monitor_sink(target: str):
-    """``foreachBatch`` body: fold the batch's OHLC partials into the
-    standing bars table — min/max/struct-argmin merges, exactly once."""
-    from .sinks import mergeable_sink
-
-    merge = mergeable_sink(
-        target,
-        OHLC_KEYS,
-        {"open_s": "min", "high": "max", "low": "min",
-         "close_s": "max", "n_events": "sum"},
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge(ohlc_partials(batch_df), batch_id)
-
-    return write_batch
-
-
-def ohlc_report_from_store(spark: SparkSession, target: str) -> DataFrame | None:
-    """The OHLC bars served from the monitor's standing table (or None
-    before the first commit) — same shape and ordering as the batch
-    ``events_ohlc_hourly`` registry query."""
-    from pyspark.sql import functions as F
-
-    from .sinks import read_table
-
-    bars = read_table(spark, target)
-    if bars is None:
-        return None
-    return bars.select(
-        "event_type",
-        "bucket_hour",
-        F.col("open_s.v").alias("open"),
-        "high",
-        "low",
-        F.col("close_s.v").alias("close"),
-        "n_events",
-    ).orderBy("event_type", "bucket_hour")
-
-
-# --- streamed heavy hitters --------------------------------------------------
 
 # Misra-Gries summaries are MERGEABLE (Agarwal, Cormode, Huang, Phillips,
 # Wei, Yi — "Mergeable Summaries", PODS 2012): merging two capacity-c
@@ -133,8 +21,8 @@ def ohlc_report_from_store(spark: SparkSession, target: str) -> DataFrame | None
 # summary pass, then a driver-side merge into the standing <= capacity-row
 # summary — state never grows with tokens OR with distinct terms. The prune
 # step (subtract the (capacity+1)-th largest, drop non-positives) is not a
-# commutative column-wise fold, so this sink cannot ride mergeable_sink; it
-# carries the same pointer/commit exactly-once protocol directly.
+# commutative column-wise fold, so the merge runs on the driver under the
+# pointer/commit exactly-once protocol.
 
 
 def heavy_hitters_monitor_sink(
@@ -212,9 +100,9 @@ def heavy_hitters_monitor_sink(
                 counts[r.term] = counts.get(r.term, 0) + r.mg_count
         if n_batch == 0 and n_terms == 0:
             # empty batch: advance the replay guard on the SAME version —
-            # no new snapshot, no new meta (the _bucketed_batch_write rule;
-            # review r12: an idle source with periodic triggers would
-            # otherwise accumulate identical version dirs without bound)
+            # no new snapshot, no new meta (review r12: an idle source with
+            # periodic triggers would otherwise accumulate identical version
+            # dirs without bound)
             _commit(target, version, batch_id)
             return
         counts = _mg_prune(counts, capacity)

@@ -1,14 +1,13 @@
-"""Structured Streaming wrappers (SURVEY §2.9 T1-T5).
+"""Structured Streaming wrappers (SURVEY §2.9 T1, T4).
 
 The batch window queries in plans/queries.py use exactly the expressions
 Structured Streaming executes incrementally — these wrappers add the streaming
-pieces (source, watermark, stateful dedup, sink) around the same logic, which
-is what makes the batch-mode DuckDB oracle meaningful for the streaming path.
+pieces (file source, watermark) around the same logic, which is what makes the
+batch-mode DuckDB oracle meaningful for the streaming path. The bench's
+``streaming_tumbling_drain`` row runs them.
 
 At cluster scale the file source is an object-store listing (HDFS/S3); state
-lives in the checkpointed state store, watermarks bound its size, and
-``dropDuplicatesWithinWatermark`` keeps the dedup state finite — the knobs the
-100 TB deployment actually needs.
+lives in the checkpointed state store, and watermarks bound its size.
 """
 
 from __future__ import annotations
@@ -57,83 +56,3 @@ def tumbling_counts_stream(
             "sum_value",
         )
     )
-
-
-def sliding_counts_stream(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """T2+T4: watermarked sliding-window aggregation (overlapping windows).
-
-    Each event lands in window/slide windows; state per open window is
-    bounded by the watermark exactly as in the tumbling case.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").alias("w_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def session_stream(
-    events: DataFrame, gap: str = "5 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """T3 streaming form: session windows need a watermark to finalize state."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """T5: stateful exact dedup with bounded state.
-
-    ``dropDuplicatesWithinWatermark`` evicts seen-keys older than the
-    watermark — the only way dedup state stays finite on an unbounded stream.
-    """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
-
-
-def run_available_now(stream_df: DataFrame, checkpoint_dir: str, table_name: str) -> DataFrame:
-    """Drain everything currently available through a memory sink; return result.
-
-    Trigger.AvailableNow processes the backlog in micro-batches then stops —
-    the batch-parity test harness (and the production backfill pattern).
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete" if stream_df.isStreaming and _has_agg(stream_df) else "append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(table_name)
-
-
-def _has_agg(df: DataFrame) -> bool:
-    # match the Aggregate NODE at the start of a plan line, not the
-    # substring anywhere — a column or relation named "AggregateScore"
-    # inside a Project's output list must not flip the output mode
-    import re
-
-    # markers before a node name: tree branches (+- :-), codegen stars,
-    # the streaming tilde (~Aggregate), and unresolved quotes ('Aggregate)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return re.search(r"(?m)^[\s+:*~'-]*Aggregate ", plan) is not None

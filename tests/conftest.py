@@ -4,6 +4,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -64,3 +65,33 @@ def stage_documents_sf(spark, base_dir, rows):
         "overwrite"
     ).parquet(os.path.join(sf, "documents.parquet"))
     return sf
+
+
+def run_available_now(stream_df: DataFrame, checkpoint_dir: str, table_name: str) -> DataFrame:
+    """Drain everything currently available through a memory sink; return result.
+
+    Trigger.AvailableNow processes the backlog in micro-batches then stops —
+    the batch-parity test harness (and the production backfill pattern).
+    """
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode("complete" if stream_df.isStreaming and _has_agg(stream_df) else "append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(table_name)
+
+
+def _has_agg(df: DataFrame) -> bool:
+    # match the Aggregate NODE at the start of a plan line, not the
+    # substring anywhere — a column or relation named "AggregateScore"
+    # inside a Project's output list must not flip the output mode
+    import re
+
+    # markers before a node name: tree branches (+- :-), codegen stars,
+    # the streaming tilde (~Aggregate), and unresolved quotes ('Aggregate)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return re.search(r"(?m)^[\s+:*~'-]*Aggregate ", plan) is not None

@@ -3,13 +3,15 @@
 The harness itself runs end to end in the bench; these pin the seams a
 refactor could silently break: the group stdout parse, the group partition,
 the counter gate (with and without Spark), the implementation
-fingerprint's import closure, and the scale-growth tool's flags. One Spark
-test pins the property that matters at 100 TB: no bench row's job count
-depends on the data size.
+fingerprint's import closure, the scale-growth tool's flags, and that
+every package definition is reached from an entry point. One Spark test
+pins the property that matters at 100 TB: no bench row's job count depends
+on the data size.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import re
 
@@ -20,6 +22,40 @@ import bench
 from tests.conftest import SF_BENCH, SF_ORACLE
 
 ROOT = Path(__file__).resolve().parent.parent
+
+# Package definitions that no entry point reaches but that stay, each with
+# its reason. Every other top-level function and class must be reached.
+KEEP = {
+    "train_hashed_logreg": "the fit side of the served md5 scorer "
+    "hashed_linear_score, on the same buckets",
+    "export_weights": "turns train_hashed_logreg's output into the integer "
+    "weight table the served scorer reads",
+    "perceptual_ingest_sink": "multimodal dedup on arrival, a north-star "
+    "operator; a bench row for it changes bench_set_hash, so it is its own "
+    "change",
+    "vacuum_ingest": "sweeps the uncommitted batch dirs a crash leaves in "
+    "either ingest sink's target",
+    "image_dhash64": "the hasher recipe perceptual_ingest_sink runs",
+    "ann_index_begin_rebuild": "writes the versioned index layout that "
+    "resolve_index_root reads on every probe",
+    "ann_index_commit_version": "commits the versioned index layout that "
+    "resolve_index_root reads on every probe",
+    "semantic_dup_pairs": "thin public entry whose tests are the only "
+    "exactness check of _assigned_and_pairs, which reached code runs",
+    "incremental_hamming_pairs": "thin public entry whose tests are the only "
+    "exactness check of the cross-relation _hamming_join, which reached "
+    "code runs",
+    "content_hash_sql": "the DuckDB-parity reference that tests compare "
+    "content_hash_col against",
+    "encode_ppm": "codec encoder that tests use to build the images the "
+    "decoders read",
+    "encode_bmp24": "codec encoder that tests use to build the images the "
+    "decoders read",
+    "write_sequence_file": "reference interop: the SequenceFile<Text, "
+    "IntWritable> the reference writes between its two jobs (CWS:170-176)",
+    "read_sequence_file": "reference interop: reads the reference's "
+    "intermediate SequenceFile (CWS:190-191)",
+}
 
 
 def test_group_stdout_parse_skips_stray_json_values():
@@ -285,3 +321,77 @@ def test_bench_rows_run_the_same_jobs_at_every_scale(spark):
                 (rec["driver.jobs"], rec["driver.sql_executions"]))
     moved = {n: r for n, r in rounds.items() if len(set(r)) > 1}
     assert moved == {}, f"(jobs, SQL executions) at sf0.01 vs sf0.1: {moved}"
+
+
+def _identifiers(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+            if n.asname:
+                out.add(n.asname)
+    return out
+
+
+def test_every_package_definition_is_reached_from_an_entry_point():
+    # Entry points: the driver contract, the CLI, the bench, tools/,
+    # perfbench/ (not its tests) and every @register query. Reach follows
+    # Name, Attribute and import-alias identifiers, never strings, so a
+    # name in a docstring reaches nothing. It matches by name, not module,
+    # which can only over-count reach. A test-only capability fails here
+    # until a bench row, a query or a KEEP reason justifies it.
+    pkg = ROOT / "hadoop_word_score_spark"
+    roots: set[str] = set()
+    for f in [ROOT / "__spark_entry__.py", ROOT / "bench.py",
+              pkg / "__main__.py", *(ROOT / "tools").glob("*.py"),
+              *(ROOT / "perfbench").glob("*.py")]:
+        roots |= _identifiers(ast.parse(f.read_text()))
+    bodies: dict[str, list[ast.AST]] = {}
+    where: dict[str, str] = {}  # top-level functions and classes
+    for path in sorted(pkg.rglob("*.py")):
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                for dec in stmt.decorator_list:
+                    roots |= _identifiers(dec)  # runs at import
+                if any(isinstance(d, ast.Call)
+                       and isinstance(d.func, ast.Name)
+                       and d.func.id == "register"
+                       for d in stmt.decorator_list):
+                    roots |= _identifiers(stmt)
+                    continue
+                bodies.setdefault(stmt.name, []).append(stmt)
+                where[stmt.name] = f"{path.relative_to(ROOT)}:{stmt.lineno}"
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = (stmt.targets if isinstance(stmt, ast.Assign)
+                           else [stmt.target])
+                for n in (n for t in targets for n in ast.walk(t)):
+                    if isinstance(n, ast.Name):
+                        bodies.setdefault(n.id, []).append(stmt)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                roots |= _identifiers(stmt)  # module-level code runs
+
+    def reach(start: set[str]) -> set[str]:
+        seen: set[str] = set()
+        todo = set(start)
+        while todo:
+            name = todo.pop()
+            if name not in seen:
+                seen.add(name)
+                for node in bodies.get(name, ()):
+                    todo |= _identifiers(node) - seen
+        return seen
+
+    reached = reach(roots | set(KEEP))
+    unreached = sorted(f"{where[n]} {n}" for n in set(where) - reached)
+    assert unreached == [], (
+        f"{len(unreached)} package definitions only tests reach, or "
+        "nothing: delete them, reach them from an entry point, or add "
+        "them to KEEP with a reason:\n" + "\n".join(unreached)
+    )
+    from_entry = reach(roots)
+    stale = sorted(n for n in KEEP if n not in where or n in from_entry)
+    assert stale == [], f"KEEP names what is gone or now reached: {stale}"

@@ -97,11 +97,6 @@ def test_round6_operators_empty(spark):
 
     from hadoop_word_score_spark.operators.bpe import learn_merge_rules
     from hadoop_word_score_spark.operators.frequent import heavy_hitters_topk
-    from hadoop_word_score_spark.operators.layout import (
-        cluster_by_zorder,
-        zorder_bucket,
-        zorder_key,
-    )
     from hadoop_word_score_spark.operators.linalg import covariance_partials
 
     # heavy hitters over zero tokens: empty summary, empty top-k
@@ -119,16 +114,6 @@ def test_round6_operators_empty(spark):
     parts = covariance_partials(vecs, "embedding", 4).collect()
     assert sum(r.n for r in parts) == 0
     assert all(np.allclose(r.sx, 0) for r in parts)
-
-    # z-order clustering of an empty frame keeps the schema and zero rows
-    e = spark.createDataFrame([], "l_orderkey long, l_partkey long")
-    z = zorder_key(
-        zorder_bucket(F.col("l_orderkey"), 0, 100, 4),
-        zorder_bucket(F.col("l_partkey"), 0, 100, 4),
-        4,
-    )
-    out = cluster_by_zorder(e, z, 4)
-    assert out.columns == ["l_orderkey", "l_partkey"] and out.count() == 0
 
 
 def test_ewma_and_sessionize_empty(spark):

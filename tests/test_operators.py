@@ -1798,7 +1798,6 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hadoop_word_score_spark.operators.layout import (
-        cluster_by_zorder,
         zorder_bucket,
         zorder_key,
     )
@@ -1871,21 +1870,6 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     assert z_o <= z_n // 2, (z_o, z_n)
     assert z_p <= z_n // 2, (z_p, z_n)
     assert max(z_o, z_p) < max(l_o, l_p), ((z_o, z_p), (l_o, l_p))
-
-    # the production writer half: range partitioning on the z-key yields
-    # files whose z-ranges are DISJOINT (file boundaries follow the curve)
-    # — deterministic by construction, unlike its sampled split points.
-    zpath = str(tmp_path / "zwriter")
-    cluster_by_zorder(li.withColumn("zv", zcol), F.col("zv"), 8).write.parquet(zpath)
-    ranges = sorted(
-        (r.mn, r.mx)
-        for r in spark.read.parquet(zpath)
-        .groupBy(F.input_file_name())
-        .agg(F.min("zv").alias("mn"), F.max("zv").alias("mx"))
-        .collect()
-    )
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next, ranges
 
 
 def test_bpe_merge_rules_hand_corpus(spark):
@@ -2516,50 +2500,6 @@ def test_bpe_encode_sequences_reconstructs_documents(spark):
         rebuilt = seq.replace(" ", "").split("</w>")
         assert rebuilt[-1] == ""  # every word ends with the marker
         assert rebuilt[:-1] == originals[doc_id].split(" ")
-
-
-def test_pack_bins_consume_bpe_lengths_end_to_end(spark):
-    # the r11 verdict's point of corpus-scale BPE encoding: the packing
-    # operator should consume REAL tokenizer lengths, not whitespace
-    # counts. Chain encode_corpus -> pack_bins_bfd and check the packing
-    # invariants hold on BPE token counts: every doc assigned exactly
-    # once, per-bin fill <= capacity (except single oversized docs), and
-    # total packed tokens == total BPE tokens.
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMOKE
-
-    from hadoop_word_score_spark.functions.hashing import tokens_expr
-    from hadoop_word_score_spark.operators.bpe import (
-        encode_corpus,
-        learn_subword_rules,
-        subword_vocab,
-    )
-    from hadoop_word_score_spark.operators.packing import pack_bins_bfd
-    from hadoop_word_score_spark.sources.registry import load_table
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    docs = d.select(
-        "doc_id", "source",
-        F.array_join(F.expr(tokens_expr("text")), " ").alias("txt"),
-    )
-    vocab = subword_vocab(docs, "txt")
-    rules = learn_subword_rules(docs, "txt", 3, vocab=vocab)
-    lengths = encode_corpus(docs, "doc_id", "txt", rules, vocab=vocab)
-    sized = docs.select("doc_id", "source").join(lengths, "doc_id").select(
-        "source", "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
-    )
-    capacity = 2048
-    packed = pack_bins_bfd(sized, capacity).collect()
-    assert len(packed) == sized.count()  # every doc exactly once
-    fills = {}
-    for r in packed:
-        fills.setdefault((r.source, r.bin_id), []).append(r.n_tokens)
-    for (src_, _), sizes in fills.items():
-        assert sum(sizes) <= capacity or len(sizes) == 1  # oversized alone
-    assert sum(r.n_tokens for r in packed) == (
-        lengths.agg(F.sum("n_bpe_tokens")).collect()[0][0]
-    )
 
 
 def test_pack_sequences_consume_bpe_ids_end_to_end(spark):
@@ -4017,149 +3957,6 @@ def test_dsir_null_predicate_rows_count_as_raw(spark):
     assert out[2] > 0 > out[3]         # and its target-like text scores high
 
 
-def test_pack_bins_bfd_parity_and_invariants(spark):
-    # r11: whole-document BFD packing — the Spark path must equal the
-    # pure-Python reference (same placement order and tie rules), no bin
-    # may exceed capacity except a lone oversized document, bin ids are
-    # dense per group, and every doc is assigned exactly once.
-    import random
-
-    from hadoop_word_score_spark.operators.packing import (
-        _bfd_reference,
-        pack_bins_bfd,
-    )
-
-    rnd = random.Random(7)
-    rows = []
-    for g in ("s1", "s2"):
-        for i in range(120):
-            rows.append((g, (0 if g == "s1" else 1000) + i, rnd.randrange(1, 400)))
-    rows.append(("s1", 999, 2048))  # oversized: own bin, reported not truncated
-    docs = spark.createDataFrame(rows, "source string, doc_id long, n_tokens long")
-
-    out = pack_bins_bfd(docs, capacity=512).collect()
-    assert len(out) == len(rows)
-    by_group: dict = {}
-    for r in out:
-        by_group.setdefault(r.source, []).append(r)
-    for g, rs in by_group.items():
-        want = _bfd_reference(
-            [(r.doc_id, r.n_tokens) for r in rs], capacity=512
-        )
-        assert {r.doc_id: r.bin_id for r in rs} == want, g
-        bins = sorted({r.bin_id for r in rs})
-        assert bins == list(range(len(bins)))  # dense from 0
-        fill: dict = {}
-        for r in rs:
-            fill[r.bin_id] = fill.get(r.bin_id, 0) + r.n_tokens
-        for r in rs:
-            assert r.bin_fill == fill[r.bin_id]
-        for b, f in fill.items():
-            members = [r for r in rs if r.bin_id == b]
-            assert f <= 512 or (len(members) == 1 and members[0].n_tokens > 512)
-        # BFD can never do worse than the ceil(total/capacity) lower bound x2
-        regular = [r.n_tokens for r in rs if r.n_tokens <= 512]
-        lower = -(-sum(regular) // 512)
-        n_regular_bins = len({r.bin_id for r in rs if r.n_tokens <= 512})
-        assert lower <= n_regular_bins <= 2 * lower
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="capacity"):
-        pack_bins_bfd(docs, capacity=0)
-
-
-def test_mmr_rerank_diversifies_and_matches_reference(spark):
-    # r11: MMR rerank — with one cluster of near-identical high-relevance
-    # vectors and one slightly-less-relevant distinct direction, pure
-    # relevance top-3 keeps the whole cluster; MMR at lam=0.5 must pick
-    # the distinct direction second. The Spark path (applyInPandas per
-    # query) must equal the shared pure-Python reference pick-for-pick.
-    from hadoop_word_score_spark.operators.similarity import (
-        brute_force_topk,
-        mmr_rerank,
-        mmr_reference,
-    )
-
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    cands = [
-        (1, [1.0, 0.01, 0.0, 0.0]),   # cluster A, most relevant
-        (2, [1.0, 0.02, 0.0, 0.0]),   # cluster A near-dup
-        (3, [1.0, 0.03, 0.0, 0.0]),   # cluster A near-dup
-        (4, [0.8, 0.0, 0.6, 0.0]),    # distinct direction, still relevant
-        (5, [0.1, 0.0, 0.0, 1.0]),    # barely relevant
-    ]
-    c = spark.createDataFrame(cands, "vec_id long, embedding array<float>")
-
-    rel = [r.cand_id for r in brute_force_topk(q, c, k=3).orderBy("rank").collect()]
-    assert set(rel) == {1, 2, 3}  # relevance alone keeps the near-dup cluster
-
-    out = mmr_rerank(q, c, k=3, lam=0.5, pool=5).collect()
-    picks = [r.cand_id for r in sorted(out, key=lambda r: r.mmr_rank)]
-    assert picks[0] in {1, 2, 3} and picks[1] == 4, picks
-
-    # pick-for-pick parity with the shared reference on the same pool
-    sims = {r.cand_id: r.cosine_sim
-            for r in brute_force_topk(q, c, k=5).collect()}
-    ordered = sorted(cands)  # cand_id ascending = the Spark group's order
-    ref = mmr_reference(
-        [sims[i] for i, _ in ordered], [v for _, v in ordered], k=3, lam=0.5
-    )
-    assert picks == [ordered[i][0] for i in ref]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="lam"):
-        mmr_rerank(q, c, k=2, lam=1.5)
-    with _pytest.raises(ValueError, match="pool"):
-        mmr_rerank(q, c, k=10, pool=5)
-
-
-def test_mmr_rerank_accepts_external_retrieval_pool(spark):
-    # the pooled= seam: an approximate retrieval stage's
-    # (query_id, cand_id, cosine_sim) output reranks identically to the
-    # built-in exact scoring when the pools agree
-    from hadoop_word_score_spark.operators.similarity import (
-        brute_force_topk,
-        mmr_rerank,
-    )
-
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    c = spark.createDataFrame(
-        [(1, [1.0, 0.01, 0.0, 0.0]), (2, [1.0, 0.02, 0.0, 0.0]),
-         (3, [0.8, 0.0, 0.6, 0.0]), (4, [0.1, 0.0, 0.0, 1.0])],
-        "vec_id long, embedding array<float>",
-    )
-    external_pool = brute_force_topk(q, c, k=4)  # stands in for IVF/LSH
-    via_pool = mmr_rerank(None, c, k=3, lam=0.5, pool=4, pooled=external_pool)
-    built_in = mmr_rerank(q, c, k=3, lam=0.5, pool=4)
-    assert sorted(map(tuple, via_pool.collect())) == sorted(
-        map(tuple, built_in.collect())
-    )
-
-
-def test_pack_bins_bfd_preserves_nondefault_id_types(spark):
-    # review r11: passthrough column TYPES derive from the input schema —
-    # string ids and int group keys must survive unchanged
-    from hadoop_word_score_spark.operators.packing import pack_bins_bfd
-
-    docs = spark.createDataFrame(
-        [(7, "docA", 100), (7, "docB", 200), (8, "docC", 50)],
-        "shard int, name string, n_tokens long",
-    )
-    out = pack_bins_bfd(
-        docs, capacity=256, group_col="shard", id_col="name"
-    )
-    assert dict(out.dtypes)["name"] == "string"
-    assert dict(out.dtypes)["shard"] == "int"
-    rows = {r.name: (r.shard, r.bin_id) for r in out.collect()}
-    assert set(rows) == {"docA", "docB", "docC"}
-
-
 def test_dedup_lines_c4_policy(spark):
     # C4 keep-globally-first policy on a hand corpus: a segment repeated
     # across docs survives only in the min-(doc_id, seg_idx) occurrence,
@@ -4326,56 +4123,6 @@ def test_dedup_lines_keep_first_lines_mode(spark):
         dedup_lines_keep_first(docs, unit="sentences")
 
 
-def test_source_overlap_minhash_tracks_exact_jaccard(spark):
-    # three sources with engineered shingle overlap: A and B share half
-    # their documents' text, C is disjoint vocabulary. The 128-slot
-    # estimate must land within the standard-error band of the exact
-    # distinct-shingle Jaccard computed independently.
-    from hadoop_word_score_spark.functions.hashing import shingles_expr
-    from hadoop_word_score_spark.operators.dedup import source_overlap_minhash
-
-    shared = [
-        " ".join(f"tok{j + 17 * i}" for j in range(20)) for i in range(10)
-    ]
-    only_a = [" ".join(f"aw{j + 9 * i}" for j in range(20)) for i in range(10)]
-    only_b = [" ".join(f"bw{j + 9 * i}" for j in range(20)) for i in range(10)]
-    only_c = [" ".join(f"cw{j + 9 * i}" for j in range(20)) for i in range(10)]
-    rows, did = [], 0
-    for src, texts in (
-        ("A", shared + only_a),
-        ("B", shared + only_b),
-        ("C", only_c),
-    ):
-        for t in texts:
-            rows.append((did, src, t))
-            did += 1
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-    est = {
-        (r.group_a, r.group_b): r.jaccard_est
-        for r in source_overlap_minhash(docs, num_hashes=128).collect()
-    }
-    assert set(est) == {("A", "B"), ("A", "C"), ("B", "C")}
-
-    # exact distinct-shingle Jaccard per pair, computed the long way
-    sets = {
-        src: {
-            s
-            for (arr,) in docs.filter(F.col("source") == src)
-            .select(F.expr(shingles_expr("text")))
-            .collect()
-            for s in arr
-        }
-        for src in ("A", "B", "C")
-    }
-    for pair in est:
-        a, b = sets[pair[0]], sets[pair[1]]
-        exact = len(a & b) / len(a | b)
-        assert abs(est[pair] - exact) <= 0.15, (pair, est[pair], exact)
-    assert est[("A", "C")] <= 0.1 and est[("B", "C")] <= 0.1
-    assert est[("A", "B")] >= 0.2
-
-
 def test_dedup_lines_keep_first_guards(spark):
     # review r12: the global-first key must fail fast, never corrupt —
     # non-integral ids are rejected at plan time (a string id would cast to
@@ -4407,44 +4154,6 @@ def test_dedup_lines_keep_first_guards(spark):
     )
     with pytest.raises(Exception, match="key overflow"):
         dedup_lines_keep_first(big_id).collect()
-
-
-def test_source_overlap_minhash_keeps_signatureless_groups(spark):
-    # review r12: a group whose docs all fall under the shingle width must
-    # still appear in the matrix with jaccard_est 0.0, not vanish
-    from hadoop_word_score_spark.operators.dedup import source_overlap_minhash
-
-    docs = spark.createDataFrame(
-        [
-            (0, "A", " ".join(f"t{i}" for i in range(12))),
-            (1, "B", " ".join(f"t{i}" for i in range(12))),
-            (2, "SHORT", "one two"),  # < 3 tokens of shingle: no signature
-        ],
-        "doc_id long, source string, text string",
-    )
-    rows = {
-        (r.group_a, r.group_b): r
-        for r in source_overlap_minhash(docs, num_hashes=32).collect()
-    }
-    assert set(rows) == {("A", "B"), ("A", "SHORT"), ("B", "SHORT")}
-    assert rows[("A", "SHORT")].jaccard_est == 0.0
-    assert rows[("B", "SHORT")].n_slots_matched == 0
-    assert rows[("A", "B")].jaccard_est == 1.0  # identical text
-
-    # containment mode over the same corpus: the empty-set group reports
-    # zero cardinality and zero containment both ways, no crash
-    wc = {
-        (r.group_a, r.group_b): r
-        for r in source_overlap_minhash(
-            docs, num_hashes=32, with_containment=True
-        ).collect()
-    }
-    r = wc[("A", "SHORT")]
-    assert r.n_distinct_b == 0.0
-    assert r.containment_a_in_b == 0.0 and r.containment_b_in_a == 0.0
-    # identical text both sides; the two cardinality estimates can differ
-    # in the last ulp (partition-order summation), so near-1, not == 1
-    assert wc[("A", "B")].containment_a_in_b >= 0.999
 
 
 def test_train_hashed_logreg_rejects_bad_labels(spark):
@@ -4482,7 +4191,7 @@ def test_train_hashed_logreg_divergence_raises_clearly(spark):
 
 
 def test_train_hashed_logreg_matches_pure_python_reference(spark):
-    # the repo's shared-reference pattern (pack_bins_bfd, mmr_rerank): the
+    # the repo's shared-reference pattern: the
     # distributed trainer must reproduce a from-scratch numpy logistic
     # regression over the IDENTICAL feature hashing, per-iteration — same
     # loss curve, same final weights/bias up to partial-sum float noise.
@@ -4854,56 +4563,6 @@ def test_dedup_near_video_planted_recall(spark):
     planted = {r.id_a: r.hamming for r in rows if r.id_b == r.id_a + 1000000}
     assert len(planted) == n_expected > 0
     assert set(planted.values()) <= {0, 2}
-
-
-def test_source_overlap_containment_direction(spark):
-    # the asymmetric signal: SMALL's shingles are a strict subset of BIG's,
-    # so containment(SMALL in BIG) must approach 1 while Jaccard and the
-    # reverse containment stay near |SMALL|/|BIG|; the k-mins cardinality
-    # estimates must land within the sketch's error band of the true
-    # distinct-shingle counts.
-    from hadoop_word_score_spark.functions.hashing import shingles_expr
-    from hadoop_word_score_spark.operators.dedup import source_overlap_minhash
-
-    base = [" ".join(f"w{j + 23 * i}" for j in range(25)) for i in range(12)]
-    rows = []
-    for i, t in enumerate(base[:3]):          # SMALL = first quarter
-        rows.append((i, "SMALL", t))
-    for i, t in enumerate(base):              # BIG = everything
-        rows.append((100 + i, "BIG", t))
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-    out = {
-        (r.group_a, r.group_b): r
-        for r in source_overlap_minhash(
-            docs, num_hashes=256, with_containment=True
-        ).collect()
-    }
-    r = out[("BIG", "SMALL")]
-    sets = {
-        src: {
-            s
-            for (arr,) in docs.filter(F.col("source") == src)
-            .select(F.expr(shingles_expr("text")))
-            .collect()
-            for s in arr
-        }
-        for src in ("SMALL", "BIG")
-    }
-    assert sets["SMALL"] <= sets["BIG"]
-    # cardinality estimates within ~3/sqrt(256) relative error
-    assert abs(r.n_distinct_a - len(sets["BIG"])) / len(sets["BIG"]) < 0.25
-    assert abs(r.n_distinct_b - len(sets["SMALL"])) / len(sets["SMALL"]) < 0.25
-    # SMALL (= group_b) is fully contained in BIG (= group_a)
-    assert r.containment_b_in_a >= 0.75
-    true_rev = len(sets["SMALL"]) / len(sets["BIG"])
-    assert abs(r.containment_a_in_b - true_rev) < 0.2
-    assert abs(r.jaccard_est - true_rev) < 0.2  # J == |S|/|B| for subsets
-    # plain mode keeps the original 4-column contract
-    plain = source_overlap_minhash(docs, num_hashes=32)
-    assert plain.columns == [
-        "group_a", "group_b", "n_slots_matched", "jaccard_est",
-    ]
 
 
 def test_nfc_normalize_udf(spark):

@@ -194,3 +194,25 @@ def test_scratch_path_keeps_the_cache_keys_and_splits_sessions(tmp_path):
     a = Q._scratch_path("hh_streamed", docs, "hh-v1|64", session("app-1"))
     b = Q._scratch_path("hh_streamed", docs, "hh-v1|64", session("app-2"))
     assert a != b and os.path.dirname(a) == os.path.dirname(b)
+
+
+def test_scratch_gc_prunes_old_layout_leftovers(tmp_path):
+    # A fixed-dir sink left loose pointer/meta files and v=<n> dirs beside
+    # the content-keyed dirs. Once older than the age floor they go; a fresh
+    # leftover and every key dir (the keep_newest floor) stay.
+    import os
+    import time
+
+    old = time.time() - 48 * 3600
+    keys = [f"{i:016x}" for i in range(3)]
+    for k in keys:
+        (tmp_path / k).mkdir()
+    (tmp_path / "v=1").mkdir()
+    (tmp_path / "v=1" / "part-0.parquet").write_bytes(b"x")
+    (tmp_path / "_latest").write_text("1 0")
+    (tmp_path / "_hh_meta.v2.json").write_text("{}")
+    for name in [*keys, "v=1", "_latest"]:
+        os.utime(tmp_path / name, (old, old))
+
+    Q._gc_scratch_siblings(str(tmp_path), keep=keys[0])
+    assert sorted(os.listdir(tmp_path)) == sorted([*keys, "_hh_meta.v2.json"])

@@ -478,88 +478,6 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.set(k, v)
 
 
-def test_catalog_stats_drive_planning_time_broadcast(spark, tmp_path):
-    # The ANALYZE TABLE receipt (r7 VERDICT item 6): with CBO on and column
-    # stats in the catalog, Catalyst estimates a FILTERED fact small enough
-    # to broadcast at PLANNING time (selectivity = 1/ndv from ANALYZE's
-    # column stats); with CBO off the filter keeps its child's size and the
-    # same join plans as SortMergeJoin. AQE would recover the broadcast at
-    # runtime from observed shuffle sizes — catalog stats move the decision
-    # before the first shuffle materializes, which is the point of the
-    # catalog surface. AQE is disabled test-scoped so the assertion reads
-    # the static planner's choice, not the runtime re-plan.
-    from hadoop_word_score_spark.sources.catalog import analyze_tables
-    from tests.conftest import SF_ORACLE
-
-    stats = analyze_tables(spark, SF_ORACLE, ["customer"])
-    assert stats["customer"]["rowCount"] and stats["customer"]["sizeInBytes"] > 0
-
-    def set_cbo(on: bool) -> None:
-        spark.conf.set("spark.sql.cbo.enabled", str(on).lower())
-        spark.conf.set("spark.sql.cbo.planStats.enabled", str(on).lower())
-
-    def build_side():
-        # built AFTER confs are set: catalog stats attach to the relation
-        # when the DataFrame is resolved, not when it is planned
-        return (
-            spark.table("default.customer_analyzed")
-            .filter(F.col("c_mktsegment") == "SEGMENT_0")
-            .select("c_custkey")
-        )
-
-    def est_bytes() -> int:
-        st = build_side()._jdf.queryExecution().optimizedPlan().stats()
-        return int(str(st.sizeInBytes()))
-
-    def build_join():
-        small = spark.table("default.customer_analyzed").filter(
-            F.col("c_mktsegment") == "SEGMENT_0"
-        )
-        big = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
-        return big.join(small, big.o_custkey == small.c_custkey).select("o_orderkey")
-
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.cbo.enabled",
-            "spark.sql.cbo.planStats.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # Receipt 1: the stats themselves — CBO's estimate of the filtered,
-        # key-pruned build side is smaller than the stats-blind one (filter
-        # selectivity 1/ndv(c_mktsegment) from ANALYZE's column stats; the
-        # stats-blind planner keeps the child size through the filter).
-        set_cbo(True)
-        est_cbo = est_bytes()
-        set_cbo(False)
-        est_plain = est_bytes()
-        assert est_cbo < est_plain, (est_cbo, est_plain)
-
-        # Receipt 2: the PLAN flips. With the broadcast threshold between
-        # the two estimates, CBO broadcasts at planning time; stats-blind
-        # planning sort-merges the identical query.
-        threshold = (est_cbo + est_plain) // 2
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(threshold))
-        set_cbo(True)
-        with_cbo = build_join()._jdf.queryExecution().sparkPlan().toString()
-        assert "BroadcastHashJoin" in with_cbo, with_cbo
-
-        set_cbo(False)
-        without_cbo = build_join()._jdf.queryExecution().sparkPlan().toString()
-        assert "SortMergeJoin" in without_cbo, without_cbo
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        spark.sql("DROP TABLE IF EXISTS default.customer_analyzed")
-
-
 def test_table_profile_is_single_scan_per_table(spark):
     # collect_table_stats(approx=True): the 100 TB profile mode must stay
     # ONE partial/final aggregation per table — no count-distinct Expand
@@ -580,41 +498,6 @@ def test_table_profile_is_single_scan_per_table(spark):
         exact_ndv = e[r.col].ndv
         if exact_ndv:
             assert abs(r.ndv - exact_ndv) / exact_ndv < 0.05, (r.col, r.ndv, exact_ndv)
-
-
-def test_analyze_tables_non_default_database(spark):
-    # review r8: the orphan-location cleanup must target the DATABASE-
-    # relative managed path (<wh>/<db>.db/<t>_analyzed) — and never touch
-    # the default database's same-named directory.
-    import os as _os
-    from urllib.parse import urlparse
-
-    from hadoop_word_score_spark.sources.catalog import analyze_tables
-    from tests.conftest import SF_ORACLE
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    sentinel = _os.path.join(wh, "nation_analyzed")  # default-db location
-    _os.makedirs(sentinel, exist_ok=True)
-    open(_os.path.join(sentinel, "keep.txt"), "w").write("live")
-    try:
-        spark.sql("CREATE DATABASE IF NOT EXISTS tmp_stats_db")
-        stats = analyze_tables(
-            spark, SF_ORACLE, ["nation"], database="tmp_stats_db"
-        )
-        assert stats["nation"]["rowCount"] == 25
-        # run twice: the crash-recovery path must handle the existing
-        # tmp_stats_db location without touching the default-db sentinel
-        stats2 = analyze_tables(
-            spark, SF_ORACLE, ["nation"], database="tmp_stats_db"
-        )
-        assert stats2["nation"]["rowCount"] == 25
-        assert _os.path.exists(_os.path.join(sentinel, "keep.txt"))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS tmp_stats_db.nation_analyzed")
-        spark.sql("DROP DATABASE IF EXISTS tmp_stats_db")
-        import shutil as _shutil
-
-        _shutil.rmtree(sentinel, ignore_errors=True)
 
 
 def test_round8_text_index_dedup_plan_shapes(spark):

@@ -1,4 +1,4 @@
-"""Streaming-mode tests (SURVEY §2.9 T4-T5): batch/stream parity + stateful dedup.
+"""Streaming-mode tests (SURVEY §2.9 T4-T5): batch/stream parity + the foreachBatch sinks.
 
 DuckDB can't oracle a stream; the check is Spark-vs-Spark — the streaming
 plan drained with Trigger.AvailableNow must equal the batch plan over the same
@@ -13,7 +13,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _has_agg, run_available_now
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +32,6 @@ def events_stream_dir(spark, tmp_path_factory):
 def test_tumbling_stream_equals_batch(spark, events_stream_dir, scratch_dir):
     from hadoop_word_score_spark.streaming.windows import (
         read_events_stream,
-        run_available_now,
         tumbling_counts_stream,
     )
 
@@ -53,107 +52,13 @@ def test_tumbling_stream_equals_batch(spark, events_stream_dir, scratch_dir):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
-def test_session_stream_runs(spark, events_stream_dir, scratch_dir):
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-        session_stream,
-    )
-
-    got = run_available_now(
-        session_stream(read_events_stream(spark, events_stream_dir)),
-        os.path.join(scratch_dir, "ckpt_sess"),
-        "sess_out",
-    )
-    batch_sessions = (
-        spark.read.parquet(events_stream_dir)
-        .groupBy("user_id", F.session_window("ts", "5 minutes"))
-        .count()
-        .count()
-    )
-    assert got.count() == batch_sessions
-
-
-def test_dedup_stream_bounded_state(spark, events_stream_dir, scratch_dir):
-    from hadoop_word_score_spark.streaming.windows import (
-        dedup_stream,
-        read_events_stream,
-        run_available_now,
-    )
-
-    got = run_available_now(
-        dedup_stream(read_events_stream(spark, events_stream_dir)),
-        os.path.join(scratch_dir, "ckpt_dedup"),
-        "dedup_out",
-    )
-    # within-watermark dedup keeps ≥ the global-distinct count (state eviction
-    # can re-admit keys), ≤ the raw count
-    raw = spark.read.parquet(events_stream_dir)
-    n_raw = raw.count()
-    n_global = raw.select("user_id", "event_type").distinct().count()
-    n = got.count()
-    assert n_global <= n <= n_raw
-
-
-def test_stateful_running_totals(spark, events_stream_dir, scratch_dir):
-    from hadoop_word_score_spark.streaming.stateful import running_user_totals
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
-
-    got = run_available_now(
-        running_user_totals(read_events_stream(spark, events_stream_dir)),
-        os.path.join(scratch_dir, "ckpt_state"),
-        "state_out",
-    )
-    # last emission per user (max n_events) must equal the batch aggregate
-    final = (
-        got.groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-        .collect()
-    )
-    batch = {
-        r.user_id: r.n
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert {r.user_id: r.n_events for r in final} == batch
-
-
-def test_sliding_stream_equals_batch(spark, events_stream_dir, scratch_dir):
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-        sliding_counts_stream,
-    )
-
-    got = run_available_now(
-        sliding_counts_stream(read_events_stream(spark, events_stream_dir)),
-        os.path.join(scratch_dir, "ckpt_slide"),
-        "slide_out",
-    )
-    batch = (
-        spark.read.parquet(events_stream_dir)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("w_start"), "event_type", "n_events")
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_watermark_drops_late_rows(spark, scratch_dir):
     # T4: a row older than (observed max ts - watermark) arriving in a later
     # micro-batch is dropped; on-time rows in the same batch still count.
     import datetime as dt
 
     from hadoop_word_score_spark.sources.registry import TABLES
-    from hadoop_word_score_spark.streaming.windows import (
-        run_available_now,
-        tumbling_counts_stream,
-    )
+    from hadoop_word_score_spark.streaming.windows import tumbling_counts_stream
 
     def ev(eid, hh, mm):
         return (
@@ -232,33 +137,9 @@ def test_watermark_drops_late_rows(spark, scratch_dir):
     assert counts.get((10, 0)) == 11  # 10 original + on-time straggler
 
 
-def test_stream_static_enrichment(spark, events_stream_dir, scratch_dir):
-    from hadoop_word_score_spark.sources.registry import load_table
-    from hadoop_word_score_spark.streaming.joins import enrich_stream_with_dim
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
-
-    dim = load_table(spark, SF_SMOKE, "customer").select("c_custkey", "c_mktsegment")
-    stream = enrich_stream_with_dim(
-        read_events_stream(spark, events_stream_dir), dim
-    ).select("event_id", "user_id", "c_mktsegment")
-    got = run_available_now(
-        stream, os.path.join(scratch_dir, "ckpt_enrich"), "enrich_out"
-    )
-    batch = spark.read.parquet(events_stream_dir).join(
-        dim, F.col("user_id") == F.col("c_custkey")
-    ).select("event_id", "user_id", "c_mktsegment")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_stream_stream_interval_join_equals_batch(spark, events_stream_dir, scratch_dir):
     from hadoop_word_score_spark.streaming.joins import interval_join_streams
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
+    from hadoop_word_score_spark.streaming.windows import read_events_stream
 
     def sides(df):
         return (
@@ -279,334 +160,29 @@ def test_stream_stream_interval_join_equals_batch(spark, events_stream_dir, scra
     assert len(got_rows) > 0  # the interval actually matched something
 
 
-def test_foreach_batch_upsert_sink_exactly_once(spark, events_stream_dir, tmp_path):
-    # T5 sink half: foreachBatch MERGE into a keyed table. The drain must
-    # equal the batch latest-per-user aggregate, a REPLAYED batch must be a
-    # no-op (the at-least-once -> exactly-once guard), and a fresh batch
-    # must still merge afterwards.
-    from hadoop_word_score_spark.streaming.sinks import (
-        read_table,
-        upsert_sink,
-    )
-    from hadoop_word_score_spark.streaming.windows import read_events_stream
-
-    target = str(tmp_path / "user_table")
-    per_user = (
-        read_events_stream(spark, events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total"))
-    )
-    q = (
-        per_user.writeStream.foreachBatch(upsert_sink(target, "user_id"))
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = read_table(spark, target)
-    batch = (
-        spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total"))
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
-
-    # replay guard: re-delivering an already-committed batch_id changes nothing
-    sink = upsert_sink(target, "user_id")
-    before = sorted(map(tuple, read_table(spark, target).collect()))
-    replayed = batch.limit(5).withColumn("total", F.lit(0.0))
-    sink(replayed, 0)  # batch 0 was committed by the drain above
-    assert sorted(map(tuple, read_table(spark, target).collect())) == before
-
-    # a NEW batch id still merges: one updated user, one brand-new user
-    some_user = before[0][0]
-    fresh = spark.createDataFrame(
-        [(some_user, 999, 1.5), (10**9, 1, 2.0)],
-        schema=got.schema,
-    )
-    sink(fresh, 1)
-    after = {r[0]: tuple(r) for r in read_table(spark, target).collect()}
-    assert after[some_user] == (some_user, 999, 1.5)
-    assert after[10**9] == (10**9, 1, 2.0)
-    assert len(after) == len(before) + 1
-
-
-def test_foreach_batch_upsert_sink_crash_atomicity(spark, tmp_path, monkeypatch):
-    # Crash BETWEEN snapshot write and pointer swap: the table must still
-    # serve the previous version, and retrying the same batch (what the
-    # streaming engine does after recovery) must commit it cleanly —
-    # at-least-once delivery + this sink = exactly-once table state.
-    import os as _os
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "t")
-    sink = S.upsert_sink(target, "k")
-    df0 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    sink(df0, 0)
-    before = sorted(map(tuple, S.read_table(spark, target).collect()))
-
-    df1 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    real_replace = _os.replace
-
-    def boom(src, dst):
-        raise OSError("simulated crash before pointer swap")
-
-    monkeypatch.setattr(S.os, "replace", boom)
-    try:
-        sink(df1, 1)
-        raise AssertionError("expected simulated crash")
-    except OSError:
-        pass
-    # pointer untouched -> still version 1 content
-    assert sorted(map(tuple, S.read_table(spark, target).collect())) == before
-
-    monkeypatch.setattr(S.os, "replace", real_replace)
-    sink(df1, 1)  # recovery replay of the SAME batch id now commits
-    after = {r.k: r.v for r in S.read_table(spark, target).collect()}
-    assert after == {1: "a", 2: "B", 3: "c"}
-
-
-def test_upsert_sink_rejects_object_store_schemes(spark, tmp_path):
+def test_pointer_sinks_reject_object_store_schemes(spark, tmp_path):
     # The pointer swap is driver-local POSIX (open/os.replace); on an
     # object store the replay guard and atomicity silently vanish, so a
     # non-file scheme must fail at sink construction, before any stream
     # runs. file:// normalizes to the plain driver path and still works.
     import pytest as _pytest
 
-    from hadoop_word_score_spark.streaming.sinks import read_table, upsert_sink
+    from hadoop_word_score_spark.streaming.ingest import dedup_ingest_sink
+    from hadoop_word_score_spark.streaming.monitor import (
+        heavy_hitters_monitor_sink,
+        heavy_hitters_report_from_store,
+    )
 
     for bad in ("s3://bucket/t", "hdfs://nn:8020/t", "s3a://b/t", "abfss://c/t"):
-        with _pytest.raises(ValueError, match="local filesystem"):
-            upsert_sink(bad, "k")
+        for make in (dedup_ingest_sink, heavy_hitters_monitor_sink):
+            with _pytest.raises(ValueError, match="local filesystem"):
+                make(bad)
 
     target = str(tmp_path / "filescheme")
-    sink = upsert_sink("file://" + target, "k")
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    sink(df, 0)
-    assert [tuple(r) for r in read_table(spark, target).collect()] == [(1, "a")]
-
-
-def test_bucketed_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
-    # The partition-level-rewrite story: batch 2 touches ONE key, so only
-    # that key's bucket gains a new snapshot version — every other bucket's
-    # manifest entry still points at its batch-1 directory (nothing
-    # proportional to table size was written). Result must equal the
-    # whole-table sink's.
-    import json as _json
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "bucketed")
-    sink = S.upsert_sink(target, "k", n_buckets=8)
-    df1 = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(50)], "k int, v string"
-    )
-    sink(df1, 0)
-    man1 = _json.load(open(f"{target}/_manifest.v1"))
-    assert man1["n_buckets"] == 8
-    n_buckets_used = len(man1["buckets"])
-    assert n_buckets_used > 1  # keys actually spread
-
-    sink(spark.createDataFrame([(7, "UPDATED")], "k int, v string"), 1)
-    man2 = _json.load(open(f"{target}/_manifest.v2"))
-    changed = {b for b in man2["buckets"] if man2["buckets"][b] != man1["buckets"].get(b)}
-    assert len(changed) == 1  # exactly the bucket key 7 hashes into
-    rows = {r.k: r.v for r in S.read_table(spark, target).collect()}
-    assert rows[7] == "UPDATED" and rows[6] == "v6" and len(rows) == 50
-
-    # whole-table sink over the same batches agrees
-    target2 = str(tmp_path / "whole")
-    sink2 = S.upsert_sink(target2, "k")
-    sink2(df1, 0)
-    sink2(spark.createDataFrame([(7, "UPDATED")], "k int, v string"), 1)
-    rows2 = {r.k: r.v for r in S.read_table(spark, target2).collect()}
-    assert rows == rows2
-
-
-def test_bucketed_upsert_sink_replay_and_crash_atomicity(spark, tmp_path, monkeypatch):
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "bucketed_crash")
-    sink = S.upsert_sink(target, "k", n_buckets=4)
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    sink(df1, 0)
-    before = sorted(map(tuple, S.read_table(spark, target).collect()))
-
-    # replayed batch id: no-op, version unchanged
-    sink(df1, 0)
-    assert S._read_pointer(target) == (1, 0)
-
-    # crash on the POINTER swap (the last step): all bucket snapshots and
-    # the manifest for v2 exist, but reads must still serve v1
-    real_replace = S.os.replace
-
-    def crashing_replace(src, dst):
-        if dst.endswith("_latest"):
-            raise OSError("simulated crash at commit")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(S.os, "replace", crashing_replace)
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
-    try:
-        sink(df2, 1)
-        raise AssertionError("expected simulated crash")
-    except OSError:
-        pass
-    assert sorted(map(tuple, S.read_table(spark, target).collect())) == before
-
-    monkeypatch.setattr(S.os, "replace", real_replace)
-    sink(df2, 1)  # recovery replay commits over the orphaned attempt
-    got = {r.k: r.v for r in S.read_table(spark, target).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
-
-
-def test_bucketed_upsert_sink_vacuum_and_bucket_count_guard(spark, tmp_path):
-    import os as _os
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "bucketed_vac")
-    sink = S.upsert_sink(target, "k", n_buckets=4)
-    for i in range(3):
-        sink(
-            spark.createDataFrame([(j, f"r{i}") for j in range(8)], "k int, v string"),
-            i,
-        )
-    live_before = {r.k: r.v for r in S.read_table(spark, target).collect()}
-    removed = S.vacuum(target)
-    assert removed  # superseded bucket versions + stale manifests went away
-    assert {r.k: r.v for r in S.read_table(spark, target).collect()} == live_before
-    # all remaining bucket dirs are exactly the manifest's
-    man = S._read_manifest(target, S._read_pointer(target)[0])
-    for b, v in man["buckets"].items():
-        vs = [d for d in _os.listdir(_os.path.join(target, f"b={b}"))]
-        assert vs == [f"v={v}"]
-
-    # mismatched bucket count must refuse loudly, not mis-hash silently
-    bad = S.upsert_sink(target, "k", n_buckets=8)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="n_buckets"):
-        bad(spark.createDataFrame([(1, "x")], "k int, v string"), 99)
-
-
-def test_read_table_time_travel_and_vacuum_boundary(spark, tmp_path):
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "travel")
-    sink = S.upsert_sink(target, "k", n_buckets=4)
-    sink(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), 0)
-    sink(spark.createDataFrame([(2, "B2")], "k int, v string"), 1)
-    sink(spark.createDataFrame([(3, "c")], "k int, v string"), 2)
-
-    assert {r.k: r.v for r in S.read_table(spark, target).collect()} == {
-        1: "a", 2: "B2", 3: "c",
-    }
-    # time travel: version 1 is the post-batch-0 state
-    assert {r.k: r.v for r in S.read_table(spark, target, version=1).collect()} == {
-        1: "a", 2: "b",
-    }
-    with _pytest.raises(ValueError, match="out of range"):
-        S.read_table(spark, target, version=9)
-
-    S.vacuum(target)
-    with _pytest.raises(ValueError, match="vacuumed"):
-        S.read_table(spark, target, version=1)
-    # current version still serves
-    assert len(S.read_table(spark, target).collect()) == 3
-
-
-def test_aggregating_sink_additive_state_and_streamed_cms(spark, events_stream_dir, tmp_path):
-    # Additive exactly-once state: (1) per-event-type counters maintained
-    # across multiple micro-batches equal the batch aggregate; (2) a
-    # count-min sketch maintained by summing per-batch cells through the
-    # sink equals the sketch built in one batch pass — integer-exact, the
-    # mergeability property doing real work; (3) replaying a committed
-    # batch id is a no-op.
-    from hadoop_word_score_spark.operators.frequent import cms_cells
-    from hadoop_word_score_spark.sources.registry import TABLES
-    from hadoop_word_score_spark.streaming.sinks import aggregating_sink, read_table
-
-    stream = (
-        spark.readStream.schema(TABLES["events"])
-        .option("maxFilesPerTrigger", 1)  # force several micro-batches
-        .parquet(events_stream_dir)
-        .select("event_type", "value", F.lit(1).alias("n"))
-    )
-    counters = str(tmp_path / "counters")
-    sketch = str(tmp_path / "sketch")
-    count_sink = aggregating_sink(counters, ["event_type"], ["value", "n"])
-    cell_sink = aggregating_sink(sketch, ["i", "b"], ["c"])
-
-    def fb(batch_df, batch_id):
-        count_sink(batch_df, batch_id)
-        cell_sink(
-            cms_cells(batch_df.select(F.col("event_type").alias("term"))), batch_id
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    events = spark.read.parquet(events_stream_dir)
-    want = {
-        r.event_type: (r.s, r.n)
-        for r in events.groupBy("event_type")
-        .agg(F.sum("value").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    got_rows = read_table(spark, counters).collect()
-    got = {r.event_type: (r.value, r.n) for r in got_rows}
-    assert set(got) == set(want)
-    for t in want:
-        assert got[t][1] == want[t][1]  # counts integer-exact
-        assert abs(got[t][0] - want[t][0]) < 1e-6  # fp sums within noise
-
-    batch_cells = {
-        (r.i, r.b): r.c
-        for r in cms_cells(events.select(F.col("event_type").alias("term"))).collect()
-    }
-    streamed_cells = {(r.i, r.b): r.c for r in read_table(spark, sketch).collect()}
-    assert streamed_cells == batch_cells  # mergeable: bit-for-bit equal
-
-    # replay guard: the last committed batch id is a no-op
-    version_before = read_table(spark, counters).count()
-    last_batch = int(open(f"{counters}/_latest").read().split()[1])
-    count_sink(
-        spark.createDataFrame([("poison", 1e9, 1)], "event_type string, value double, n int"),
-        last_batch,
-    )
-    after = {r.event_type: (r.value, r.n) for r in read_table(spark, counters).collect()}
-    assert after == got and read_table(spark, counters).count() == version_before
-
-
-def test_bucketed_sink_refuses_whole_table_layout(spark, tmp_path):
-    # A whole-table-layout target (version > 0, no _manifest.v*) must not be
-    # adopted by a bucketed sink: treating it as empty would commit a
-    # manifest referencing only the new batch's buckets, silently dropping
-    # every previously committed key on read (r7 ADVICE, medium).
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "whole_then_bucketed")
-    whole = S.upsert_sink(target, "k")
-    whole(spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k int, v string"), 0)
-
-    bucketed = S.upsert_sink(target, "k", n_buckets=4)
-    with _pytest.raises(ValueError, match="whole-table layout"):
-        bucketed(spark.createDataFrame([(1, "x")], "k int, v string"), 1)
-    # the refusal left the committed data intact
-    assert {r.k for r in S.read_table(spark, target).collect()} == set(range(10))
+    sink = heavy_hitters_monitor_sink("file://" + target)
+    sink(spark.createDataFrame([("a",), ("a",), ("b",)], "term string"), 0)
+    got = heavy_hitters_report_from_store(spark, target).collect()
+    assert [(r.term, r.mg_count) for r in got] == [("a", 2), ("b", 1)]
 
 
 def test_kmeans_assign_streams_unchanged(spark, scratch_dir):
@@ -621,7 +197,6 @@ def test_kmeans_assign_streams_unchanged(spark, scratch_dir):
         kmeans_fit,
     )
     from hadoop_word_score_spark.sources.registry import TABLES, load_table
-    from hadoop_word_score_spark.streaming.windows import run_available_now
     from tests.conftest import SF_SMOKE
 
     em = load_table(spark, SF_SMOKE, "embeddings")
@@ -650,69 +225,21 @@ def test_kmeans_assign_streams_unchanged(spark, scratch_dir):
 def test_sink_empty_first_batch_creates_target(spark, tmp_path):
     # r8 review: an empty FIRST micro-batch commits the replay-guard
     # pointer before any Spark write has created the directory
-    from hadoop_word_score_spark.streaming import sinks as S
+    from hadoop_word_score_spark.streaming.monitor import (
+        heavy_hitters_monitor_sink,
+    )
+    from hadoop_word_score_spark.streaming.sinks import _read_pointer
 
-    empty = spark.createDataFrame([], "k int, v string")
-    for name, sink in (
-        ("bucketed", S.upsert_sink(str(tmp_path / "eb"), "k", n_buckets=4)),
-        ("whole", S.upsert_sink(str(tmp_path / "ew"), "k")),
-    ):
-        sink(empty, 0)  # must not raise FileNotFoundError
+    target = str(tmp_path / "eh")
+    empty = spark.createDataFrame([], "term string")
+    heavy_hitters_monitor_sink(target)(empty, 0)  # must not raise FileNotFoundError
     # and the replay guard advanced (batch 0 is now committed)
-    assert S._read_pointer(str(tmp_path / "eb"))[1] == 0
-
-
-def test_sink_rejects_null_keys(spark, tmp_path):
-    # r8 review: merge_upsert's equi-match never matches NULL keys — the
-    # row would become an accumulating all-NULL zombie (whole) or be
-    # silently deleted with the stage dir (bucketed). Reject loudly.
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    bad = spark.createDataFrame([(None, "x"), (1, "y")], "k int, v string")
-    with _pytest.raises(ValueError, match="NULL"):
-        S.upsert_sink(str(tmp_path / "nw"), "k")(bad, 0)
-    with _pytest.raises(ValueError, match="NULL"):
-        S.upsert_sink(str(tmp_path / "nb"), "k", n_buckets=4)(bad, 0)
-
-
-def test_whole_table_sink_refuses_bucketed_layout(spark, tmp_path):
-    # the mirror of test_bucketed_sink_refuses_whole_table_layout
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "bucketed_then_whole")
-    S.upsert_sink(target, "k", n_buckets=4)(
-        spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k int, v string"), 0
-    )
-    with _pytest.raises(ValueError, match="bucketed"):
-        S.upsert_sink(target, "k")(
-            spark.createDataFrame([(1, "x")], "k int, v string"), 1
-        )
-    assert {r.k for r in S.read_table(spark, target).collect()} == set(range(10))
-
-
-def test_read_table_explicit_version_zero_raises(spark, tmp_path):
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming import sinks as S
-
-    target = str(tmp_path / "v0")
-    assert S.read_table(spark, target) is None  # empty table: None
-    S.upsert_sink(target, "k")(
-        spark.createDataFrame([(1, "x")], "k int, v string"), 0
-    )
-    with _pytest.raises(ValueError, match="out of range"):
-        S.read_table(spark, target, version=0)  # versions start at 1
+    assert _read_pointer(target)[1] == 0
 
 
 def test_has_agg_ignores_aggregate_in_column_names(spark):
     # r8 review: a column NAMED "AggregateScore" must not flip the memory
     # sink into complete mode (substring match on the plan string did)
-    from hadoop_word_score_spark.streaming.windows import _has_agg
-
     df = spark.createDataFrame([(1.0,)], "AggregateScore double").select(
         F.col("AggregateScore")
     )
@@ -949,10 +476,7 @@ def test_stream_stream_left_outer_join_eviction_semantics(spark, scratch_dir):
 
     from hadoop_word_score_spark.sources.registry import TABLES
     from hadoop_word_score_spark.streaming.joins import interval_join_streams
-    from hadoop_word_score_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
+    from hadoop_word_score_spark.streaming.windows import read_events_stream
 
     t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -1015,477 +539,6 @@ def test_stream_stream_left_outer_join_eviction_semantics(spark, scratch_dir):
         how="left_outer",
     )
     assert b.filter(F.col("r_event_id").isNull()).count() == 4  # 4, 5, 999, 998
-
-
-def test_left_outer_tail_flush_helper_recovers_batch_parity(spark, scratch_dir):
-    # r10 verdict #5: the pinned caveat ("a finite drain does not flush the
-    # tail") is what every backfill user hits — flush_interval_join_tail is
-    # the production recipe as code. Drain once (tail rows missing), flush,
-    # drain again from the SAME checkpoint: the union of the two drains
-    # must equal the batch left join bit for bit, sentinels excluded.
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from hadoop_word_score_spark.sources.registry import TABLES
-    from hadoop_word_score_spark.streaming.joins import (
-        flush_interval_join_tail,
-        interval_join_streams,
-    )
-    from hadoop_word_score_spark.streaming.windows import read_events_stream
-
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def ev(eid, minutes, uid, ty, ts=None):
-        return Row(event_id=eid, ts=ts or (t0 + dt.timedelta(minutes=minutes)),
-                   user_id=uid, event_type=ty, value=1.0, props="{}")
-
-    # users 1-3 matched; users 4-5 unmatched clicks — INCLUDING user 5's
-    # click at the very end of the stream, the tail row a finite drain
-    # cannot flush on its own
-    main = [ev(100 + u, u, u, "click") for u in range(1, 6)]
-    main += [ev(200 + u, 10 + u, u, "purchase") for u in range(1, 4)]
-    src = os.path.join(scratch_dir, "tailflush_src")
-    schema = TABLES["events"]
-    spark.createDataFrame(main, schema).coalesce(1).write.mode("overwrite").parquet(src)
-
-    # a durable sink (parquet), not the memory sink: resuming a drain from
-    # an existing checkpoint is exactly the backfill pattern the helper
-    # serves, and the memory sink does not support checkpoint recovery
-    ckpt = os.path.join(scratch_dir, "ckpt_tailflush")
-    out = os.path.join(scratch_dir, "tailflush_out")
-
-    def drain():
-        stream = read_events_stream(spark, src, max_files_per_trigger=1)
-        joined = interval_join_streams(
-            stream.filter(F.col("event_type") == "click"),
-            stream.filter(F.col("event_type") == "purchase"),
-            how="left_outer",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out).collect()
-
-    got1 = drain()
-    assert {r.user_id for r in got1 if r.r_event_id is None} == set()  # the caveat
-
-    # the helper's contract: heartbeat rows must reach BOTH sides' filters
-    flushed = flush_interval_join_tail(
-        spark,
-        src,
-        mk_rows=lambda ts: [ev(9000, 0, -1, "click", ts=ts),
-                            ev(9001, 0, -1, "purchase", ts=ts)],
-        schema=schema,
-    )
-    assert len(flushed) == 2 and flushed[0] > t0 + dt.timedelta(minutes=95)
-
-    got2 = drain()  # same checkpoint: only the flushed tail is new
-    stream_rows = {
-        (r.user_id, r.l_event_id, r.r_event_id, r.l_ts, r.r_ts)
-        for r in got2 if r.user_id != -1
-    }
-    batch_rows = {
-        (r.user_id, r.l_event_id, r.r_event_id, r.l_ts, r.r_ts)
-        for r in interval_join_streams(
-            spark.read.parquet(src).filter(
-                (F.col("event_type") == "click") & (F.col("user_id") != -1)
-            ),
-            spark.read.parquet(src).filter(F.col("event_type") == "purchase"),
-            how="left_outer",
-        ).collect()
-    }
-    assert stream_rows == batch_rows
-    assert {u for (u, _, r, _, _) in stream_rows if r is None} == {4, 5}
-
-
-def test_psi_monitor_stream_equals_batch(spark, events_stream_dir, tmp_path):
-    # streamed drift monitoring == batch analytics: drain the events
-    # through the PSI monitor sink (additive counts via aggregating_sink),
-    # then the report served from the standing table must equal the batch
-    # events_psi_drift query bit for bit — and a replayed batch must be a
-    # no-op (the exactly-once guard).
-    from hadoop_word_score_spark.plans.queries import REGISTRY
-    from hadoop_word_score_spark.streaming.monitor import (
-        psi_monitor_sink,
-        psi_report_from_store,
-    )
-    from hadoop_word_score_spark.streaming.windows import read_events_stream
-
-    target = str(tmp_path / "psi_store")
-    sink = psi_monitor_sink(target)
-    q = (
-        read_events_stream(spark, events_stream_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt_psi"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = psi_report_from_store(spark, target)
-    # SF_SMOKE's events dir is what the fixture re-encodes, so the batch
-    # truth is the registry query over the same scale factor
-    want = REGISTRY["events_psi_drift"].fn(spark, SF_SMOKE)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # replaying an already-committed batch must not change the store
-    batch0 = spark.read.parquet(events_stream_dir)
-    sink(batch0, 0)  # batch_id 0 was already committed by the drain
-    again = psi_report_from_store(spark, target)
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_ohlc_monitor_stream_equals_batch(spark, events_stream_dir, tmp_path):
-    # streamed OHLC == batch argmax query: open/close ride struct-argmin/
-    # argmax merges through mergeable_sink (lexicographic struct min/max
-    # over the batch query's exact tie-safe order key), high/low/n ride
-    # max/min/sum — so per-batch partials fold to the batch-over-
-    # everything bars no matter how arrival slices the events. Multi-batch
-    # drain forced via maxFilesPerTrigger on a two-file source.
-    from hadoop_word_score_spark.plans.queries import REGISTRY
-    from hadoop_word_score_spark.streaming.monitor import (
-        ohlc_monitor_sink,
-        ohlc_report_from_store,
-    )
-    from hadoop_word_score_spark.streaming.windows import read_events_stream
-
-    # split the events into two files so the fold actually merges partials
-    src = str(tmp_path / "ohlc_src")
-    ev = spark.read.parquet(events_stream_dir)
-    mid = ev.selectExpr("percentile_cont(0.5) WITHIN GROUP (ORDER BY event_id)").first()[0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("overwrite").parquet(src)
-    time.sleep(1.1)
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(src)
-
-    target = str(tmp_path / "ohlc_store")
-    sink = ohlc_monitor_sink(target)
-    q = (
-        read_events_stream(spark, src, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ohlc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = ohlc_report_from_store(spark, target)
-    want = REGISTRY["events_ohlc_hourly"].fn(spark, SF_SMOKE)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # replayed batch: no-op
-    sink(spark.read.parquet(src), 0)
-    again = ohlc_report_from_store(spark, target)
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_mergeable_sink_state_invariant_under_arrival_slicing(spark, tmp_path):
-    # the mergeable contract itself: ANY slicing of the same rows into
-    # micro-batches folds to the same standing state. Three different
-    # slicings of one constructed event set (1 batch, 2 uneven batches,
-    # row-by-row-ish 4 batches) must serve identical OHLC bars.
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from hadoop_word_score_spark.sources.registry import TABLES
-    from hadoop_word_score_spark.streaming.monitor import (
-        ohlc_monitor_sink,
-        ohlc_report_from_store,
-    )
-
-    t0 = dt.datetime(2024, 5, 1, 9, 0, 0)
-    rows = [
-        Row(event_id=i, ts=t0 + dt.timedelta(minutes=7 * i), user_id=i % 3,
-            event_type="tick", value=float((i * 37) % 11) - 3.0, props="{}")
-        for i in range(24)
-    ]
-    df = spark.createDataFrame(rows, TABLES["events"])
-    reports = []
-    for si, cuts in enumerate([[24], [5, 24], [3, 9, 17, 24]]):
-        target = str(tmp_path / f"slice{si}")
-        sink = ohlc_monitor_sink(target)
-        lo = 0
-        for bid, hi in enumerate(cuts):
-            sink(df.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)), bid)
-            lo = hi
-        reports.append(
-            sorted(map(tuple, ohlc_report_from_store(spark, target).collect()))
-        )
-    assert reports[0] == reports[1] == reports[2]
-    assert len(reports[0]) > 1  # multiple hourly bars actually formed
-
-
-def test_mergeable_sink_rejects_non_mergeable_fold(spark, tmp_path):
-    # avg/first/etc. are not commutative-monoid merges — state would
-    # depend on arrival slicing; the sink must refuse loudly up front
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming.sinks import mergeable_sink
-
-    with _pytest.raises(ValueError, match="unsupported merge"):
-        mergeable_sink(str(tmp_path / "t"), ["k"], {"v": "avg"})
-    with _pytest.raises(ValueError, match="at least one key"):
-        mergeable_sink(str(tmp_path / "t"), [], {"v": "sum"})
-
-
-def test_monitor_reports_none_before_first_commit(spark, tmp_path):
-    from hadoop_word_score_spark.streaming.monitor import (
-        ohlc_report_from_store,
-        psi_report_from_store,
-    )
-
-    assert psi_report_from_store(spark, str(tmp_path / "nope1")) is None
-    assert ohlc_report_from_store(spark, str(tmp_path / "nope2")) is None
-
-
-def test_scd2_sink_incremental_equals_batch_and_replays_safely(spark, tmp_path):
-    # r11: streaming SCD2 maintenance — per-key incremental rebuild over
-    # three arrival batches (including an OUT-OF-ORDER early version for
-    # an existing key) must equal scd2_history over everything, bit for
-    # bit; a replayed batch is a no-op; a conflicting payload fails loudly.
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.operators.scd2 import scd2_history
-    from hadoop_word_score_spark.streaming.sinks import read_table, scd2_sink
-
-    schema = "k int, payload string, valid_from int"
-    b0 = [(1, "a1", 10), (2, "b1", 10), (3, "c1", 10)]
-    b1 = [(1, "a2", 30), (4, "d1", 20)]          # key 1 evolves, key 4 new
-    b2 = [(1, "a0", 5), (2, "b1", 10)]           # LATE early version for 1;
-    #                                              exact replay row for 2
-    target = str(tmp_path / "scd2_dim")
-    sink = scd2_sink(target, "k", "valid_from")
-    for i, rows in enumerate((b0, b1, b2)):
-        sink(spark.createDataFrame(rows, schema), i)
-
-    got = read_table(spark, target)
-    want = scd2_history(
-        spark.createDataFrame([*b0, *b1, *b2], schema), "k", "valid_from"
-    )
-    key = lambda r: (r.k, r.valid_from)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    # the late early version (k=1, t=5) must have been spliced in: its
-    # valid_to is the NEXT version's start, and only t=30 is current
-    tl = {(r.k, r.valid_from): (r.valid_to, r.is_current) for r in got.collect()}
-    assert tl[(1, 5)] == (10, 0) and tl[(1, 10)] == (30, 0)
-    assert tl[(1, 30)] == (None, 1)
-
-    # replayed batch id: no new snapshot version, table unchanged
-    before = sorted(map(tuple, read_table(spark, target).collect()))
-    sink(spark.createDataFrame(b1, schema), 1)
-    assert sorted(map(tuple, read_table(spark, target).collect())) == before
-
-    # untouched keys carry over without a rebuild; a conflicting payload
-    # for an existing instant fails the batch loudly (scd2_history guard)
-    with _pytest.raises(Exception, match="same effective instant"):
-        sink(spark.createDataFrame([(2, "CONFLICT", 10)], schema), 3)
-    # the failed batch must not have committed a snapshot
-    assert sorted(map(tuple, read_table(spark, target).collect())) == before
-
-
-def test_pit_enrich_stream_equals_batch_offline(spark, scratch_dir):
-    # r11: the closed feature-platform loop — CDC feed maintains the SCD2
-    # dimension through scd2_sink, fact micro-batches PIT-enrich against
-    # the committed snapshot through pit_enrich_stream_sink — and with the
-    # dimension settled before the facts drain, online == offline (batch
-    # pit_enrich over the final dimension) bit for bit. Also: a replayed
-    # fact batch overwrites its own output (no duplicates), and facts
-    # before the first version are dropped in both paths.
-    import datetime as dt
-
-    from hadoop_word_score_spark.operators.scd2 import pit_enrich
-    from hadoop_word_score_spark.streaming.joins import pit_enrich_stream_sink
-    from hadoop_word_score_spark.streaming.sinks import read_table, scd2_sink
-
-    t = lambda d: dt.datetime(2024, 1, d, 12, 0, 0)
-    dim_schema = "k int, segment string, valid_from timestamp"
-    dim_target = os.path.join(scratch_dir, "pit_dim")
-    dsink = scd2_sink(dim_target, "k", "valid_from")
-    dsink(spark.createDataFrame(
-        [(1, "bronze", t(1)), (2, "silver", t(1))], dim_schema), 0)
-    dsink(spark.createDataFrame(
-        [(1, "gold", t(10)), (3, "bronze", t(5))], dim_schema), 1)
-
-    fact_schema = "fact_id int, k int, ts timestamp, amount double"
-    facts = [
-        (100, 1, t(2), 5.0),    # sees bronze (v1 of key 1)
-        (101, 1, t(20), 7.0),   # sees gold (v2)
-        (102, 2, t(3), 1.0),    # sees silver
-        (103, 3, t(4), 2.0),    # BEFORE key 3's first version: dropped
-        (104, 3, t(6), 3.0),    # sees key 3 bronze
-        (105, 9, t(6), 4.0),    # unknown key: dropped
-    ]
-    out_dir = os.path.join(scratch_dir, "pit_out")
-    fsink = pit_enrich_stream_sink(
-        out_dir, dim_target, on="k", fact_ts="ts", payload=["segment"]
-    )
-    fdf = spark.createDataFrame(facts, fact_schema)
-    fsink(fdf.filter(F.col("fact_id") < 103), 0)
-    fsink(fdf.filter(F.col("fact_id") >= 103), 1)
-    fsink(fdf.filter(F.col("fact_id") >= 103), 1)  # replay: overwrite, no dupes
-
-    online = spark.read.parquet(out_dir)
-    offline = pit_enrich(
-        fdf, read_table(spark, dim_target),
-        on="k", fact_ts="ts", payload=["segment"],
-    )
-    assert sorted(map(tuple, online.drop("batch").collect() if "batch" in online.columns else online.collect())) \
-        == sorted(map(tuple, offline.collect()))
-    got = {r.fact_id: r.asof_segment for r in online.collect()}
-    assert got == {100: "bronze", 101: "gold", 102: "silver", 104: "bronze"}
-
-
-def test_scd2_sink_bucketed_partial_rewrite(spark, tmp_path):
-    # r11: the bucketed scd2_sink rewrites ONLY the buckets a batch's keys
-    # hash into (manifest versions advance per touched bucket), while the
-    # table read equals the whole-table sink's result — which equals batch
-    # scd2_history.
-    import json as _json
-    import os as _os
-
-    from hadoop_word_score_spark.operators.scd2 import scd2_history
-    from hadoop_word_score_spark.streaming.sinks import read_table, scd2_sink
-
-    schema = "k int, payload string, valid_from int"
-    b0 = [(k, f"p{k}", 10) for k in range(1, 25)]       # 24 keys spread wide
-    b1 = [(1, "p1v2", 30), (2, "p2v2", 30)]             # touches few buckets
-    target = str(tmp_path / "scd2_bucketed")
-    sink = scd2_sink(target, "k", "valid_from", n_buckets=8)
-    sink(spark.createDataFrame(b0, schema), 0)
-    with open(_os.path.join(target, "_manifest.v1")) as f:
-        m1 = _json.load(f)
-    sink(spark.createDataFrame(b1, schema), 1)
-    with open(_os.path.join(target, "_manifest.v2")) as f:
-        m2 = _json.load(f)
-    advanced = {b for b in m2["buckets"] if m2["buckets"][b] == 2}
-    unchanged = {b for b in m2["buckets"]
-                 if m1["buckets"].get(b) == m2["buckets"][b]}
-    assert 1 <= len(advanced) <= 2  # keys 1 and 2 hash into <= 2 buckets
-    assert advanced | unchanged == set(m2["buckets"])
-    assert len(unchanged) >= 6  # the untouched majority was NOT rewritten
-
-    got = read_table(spark, target).drop("_b")
-    want = scd2_history(
-        spark.createDataFrame([*b0, *b1], schema), "k", "valid_from"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    tl = {(r.k, r.valid_from): (r.valid_to, r.is_current) for r in got.collect()}
-    assert tl[(1, 10)] == (30, 0) and tl[(1, 30)] == (None, 1)
-    assert tl[(3, 10)] == (None, 1)  # untouched key carried over intact
-
-
-def test_scd2_sink_bucketed_vacuum_and_time_travel(spark, tmp_path):
-    # the shared bucketed core composes with the table utilities: version 1
-    # time-travels until vacuum reclaims the superseded bucket snapshots,
-    # after which reading it raises rather than serving partial data.
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming.sinks import (
-        read_table,
-        scd2_sink,
-        vacuum,
-    )
-
-    schema = "k int, payload string, valid_from int"
-    target = str(tmp_path / "scd2_vac")
-    sink = scd2_sink(target, "k", "valid_from", n_buckets=4)
-    sink(spark.createDataFrame([(k, f"p{k}", 10) for k in range(8)], schema), 0)
-    sink(spark.createDataFrame([(0, "p0v2", 20)], schema), 1)
-
-    v1_rows = read_table(spark, target, version=1).count()
-    assert v1_rows == 8 and read_table(spark, target).count() == 9
-    removed = vacuum(target)
-    assert removed  # superseded bucket version(s) reclaimed
-    assert read_table(spark, target).count() == 9  # live table intact
-    with _pytest.raises(ValueError, match="vacuumed"):
-        read_table(spark, target, version=1)
-    assert vacuum(target) == []  # idempotent
-
-
-def test_scd2_sink_whole_table_rejects_null_keys(spark, tmp_path):
-    # review r11: NULL keys never equi-match, so the incremental rebuild
-    # would accumulate overlapping NULL timelines — reject at the boundary
-    # like the bucketed core and upsert_sink do
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming.sinks import scd2_sink
-
-    sink = scd2_sink(str(tmp_path / "scd2_null"), "k", "valid_from")
-    bad = spark.createDataFrame(
-        [(None, "p", 10)], "k int, payload string, valid_from int"
-    )
-    with _pytest.raises(ValueError, match="NULL 'k' keys"):
-        sink(bad, 0)
-
-
-def test_bucketed_batch_write_unpersists_on_combine_failure(spark, tmp_path):
-    # ADVICE r11: a combine() that raises mid-batch (e.g. scd2's conflict
-    # assert_true) must not leak the persisted micro-batch into the
-    # long-lived streaming session — every failed/retried batch would pin
-    # more cached blocks. Drive the shared core directly with a raising
-    # combine and check the storage level is cleared and no stage dir
-    # survives.
-    import os as _os
-
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming.sinks import _bucketed_batch_write
-
-    target = str(tmp_path / "leak")
-    src = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-
-    captured = {}
-
-    def boom(cur, batch):
-        captured["batch"] = batch
-        raise RuntimeError("combine exploded")
-
-    n_cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with _pytest.raises(RuntimeError, match="combine exploded"):
-        _bucketed_batch_write(target, "k", 4, boom, src, 0, "leak-test")
-    assert captured["batch"].storageLevel.useMemory is False  # unpersisted
-    assert not [
-        d for d in (_os.listdir(target) if _os.path.isdir(target) else [])
-        if d.startswith("_stage")
-    ]
-
-    # NULL-key rejection path unpersists too (it raises before combine)
-    bad = spark.createDataFrame([(None, "x")], "k int, v string")
-    with _pytest.raises(ValueError, match="NULL 'k' keys"):
-        _bucketed_batch_write(target, "k", 4, boom, bad, 0, "leak-test")
-    assert (
-        spark.sparkContext._jsc.getPersistentRDDs().size()
-        == n_cached_before
-    )
-
-
-def test_flush_interval_join_tail_empty_source_raises(spark, tmp_path):
-    # ADVICE r11: max(ts) over an empty source is NULL; without the guard
-    # the heartbeats get NULL timestamps and the failure surfaces as an
-    # opaque createDataFrame error far from the cause.
-    import pytest as _pytest
-
-    from hadoop_word_score_spark.streaming.joins import (
-        flush_interval_join_tail,
-    )
-
-    src = str(tmp_path / "empty_src")
-    spark.createDataFrame(
-        [], "user_id int, ts timestamp"
-    ).write.parquet(src)
-    with _pytest.raises(ValueError, match="no rows with a non-null 'ts'"):
-        flush_interval_join_tail(
-            spark, src,
-            mk_rows=lambda ts: [(0, ts)],
-            schema="user_id int, ts timestamp",
-        )
 
 
 def test_heavy_hitters_monitor_certificate_replay_and_guard(spark, tmp_path):
