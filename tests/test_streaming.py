@@ -237,6 +237,23 @@ def test_sink_empty_first_batch_creates_target(spark, tmp_path):
     assert _read_pointer(target)[1] == 0
 
 
+def test_monitor_reports_none_before_first_commit(spark, tmp_path):
+    # no summary is served until a non-empty batch commits a snapshot: an
+    # empty first batch advances the replay guard on version 0, and the
+    # report must not look for a v0 snapshot or meta file
+    from hadoop_word_score_spark.streaming.monitor import (
+        heavy_hitters_monitor_sink,
+        heavy_hitters_report_from_store,
+    )
+    from hadoop_word_score_spark.streaming.sinks import _read_pointer
+
+    target = str(tmp_path / "hh_none")
+    assert heavy_hitters_report_from_store(spark, target) is None
+    heavy_hitters_monitor_sink(target)(spark.createDataFrame([], "term string"), 0)
+    assert _read_pointer(target) == (0, 0)
+    assert heavy_hitters_report_from_store(spark, target) is None
+
+
 def test_has_agg_ignores_aggregate_in_column_names(spark):
     # r8 review: a column NAMED "AggregateScore" must not flip the memory
     # sink into complete mode (substring match on the plan string did)
