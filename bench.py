@@ -32,8 +32,8 @@ counters, ``GATED``. Only a previous run at the same scale factor and the
 same ``local[N]`` parallelism (``cpus``) is compared: file splits, AQE
 partition coalescing and several operators size their work from N. A row
 whose gated counter changed is listed in ``vs_prev_regressions`` as
-``{counter: [prev, now]}``, with ``impl_changed`` telling whether its
-implementation fingerprint moved. A row more than 1.5x slower with
+``{counter: [prev, now]}``. Whether the row's code changed is for
+``git diff`` to answer, not the record. A row more than 1.5x slower with
 unchanged counters is not flagged; it is listed in ``vs_prev_slower`` with
 the time layer that grew most.
 """
@@ -43,7 +43,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import subprocess
 import sys
 import time
@@ -279,15 +278,14 @@ def _vs_prev(
     prev: dict,
     timings: dict[str, float],
     layers: dict[str, dict],
-    impl_changed: dict[str, bool],
 ) -> tuple[dict[str, dict], dict[str, dict]]:
     """(regressions, slower) against the previous run's record ``prev``.
 
     A row regresses when a ``GATED`` counter differs: ``{counter: [prev,
-    now], ..., "impl_changed": bool}``. A row with unchanged counters but
-    more than 1.5x its previous wall time is only listed as slower:
-    ``{"ratio": r, "layer": <time layer that grew most>}``. Rows without a
-    previous layers record are not compared."""
+    now], ...}``. A row with unchanged counters but more than 1.5x its
+    previous wall time is only listed as slower: ``{"ratio": r, "layer":
+    <time layer that grew most>}``. Rows without a previous layers record
+    are not compared."""
     regressions: dict[str, dict] = {}
     slower: dict[str, dict] = {}
     for n, now in layers.items():
@@ -297,7 +295,7 @@ def _vs_prev(
         moved = {c: [before.get(c), now.get(c)] for c in GATED
                  if before.get(c) != now.get(c)}
         if moved:
-            regressions[n] = {**moved, "impl_changed": impl_changed.get(n, False)}
+            regressions[n] = moved
             continue
         was = prev.get("queries", {}).get(n, 0)
         if was > 0 and timings[n] > 1.5 * was:
@@ -305,140 +303,6 @@ def _vs_prev(
                         key=lambda k: now[k] - before.get(k, 0.0))
             slower[n] = {"ratio": round(timings[n] / was, 2), "layer": grown}
     return regressions, slower
-
-
-# The import-names group has two alternatives: a parenthesized list (which
-# may SPAN LINES — "[^)]*" matches newlines, so "from ..pkg import (\n a,\n
-# b)" captures every name; a to-end-of-line match captured just "(" and
-# silently dropped all submodules from the fingerprint, r7 ADVICE), or the
-# plain to-end-of-line form.
-_REL_IMPORT_RE = re.compile(
-    r"^\s*from\s+(\.+)([\w.]*)\s+import\s+(\([^)]*\)|[^\n]+)", re.M
-)
-_PKG_ROOT = os.path.join(_HERE, "hadoop_word_score_spark")
-
-
-def _resolve_rel_imports(src: str, pkg_parts: tuple[str, ...]) -> set[str]:
-    """Engine modules named by the relative imports in ``src``, as dotted
-    paths relative to the package root (e.g. ``operators.similarity``).
-    ``pkg_parts`` is the package the source lives in (``("plans",)`` for a
-    query function's body).
-
-    A target that resolves to a package DIRECTORY (``from ..functions import
-    codecs``) contributes its ``__init__`` plus every imported name that is a
-    submodule — previously such imports were silently dropped because only
-    ``<target>.py`` was probed, so e.g. ``functions/codecs.py`` stayed out of
-    every multimodal query's implementation fingerprint (r6 ADVICE, medium).
-    An unresolvable relative import now fails loudly instead of narrowing
-    the fingerprint.
-    """
-    mods: set[str] = set()
-    for dots, rest, names in _REL_IMPORT_RE.findall(src):
-        up = len(dots) - 1
-        base = pkg_parts[: len(pkg_parts) - up] if up else pkg_parts
-        target = ".".join((*base, *rest.split("."))) if rest else ".".join(base)
-        if not target:
-            continue
-        mod_path = os.path.join(_PKG_ROOT, *target.split(".")) + ".py"
-        pkg_dir = os.path.join(_PKG_ROOT, *target.split("."))
-        if os.path.exists(mod_path):
-            mods.add(target)
-        elif os.path.isdir(pkg_dir):
-            mods.add(target + ".__init__")
-            # `from ..pkg import a, b as c` — each name that is a submodule
-            # file joins the fingerprint; pure-attribute names resolve via
-            # the package __init__ hashed above.
-            # strip comments PER LINE: a trailing '# ...' inside a
-            # multiline parenthesized list must not swallow the names on
-            # the following lines (review r8 — the silent-narrowing bug
-            # again, one layer down)
-            cleaned = re.sub(r"#[^\n]*", "", names)
-            name_list = [
-                n.strip().split(" as ")[0].strip()
-                for n in cleaned.strip().strip("()").split(",")
-            ]
-            if not any(name_list):
-                # a package-directory import whose names failed to parse
-                # would silently narrow the fingerprint — the exact failure
-                # mode this closure exists to prevent
-                raise ImportError(
-                    f"fingerprint closure parsed no import names from "
-                    f"'from {dots}{rest} import {names.strip()[:60]}'"
-                )
-            for sub in name_list:
-                if sub and os.path.exists(os.path.join(pkg_dir, sub + ".py")):
-                    mods.add(target + "." + sub)
-        else:
-            raise ImportError(
-                f"fingerprint closure cannot resolve relative import "
-                f"'from {dots}{rest} import {names.strip()}' (pkg {pkg_parts})"
-            )
-    return mods
-
-
-def _engine_module_closure(mods: tuple[str, ...]) -> list[str]:
-    """Transitive closure of engine modules over their own relative imports,
-    so a rewrite two hops away (queries → operators.dedup →
-    functions.hashing) still lands in the fingerprint."""
-    seen: set[str] = set()
-    stack = list(mods)
-    while stack:
-        m = stack.pop()
-        if m in seen:
-            continue
-        path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
-        if not os.path.exists(path):
-            continue
-        seen.add(m)
-        with open(path, encoding="utf-8") as f:
-            stack.extend(_resolve_rel_imports(f.read(), tuple(m.split(".")[:-1])))
-    return sorted(seen)
-
-
-def _modules_digest(mods: tuple[str, ...]) -> str:
-    cache = _modules_digest_cache
-    if mods not in cache:
-        parts = []
-        for m in _engine_module_closure(mods):
-            path = os.path.join(_PKG_ROOT, *m.split(".")) + ".py"
-            with open(path, "rb") as f:
-                parts.append(m + ":" + hashlib.md5(f.read()).hexdigest())
-        cache[mods] = hashlib.md5("\n".join(parts).encode()).hexdigest()
-    return cache[mods]
-
-
-_modules_digest_cache: dict[tuple[str, ...], str] = {}
-
-
-def _impl_fp(fn: Callable) -> str:
-    """Fingerprint of a query's IMPLEMENTATION: its function source plus the
-    content of every engine module its body imports (transitively), so a
-    rewrite of the query fn OR of any operator module it reaches marks the
-    bench row as changed. Granularity is module-level and conservative: an
-    unrelated edit in a shared module flags every row that imports it;
-    edits to queries.py OUTSIDE the fn (helpers, other queries) do not.
-    """
-    import inspect
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return "nosource"
-    mods = tuple(sorted(_resolve_rel_imports(src, ("plans",))))
-    return hashlib.md5((src + "|" + _modules_digest(mods)).encode()).hexdigest()[:12]
-
-
-def _impl_fp_state(
-    names: list[str], prev_fps: dict[str, str]
-) -> tuple[dict[str, str], dict[str, bool]]:
-    """(current per-row implementation fingerprints, per-row changed flags
-    vs ``prev_fps``, the previous run's). A row with no recorded fp is
-    unknowable, recorded as unchanged rather than guessed."""
-    from hadoop_word_score_spark.plans.queries import REGISTRY
-
-    cur = {n: _impl_fp(REGISTRY[n].fn) for n in names if n in REGISTRY}
-    changed = {n: prev_fps.get(n) not in (None, fp) for n, fp in cur.items()}
-    return cur, changed
 
 
 def _previous_record(sf: float, cpus: int) -> dict:
@@ -527,8 +391,7 @@ def main() -> None:
     sf = sf_of(sf_dir)
     cpus = default_parallelism()  # the local[N] every session here ran on
     prev = _previous_record(sf, cpus)
-    impl_fps, impl_changed = _impl_fp_state(names, prev.get("impl_fps", {}))
-    regressions, slower = _vs_prev(prev, timings, layers, impl_changed)
+    regressions, slower = _vs_prev(prev, timings, layers)
 
     # Membership fingerprint (r5 advice): the headline total is only
     # comparable across rounds when the bench SET is unchanged; recording
@@ -565,7 +428,6 @@ def main() -> None:
     # the next run's counter gate compares against.
     local = dict(out)
     local["trials"] = trials
-    local["impl_fps"] = impl_fps
     local["layers"] = layers
     with open(_LOCAL, "w") as f:
         json.dump(local, f, indent=1, sort_keys=True)

@@ -1,13 +1,12 @@
 """Pure-Python image codecs for the multimodal seam (SURVEY §2.10 L6).
 
-Pillow is not installable in every runtime this engine targets, but the L6
-contract ("decode is real, not a hash of the bytes") shouldn't depend on an
-optional wheel. This module implements the two classically trivial raster
+The L6 contract ("decode is real, not a hash of the bytes") depends on no
+image wheel: this module implements the two classically trivial raster
 formats — PPM/PGM (netpbm binary) and uncompressed 24-bpp BMP — from their
-public specifications, with numpy doing the pixel work. The multimodal
-operators resolve decoders in order: Pillow (full codec coverage when
-importable) → these built-ins (always available) → deterministic md5 fake
-(non-image payloads, e.g. the synthetic text corpus).
+public specifications, with numpy doing the pixel work, so a payload
+decodes the same in every runtime. The multimodal operators resolve
+decoders in order: these built-ins → deterministic md5 fake (non-image
+payloads, e.g. the synthetic text corpus).
 
 Encoders for the same formats are included so tests can synthesize real image
 bytes in-process without any external fixture or library.
@@ -68,9 +67,9 @@ def _decode_netpbm(payload: bytes) -> np.ndarray | None:
         return None
     (w, h, maxval), off = _netpbm_tokens(payload, 2, 3)
     # maxval != 255 is recognized-but-unsupported: raw samples would need
-    # scaling by 255/maxval to mean what the luma contract says (and to
-    # agree with the PIL backend), so refuse loudly rather than decode a
-    # 0..maxval raster as if it were 0..255.
+    # scaling by 255/maxval to mean what the luma contract says, so
+    # refuse loudly rather than decode a 0..maxval raster as if it were
+    # 0..255.
     if maxval != 255 or w <= 0 or h <= 0:
         raise ValueError(f"unsupported netpbm maxval/dims: {maxval} {w}x{h}")
     channels = 3 if magic == b"P6" else 1

@@ -3,15 +3,13 @@
 Images/audio/video are opaque ``binary`` columns + typed metadata structs.
 The Spark-side machinery here is real and tested — schema, Arrow batching,
 ``mapInPandas`` signature, partition behaviour. The *decode* step resolves a
-three-tier backend chain per payload:
+two-tier backend chain per payload:
 
-1. Pillow, when importable (full codec coverage — optional dependency);
-2. the built-in pure-Python PPM/PGM/BMP codecs (``functions/codecs.py`` —
-   always importable, so real image bytes in those formats ALWAYS take a
-   real decode path, Pillow or not);
-3. a deterministic md5-derived fake for payloads no backend recognizes
-   (e.g. the synthetic text-derived corpus), keeping the pipeline
-   reproducible on non-image data.
+1. the built-in pure-Python PPM/PGM/BMP codecs (``functions/codecs.py``),
+   so real image bytes in those formats always take a real decode path;
+2. a deterministic md5-derived fake for payloads the codecs do not
+   recognize (e.g. the synthetic text-derived corpus), keeping the
+   pipeline reproducible on non-image data.
 
 The real path is covered by never-skipping tests on in-process-generated
 PPM/PGM/BMP bytes, and hash-checked end-to-end by the
@@ -21,7 +19,6 @@ PPM/PGM/BMP bytes, and hash-checked end-to-end by the
 from __future__ import annotations
 
 import hashlib
-import io
 import math
 import re
 from collections.abc import Iterator
@@ -32,13 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # full-codec seam — optional dependency, resolved once per worker
-    from PIL import Image as _PILImage
-except ImportError:  # pragma: no cover — exercised in codec-less containers
-    _PILImage = None
-
-# Always-available pure-Python codecs (PPM/PGM/BMP) — the real-decode
-# guarantee no longer depends on Pillow being installable in the runtime.
+# Pure-Python codecs (PPM/PGM/BMP): the only real decode backend, so a
+# payload decodes the same in every runtime.
 from ..functions import codecs as _codecs
 
 # Output schema of the decode stage: original id + typed image metadata.
@@ -49,14 +41,6 @@ DECODE_SCHEMA = T.StructType([
     T.StructField("height", T.IntegerType()),
     T.StructField("mean_luma", T.DoubleType()),
 ])
-
-# True when the OPTIONAL full-codec backend (Pillow) is absent. The built-in
-# pure-Python PPM/PGM/BMP codecs are always available regardless, so real
-# image bytes in those formats always take a real decode path; only payloads
-# no backend recognizes (e.g. the synthetic text corpus) fall back to the
-# deterministic md5 fake.
-FAKE_DECODE = _PILImage is None
-
 
 def _nz(payload) -> bytes:
     """NULL payload -> b'' so every stage takes the deterministic fallback
@@ -90,24 +74,10 @@ def _fake_decode(payload: bytes) -> tuple[int, int, float]:
 def _decode_one(payload: bytes) -> tuple[int, int, float]:
     """(width, height, mean_luma) for one blob.
 
-    Backend order: PIL (full codec coverage, optional) → built-in pure-Python
-    PPM/PGM/BMP codecs (always present) → deterministic md5 fake (payloads no
-    backend recognizes, e.g. synthetic text corpora).
+    Backend order: built-in pure-Python PPM/PGM/BMP codecs → deterministic
+    md5 fake (payloads the codecs do not recognize, e.g. synthetic text
+    corpora).
     """
-    if _PILImage is not None:
-        try:
-            with _PILImage.open(io.BytesIO(payload)) as im:
-                gray = im.convert("L")
-                hist = gray.histogram()
-                n = sum(hist)
-                # Same float-op ORDER as the codecs branch and the SQL
-                # oracles ((S/n)/255, NOT S/(255*n)) — the orders produce
-                # different doubles on quantization ties, which would make
-                # the result depend on which backend decoded the payload.
-                mean = (sum(i * c for i, c in enumerate(hist)) / n) / 255.0
-                return im.width, im.height, _quant6(mean)
-        except Exception:  # not PIL-decodable — try the built-in codecs
-            pass
     try:
         rgb = _codecs.decode_rgb(payload)
     except ValueError:  # recognized format but broken/unsupported variant
@@ -158,20 +128,15 @@ def resize_images(
 ) -> DataFrame:
     """Resize stage: binary in → (dims, thumbnail bytes) out, Arrow-batched.
 
-    Grayscale thumbnail bytes via PIL when importable, else the built-in
-    PPM/PGM/BMP codecs + nearest-neighbour resample; deterministic fake
-    (md5-keyed byte synthesis of target_w*target_h bytes) only for payloads
-    no backend decodes. Narrow transformation — no shuffle; output rows are
+    Grayscale thumbnail bytes via the built-in PPM/PGM/BMP codecs +
+    nearest-neighbour resample; deterministic fake (md5-keyed byte
+    synthesis of target_w*target_h bytes) only for payloads the codecs do
+    not decode. Narrow transformation — no shuffle; output rows are
     *smaller* than input (the point of resizing early in a 100 TB media
     pipeline: shrink before any wide op touches the data).
     """
 
     def resize_one(p: bytes, size: int) -> bytes:
-        # builtin codecs FIRST (r8 review): thumb bytes must not depend on
-        # whether Pillow is importable in the worker — for the formats the
-        # builtin codecs decode (PGM/PPM/BMP, the hash-checked ones), the
-        # nearest-neighbour resample is the cross-environment-deterministic
-        # path. PIL covers only the formats the builtins cannot read.
         try:
             rgb = _codecs.decode_rgb(p)
         except ValueError:
@@ -179,12 +144,6 @@ def resize_images(
         if rgb is not None:
             gray = _codecs.to_gray(rgb)
             return _codecs.resize_nearest(gray, target_w, target_h).tobytes()
-        if _PILImage is not None:
-            try:
-                with _PILImage.open(io.BytesIO(p)) as im:
-                    return im.convert("L").resize((target_w, target_h)).tobytes()
-            except Exception:
-                pass
         seed = hashlib.md5(p).digest()
         reps = size // len(seed) + 1
         return (seed * reps)[:size]
@@ -502,22 +461,13 @@ AHASH_SCHEMA = T.StructType([
 
 
 def _perceptual_gray8(payload: bytes, w: int, h: int):
-    """Decoded luma raster resized to (h, w), or None for payloads no real
-    backend recognizes. Tier order differs from metadata decode ON PURPOSE:
-    the built-in codecs go FIRST so the hash of a PPM/PGM/BMP payload never
-    depends on whether the optional Pillow wheel is present (two backends
-    can disagree on subpixel details; a perceptual hash must be stable
-    across runtimes or incremental dedup would churn)."""
+    """Decoded luma raster resized to (h, w), or None for payloads the
+    built-in codecs do not recognize (no md5 fake: a perceptual hash of
+    non-image bytes is noise)."""
     try:
         arr = _codecs.decode_rgb(payload)
     except ValueError:
         return None  # recognized-but-broken: no stable hash exists
-    if arr is None and _PILImage is not None:
-        try:
-            with _PILImage.open(io.BytesIO(payload)) as im:
-                arr = np.asarray(im.convert("RGB"))
-        except Exception:
-            arr = None
     if arr is None:
         return None
     return _codecs.resize_nearest(_codecs.to_gray(arr), w, h)

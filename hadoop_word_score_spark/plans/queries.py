@@ -3218,7 +3218,7 @@ def q_dedup_near_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # printable ASCII — both preconditions asserted loudly per-SF by
 # tests/test_multimodal.py::test_corpus_preconditions_for_multimodal_oracles
 # — so every row takes the md5 fake path, which is exactly SQL-expressible.
-# The REAL codec path (PPM/PGM/BMP built-ins + optional PIL) is proven by
+# The REAL codec path (the PPM/PGM/BMP built-ins) is proven by
 # tests/test_multimodal.py on in-process-generated image bytes and
 # hash-checked by multimodal_decode_real — an oracle can't express a raster
 # decode, but it can pin everything else.
@@ -8358,9 +8358,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frequency, and the head of the posting list (top-5 docs by tf,
     # doc_id tiebreak) — the retrieval-side artifact behind BM25 serving
     # and n-gram decontamination lookups. The bounded top-5 head keeps the
-    # output oracle-hashable; the full posting list at 100 TB is the same
-    # relation written bucketed by term and sorted instead of aggregated
-    # to arrays.
+    # output oracle-hashable; the full posting list is the (term, doc_id,
+    # tf) relation before aggregation, which this query does not write.
     oracle=r"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf

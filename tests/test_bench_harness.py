@@ -2,11 +2,10 @@
 
 The harness itself runs end to end in the bench; these pin the seams a
 refactor could silently break: the group stdout parse, the group partition,
-the counter gate (with and without Spark), the implementation
-fingerprint's import closure, the scale-growth tool's flags, and that
-every package definition is reached from an entry point. One Spark test
-pins the property that matters at 100 TB: no bench row's job count depends
-on the data size.
+the counter gate (with and without Spark), the scale-growth tool's flags,
+and that every package definition is reached from an entry point. One Spark
+test pins the property that matters at 100 TB: no bench row's job count
+depends on the data size.
 """
 
 from __future__ import annotations
@@ -25,19 +24,7 @@ ROOT = Path(__file__).resolve().parent.parent
 
 # Package definitions that no entry point reaches but that stay, each with
 # its reason. Every other top-level function and class must be reached.
-_FORMAT_LAYER = (
-    "the S5/S7 format layer in sources/sinks.py (JSONL, ORC, partitioned, "
-    "range-clustered and bucketed writes, small-file compaction), pinned by "
-    "ten tests in test_sinks.py; unmeasured, and left to a change of its own "
-    "to measure or delete, so that one change does not take out 49 tests"
-)
 KEEP = {
-    **dict.fromkeys(
-        ("write_csv", "write_jsonl", "read_jsonl", "write_partitioned_parquet",
-         "write_range_clustered", "write_bucketed", "write_orc", "read_orc",
-         "compact_small_files"),
-        _FORMAT_LAYER,
-    ),
     "train_hashed_logreg": "the fit side of the served md5 scorer "
     "hashed_linear_score, on the same buckets",
     "export_weights": "turns train_hashed_logreg's output into the integer "
@@ -124,7 +111,7 @@ def test_gate_lists_wall_time_only_change_as_slower_with_its_layer():
     prev = {"queries": {"q": 1.0}, "layers": {"q": _layers()}}
     now = _layers(**{"job_s": 3.0, "driver.outside_sql_s": 1.9,
                      "trace.collect_s": 5.0})
-    regressions, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now}, {})
+    regressions, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now})
     assert regressions == {}
     assert slower == {"q": {"ratio": 3.0, "layer": "driver.outside_sql_s"}}
 
@@ -139,7 +126,7 @@ def test_worker_init_is_not_a_time_layer():
     prev = {"queries": {"q": 1.0}, "layers": {"q": _layers(**rec)}}
     now = _layers(**{**rec, "job_s": 3.0, "arrow.python_s": 1.0,
                      "arrow.worker_init_s": 160.0})
-    _, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now}, {})
+    _, slower = bench._vs_prev(prev, {"q": 3.0}, {"q": now})
     assert slower == {"q": {"ratio": 3.0, "layer": "arrow.python_s"}}
 
 
@@ -147,12 +134,11 @@ def test_gate_flags_changed_counters_only():
     prev = {"queries": {"q": 1.0, "r": 1.0},
             "layers": {"q": _layers(), "r": _layers()}}
     now = {"q": _layers(**{"driver.jobs": 6.0}), "r": _layers()}
-    regressions, slower = bench._vs_prev(
-        prev, {"q": 1.0, "r": 1.0}, now, {"q": True})
-    assert regressions == {"q": {"driver.jobs": [5.0, 6.0], "impl_changed": True}}
+    regressions, slower = bench._vs_prev(prev, {"q": 1.0, "r": 1.0}, now)
+    assert regressions == {"q": {"driver.jobs": [5.0, 6.0]}}
     assert slower == {}
     # a row with no previous layers record is not compared
-    assert bench._vs_prev({}, {"q": 9.0}, now, {}) == ({}, {})
+    assert bench._vs_prev({}, {"q": 9.0}, now) == ({}, {})
 
 
 def test_gate_catches_an_injected_shuffle(spark):
@@ -177,92 +163,11 @@ def test_gate_catches_an_injected_shuffle(spark):
     before, after = trial(False), trial(True)
     regressions, _ = bench._vs_prev(
         {"queries": {"q": before["job_s"]}, "layers": {"q": before}},
-        {"q": after["job_s"]}, {"q": after}, {},
+        {"q": after["job_s"]}, {"q": after},
     )
     assert {"exchange.shuffle_records", "driver.jobs"} <= set(regressions["q"])
     old, new = regressions["q"]["exchange.shuffle_records"]
     assert new > old
-
-
-def test_impl_fp_sees_transitive_module_content(tmp_path, monkeypatch):
-    # The fingerprint must change when a transitively-imported engine module
-    # changes content — that is the exact gap the r5 advice flagged (the
-    # similarity.py rewrite was invisible to oracle-keyed evidence).
-    from hadoop_word_score_spark.plans.queries import REGISTRY
-
-    spec = REGISTRY["similarity_topk"]
-    before = bench._impl_fp(spec.fn)
-    import inspect
-
-    src = inspect.getsource(spec.fn)
-    mods = bench._resolve_rel_imports(src, ("plans",))
-    assert "operators.similarity" in bench._engine_module_closure(tuple(sorted(mods)))
-    # simulate a module edit by clearing the digest cache and patching the
-    # file content hash path through a copied package root
-    import shutil
-
-    fake_root = tmp_path / "pkg"
-    shutil.copytree(bench._PKG_ROOT, fake_root)
-    target = fake_root / "operators" / "similarity.py"
-    target.write_text(target.read_text() + "\n# rewritten\n")
-    monkeypatch.setattr(bench, "_PKG_ROOT", str(fake_root))
-    monkeypatch.setattr(bench, "_modules_digest_cache", {})
-    after = bench._impl_fp(spec.fn)
-    assert after != before
-
-
-def test_closure_resolves_package_level_relative_imports():
-    # r6 ADVICE (medium): `from ..functions import codecs` used to resolve
-    # to a nonexistent functions.py and drop silently, leaving codecs.py
-    # out of every multimodal fingerprint. The closure must now contain
-    # the package __init__ AND the imported submodule.
-    from bench import _engine_module_closure
-
-    closure = _engine_module_closure(("operators.multimodal",))
-    assert "functions.codecs" in closure
-    assert "functions.__init__" in closure
-
-
-def test_unresolvable_relative_import_fails_loudly():
-    import pytest
-
-    from bench import _resolve_rel_imports
-
-    with pytest.raises(ImportError, match="cannot resolve"):
-        _resolve_rel_imports("from ..nosuchpkg import thing\n", ("plans",))
-
-
-def test_package_import_aliases_and_lists_resolve_submodules():
-    from bench import _resolve_rel_imports
-
-    mods = _resolve_rel_imports(
-        "from ..functions import codecs as _c, text\n", ("operators",)
-    )
-    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
-
-
-def test_multiline_parenthesized_relative_import_resolves_submodules():
-    # "from ..pkg import (\n a,\n b)" previously captured names="(" and
-    # silently dropped every submodule from the fingerprint (r7 ADVICE).
-    from bench import _resolve_rel_imports
-
-    mods = _resolve_rel_imports(
-        "from ..functions import (\n    codecs,\n    text as _t,\n)\n",
-        ("operators",),
-    )
-    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
-
-
-def test_inline_comment_in_multiline_import_keeps_following_names():
-    # review r8: a trailing '# ...' on one line of a parenthesized import
-    # must not swallow the names on the following lines
-    from bench import _resolve_rel_imports
-
-    mods = _resolve_rel_imports(
-        "from ..functions import (\n    codecs,  # helper\n    text,\n)\n",
-        ("operators",),
-    )
-    assert {"functions.__init__", "functions.codecs", "functions.text"} <= mods
 
 
 def _load_scale_growth():
@@ -335,13 +240,35 @@ def test_bench_rows_run_the_same_jobs_at_every_scale(spark):
     assert moved == {}, f"(jobs, SQL executions) at sf0.01 vs sf0.1: {moved}"
 
 
-def _identifiers(node: ast.AST) -> set[str]:
+def _parse(path: Path) -> tuple[ast.AST, set[str]]:
+    """A file's AST and the names it binds by importing a module from
+    outside this repo (``pd``, ``np``, ``pq``, ``F``)."""
+    tree = ast.parse(path.read_text())
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            mods = [(a.name, a.asname or a.name.split(".")[0]) for a in n.names]
+        elif isinstance(n, ast.ImportFrom) and n.level == 0:
+            mods = [(n.module, a.asname or a.name) for a in n.names]
+        else:
+            continue
+        for mod, bound in mods:
+            top = mod.split(".")[0]
+            if not any((d / top).is_dir() or (d / f"{top}.py").is_file()
+                       for d in (ROOT, path.parent)):
+                out.add(bound)
+    return tree, out
+
+
+def _identifiers(node: ast.AST, foreign: set[str] = frozenset()) -> set[str]:
+    # pd.read_csv names pandas' function, never a package one
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
+            if not (isinstance(n.value, ast.Name) and n.value.id in foreign):
+                out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.update(n.name.split("."))
             if n.asname:
@@ -354,37 +281,42 @@ def test_every_package_definition_is_reached_from_an_entry_point():
     # perfbench/ (not its tests) and every @register query. Reach follows
     # Name, Attribute and import-alias identifiers, never strings, so a
     # name in a docstring reaches nothing. It matches by name, not module,
-    # which can only over-count reach. A test-only capability fails here
-    # until a bench row, a query or a KEEP reason justifies it.
+    # which can only over-count reach; an attribute of a module from
+    # outside the repo (pd.read_csv) reaches nothing. A test-only
+    # capability fails here until a bench row, a query or a KEEP reason
+    # justifies it.
     pkg = ROOT / "hadoop_word_score_spark"
     roots: set[str] = set()
     for f in [ROOT / "__spark_entry__.py", ROOT / "bench.py",
               pkg / "__main__.py", *(ROOT / "tools").glob("*.py"),
               *(ROOT / "perfbench").glob("*.py")]:
-        roots |= _identifiers(ast.parse(f.read_text()))
-    bodies: dict[str, list[ast.AST]] = {}
+        roots |= _identifiers(*_parse(f))
+    bodies: dict[str, list[set[str]]] = {}  # name -> identifiers it uses
     where: dict[str, str] = {}  # top-level functions and classes
     for path in sorted(pkg.rglob("*.py")):
-        for stmt in ast.parse(path.read_text()).body:
+        tree, foreign = _parse(path)
+        for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
                 for dec in stmt.decorator_list:
-                    roots |= _identifiers(dec)  # runs at import
+                    roots |= _identifiers(dec, foreign)  # runs at import
                 if any(isinstance(d, ast.Call)
                        and isinstance(d.func, ast.Name)
                        and d.func.id == "register"
                        for d in stmt.decorator_list):
-                    roots |= _identifiers(stmt)
+                    roots |= _identifiers(stmt, foreign)
                     continue
-                bodies.setdefault(stmt.name, []).append(stmt)
+                bodies.setdefault(stmt.name, []).append(
+                    _identifiers(stmt, foreign))
                 where[stmt.name] = f"{path.relative_to(ROOT)}:{stmt.lineno}"
             elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
                 targets = (stmt.targets if isinstance(stmt, ast.Assign)
                            else [stmt.target])
                 for n in (n for t in targets for n in ast.walk(t)):
                     if isinstance(n, ast.Name):
-                        bodies.setdefault(n.id, []).append(stmt)
+                        bodies.setdefault(n.id, []).append(
+                            _identifiers(stmt, foreign))
             elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                roots |= _identifiers(stmt)  # module-level code runs
+                roots |= _identifiers(stmt, foreign)  # module-level code runs
 
     def reach(start: set[str]) -> set[str]:
         seen: set[str] = set()
@@ -393,8 +325,8 @@ def test_every_package_definition_is_reached_from_an_entry_point():
             name = todo.pop()
             if name not in seen:
                 seen.add(name)
-                for node in bodies.get(name, ()):
-                    todo |= _identifiers(node) - seen
+                for ids in bodies.get(name, ()):
+                    todo |= ids - seen
         return seen
 
     reached = reach(roots | set(KEEP))

@@ -103,7 +103,7 @@ def test_frame_sampling_fanout(spark):
 
 
 def test_real_decode_path_runs_everywhere(spark):
-    # The real-decoder guarantee without Pillow: actual image bytes (PPM, PGM,
+    # The real-decoder guarantee: actual image bytes (PPM, PGM,
     # BMP — generated in-process from their public specs) come back through
     # the distributed decode stage with their TRUE dimensions and luma, not
     # the md5 fake; unrecognized payloads still take the deterministic
@@ -196,9 +196,9 @@ def test_corpus_preconditions_for_multimodal_oracles(spark):
     # corpus is pure printable ASCII (DuckDB ord() yields codepoints; the
     # byte-level oracles need codepoint == byte). (a) is asserted as the
     # ACTUAL invariant, not a magic-prefix allowlist: the divert condition
-    # is "any backend recognizes the payload" — with Pillow installed that
-    # includes plain netpbm P1-P4, GIF8, XBM, etc., which no prefix list
-    # tracks (r4 advice). Run each payload through the decode chain itself
+    # is "the built-in codecs recognize the payload", which a prefix list
+    # would have to track by hand (r4 advice). Run each payload through the
+    # decode chain itself
     # and require it to equal the fake. Covers BOTH the pytest SF and the
     # driver's correctness SF, so a testdata regen that violates the
     # invariant fails here before it fails in CORRECTNESS. Fix the oracles,
@@ -227,14 +227,6 @@ def test_corpus_preconditions_for_multimodal_oracles(spark):
             f"{sf}: {non_ascii} non-printable-ASCII docs — byte-level oracle "
             "arithmetic (codepoint == byte) breaks for them"
         )
-
-
-def test_fake_decode_flag_reflects_environment():
-    import importlib.util
-
-    from hadoop_word_score_spark.operators import multimodal
-
-    assert multimodal.FAKE_DECODE == (importlib.util.find_spec("PIL") is None)
 
 
 def test_wav_codec_roundtrips_and_matches_stdlib_wave():

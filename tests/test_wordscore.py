@@ -119,24 +119,33 @@ def test_jsonl_roundtrip(spark, scratch_dir):
 
 def test_cli_end_to_end(spark, scratch_dir):
     # the reference's CLI contract: <input> <output>, score\tword descending,
-    # one output file; exit 2 on misuse
+    # one output file; exit 2 on misuse. A malformed line is quarantined by
+    # default and, with --fail-fast, fails the job: exit 1 (CWS:102-108, 218)
     import glob
     import json
     import os
 
     from hadoop_word_score_spark.__main__ import main
 
-    inp = os.path.join(scratch_dir, "cli_reviews")
-    os.makedirs(inp, exist_ok=True)
-    with open(os.path.join(inp, "r.json"), "w") as f:
-        for stars, text in [(5.0, "good good bad"), (1.0, "bad")]:
-            f.write(json.dumps({"stars": stars, "text": text}) + "\n")
-    out = os.path.join(scratch_dir, "cli_out")
-    assert main([inp, out]) == 0
-    parts = glob.glob(os.path.join(out, "part-*"))
-    assert len(parts) == 1
-    lines = [ln.split("\t") for ln in open(parts[0]).read().splitlines()]
+    good = [json.dumps({"stars": stars, "text": text})
+            for stars, text in [(5.0, "good good bad"), (1.0, "bad")]]
+    bad = [good[0], '{"stars": 4.0, "text": "good', good[1]]
+
+    def run(name: str, lines: list[str], *flags: str) -> tuple[int, list[str]]:
+        inp = os.path.join(scratch_dir, name)
+        os.makedirs(inp, exist_ok=True)
+        with open(os.path.join(inp, "r.json"), "w") as f:
+            f.write("\n".join(lines) + "\n")
+        out = os.path.join(scratch_dir, name + "_out")
+        rc = main([inp, out, *flags])
+        return rc, [open(p).read() for p in glob.glob(os.path.join(out, "part-*"))]
+
+    rc, outs = run("cli_reviews", good)
+    assert rc == 0 and len(outs) == 1
+    lines = [ln.split("\t") for ln in outs[0].splitlines()]
     assert [(int(s), w) for s, w in lines] == [(4, "good"), (0, "bad")]
+    assert run("cli_reviews_bad", bad) == (0, outs)
+    assert run("cli_reviews_bad_ff", bad, "--fail-fast")[0] == 1
     assert main(["only-one-arg"]) == 2
 
 
