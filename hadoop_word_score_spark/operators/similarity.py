@@ -1,18 +1,16 @@
 """Similarity search over embedding columns (SURVEY §2.10 L3).
 
-Two paths, same output schema:
-  - ``brute_force_topk``  : exact cosine top-k — the baseline and oracle.
-  - ``lsh_bucketed_topk`` : random-hyperplane LSH prefilter — the scale path;
-    candidates only within matching hash buckets, recall measured against the
-    exact path in tests.
-
-Cosine evaluation is Arrow-vectorized everywhere in this module (numpy
-matmul/einsum per batch): the exact path scores query×candidate blocks, the
-approximate paths score surviving pairs. The JVM-side HOF cosine
-(functions/vectors) remains the oracle-of-record arithmetic for the
-value-hash-checked exact pair query (operators/dedup.embedding_cosine_pairs);
-here every consumer rounds to 6 dp and is recall-bound-checked, where the
-two arithmetics are interchangeable.
+Every top-k path has one shape and output schema: collect the bounded
+query side (``_collect_queries``), score (candidates × queries) blocks in
+one Arrow mapInPandas matmul that drops the pruned pairs (``_emit_pairs``),
+rank per query (``_ranked_topk``). ``brute_force_topk`` is exact (the
+baseline and oracle); ``lsh_bucketed_topk`` keeps the pairs that share a
+sign-LSH bucket in some table, ``ivf_topk``/``ivf_probe_topk`` the
+candidates in a query's probed cells, recall measured against the exact
+path in tests. The JVM-side HOF cosine (functions/vectors) remains the oracle-of-record
+arithmetic for the value-hash-checked exact pair query
+(operators/dedup.embedding_cosine_pairs); here every consumer rounds to 6 dp
+and is recall-bound-checked, where the two arithmetics are interchangeable.
 
 Shared ANN kernels, the one implementation of each step for this module,
 operators/pq.py and operators/semdedup.py: ``_unit_rows`` (zero-norm-guarded
@@ -191,15 +189,18 @@ def _scored_pairs(
     vec_col: str,
     max_queries: int,
     caller: str,
+    scorer=_exact_sims,
 ) -> DataFrame:
-    """(query_id, cand_id, cosine_sim) for every (query, candidate) pair —
-    the shared Arrow-matmul scoring pass behind :func:`brute_force_topk`
-    and :func:`hard_negative_topk` (see brute_force_topk's docstring for
-    the determinism and max_queries contracts).
+    """(query_id, cand_id, cosine_sim) for every (query, candidate) pair
+    that ``scorer(qmat, vec_col)``'s per-batch sims leave finite — the
+    shared Arrow-matmul scoring pass behind :func:`brute_force_topk`,
+    :func:`hard_negative_topk` and :func:`lsh_bucketed_topk` (see
+    brute_force_topk's docstring for the determinism and max_queries
+    contracts).
     """
     qids, qmat = _collect_queries(
         queries, id_col, vec_col, max_queries, caller,
-        ", or use lsh_bucketed_topk/ivf_topk for distributed bulk search",
+        ", or use embedding_cosine_pairs for distributed all-pairs similarity",
     )
     # derive the id dtype/schema from the input (ivf_probe_topk parity):
     # a string or int32 id column must survive unchanged — hardcoded int64
@@ -207,7 +208,7 @@ def _scored_pairs(
     # paths support (r8 review)
     id_schema = queries.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_schema}, cand_id {id_schema}, cosine_sim double"
-    sims = _exact_sims(qmat, vec_col)
+    sims = scorer(qmat, vec_col)
 
     def score(batches):
         yield from _emit_pairs(batches, qids, id_col, sims)
@@ -259,8 +260,8 @@ def brute_force_topk(
     ``max_queries`` guards the collect: the "few queries" assumption is
     load-bearing (the query matrix is closed over by every executor task),
     so a large query side fails fast at plan time with a clear error instead
-    of OOMing the driver. For bulk all-pairs workloads use the LSH/IVF paths
-    (or embedding_cosine_pairs), which keep both sides distributed.
+    of OOMing the driver. For bulk all-pairs workloads use
+    embedding_cosine_pairs, which keeps both sides distributed.
     """
     scored = _scored_pairs(
         queries, candidates, id_col, vec_col, max_queries, "brute_force_topk"
@@ -288,9 +289,10 @@ def hard_negative_topk(
     Same machinery and contracts as :func:`brute_force_topk` (exact Arrow
     matmul, streamed candidates, deterministic (sim DESC, id) ties); the
     band filter applies BEFORE the rank, so rank k is the k-th best WITHIN
-    the band. At bulk-query scale the candidates come from the mid-sim
-    sign-LSH regime (3 planes) instead of a full scan — this exact path is
-    the recall yardstick, mirroring the topk/LSH split.
+    the band. The approximate counterpart is the mid-sim sign-LSH regime
+    (3 planes), which also scans and scores every candidate; its buckets
+    only prune the pairs that reach the rank. This exact path is the recall
+    yardstick, mirroring the topk/LSH split.
     """
     scored = _scored_pairs(
         queries, candidates, id_col, vec_col, max_queries, "hard_negative_topk"
@@ -301,34 +303,6 @@ def hard_negative_topk(
     # as its own negative) — _scored_pairs drops self pairs for every band
     banded = scored.filter((F.col("cosine_sim") >= lo) & (F.col("cosine_sim") < hi))
     return _ranked_topk(banded, k)
-
-
-def _cosine_pairs_udf():
-    """Vectorized pairwise cosine: (array<float>, array<float>) → double.
-
-    One einsum per Arrow batch instead of a per-row interpreted HOF chain —
-    the candidate-scoring hot path of the LSH/IVF probes evaluates cosine
-    once per (query, candidate) pair, and at bulk-query scale that is the
-    dominant term after bucket pruning. Rounded to 6 dp by the callers, the
-    result is interchangeable with functions/vectors.cosine_similarity
-    (summation order differs pre-rounding only). Zero-norm pairs yield NaN
-    and are filtered by callers (Spark sorts NaN ABOVE all doubles — an
-    unfiltered NaN would win rank 1).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.asarray([np.asarray(v, dtype=np.float64) for v in a])
-        bm = np.asarray([np.asarray(v, dtype=np.float64) for v in b])
-        if am.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.float64))
-        num = np.einsum("ij,ij->i", am, bm)
-        den = _row_norms(am) * _row_norms(bm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(num / den)
-
-    return cos_pair
 
 
 def build_ivf_index(
@@ -464,22 +438,6 @@ def build_ivf_index(
     return centroids, index
 
 
-def _guard_broadcast_queries(queries: DataFrame, max_queries: int, what: str) -> None:
-    """Fail fast when a path that BROADCASTS the query side (vectors ride
-    every executor, multiplied by posexploded tables/probes) is handed a
-    bulk query set — these are the 'scale paths' brute_force_topk's guard
-    points at, and an unbounded broadcast OOMs precisely at the bulk scale
-    they are mandated for (r8 review). One bounded limit+count job."""
-    n = queries.limit(max_queries + 1).count()
-    if n > max_queries:
-        raise ValueError(
-            f"{what} broadcasts the query side; got >{max_queries} query "
-            f"vectors. Shard the query set, raise max_broadcast_queries "
-            f"explicitly, or use embedding_cosine_pairs / the dedup LSH "
-            f"pipeline for bulk all-pairs similarity."
-        )
-
-
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -488,36 +446,33 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = 8192,
+    max_queries: int = 4096,
 ) -> DataFrame:
     """Approximate top-k: IVF-flat — probe the ``n_probe`` nearest coarse
     cells, exact cosine within them. Same output schema as brute_force_topk.
 
+    persist_ivf_index + ivf_probe_topk with the index built per call
+    instead of read from disk: the same cell plan, masked scoring and rows.
     Work per query drops to ~n_probe/n_cells of the corpus; recall against
-    the exact path is asserted in tests. At scale the index is built once and
-    persisted partitioned by cell; probing reads only matching partitions.
-    The probe relation (query vectors x n_probe) broadcasts — bounded by
-    ``max_broadcast_queries`` (fail-fast, see _guard_broadcast_queries).
+    the exact path is asserted in tests.
     """
-    _guard_broadcast_queries(queries, max_broadcast_queries, "ivf_topk")
+    qids, qmat = _collect_queries(queries, id_col, vec_col, max_queries, "ivf_topk")
     centroids, index = build_ivf_index(candidates, n_cells, id_col, vec_col)
-    cos_pair = _cosine_pairs_udf()
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    probes = _ranked_topk(
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("ccos", cos_pair("qvec", "centroid"))
-        .filter(~F.isnan("ccos")),
-        n_probe,
-        order=("ccos", "cell"),
-        cols=("query_id", "qvec", "cell"),
-    )
-    scored = (
-        index.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col(id_col))
-        .withColumn("cosine_sim", F.round(cos_pair("qvec", vec_col), 6))
-        .filter(~F.isnan("cosine_sim"))
-        .select("query_id", F.col(id_col).alias("cand_id"), "cosine_sim")
-    )
+    cent_rows = centroids.collect()  # a driver-local relation: no job
+    id_schema = index.schema[id_col].dataType.simpleString()
+    out_schema = f"query_id {id_schema}, cand_id {id_schema}, cosine_sim double"
+    if not cent_rows or not qids.size:
+        return candidates.sparkSession.createDataFrame([], out_schema + ", rank int")
+
+    cells, cell_mask = _plan_probes(cent_rows, qmat, n_probe, "ivf_topk's index")
+    sims = _exact_sims(qmat, vec_col)
+
+    def score(batches):
+        yield from _emit_pairs(batches, qids, id_col, sims, cell_mask)
+
+    scored = index.filter(F.col("cell").isin(cells)).select(
+        F.col(id_col), F.col(vec_col), F.col("cell")
+    ).mapInPandas(score, out_schema)
     return _ranked_topk(scored, k)
 
 
@@ -1034,30 +989,6 @@ def ivf_probe_topk(
     return _ranked_topk(scored, k)
 
 
-def _sign_sketch_udf(n_planes: int, n_tables: int, dim: int):
-    """Vectorized sign-sketch: array<float> → array<long> of bucket ids.
-
-    One numpy matmul per Arrow batch ((batch × dim) @ (dim × planes)) — the
-    deep per-row SQL expression alternative falls out of codegen and runs
-    ~100× slower. Planes are a fixed seeded RandomState matrix: deterministic
-    across runs/executors, broadcast-free (regenerated per worker, ~2 KB).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    total = n_planes * n_tables
-    planes = np.random.RandomState(42).standard_normal((dim, total))
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    @pandas_udf("array<long>")
-    def sketch(vecs: pd.Series) -> pd.Series:
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (m @ planes) > 0  # (batch, tables*planes)
-        buckets = bits.reshape(len(m), n_tables, n_planes) @ weights
-        return pd.Series(list(buckets))
-
-    return sketch
-
-
 def lsh_bucketed_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1066,16 +997,19 @@ def lsh_bucketed_topk(
     vec_col: str = "embedding",
     n_planes: int = 10,
     n_tables: int = 16,
-    dim: int = 64,
-    max_broadcast_queries: int = 8192,
+    max_queries: int = 4096,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane (sign) LSH prefilter, then exact
     cosine within buckets.
 
-    ``n_tables`` independent ``n_planes``-bit sign sketches; a candidate is
-    considered if it matches the query's bucket in ANY table. Sketching is a
-    vectorized pandas UDF (Arrow batches, one matmul per batch); candidate
-    scoring and ranking stay JVM-side.
+    ``n_tables`` independent ``n_planes``-bit sign sketches (one matmul with
+    a fixed seeded plane matrix: queries on the driver, candidates per Arrow
+    batch); a pair is kept if the candidate matches the query's bucket in
+    ANY table, once however many match. Every candidate is still read and
+    scored, as in brute_force_topk: the buckets prune the pairs that reach
+    the rank, not the scan. The scan stays in Python because the sketch and
+    the cosine block are one BLAS matmul per batch each; as a per-row SQL
+    expression the sketch falls out of codegen and ran ~100× slower.
 
     Parameter regime: per-plane agreement for angle θ is p = 1-θ/π, so recall
     for a true neighbor ≈ 1-(1-p^planes)^tables and the random-pair candidate
@@ -1089,48 +1023,30 @@ def lsh_bucketed_topk(
     similarity floor sign-LSH cannot be both selective and high-recall, and
     the exact path usually wins (documented crossover in SCALE_PROBE.md).
     """
-    _guard_broadcast_queries(queries, max_broadcast_queries, "lsh_bucketed_topk")
-    sketch = _sign_sketch_udf(n_planes, n_tables, dim)
-    # posexplode_OUTER, not posexplode (r16, guide §4.4 duplication): the
-    # plain generator makes Catalyst infer a size(buckets)>0 non-empty
-    # filter BELOW the Generate, and a filter on a UDF column evaluates
-    # the sketch UDF twice per row (once under the Filter, once for the
-    # Project — two stacked ArrowEvalPython nodes per side in the before
-    # plan). The outer variant emits one null row for an empty/null array
-    # instead; null bucket keys never survive the inner equi-join below,
-    # so the pair set is identical. Same fix minhash_band_index carries.
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-        .withColumn("buckets", sketch(F.col("qvec")))
-        .select(
-            "query_id", "qvec",
-            F.posexplode_outer("buckets").alias("table_idx", "bucket"),
+
+    def bucket_sims(qmat: np.ndarray, vec_col: str):
+        planes = np.random.RandomState(42).standard_normal(
+            (qmat.shape[1], n_planes * n_tables)
         )
-    )
-    c = (
-        candidates.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"))
-        .withColumn("buckets", sketch(F.col("cvec")))
-        .select(
-            "cand_id", "cvec",
-            F.posexplode_outer("buckets").alias("table_idx", "bucket"),
-        )
-    )
-    # Score BEFORE deduplicating multi-table hits: the redundant cosines
-    # (bounded by n_tables, typically 1-2 per pair) are vectorized-cheap,
-    # while deduplicating first would push every surviving pair's TWO
-    # 64-float vectors through the dedup shuffle (~1 KB/row vs 24 B/row for
-    # (id, id, sim) triples). Shuffle bytes, not FLOPs, are the scarce
-    # resource at 100 TB. first() is deterministic here: duplicate rows
-    # carry identical sims by construction.
-    cand_pairs = c.join(F.broadcast(q), ["table_idx", "bucket"]).filter(
-        F.col("query_id") != F.col("cand_id")
-    )
-    scored = (
-        cand_pairs.withColumn(
-            "cosine_sim", F.round(_cosine_pairs_udf()("qvec", "cvec"), 6)
-        )
-        .filter(~F.isnan("cosine_sim"))
-        .groupBy("query_id", "cand_id")
-        .agg(F.first("cosine_sim").alias("cosine_sim"))
+        weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+        def buckets(m: np.ndarray) -> np.ndarray:  # (rows, n_tables) bucket ids
+            return ((m @ planes) > 0).reshape(len(m), n_tables, n_planes) @ weights
+
+        qbuckets = buckets(qmat)
+        sims = _exact_sims(qmat, vec_col)
+
+        def masked(pdf: pd.DataFrame) -> np.ndarray:
+            cbuckets = buckets(_as_matrix(pdf[vec_col]))
+            hit = np.zeros((len(pdf), len(qmat)), dtype=bool)
+            for t in range(n_tables):  # (cands × queries) per table, not × tables
+                hit |= cbuckets[:, t, None] == qbuckets[None, :, t]
+            return np.where(hit, sims(pdf), np.nan)
+
+        return masked
+
+    scored = _scored_pairs(
+        queries, candidates, id_col, vec_col, max_queries, "lsh_bucketed_topk",
+        bucket_sims,
     )
     return _ranked_topk(scored, k)

@@ -266,6 +266,59 @@ def test_ivf_similarity_recall(spark):
     assert all(1 <= r.rank <= 5 for r in rows)
 
 
+def test_lsh_bucketed_topk_matches_numpy_reference(spark):
+    # exact rows, not recall: a pair is scored iff the candidate shares the
+    # query's sign-sketch bucket (all n_planes bits) in ANY of the seeded
+    # tables; self pairs and zero norms drop; rank is (sim desc, cand_id)
+    import numpy as np
+
+    from hadoop_word_score_spark.operators.similarity import lsh_bucketed_topk
+
+    em = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    q = em.filter(F.col("vec_id") < 10)
+    rows = sorted((r.vec_id, r.embedding) for r in em.collect())
+    ids = np.array([i for i, _ in rows])
+    mat = np.array([v for _, v in rows], dtype=np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    for n_planes, n_tables in ((3, 16), (10, 16)):
+        planes = np.random.RandomState(42).standard_normal(
+            (mat.shape[1], n_planes * n_tables)
+        )
+        bits = (mat @ planes > 0).reshape(len(mat), n_tables, n_planes)
+        want = []
+        for qi in np.flatnonzero(ids < 10):
+            hit = (bits == bits[qi]).all(axis=2).any(axis=1)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = np.round(mat @ mat[qi] / (norms * norms[qi]), 6)
+            keep = hit & (ids != ids[qi]) & np.isfinite(sims)
+            ranked = sorted(zip(-sims[keep], ids[keep]))[:5]
+            want += [(int(ids[qi]), int(c), float(-s), rank)
+                     for rank, (s, c) in enumerate(ranked, 1)]
+        got = lsh_bucketed_topk(q, em, k=5, n_planes=n_planes, n_tables=n_tables)
+        assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+        assert want, "reference found no candidates"
+
+
+def test_ivf_topk_matches_persisted_probe(spark, tmp_path):
+    # the inline IVF path is persist + probe without the disk: same cells,
+    # same masked scoring, same rows
+    from hadoop_word_score_spark.operators.similarity import (
+        ivf_probe_topk,
+        ivf_topk,
+        persist_ivf_index,
+    )
+
+    em = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    q = em.filter(F.col("vec_id") < 10)
+    path = str(tmp_path / "ivf")
+    persist_ivf_index(em, path, n_cells=16)
+    for n_probe in (4, 6):
+        inline = ivf_topk(q, em, k=5, n_cells=16, n_probe=n_probe).collect()
+        probed = ivf_probe_topk(spark, path, q, k=5, n_probe=n_probe).collect()
+        assert sorted(map(tuple, inline)) == sorted(map(tuple, probed))
+        assert len(inline) == 50
+
+
 def test_ivf_persist_probe_roundtrip(spark, tmp_path):
     from hadoop_word_score_spark.operators.similarity import (
         brute_force_topk,
@@ -381,15 +434,22 @@ def test_brute_force_topk_self_excluded_and_ranked(spark):
 
 
 def test_brute_force_topk_guards_large_query_side(spark):
-    # the driver-side collect is bounded: a bulk query set must fail fast
-    # with a clear redirect, not OOM the driver
+    # the driver-side collect is bounded on every top-k path: a bulk query
+    # set must fail fast with a clear redirect, not OOM the driver
     import pytest
 
-    from hadoop_word_score_spark.operators.similarity import brute_force_topk
+    from hadoop_word_score_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        lsh_bucketed_topk,
+    )
 
     em = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    with pytest.raises(ValueError, match="lsh_bucketed_topk"):
+    with pytest.raises(ValueError, match="embedding_cosine_pairs"):
         brute_force_topk(em, em, k=5, max_queries=10)
+    for topk in (lsh_bucketed_topk, ivf_topk):
+        with pytest.raises(ValueError, match=topk.__name__):
+            topk(em, em, k=5, max_queries=10)
     # explicit opt-in raises the cap
     assert brute_force_topk(em.limit(12), em, k=1, max_queries=50).count() > 0
 

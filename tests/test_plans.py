@@ -357,6 +357,18 @@ def test_ivfpq_probe_prunes_partitions_and_reads_no_vectors(spark):
     assert probe.count() == 5
 
 
+def test_lsh_topk_scores_in_one_arrow_scan(spark):
+    # sign-LSH runs the shared top-k kernel: one mapInPandas over the
+    # candidates signs, masks and scores each batch. No sketch or per-pair
+    # ArrowEvalPython and no bucket join; the broadcast joins left are the
+    # recall summary's semi join to the planted ids and its one-row cross
+    # join.
+    plan = plan_of(spark, "similarity_topk_lsh")
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "bucket" not in plan, plan
+    assert not re.search(r"BroadcastHashJoin .*Inner", plan), plan
+
+
 def test_heavy_hitters_recount_is_broadcast_semi(spark):
     # Phase 2's exact recount must broadcast the bounded candidate set
     # (partitions x capacity rows) as a semi join — a shuffled semi join

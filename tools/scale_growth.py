@@ -57,7 +57,7 @@ MODELS = {
     "funnel_signup_click_purchase": "linear in events (3 per-user min-aggs share one scan)",
     "cohort_retention_weekly": "linear in events (per-user agg + user-keyed join, AQE-broadcast when small)",
     "similarity_topk": "linear in corpus vectors (one matmul pass; fixed 10 queries)",
-    "similarity_topk_lsh": "linear in corpus vectors (sign sketch + bucket join on fixed queries)",
+    "similarity_topk_lsh": "linear in corpus vectors (one masked-matmul scan; fixed 10 queries)",
     "dedup_spans_exact": "linear shuffle rows; map-side partial agg absorbs deeper groups",
     "dedup_winnowing_pairs": "superlinear shuffle INTENDED: output-bound — local-min sampling ~1/(w+1) of spans, postings pair within fingerprint buckets, so matching-fingerprint pairs grow with near-dup density, same cause as dedup_jaccard_prefix",
     "heavy_hitters_terms": "linear (2 scans; shuffles bounded by partitions x capacity)",
